@@ -2,7 +2,6 @@ package graft.avro
 
 import org.apache.avro.Schema
 import org.apache.avro.Schema.Type
-import org.apache.avro.generic.{GenericDatumWriter, GenericRecord}
 import org.apache.avro.io.{DatumWriter, Encoder}
 import org.apache.avro.util.Utf8
 import org.apache.spark.sql.catalyst.InternalRow
@@ -10,7 +9,6 @@ import org.apache.spark.sql.catalyst.expressions.SpecializedGetters
 import org.apache.spark.sql.types._
 
 import scala.jdk.CollectionConverters._
-import scala.util.control.NonFatal
 
 /** Write-side mirror of the vectorized decode tiers: a
   * `DatumWriter[InternalRow]` that encodes Catalyst internal rows
@@ -22,15 +20,15 @@ import scala.util.control.NonFatal
   * Planning happens once per (struct, writer schema): each field
   * resolves to a closure over [[SpecializedGetters]] so rows and array
   * elements share value writers. The writer schema is always the one
-  * [[AvroSchemaConverter.toAvro]] derives from the SAME struct (both
-  * writer call sites), so the supported shapes are closed: primitives,
-  * string/enum, bytes/fixed, decimal-as-bytes, date, (local)
-  * timestamp millis/micros, nested records, arrays, string-keyed maps,
-  * nullable `[null, T]` unions and tagged multi-branch unions. Anything
-  * unplannable falls back to the GenericRecord path for the whole file
-  * (same bytes, just slower), so this is purely an encode fast path —
-  * value semantics are pinned to [[AvroInternalCodec]] by
-  * DirectWriteSpec's byte-for-byte file comparison.
+  * [[AvroSchemaConverter.toAvro]] derives from the SAME struct, so the
+  * supported shapes are closed: primitives, string/enum, bytes/fixed,
+  * decimal-as-bytes, date, (local) timestamp millis/micros, nested
+  * records, arrays, string-keyed maps, nullable `[null, T]` unions and
+  * tagged multi-branch unions. It is the only table encoder: a shape it
+  * cannot plan throws when the writer is created, and a null in a
+  * non-nullable field throws when the row is written. Value semantics
+  * are pinned to [[AvroInternalCodec]] by DirectWriteSpec's row-by-row
+  * byte comparison against a GenericDatumWriter reference.
   *
   * Maps: the generic path iterated a freshly-built `java.util.HashMap`,
   * so map ENTRY ORDER in the container bytes was hash order; here it is
@@ -39,27 +37,11 @@ import scala.util.control.NonFatal
   */
 object AvroDirectDatumWriter {
 
-  /** Escape hatch + A/B seam (see WriteAb): `-Dgraft.avro.directWrite=false`
-    * forces the GenericRecord fallback. Read once per writer creation.
+  /** Plans the writer for `struct` encoded as `avro`; throws on a shape
+    * it cannot plan.
     */
-  private def enabled: Boolean =
-    sys.props.getOrElse("graft.avro.directWrite", "true").toBoolean
-
   def apply(struct: StructType, avro: Schema): DatumWriter[InternalRow] =
-    if (!enabled) new FallbackRowWriter(struct, avro)
-    else
-      try new DirectRowWriter(struct, avro)
-      catch { case NonFatal(_) => new FallbackRowWriter(struct, avro) }
-
-  /** GenericRecord tier: identical to the historical write path. */
-  private final class FallbackRowWriter(struct: StructType, avro: Schema)
-      extends DatumWriter[InternalRow] {
-    private val toAvro = AvroInternalCodec.encoderFor(struct, avro)
-    private val gen = new GenericDatumWriter[GenericRecord](avro)
-    override def setSchema(s: Schema): Unit = gen.setSchema(s)
-    override def write(r: InternalRow, out: Encoder): Unit =
-      gen.write(toAvro(r), out)
-  }
+    new DirectRowWriter(struct, avro)
 
   /** (getters, ordinal, encoder) → emit the value at `ordinal`. */
   private type VW = (SpecializedGetters, Int, Encoder) => Unit
@@ -93,29 +75,38 @@ object AvroDirectDatumWriter {
     }
   }
 
+  /** Fixed-width getters read a null slot as 0/false; a null in a
+    * non-nullable field must fail instead of encoding a value.
+    */
+  private def present(r: SpecializedGetters, i: Int): SpecializedGetters =
+    if (r.isNullAt(i)) throw new NullPointerException(
+      s"null value at ordinal $i of a non-nullable Avro field")
+    else r
+
   private def valueWriter(dt: DataType, schema0: Schema): VW = {
     if (schema0.getType == Type.UNION) return unionWriter(dt, schema0)
     (dt, schema0.getType) match {
       case (BooleanType, Type.BOOLEAN) =>
-        (r, i, out) => out.writeBoolean(r.getBoolean(i))
+        (r, i, out) => out.writeBoolean(present(r, i).getBoolean(i))
       case (IntegerType, Type.INT) =>
-        (r, i, out) => out.writeInt(r.getInt(i))
+        (r, i, out) => out.writeInt(present(r, i).getInt(i))
       case (DateType, Type.INT) => // both are days since epoch
-        (r, i, out) => out.writeInt(r.getInt(i))
+        (r, i, out) => out.writeInt(present(r, i).getInt(i))
       case (LongType, Type.LONG) =>
-        (r, i, out) => out.writeLong(r.getLong(i))
+        (r, i, out) => out.writeLong(present(r, i).getLong(i))
       case (TimestampType | TimestampNTZType, Type.LONG) =>
         schema0.getLogicalType match {
           case _: org.apache.avro.LogicalTypes.TimestampMillis |
                _: org.apache.avro.LogicalTypes.LocalTimestampMillis =>
-            (r, i, out) => out.writeLong(Math.floorDiv(r.getLong(i), 1000L))
+            (r, i, out) =>
+              out.writeLong(Math.floorDiv(present(r, i).getLong(i), 1000L))
           case _ => // (local-)timestamp-micros IS the internal form
-            (r, i, out) => out.writeLong(r.getLong(i))
+            (r, i, out) => out.writeLong(present(r, i).getLong(i))
         }
       case (FloatType, Type.FLOAT) =>
-        (r, i, out) => out.writeFloat(r.getFloat(i))
+        (r, i, out) => out.writeFloat(present(r, i).getFloat(i))
       case (DoubleType, Type.DOUBLE) =>
-        (r, i, out) => out.writeDouble(r.getDouble(i))
+        (r, i, out) => out.writeDouble(present(r, i).getDouble(i))
       case (StringType, Type.STRING) =>
         // UTF8String already holds UTF-8 bytes: wrap, never transcode
         // through java.lang.String (the old path's toString + re-encode)

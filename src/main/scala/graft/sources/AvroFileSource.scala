@@ -7433,8 +7433,9 @@ class AvroWriteBuilder(path: String, schema: StructType,
   private var overwriteParts: Option[Seq[(String, String)]] = None
 
   // the sortedBy claim is VERIFIED while writing, which needs a total
-  // order on each column's external values — reject the rest up front.
-  // `sortedBy=c1,c2` claims LEXICOGRAPHIC order on the tuple.
+  // order on each column's values (AvroWriters.sortCmp) — reject the
+  // rest up front. `sortedBy=c1,c2` claims LEXICOGRAPHIC order on the
+  // tuple.
   private val sortColsList: Seq[String] =
     sortedBy.toSeq.flatMap(AvroFileSource.sortCols)
   require(sortColsList.distinct.length == sortColsList.length,
@@ -7442,15 +7443,9 @@ class AvroWriteBuilder(path: String, schema: StructType,
   sortColsList.foreach { c =>
     val f = schema.fields.find(_.name == c).getOrElse(
       throw new IllegalArgumentException(s"sortedBy column '$c' not in schema"))
-    import org.apache.spark.sql.types._
-    f.dataType match {
-      // float/double excluded: NaN defeats pairwise order verification
-      // (Spark sorts NaN last; cmp answers "undecidable")
-      case StringType | IntegerType | LongType | ShortType | ByteType |
-           BooleanType | DateType | TimestampType | _: DecimalType => ()
-      case other => throw new IllegalArgumentException(
-        s"sortedBy does not support ${other.simpleString} (column '$c')")
-    }
+    if (AvroWriters.sortCmp(f.dataType).isEmpty)
+      throw new IllegalArgumentException(
+        s"sortedBy does not support ${f.dataType.simpleString} (column '$c')")
   }
 
   override def truncate(): WriteBuilder = {
@@ -8191,11 +8186,10 @@ private[sources] object AvroWriters {
   // second-largest write cost after the GenericRecord encode. External
   // conversion now happens once per FILE at manifest emission.
 
-  /** Total-order compare on INTERNAL values, same order as
-    * [[AvroFilterEval.cmp]] on the external forms (strings are
-    * UTF8String binary order == UTF-8 byte order on both sides).
-    * None = type has no comparator here (same set the old external
-    * path supported).
+  /** Total-order compare on INTERNAL values. It must agree with the
+    * order read-side pruning applies to the external forms (see
+    * `AvroFilterEval`): strings are UTF8String binary order == UTF-8
+    * byte order on both sides. None = type has no comparator here.
     */
   private[sources] def internalCmp(dt: DataType): Option[(Any, Any) => Int] =
     dt match {
@@ -8237,30 +8231,37 @@ private[sources] object AvroWriters {
   private[sources] def toExternal(v: Any, dt: DataType): Any =
     if (v == null) null else graft.avro.AvroInternalCodec.externalize(v, dt)
 
+  /** The one sortable-type rule, shared by the `sortedBy` write claim
+    * and analyze's block-index backfill: the internal comparator a
+    * verified order (or a per-chunk range) is tracked with, or None
+    * when the type has no verifiable total order. Float/double are
+    * refused on top of [[internalCmp]]'s gaps: NaN defeats pairwise
+    * order verification (Spark sorts NaN last).
+    */
+  private[sources] def sortCmp(dt: DataType): Option[(Any, Any) => Int] =
+    dt match {
+      case FloatType | DoubleType => None
+      case _ => internalCmp(dt)
+    }
+
   /** Per-file order verifier for a `sortedBy` write claim: consecutive
-    * EXTERNAL value tuples must be non-decreasing LEXICOGRAPHICALLY
-    * with nulls first per column (Spark's default ascending order; a
-    * single-column claim is the one-element case). Throws on the first
-    * violation so an unsorted job fails instead of stamping a wrong
-    * layout claim. The tuple compare subsumes the null rule: a null
-    * primary after a non-null primary compares greater-on-the-left and
-    * throws, while a null in a SECONDARY column after non-null values
-    * is legal whenever an earlier column advanced.
+    * INTERNAL value tuples must be non-decreasing LEXICOGRAPHICALLY
+    * under the planned per-column comparators (`cmps`, one per column
+    * from [[sortCmp]]), with nulls first per column (Spark's default
+    * ascending order; a single-column claim is the one-element case).
+    * Throws on the first violation so an unsorted job fails instead of
+    * stamping a wrong layout claim. The tuple compare subsumes the null
+    * rule: a null primary after a non-null primary compares
+    * greater-on-the-left and throws, while a null in a SECONDARY column
+    * after non-null values is legal whenever an earlier column advanced.
     */
   private[sources] final class OrderVerifier(cols: Seq[String],
-      cmps: Array[(Any, Any) => Int] = null) {
-    def this(col: String) = this(Seq(col))
-    // nulls-first per-column compare; undecidable pairs pass (legacy
-    // cmp semantics — same-typed externals are always decidable).
-    // `cmps` (r21): planned INTERNAL-value comparators from the write
-    // hot path; null = external values via AvroFilterEval (tests, and
-    // any caller still feeding external tuples).
+      cmps: Array[(Any, Any) => Int]) {
     private def cmpN(i: Int, a: Any, b: Any): Int =
       if (a == null && b == null) 0
       else if (a == null) -1
       else if (b == null) 1
-      else if (cmps != null) cmps(i)(a, b)
-      else AvroFilterEval.cmp(a, b).getOrElse(0)
+      else cmps(i)(a, b)
     private var firstP: Any = _   // primary-column zone bounds
     private var lastP: Any = _
     private var seenNonNull = false
@@ -8281,7 +8282,6 @@ private[sources] object AvroWriters {
         lastP = p
       }
     }
-    def check(v: Any): Unit = check(Array(v))
     /** The verified file's non-null PRIMARY-column value range — free
       * zone-map stats: in a verified-sorted file min is the first
       * non-null value and max the last. None for an all-null file
@@ -8289,6 +8289,76 @@ private[sources] object AvroWriters {
       */
     def zone: Option[(Any, Any)] =
       if (seenNonNull) Some((firstP, lastP)) else None
+  }
+
+  /** Block-range zone index of one file (`_graft_blockidx`): per chunk
+    * of rows, the TRUE [min, max] of every indexed column (secondary
+    * sort columns are not monotone across primary runs, so
+    * comparator-tracked bounds, not first/last), plus the chunk's
+    * membership cells when `cells` is set. Values arrive INTERNAL and
+    * detached from the row buffer; they are externalized only when a
+    * chunk is cut. The caller decides where a chunk ends: the writer
+    * forces a sync, analyze cuts at the file's own block boundaries.
+    */
+  private[sources] final class BlockIndex(cols: Seq[String],
+      dts: Array[DataType], cmps: Array[(Any, Any) => Int],
+      cells: ChunkBloomBuilder) {
+    private val mins = new Array[Any](dts.length)
+    private val maxs = new Array[Any](dts.length)
+    private val colEncs = cols.map(java.net.URLEncoder.encode(_, "UTF-8"))
+    private val lines =
+      Seq.newBuilder[(String, String, Long, Long, String, String)]
+    private var chunks = 0
+    /** Start offset and row count of the open chunk. */
+    var start = 0L
+    var rows = 0
+
+    def track(vs: Array[Any]): Unit = {
+      rows += 1
+      var i = 0
+      while (i < vs.length) {
+        val v = vs(i)
+        if (v != null) {
+          if (mins(i) == null) { mins(i) = v; maxs(i) = v }
+          else {
+            if (cmps(i)(v, mins(i)) < 0) mins(i) = v
+            if (cmps(i)(v, maxs(i)) > 0) maxs(i) = v
+          }
+        }
+        i += 1
+      }
+    }
+
+    /** Close the open chunk at byte offset `end`: one sidecar line per
+      * column — (colEnc, type, rangeStart, rangeEnd, minEnc|-, maxEnc|-)
+      * — then one per membership cell.
+      */
+    def cut(end: Long): Unit = {
+      def enc(v: Any, c: Int, hi: Boolean): String =
+        if (v == null) "-"
+        else if (hi) AvroFileSource.zoneEncodeMax(toExternal(v, dts(c)))
+        else AvroFileSource.zoneEncodeMin(toExternal(v, dts(c)))
+      cols.indices.foreach { c =>
+        lines += ((colEncs(c), dts(c).simpleString, start, end,
+          enc(mins(c), c, hi = false), enc(maxs(c), c, hi = true)))
+      }
+      if (cells != null) cells.cut().zipWithIndex.foreach { case (b, j) =>
+        lines += ((cells.colEncs(j), cells.tags(j), start, end, b, "-"))
+      }
+      chunks += 1
+      start = end; rows = 0
+      java.util.Arrays.fill(mins.asInstanceOf[Array[AnyRef]], null)
+      java.util.Arrays.fill(maxs.asInstanceOf[Array[AnyRef]], null)
+    }
+
+    /** Close the last chunk at `end` (the file's on-disk length) and
+      * return the sidecar lines. Fewer than two chunks index nothing
+      * (the file-level zones already cover a one-chunk file).
+      */
+    def finish(end: Long): Seq[(String, String, Long, Long, String, String)] = {
+      if (rows > 0) cut(end)
+      if (chunks < 2) Nil else lines.result()
+    }
   }
 
   /** Per-file min/max tracker for every primitive leaf column — the
@@ -8642,9 +8712,6 @@ private[sources] object AvroWriters {
       }
   }
 
-  /** Container-file writer; `lazyCreate` postpones file creation to the
-    * first row so empty partitions produce no file.
-    */
   /** Container codec by name — "zstandard" (default), "deflate"
     * (level 6), "null", "snappy", "bzip2", "xz" (whatever this Avro
     * build plus classpath supports; zstd and snappy ship with Spark).
@@ -8655,276 +8722,27 @@ private[sources] object AvroWriters {
       case other => org.apache.avro.file.CodecFactory.fromString(other)
     }
 
-  /** Hive-style partitioned writer: routes each row to
-    * `base/col1=v1/col2=v2/fileName` (values URL-encoded, nulls as
-    * `__null__`), one lazily-created container file per value
-    * combination per task. Partition columns STAY in the file — the
-    * directory is a pruning index, not the storage of the value — so
-    * the read path needs no reconstruction. The open-writer count per
-    * task is the task's distinct value combinations: pre-repartition by
-    * the partition columns when cardinality is high (the same guidance
-    * as every file source).
+  /** The table data-file writer of one task, batch and streaming alike.
+    * Each row routes to a [[WriteSegment]] by its routing key:
+    * Hive-style `col1=v1/col2=v2` for `partCols` (values URL-encoded,
+    * nulls as `__null__`), then hash-bucket and transform segments — or
+    * `""` (the table root) when none is configured. Partition columns
+    * STAY in the file: the directory is a pruning index, not the
+    * storage of the value. The open-segment count per task is the
+    * task's distinct keys: pre-repartition by the partition columns
+    * when cardinality is high (the same guidance as every file source).
+    *
+    * `lazyCreate` postpones an unrouted writer's file to the first row
+    * so an empty streaming partition produces no file; routed segments
+    * are always created by their first row.
+    *
+    * Rolling (`targetFileBytes`) applies to BOTH write modes. Staged
+    * batch files publish at job commit as usual. Streaming (unstaged)
+    * keeps exactly-once: the rolled name is a pure function of (epoch,
+    * partition, seq), and roll points are deterministic for a replayed
+    * epoch's identical row sequence — a retry truncate-rewrites the
+    * SAME segment series, exactly like the single-file contract.
     */
-  def openPartitioned(base: String, schema: StructType, fileName: String,
-      partCols: Seq[String], codec: String,
-      staged: Boolean = false,
-      sortedBy: Option[String] = None,
-      bloomFor: Seq[String] = Nil,
-      ndvFor: Seq[String] = Nil,
-      trigramFor: Seq[String] = Nil,
-      targetFileBytes: Option[Long] = None,
-      buckets: Seq[(String, Int)] = Nil,
-      xforms: Seq[Xform] = Nil,
-      chunkBloomFor: Seq[String] = Nil,
-      chunkTrigramFor: Seq[String] = Nil): DataWriter[InternalRow] = {
-    val idx = partCols.map(schema.fieldIndex)
-    val bidx = buckets.map { case (c, _) => schema.fieldIndex(c) }
-    val xidx = xforms.map(x => schema.fieldIndex(x.col))
-    val sortColsList = sortedBy.toSeq.flatMap(AvroFileSource.sortCols)
-    val sortIdx = sortColsList.map(schema.fieldIndex)
-    val sortDts = sortIdx.map(i => schema.fields(i).dataType).toArray
-    val sortCmps: Array[(Any, Any) => Int] =
-      sortDts.map(dt => internalCmp(dt).getOrElse((_: Any, _: Any) => 0))
-    val avroSchema = AvroSchemaConverter.toAvro(schema, "topLevelRecord", None, None)
-    // rolling in both modes — see AvroWriters.open for the streaming
-    // exactly-once argument (deterministic (epoch, partition, seq) names)
-    val roll: Option[Long] = targetFileBytes
-
-    // per-(partition dir, roll generation) unit: own container file,
-    // own stats/verifier — same Segment idea as the flat writer
-    final class Seg(sub: String, seq: Int) {
-      val file: File = {
-        val dir = new File(base, sub)
-        dir.mkdirs()
-        val name =
-          if (seq == 0) fileName
-          else fileName.stripSuffix(".avro") + s"-r$seq.avro"
-        new File(dir, if (staged) name + ".staging" else name)
-      }
-      val writer: DataFileWriter[InternalRow] = {
-        // direct InternalRow→BinaryEncoder encode (GenericRecord tier
-        // only as the unplannable-shape fallback) — see AvroDirectDatumWriter
-        val w = new DataFileWriter[InternalRow](
-          AvroDirectDatumWriter(schema, avroSchema))
-        w.setCodec(codecFor(codec))
-        w.create(avroSchema, file)
-        w
-      }
-      // stats run unstaged (streaming) too — see AvroWriters.open
-      val verifier: Option[OrderVerifier] =
-        if (sortColsList.nonEmpty)
-          Some(new OrderVerifier(sortColsList, sortCmps))
-        else None
-      val colStats: ColumnStats = new ColumnStats(schema)
-      val bloomStats: BloomBuilder =
-        if (bloomFor.nonEmpty || trigramFor.nonEmpty)
-          new BloomBuilder(schema, bloomFor, trigramFor)
-        else null
-      val ndvStats: NdvBuilder =
-        if (ndvFor.nonEmpty) new NdvBuilder(schema, ndvFor)
-        else null
-      var nRows = 0L
-      var sinceCheck = 0
-      // block-range zone index — see the flat writer's Segment
-      var bStart = 0L
-      var bRows = 0
-      var bMins: Array[Any] = _
-      var bMaxs: Array[Any] = _
-      var bChunks: List[(Long, Long, Array[String], Array[String],
-        Array[String])] = Nil
-      val cbStats: ChunkBloomBuilder =
-        if (staged && sortIdx.nonEmpty &&
-            (chunkBloomFor.nonEmpty || chunkTrigramFor.nonEmpty))
-          new ChunkBloomBuilder(schema, chunkBloomFor, chunkTrigramFor)
-        else null
-      private def cbCells(): Array[String] =
-        if (cbStats == null) Array.empty[String] else cbStats.cut()
-      // sort values arrive INTERNAL (copied off the row buffer once per
-      // row); externalize only at chunk-cut encode time
-      private def bEnc(v: Any, c: Int, hi: Boolean): String =
-        if (v == null) "-"
-        else if (hi) AvroFileSource.zoneEncodeMax(toExternal(v, sortDts(c)))
-        else AvroFileSource.zoneEncodeMin(toExternal(v, sortDts(c)))
-      private def bEncAll(vs: Array[Any], hi: Boolean): Array[String] =
-        Array.tabulate(vs.length)(c => bEnc(vs(c), c, hi))
-      def bTrack(vs: Array[Any]): Unit = {
-        if (bMins == null) {
-          bMins = new Array[Any](vs.length)
-          bMaxs = new Array[Any](vs.length)
-        }
-        bRows += 1
-        var i = 0
-        while (i < vs.length) {
-          val v = vs(i)
-          if (v != null) {
-            if (bMins(i) == null) { bMins(i) = v; bMaxs(i) = v }
-            else {
-              if (sortCmps(i)(v, bMins(i)) < 0) bMins(i) = v
-              if (sortCmps(i)(v, bMaxs(i)) > 0) bMaxs(i) = v
-            }
-          }
-          i += 1
-        }
-        if (bRows >= AvroFileSource.BlockIdxRows) {
-          val p = writer.sync() - 16
-          bChunks ::= ((bStart, p,
-            bEncAll(bMins, hi = false), bEncAll(bMaxs, hi = true),
-            cbCells()))
-          bStart = p; bRows = 0
-          java.util.Arrays.fill(bMins.asInstanceOf[Array[AnyRef]], null)
-          java.util.Arrays.fill(bMaxs.asInstanceOf[Array[AnyRef]], null)
-        }
-      }
-      def bFinish(): Seq[(Long, Long, Array[String], Array[String],
-          Array[String])] = {
-        if (bRows > 0) {
-          bChunks ::= ((bStart, file.length(),
-            bEncAll(bMins, hi = false), bEncAll(bMaxs, hi = true),
-            cbCells()))
-          bRows = 0
-        }
-        val out = bChunks.reverse
-        if (out.size >= 2) out else Nil
-      }
-    }
-
-    val open = scala.collection.mutable.LinkedHashMap.empty[String, Seg]
-    val nextSeq = scala.collection.mutable.HashMap.empty[String, Int]
-    var closedSegs: List[Seg] = Nil
-
-    new DataWriter[InternalRow] {
-      override def write(record: InternalRow): Unit = {
-        // externalize ONLY the partition-routing + bloom/NDV values;
-        // column stats and the sort verifier run on internal values and
-        // the payload goes straight through the direct datum writer
-        val view = AvroInternalCodec.externalView(record, schema)
-        val sub = (partCols.zip(idx).map { case (c, i) =>
-          val v = view.get(i)
-          val raw =
-            if (v == null) "__null__"
-            else {
-              val e = java.net.URLEncoder.encode(v.toString, "UTF-8")
-              // a literal "__null__" value must not collide with the
-              // null marker: force-encode its first byte (decodes back)
-              if (e == "__null__") "%5F_null__" else e
-            }
-          s"$c=$raw"
-        } ++ buckets.zip(bidx).map { case ((c, n), i) =>
-          // hidden partitioning: the segment value is the HASH BUCKET
-          // of the canonical string, not the value itself — nulls get
-          // the `__null__` segment (an equality filter never matches
-          // null, so that directory prunes under any bucket target)
-          val v = view.get(i)
-          val seg =
-            if (v == null) "__null__"
-            else AvroFileSource.bucketOf(
-              AvroFileSource.canonicalValue(v), n).toString
-          s"${AvroFileSource.bucketSegName(c)}=$seg"
-        } ++ xforms.zip(xidx).map { case (x, i) =>
-          // hidden temporal/truncate partitioning: the segment value is
-          // the TRANSFORM of the external value (day/month/hour/year
-          // ordinal or truncated prefix); nulls get `__null__` like
-          // buckets — compares never match null, so it prunes
-          s"${x.segName}=${AvroTransforms.segValue(x, view.get(i))}"
-        }).mkString("/")
-        val seg = open.getOrElseUpdate(sub, {
-          val s = new Seg(sub, nextSeq.getOrElse(sub, 0))
-          nextSeq(sub) = nextSeq.getOrElse(sub, 0) + 1
-          s
-        })
-        var sortVals: Array[Any] = null
-        if (sortIdx.nonEmpty) {
-          // INTERNAL sort values, detached once (copyInternal): the
-          // verifier's prev tuple and bTrack's bounds retain them past
-          // this row, and the incoming buffer may be reused
-          sortVals = new Array[Any](sortIdx.length)
-          var k = 0
-          while (k < sortVals.length) {
-            val i = sortIdx(k)
-            sortVals(k) =
-              if (record.isNullAt(i)) null
-              else copyInternal(record.get(i, sortDts(k)))
-            k += 1
-          }
-          seg.verifier.get.check(sortVals)
-        }
-        seg.colStats.update(record)
-        if (seg.bloomStats != null) seg.bloomStats.update(view)
-        if (seg.ndvStats != null) seg.ndvStats.update(view)
-        // BEFORE bTrack: a cut flushed by this row's bTrack must
-        // include this row's membership bits
-        if (seg.cbStats != null) seg.cbStats.update(view)
-        seg.nRows += 1
-        seg.writer.append(record)
-        if (staged && sortVals != null) seg.bTrack(sortVals)
-        roll.foreach { target =>
-          seg.sinceCheck += 1
-          if (seg.sinceCheck >= 256) {
-            seg.sinceCheck = 0
-            if (seg.file.length() >= target) {
-              seg.writer.close()
-              closedSegs ::= seg
-              open.remove(sub)
-              ()
-            }
-          }
-        }
-      }
-      override def commit(): WriterCommitMessage = {
-        open.values.foreach { s => s.writer.close(); closedSegs ::= s }
-        open.clear()
-        val segs = closedSegs.reverse
-        // final path: strip the staging suffix (no-op when unstaged)
-        def fin(s: Seg): String = s.file.getPath.stripSuffix(".staging")
-        AvroCommitMessage(
-          if (staged) segs.map(s => s.file.getPath -> fin(s)) else Nil,
-          zones = segs.flatMap(s =>
-            s.verifier.flatMap(_.zone).map { case (mn, mx) =>
-              // verifier zone values are INTERNAL since r21
-              (fin(s),
-                AvroFileSource.zoneEncodeMin(toExternal(mn, sortDts(0))),
-                AvroFileSource.zoneEncodeMax(toExternal(mx, sortDts(0))))
-            }),
-          colZones = segs.flatMap(s =>
-            Option(s.colStats).map(_.stats).filter(_.nonEmpty)
-              .map(fin(s) -> _)),
-          blooms = segs.flatMap(s =>
-            Option(s.bloomStats).map(_.stats).filter(_.nonEmpty)
-              .map(fin(s) -> _)),
-          rows = segs.map(s => fin(s) -> s.nRows),
-          ndvs = segs.flatMap(s =>
-            Option(s.ndvStats).map(_.stats).filter(_.nonEmpty)
-              .map(fin(s) -> _)),
-          streamed = if (staged) Nil else segs.map(_.file.getPath),
-          blockIdx =
-            if (!staged || sortIdx.isEmpty) Nil
-            else {
-              val colEncs = sortColsList
-                .map(java.net.URLEncoder.encode(_, "UTF-8"))
-              val dts = sortIdx
-                .map(i => schema.fields(i).dataType.simpleString)
-              segs.flatMap { s =>
-                val cs = s.bFinish()
-                if (cs.isEmpty) None
-                else Some((fin(s),
-                  cs.flatMap { case (st, en, mns, mxs, cbs) =>
-                    sortColsList.indices.map(i =>
-                      (colEncs(i), dts(i), st, en, mns(i), mxs(i))) ++
-                      cbs.indices.map(j => (s.cbStats.colEncs(j),
-                        s.cbStats.tags(j), st, en, cbs(j), "-"))
-                  }))
-              }
-            })
-      }
-      override def abort(): Unit = {
-        open.values.foreach { s => s.writer.close(); closedSegs ::= s }
-        open.clear()
-        closedSegs.foreach(s => s.file.delete())
-      }
-      override def close(): Unit = ()
-    }
-  }
-
   def open(path: String, schema: StructType, fileName: String,
       lazyCreate: Boolean, codec: String = AvroFileSource.DefaultCodec,
       staged: Boolean = false,
@@ -8933,152 +8751,114 @@ private[sources] object AvroWriters {
       ndvFor: Seq[String] = Nil,
       trigramFor: Seq[String] = Nil,
       targetFileBytes: Option[Long] = None,
+      partCols: Seq[String] = Nil,
+      buckets: Seq[(String, Int)] = Nil,
+      xforms: Seq[Xform] = Nil,
       chunkBloomFor: Seq[String] = Nil,
       chunkTrigramFor: Seq[String] = Nil): DataWriter[InternalRow] = {
     val avroSchema = AvroSchemaConverter.toAvro(schema, "topLevelRecord", None, None)
     val sortColsList = sortedBy.toSeq.flatMap(AvroFileSource.sortCols)
-    val sortIdx = sortColsList.map(schema.fieldIndex)
-    val sortDts = sortIdx.map(i => schema.fields(i).dataType).toArray
-    val sortCmps: Array[(Any, Any) => Int] =
-      sortDts.map(dt => internalCmp(dt).getOrElse((_: Any, _: Any) => 0))
-    // rolling applies to BOTH write modes. Staged batch files publish
-    // at job commit as usual. Streaming (unstaged) keeps exactly-once:
-    // the rolled name is a pure function of (epoch, partition, seq),
-    // and roll points are deterministic for a replayed epoch's
-    // identical row sequence — a retry truncate-rewrites the SAME
-    // segment series, exactly like the single-file contract.
-    val roll: Option[Long] = targetFileBytes
+    val sortIdx = sortColsList.map(schema.fieldIndex).toArray
+    val sortDts = sortIdx.map(i => schema.fields(i).dataType)
+    val sortCmps: Array[(Any, Any) => Int] = sortDts.map(dt =>
+      sortCmp(dt).getOrElse(throw new IllegalArgumentException(
+        s"sortedBy does not support ${dt.simpleString}")))
+    val idx = partCols.map(schema.fieldIndex)
+    val bidx = buckets.map { case (c, _) => schema.fieldIndex(c) }
+    val xidx = xforms.map(x => schema.fieldIndex(x.col))
+    val routed = partCols.nonEmpty || buckets.nonEmpty || xforms.nonEmpty
+    // per-chunk membership cells ride the block index of a sorted
+    // staged write
+    val chunkCells = staged && sortIdx.nonEmpty &&
+      (chunkBloomFor.nonEmpty || chunkTrigramFor.nonEmpty)
+    // the external view feeds routing and the canonical-string hashers
+    // only — an unrouted writer without hashers never builds it
+    val needsView = routed || bloomFor.nonEmpty || trigramFor.nonEmpty ||
+      ndvFor.nonEmpty || chunkCells
 
-    /** One container file plus its per-file stat builders — the rolling
-      * writer's unit. Stats and the sort verifier are PER SEGMENT so a
-      * rolled file gets its own zone bounds, sum cells, blooms, and row
-      * count, exactly like a separate task file.
+    def routeKey(view: org.apache.spark.sql.Row): String =
+      (partCols.zip(idx).map { case (c, i) =>
+        val v = view.get(i)
+        val raw =
+          if (v == null) "__null__"
+          else {
+            val e = java.net.URLEncoder.encode(v.toString, "UTF-8")
+            // a literal "__null__" value must not collide with the
+            // null marker: force-encode its first byte (decodes back)
+            if (e == "__null__") "%5F_null__" else e
+          }
+        s"$c=$raw"
+      } ++ buckets.zip(bidx).map { case ((c, n), i) =>
+        // hidden partitioning: the segment value is the HASH BUCKET
+        // of the canonical string, not the value itself — nulls get
+        // the `__null__` segment (an equality filter never matches
+        // null, so that directory prunes under any bucket target)
+        val v = view.get(i)
+        val seg =
+          if (v == null) "__null__"
+          else AvroFileSource.bucketOf(
+            AvroFileSource.canonicalValue(v), n).toString
+        s"${AvroFileSource.bucketSegName(c)}=$seg"
+      } ++ xforms.zip(xidx).map { case (x, i) =>
+        // hidden temporal/truncate partitioning: the segment value is
+        // the TRANSFORM of the external value (day/month/hour/year
+        // ordinal or truncated prefix); nulls get `__null__` like
+        // buckets — compares never match null, so it prunes
+        s"${x.segName}=${AvroTransforms.segValue(x, view.get(i))}"
+      }).mkString("/")
+
+    /** One container file plus its per-file stat builders — the unit a
+      * write rolls and routes by. Stats and the sort verifier are PER
+      * SEGMENT so every file gets its own zone bounds, sum cells,
+      * blooms and row count, exactly like a separate task file. Stats
+      * run for STREAMING (unstaged) segments too: the epoch commit
+      * folds them like a batch commit.
       */
-    final class Segment(seq: Int) {
-      val finalFile: File = new File(path,
-        if (seq == 0) fileName
-        else fileName.stripSuffix(".avro") + s"-r$seq.avro")
+    final class WriteSegment(key: String, seq: Int) {
+      private val finalFile: File = {
+        val dir = new File(path, key)
+        if (key.nonEmpty) dir.mkdirs()
+        new File(dir,
+          if (seq == 0) fileName
+          else fileName.stripSuffix(".avro") + s"-r$seq.avro")
+      }
       val file: File =
-        if (staged) new File(path, finalFile.getName + ".staging")
-        else finalFile
-      val writer: DataFileWriter[InternalRow] = {
-        // direct InternalRow→BinaryEncoder encode (GenericRecord tier
-        // only as the unplannable-shape fallback) — see AvroDirectDatumWriter
+        if (staged) new File(finalFile.getPath + ".staging") else finalFile
+      private val writer: DataFileWriter[InternalRow] = {
         val w = new DataFileWriter[InternalRow](
           AvroDirectDatumWriter(schema, avroSchema))
         w.setCodec(codecFor(codec))
         w.create(avroSchema, file) // truncates: task retry = rewrite
         w
       }
-      // stats run for STREAMING (unstaged) segments too since r17: the
-      // epoch commit folds them like a batch commit, so streamed tables
-      // keep col-zones/blooms/rows/NDV coverage (metadata COUNT, zone
-      // and bloom pruning) instead of silently degrading to scan-only
-      val verifier: Option[OrderVerifier] =
-        if (sortColsList.nonEmpty) Some(new OrderVerifier(sortColsList))
-        else None
-      val colStats: ColumnStats = new ColumnStats(schema)
-      val bloomStats: BloomBuilder =
+      private val verifier: OrderVerifier =
+        if (sortIdx.nonEmpty) new OrderVerifier(sortColsList, sortCmps)
+        else null
+      private val colStats = new ColumnStats(schema)
+      private val bloomStats: BloomBuilder =
         if (bloomFor.nonEmpty || trigramFor.nonEmpty)
           new BloomBuilder(schema, bloomFor, trigramFor)
         else null
-      val ndvStats: NdvBuilder =
+      private val ndvStats: NdvBuilder =
         if (ndvFor.nonEmpty) new NdvBuilder(schema, ndvFor)
         else null
-      var nRows = 0L
-      // block-range zone index (sorted staged writes): chunk = rows
-      // between forced syncs; TRUE per-chunk min/max of EVERY sort
-      // column (secondary columns are not monotone across primary
-      // runs, so cmp-tracked bounds, not first/last)
-      var bStart = 0L
-      var bRows = 0
-      var bMins: Array[Any] = _
-      var bMaxs: Array[Any] = _
-      var bChunks: List[(Long, Long, Array[String], Array[String],
-        Array[String])] = Nil
-      // per-chunk membership cells (chunkBloomFor), cut in lockstep
-      // with the zone chunks above
-      val cbStats: ChunkBloomBuilder =
-        if (staged && sortIdx.nonEmpty &&
-            (chunkBloomFor.nonEmpty || chunkTrigramFor.nonEmpty))
+      private val cells: ChunkBloomBuilder =
+        if (chunkCells)
           new ChunkBloomBuilder(schema, chunkBloomFor, chunkTrigramFor)
         else null
-      private def cbCells(): Array[String] =
-        if (cbStats == null) Array.empty[String] else cbStats.cut()
-      // sort values arrive INTERNAL (copied off the row buffer once per
-      // row); externalize only at chunk-cut encode time
-      private def bEnc(v: Any, c: Int, hi: Boolean): String =
-        if (v == null) "-"
-        else if (hi) AvroFileSource.zoneEncodeMax(toExternal(v, sortDts(c)))
-        else AvroFileSource.zoneEncodeMin(toExternal(v, sortDts(c)))
-      private def bEncAll(vs: Array[Any], hi: Boolean): Array[String] =
-        Array.tabulate(vs.length)(c => bEnc(vs(c), c, hi))
-      private def bCut(end: Long): Unit = {
-        bChunks ::= ((bStart, end,
-          bEncAll(bMins, hi = false), bEncAll(bMaxs, hi = true),
-          cbCells()))
-        bStart = end; bRows = 0
-        java.util.Arrays.fill(bMins.asInstanceOf[Array[AnyRef]], null)
-        java.util.Arrays.fill(bMaxs.asInstanceOf[Array[AnyRef]], null)
-      }
-      def bTrack(vs: Array[Any]): Unit = {
-        if (bMins == null) {
-          bMins = new Array[Any](vs.length)
-          bMaxs = new Array[Any](vs.length)
-        }
-        bRows += 1
-        var i = 0
-        while (i < vs.length) {
-          val v = vs(i)
-          if (v != null) {
-            if (bMins(i) == null) { bMins(i) = v; bMaxs(i) = v }
-            else {
-              if (sortCmps(i)(v, bMins(i)) < 0) bMins(i) = v
-              if (sortCmps(i)(v, bMaxs(i)) > 0) bMaxs(i) = v
-            }
-          }
-          i += 1
-        }
-        // sync() returns the NEXT block's start; −16 lands the
-        // boundary on the preceding sync's offset (the split rule:
-        // a block belongs to the range containing blockStart − 16)
-        if (bRows >= AvroFileSource.BlockIdxRows) bCut(writer.sync() - 16)
-      }
-      /** Call AFTER writer.close(): final pending chunk ends at the
-        * on-disk length. Fewer than two chunks index nothing (the
-        * file-level zones already cover a one-chunk file).
-        */
-      def bFinish(): Seq[(Long, Long, Array[String], Array[String],
-          Array[String])] = {
-        if (bRows > 0) {
-          bChunks ::= ((bStart, file.length(),
-            bEncAll(bMins, hi = false), bEncAll(bMaxs, hi = true),
-            cbCells()))
-          bRows = 0
-        }
-        val out = bChunks.reverse
-        if (out.size >= 2) out else Nil
-      }
-    }
-
-    new DataWriter[InternalRow] {
-      private var closed: List[Segment] = Nil
-      private var cur: Segment = _
-      private var nextSeq = 0
+      private val blockIdx: BlockIndex =
+        if (staged && sortIdx.nonEmpty)
+          new BlockIndex(sortColsList, sortDts, sortCmps, cells)
+        else null
+      private var nRows = 0L
       private var sinceCheck = 0
-      private def ensure(): Segment = {
-        if (cur == null) { cur = new Segment(nextSeq); nextSeq += 1 }
-        cur
-      }
-      if (!lazyCreate) ensure()
 
-      override def write(record: InternalRow): Unit = {
-        val seg = ensure()
+      def write(record: InternalRow, view: org.apache.spark.sql.Row): Unit = {
         var sortVals: Array[Any] = null
-        if (sortIdx.nonEmpty) {
+        if (verifier != null) {
           // INTERNAL sort values, detached once (copyInternal): the
-          // verifier's prev tuple and bTrack's bounds retain them past
-          // this row, and the incoming buffer may be reused
+          // verifier's prev tuple and the block index's bounds retain
+          // them past this row, and the incoming buffer may be reused
           sortVals = new Array[Any](sortIdx.length)
           var k = 0
           while (k < sortVals.length) {
@@ -9088,89 +8868,113 @@ private[sources] object AvroWriters {
               else copyInternal(record.get(i, sortDts(k)))
             k += 1
           }
-          seg.verifier.get.check(sortVals)
+          verifier.check(sortVals)
         }
-        seg.colStats.update(record)
-        if (seg.bloomStats != null || seg.ndvStats != null ||
-            seg.cbStats != null) {
-          // the lazy external view is only needed for the canonical-
-          // string hashers (bloom/NDV/chunk cells) — rarely configured
-          val view = AvroInternalCodec.externalView(record, schema)
-          if (seg.bloomStats != null) seg.bloomStats.update(view)
-          if (seg.ndvStats != null) seg.ndvStats.update(view)
-          // BEFORE bTrack: a cut flushed by this row's bTrack must
-          // include this row's membership bits
-          if (seg.cbStats != null) seg.cbStats.update(view)
-        }
-        seg.nRows += 1
-        seg.writer.append(record)
+        colStats.update(record)
+        if (bloomStats != null) bloomStats.update(view)
+        if (ndvStats != null) ndvStats.update(view)
+        // BEFORE the block index: a cut flushed by this row must
+        // include this row's membership bits
+        if (cells != null) cells.update(view)
+        nRows += 1
+        writer.append(record)
         // block-range index AFTER the append so a forced sync closes a
-        // block that INCLUDES this row
-        if (staged && sortVals != null) seg.bTrack(sortVals)
-        // roll on the observed on-disk size (lags by at most one
-        // unflushed container block — bounded overshoot, no forced
-        // sync that would shrink compression blocks)
-        roll.foreach { target =>
-          sinceCheck += 1
-          if (sinceCheck >= 256) {
-            sinceCheck = 0
-            if (seg.file.length() >= target) {
-              seg.writer.close()
-              closed ::= seg
-              cur = null
-            }
+        // block that INCLUDES this row. sync() returns the NEXT block's
+        // start; −16 lands the boundary on the preceding sync's offset
+        // (the split rule: a block belongs to the range containing
+        // blockStart − 16)
+        if (blockIdx != null) {
+          blockIdx.track(sortVals)
+          if (blockIdx.rows >= AvroFileSource.BlockIdxRows)
+            blockIdx.cut(writer.sync() - 16)
+        }
+      }
+
+      /** Whether this segment reached `target` bytes. Checked on the
+        * observed on-disk size every 256 rows: it lags by at most one
+        * unflushed container block — bounded overshoot, no forced sync
+        * that would shrink compression blocks.
+        */
+      def full(target: Long): Boolean = {
+        sinceCheck += 1
+        if (sinceCheck < 256) false
+        else { sinceCheck = 0; file.length() >= target }
+      }
+
+      def close(): Unit = writer.close()
+
+      /** The segment's share of the task's commit message; call after
+        * [[close]] (the last block-index chunk ends at the on-disk
+        * length). Stats are keyed on the final path in both modes; only
+        * the staged-rename vs streamed-path bookkeeping differs.
+        */
+      def message: AvroCommitMessage = {
+        val fin = finalFile.getPath
+        def keyed[T](s: Seq[T]) = if (s.isEmpty) Nil else Seq(fin -> s)
+        AvroCommitMessage(
+          if (staged) Seq(file.getPath -> fin) else Nil,
+          zones = Option(verifier).flatMap(_.zone).toSeq.map {
+            case (mn, mx) =>
+              (fin, AvroFileSource.zoneEncodeMin(toExternal(mn, sortDts(0))),
+                AvroFileSource.zoneEncodeMax(toExternal(mx, sortDts(0))))
+          },
+          colZones = keyed(colStats.stats),
+          blooms = if (bloomStats == null) Nil else keyed(bloomStats.stats),
+          rows = Seq(fin -> nRows),
+          ndvs = if (ndvStats == null) Nil else keyed(ndvStats.stats),
+          streamed = if (staged) Nil else Seq(fin),
+          blockIdx =
+            if (blockIdx == null) Nil else keyed(blockIdx.finish(file.length())))
+      }
+    }
+
+    new DataWriter[InternalRow] {
+      private val open =
+        scala.collection.mutable.LinkedHashMap.empty[String, WriteSegment]
+      private val nextSeq = scala.collection.mutable.HashMap.empty[String, Int]
+      private var closed: List[WriteSegment] = Nil
+      private def segment(key: String): WriteSegment =
+        open.getOrElseUpdate(key, {
+          val seq = nextSeq.getOrElse(key, 0)
+          nextSeq(key) = seq + 1
+          new WriteSegment(key, seq)
+        })
+      if (!lazyCreate && !routed) segment("")
+
+      private def closeAll(): Unit = {
+        open.values.foreach { s => s.close(); closed ::= s }
+        open.clear()
+      }
+
+      override def write(record: InternalRow): Unit = {
+        val view =
+          if (needsView) AvroInternalCodec.externalView(record, schema)
+          else null
+        val key = if (routed) routeKey(view) else ""
+        val seg = segment(key)
+        seg.write(record, view)
+        targetFileBytes.foreach { target =>
+          if (seg.full(target)) {
+            seg.close()
+            closed ::= seg
+            open.remove(key)
           }
         }
       }
       override def commit(): WriterCommitMessage = {
-        if (cur != null) { cur.writer.close(); closed ::= cur; cur = null }
-        val segs = closed.reverse
-        if (segs.isEmpty) return AvroCommitMessage(Nil)
-        // stats ride BOTH modes, keyed on final paths; only the
-        // staged-rename vs streamed-path bookkeeping differs
-        AvroCommitMessage(
-          if (staged) segs.map(s => s.file.getPath -> s.finalFile.getPath)
-          else Nil,
-          zones = segs.flatMap(s =>
-            s.verifier.flatMap(_.zone).map { case (mn, mx) =>
-              // verifier zone values are INTERNAL since r21
-              (s.finalFile.getPath,
-                AvroFileSource.zoneEncodeMin(toExternal(mn, sortDts(0))),
-                AvroFileSource.zoneEncodeMax(toExternal(mx, sortDts(0))))
-            }),
-          colZones = segs.flatMap(s =>
-            Option(s.colStats).map(_.stats).filter(_.nonEmpty)
-              .map(s.finalFile.getPath -> _)),
-          blooms = segs.flatMap(s =>
-            Option(s.bloomStats).map(_.stats).filter(_.nonEmpty)
-              .map(s.finalFile.getPath -> _)),
-          rows = segs.map(s => s.finalFile.getPath -> s.nRows),
-          ndvs = segs.flatMap(s =>
-            Option(s.ndvStats).map(_.stats).filter(_.nonEmpty)
-              .map(s.finalFile.getPath -> _)),
-          streamed = if (staged) Nil else segs.map(_.finalFile.getPath),
-          blockIdx =
-            if (!staged || sortIdx.isEmpty) Nil
-            else {
-              val colEncs = sortColsList
-                .map(java.net.URLEncoder.encode(_, "UTF-8"))
-              val dts = sortIdx
-                .map(i => schema.fields(i).dataType.simpleString)
-              segs.flatMap { s =>
-                val cs = s.bFinish()
-                if (cs.isEmpty) None
-                else Some((s.finalFile.getPath,
-                  cs.flatMap { case (st, en, mns, mxs, cbs) =>
-                    sortColsList.indices.map(i =>
-                      (colEncs(i), dts(i), st, en, mns(i), mxs(i))) ++
-                      cbs.indices.map(j => (s.cbStats.colEncs(j),
-                        s.cbStats.tags(j), st, en, cbs(j), "-"))
-                  }))
-              }
-            })
+        closeAll()
+        val ms = closed.reverse.map(_.message)
+        AvroCommitMessage(ms.flatMap(_.files),
+          zones = ms.flatMap(_.zones),
+          colZones = ms.flatMap(_.colZones),
+          blooms = ms.flatMap(_.blooms),
+          rows = ms.flatMap(_.rows),
+          ndvs = ms.flatMap(_.ndvs),
+          streamed = ms.flatMap(_.streamed),
+          blockIdx = ms.flatMap(_.blockIdx))
       }
       override def abort(): Unit = {
-        if (cur != null) { cur.writer.close(); closed ::= cur; cur = null }
+        closeAll()
         closed.foreach(s => s.file.delete())
       }
       override def close(): Unit = ()
@@ -9198,19 +9002,12 @@ case class AvroWriterFactory(path: String, schema: StructType,
     // name can never be reused by a later generation.
     val uniq = java.util.UUID.randomUUID().toString.take(8)
     val name = f"part-$partitionId%05d-$taskId-$uniq.avro"
-    if (partitionBy.nonEmpty || bucketBy.nonEmpty || transformBy.nonEmpty)
-      AvroWriters.openPartitioned(path, schema, name, partitionBy, codec,
-        staged = staged, sortedBy = sortedBy, bloomFor = bloomFor,
-        ndvFor = ndvFor, trigramFor = trigramFor,
-        targetFileBytes = targetFileBytes, buckets = bucketBy,
-        xforms = transformBy, chunkBloomFor = chunkBloomFor,
-        chunkTrigramFor = chunkTrigramFor)
-    else
-      AvroWriters.open(path, schema, name,
-        lazyCreate = false, codec = codec, staged = staged,
-        sortedBy = sortedBy, bloomFor = bloomFor, ndvFor = ndvFor,
-        trigramFor = trigramFor, targetFileBytes = targetFileBytes,
-        chunkBloomFor = chunkBloomFor, chunkTrigramFor = chunkTrigramFor)
+    AvroWriters.open(path, schema, name, lazyCreate = false, codec = codec,
+      staged = staged, sortedBy = sortedBy, bloomFor = bloomFor,
+      ndvFor = ndvFor, trigramFor = trigramFor,
+      targetFileBytes = targetFileBytes, partCols = partitionBy,
+      buckets = bucketBy, xforms = transformBy,
+      chunkBloomFor = chunkBloomFor, chunkTrigramFor = chunkTrigramFor)
   }
 }
 
@@ -9227,15 +9024,10 @@ case class AvroStreamingWriterFactory(path: String, schema: StructType,
   override def createWriter(partitionId: Int, taskId: Long,
       epochId: Long): DataWriter[InternalRow] = {
     val name = f"part-e$epochId%06d-$partitionId%05d.avro"
-    if (partitionBy.nonEmpty || bucketBy.nonEmpty || transformBy.nonEmpty)
-      AvroWriters.openPartitioned(path, schema, name, partitionBy, codec,
-        buckets = bucketBy, xforms = transformBy,
-        bloomFor = bloomFor, ndvFor = ndvFor, trigramFor = trigramFor,
-        targetFileBytes = targetFileBytes)
-    else
-      AvroWriters.open(path, schema, name, lazyCreate = true, codec = codec,
-        bloomFor = bloomFor, ndvFor = ndvFor, trigramFor = trigramFor,
-        targetFileBytes = targetFileBytes)
+    AvroWriters.open(path, schema, name, lazyCreate = true, codec = codec,
+      bloomFor = bloomFor, ndvFor = ndvFor, trigramFor = trigramFor,
+      targetFileBytes = targetFileBytes, partCols = partitionBy,
+      buckets = bucketBy, xforms = transformBy)
   }
 }
 

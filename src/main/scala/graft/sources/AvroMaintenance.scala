@@ -1772,25 +1772,19 @@ object AvroMaintenance {
               if (nCols.nonEmpty) new AvroWriters.NdvBuilder(st, nCols)
               else null
             // block-index BACKFILL: per-CHUNK exact [min, max] of the
-            // named column, chunks cut at the file's OWN block
+            // named columns, chunks cut at the file's OWN block
             // boundaries (previousSync = current block start, so the
             // −16 convention matches the writer and the split rule)
             // once BlockIdxRows rows accumulate. Unlike the write path,
             // no sortedness is needed — the tracked bounds are true
             // per-chunk min/max, sound for any layout (a Z-ordered or
             // clustered file regains intra-file skipping this way).
+            // Columns without a sortable type are skipped (no total
+            // order / NaN hazard).
             val bixIdx = bix.filter(top.contains).map(st.fieldIndex)
-              .filter { i =>
-                import org.apache.spark.sql.types._
-                st.fields(i).dataType match {
-                  case StringType | IntegerType | LongType | ShortType |
-                       ByteType | BooleanType | DateType | TimestampType |
-                       _: DecimalType => true
-                  case _ => false // no total order / NaN hazard
-                }
-              }
-            val bixDt = bixIdx.map(i => st.fields(i).dataType.simpleString)
-            val nBix = bixIdx.size
+              .filter(i => AvroWriters.sortCmp(st.fields(i).dataType).nonEmpty)
+              .toArray
+            val bixDts = bixIdx.map(i => st.fields(i).dataType)
             // per-chunk bloom cells (chunk_bloom_for), cut in lockstep
             // with the zone chunks — membership skipping for clustered/
             // Z-ordered files without a rewrite
@@ -1804,102 +1798,56 @@ object AvroMaintenance {
               if ((cbCols.nonEmpty || ctCols.nonEmpty) && bixIdx.nonEmpty)
                 new AvroWriters.ChunkBloomBuilder(st, cbCols, ctCols)
               else null
-            def cbCells(): Seq[String] =
-              if (cbb == null) Nil else cbb.cut().toSeq
-            var chunkStart = 0L
-            var chunkRows = 0L
-            var cMins: Array[Any] = new Array[Any](nBix)
-            var cMaxs: Array[Any] = new Array[Any](nBix)
-            val chunks = Seq.newBuilder[
-              (Long, Long, Seq[String], Seq[String], Seq[String])]
-            var nChunks = 0
-            def bEnc(v: Any, hi: Boolean): String =
-              if (v == null) "-"
-              else if (hi) AvroFileSource.zoneEncodeMax(v)
-              else AvroFileSource.zoneEncodeMin(v)
-            def cut(end: Long): Unit = {
-              chunks += ((chunkStart, end,
-                cMins.toSeq.map(bEnc(_, hi = false)),
-                cMaxs.toSeq.map(bEnc(_, hi = true)), cbCells()))
-              nChunks += 1
-              chunkStart = end; chunkRows = 0
-              cMins = new Array[Any](nBix); cMaxs = new Array[Any](nBix)
-            }
+            val bi =
+              if (bixIdx.isEmpty) null
+              else new AvroWriters.BlockIndex(bixIdx.map(st.fields(_).name),
+                bixDts, bixDts.map(AvroWriters.sortCmp(_).get), cbb)
             var n = 0L
-            // fused record→InternalRow decode (r21): ColumnStats runs on
-            // internal values; the lazy external view only materializes
-            // the columns the bloom/NDV/chunk hashers and the block-index
-            // tracker actually touch
+            // fused record→InternalRow decode (r21): ColumnStats and the
+            // block index run on internal values; the lazy external view
+            // only feeds the bloom/NDV/chunk hashers
             val dec = graft.avro.AvroInternalCodec.decoderFor(r.getSchema, st)
             while (r.hasNext) {
-              if (bixIdx.nonEmpty && chunkRows >= AvroFileSource.BlockIdxRows) {
+              if (bi != null && bi.rows >= AvroFileSource.BlockIdxRows) {
                 val bs = r.previousSync() - 16
-                if (bs > chunkStart) cut(bs)
+                if (bs > bi.start) bi.cut(bs)
               }
               val ir = dec(r.next())
               cs.update(ir)
-              val view = graft.avro.AvroInternalCodec.externalView(ir, st)
-              if (bb != null) bb.update(view)
-              if (nb != null) nb.update(view)
-              if (cbb != null) cbb.update(view)
-              if (bixIdx.nonEmpty) {
-                chunkRows += 1
-                var j = 0
-                while (j < nBix) {
-                  val v = view.get(bixIdx(j))
-                  if (v != null) {
-                    if (cMins(j) == null) { cMins(j) = v; cMaxs(j) = v }
-                    else {
-                      if (AvroFilterEval.cmp(v, cMins(j)).exists(_ < 0))
-                        cMins(j) = v
-                      if (AvroFilterEval.cmp(v, cMaxs(j)).exists(_ > 0))
-                        cMaxs(j) = v
-                    }
-                  }
-                  j += 1
-                }
+              if (bb != null || nb != null || cbb != null) {
+                val view = graft.avro.AvroInternalCodec.externalView(ir, st)
+                if (bb != null) bb.update(view)
+                if (nb != null) nb.update(view)
+                if (cbb != null) cbb.update(view)
               }
+              if (bi != null)
+                bi.track(Array.tabulate[Any](bixIdx.length) { j =>
+                  if (ir.isNullAt(bixIdx(j))) null
+                  else AvroWriters.copyInternal(ir.get(bixIdx(j), bixDts(j)))
+                })
               n += 1
             }
-            if (bixIdx.nonEmpty && chunkRows > 0) cut(f.length())
             (rel, cs.stats,
               if (bb == null) Seq.empty[(String, String, String)]
               else bb.stats,
               if (nb == null) Seq.empty[(String, String, String)]
               else nb.stats,
               n,
-              // a one-chunk file indexes nothing (file-level zones
-              // already cover it)
-              if (nChunks >= 2 && bixIdx.nonEmpty)
-                Some((bixIdx.map(i => java.net.URLEncoder.encode(
-                  st.fields(i).name, "UTF-8")).zip(bixDt), chunks.result(),
-                  if (cbb == null) Seq.empty[String] else cbb.colEncs,
-                  if (cbb == null) Seq.empty[String] else cbb.tags))
-              else None)
+              if (bi == null)
+                Seq.empty[(String, String, Long, Long, String, String)]
+              else bi.finish(f.length()))
           } finally r.close()
         }
       }.collect()
     val msgs = perFile.toSeq.map {
-      case (rel, zones, blooms, ndvs, n, bchunks) =>
+      case (rel, zones, blooms, ndvs, n, blockIdx) =>
         val fin = new File(root, rel).getPath
         AvroCommitMessage(Nil,
           colZones = if (zones.nonEmpty) Seq(fin -> zones) else Nil,
           blooms = if (blooms.nonEmpty) Seq(fin -> blooms) else Nil,
           rows = Seq(fin -> n),
           ndvs = if (ndvs.nonEmpty) Seq(fin -> ndvs) else Nil,
-          blockIdx = bchunks.toSeq.map {
-            case (colDts, cs, cbEncs, cbTags) =>
-              // one zone line per (col, chunk) — shared boundaries,
-              // matching the compound sortedBy write format — plus the
-              // chunk's cell lines once
-              (fin, cs.flatMap { case (s, e, mns, mxs, cells) =>
-                colDts.zipWithIndex.map { case ((colEnc, dt), j) =>
-                  (colEnc, dt, s, e, mns(j), mxs(j))
-                } ++
-                  cells.indices.map(j =>
-                    (cbEncs(j), cbTags(j), s, e, cells(j), "-"))
-              })
-          })
+          blockIdx = if (blockIdx.nonEmpty) Seq(fin -> blockIdx) else Nil)
     }
     AvroFileSource.withCommitLock(d) {
       AvroFileSource.foldStatsManifests(d, msgs)

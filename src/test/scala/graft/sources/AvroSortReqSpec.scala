@@ -47,6 +47,25 @@ class AvroSortReqSpec extends AnyFunSuite with SparkSpec with Matchers {
     err.toString + Option(err.getCause).mkString should include("violated")
   }
 
+  // the flat writer verifies every sortable key type with its internal
+  // comparator: a string or decimal claim is checked, not waved through
+  Seq("string" -> "cast((id * 48271) % 2000 as string)",
+      "decimal" -> "cast((id * 48271) % 2000 as decimal(12, 2))")
+    .foreach { case (kind, key) =>
+      test(s"unpartitioned sortedBy on a shuffled $kind key fails the claim") {
+        val dir = tmp()
+        val err = intercept[Exception] {
+          spark.range(2000)
+            .selectExpr(s"$key as k")
+            .repartition(5)
+            .write.format("graft-avro").option("sortedBy", "k")
+            .mode("overwrite").save(dir)
+        }
+        err.toString + Option(err.getCause).mkString should include("violated")
+        AvroFileSource.sortedColumnOf(new java.io.File(dir)) shouldBe None
+      }
+    }
+
   test("partitioned requestSort: one file per partition dir, no pre-shape") {
     val dir = tmp()
     spark.range(1000)

@@ -1,5 +1,6 @@
 package graft.sources
 
+import org.apache.spark.sql.types.LongType
 import org.scalacheck.{Gen, Prop, Properties}
 
 /** Property laws of the lexicographic OrderVerifier (multi-column
@@ -26,7 +27,9 @@ object SortedMultiLaws extends Properties("SortedMultiLaws") {
   }
 
   private def feed(rows: Seq[Tup]): AvroWriters.OrderVerifier = {
-    val v = new AvroWriters.OrderVerifier(Seq("a", "b"))
+    // internal LongType values are the boxed longs themselves
+    val cmp = AvroWriters.internalCmp(LongType).get
+    val v = new AvroWriters.OrderVerifier(Seq("a", "b"), Array(cmp, cmp))
     rows.foreach { case (x, y) =>
       v.check(Array[Any](x.map(Long.box).orNull, y.map(Long.box).orNull))
     }
