@@ -1170,9 +1170,14 @@ object AvroFileSource {
   // pruning for scattered high-cardinality keys. Manifest lines:
   // `rel TAB colEnc TAB type TAB base64(bits)`; partial coverage is
   // sound (absence ⇒ scan), lifecycle mirrors `_graft_zones_cols`.
+  // An entry's width is its own: any power of two from 64 bits to
+  // [[BloomBits]] (see [[foldBloom]]); readers probe modulo it.
   // ------------------------------------------------------------------
 
-  val BloomBits = 1 << 15 // 4 KB of bits per (file, column)
+  // Build width of every bloom set (4 KB per (file, column) or chunk
+  // cell). File-level entries fold down from it at file close; chunk
+  // cells are written at this width. The widest entry a reader accepts.
+  val BloomBits = 1 << 15
   val BloomHashes = 5
 
   def bloomFile(d: File): File = new File(d, "_graft_blooms")
@@ -1218,9 +1223,6 @@ object AvroFileSource {
       }
     }
   }
-
-  private[sources] def bloomMightContain(bits: Array[Long],
-      value: String): Boolean = probeHit(bits, bloomHash2(value))
 
   /** Trigram bloom entries ride the SAME `_graft_blooms` manifest under
     * this type tag; the equality reader's `recorded type == read type`
@@ -1294,15 +1296,62 @@ object AvroFileSource {
   private[sources] def bloomProbeSubstring(needle: String): BloomProbe =
     BloomProbe(any = false, trigramsOf(needle).map(bloomHash2))
 
+  /** Probe modulo the set's OWN width: a set folded to m bits answers
+    * exactly as the [[BloomBits]] set it came from would at width m
+    * (see [[foldBloom]]), so every width probes the same hashes.
+    */
   private def probeHit(bits: Array[Long], h: (Long, Long)): Boolean = {
+    val m = bits.length.toLong * 64
     var i = 0
     while (i < BloomHashes) {
-      val b = java.lang.Math.floorMod(h._1 + i * h._2, BloomBits.toLong).toInt
+      val b = java.lang.Math.floorMod(h._1 + i * h._2, m).toInt
       if ((bits(b >> 6) & (1L << (b & 63))) == 0) return false
       i += 1
     }
     true
   }
+
+  /** Fold a [[BloomBits]] set to the narrowest width its contents
+    * allow. `floorMod(h, m) == floorMod(h, 2m) mod m` for a power of two
+    * m, so OR-ing the upper half into the lower half IS the set the same
+    * values would have built at half the width: folding never adds a
+    * false negative. Halving stops before the folded set would pass 1/8
+    * full (k=5 ⇒ about (1/8)^5 ≈ 3e-5 false positives) or 64 bits.
+    */
+  private[sources] def foldBloom(bits: Array[Long]): Array[Long] = {
+    var cur = bits
+    var done = false
+    while (!done && cur.length > 1) {
+      val half = cur.length / 2
+      val next = Array.tabulate(half)(i => cur(i) | cur(i + half))
+      val set = next.iterator.map(java.lang.Long.bitCount).sum
+      if (set.toLong * 8 > half.toLong * 64) done = true
+      else cur = next
+    }
+    cur
+  }
+
+  /** Decode one base64 bloom set of any power-of-two width from 64 bits
+    * to [[BloomBits]]; anything else (malformed, truncated, another
+    * width) is None and its file or chunk is kept.
+    */
+  private[sources] def decodeBloom(b64: String): Option[Array[Long]] =
+    scala.util.Try(java.util.Base64.getDecoder.decode(b64)).toOption
+      .filter { bytes =>
+        val n = bytes.length
+        n >= 8 && n <= BloomBits / 8 && (n & (n - 1)) == 0
+      }
+      .map { bytes =>
+        val bb = java.nio.ByteBuffer.wrap(bytes)
+        Array.fill(bytes.length / 8)(bb.getLong)
+      }
+
+  private[sources] def encodeBloom(bits: Array[Long]): String =
+    java.util.Base64.getEncoder.encodeToString {
+      val bb = java.nio.ByteBuffer.allocate(bits.length * 8)
+      bits.foreach(bb.putLong)
+      bb.array()
+    }
 
   private[sources] def probePass(bits: Array[Long], p: BloomProbe): Boolean =
     if (p.any) p.hashes.exists(probeHit(bits, _))
@@ -1311,7 +1360,7 @@ object AvroFileSource {
   /** Streaming membership pruning: evaluate every probe against the
     * manifest AS IT STREAMS and retain only the files some probe
     * definitively rules out. Driver heap is O(dropped paths) plus ONE
-    * transient 4 KB bit array — never the decoded manifest — so
+    * transient bit array (at most 4 KB) — never the decoded manifest — so
     * membership pruning survives any table size (this replaces the
     * earlier 32k-entry cap that stood pruning down exactly on the
     * large tables where it pays most). Soundness: entries whose
@@ -1340,14 +1389,11 @@ object AvroFileSource {
                 else dt.simpleString == dtName && bloomableType(dt)
               }
             if (typeOk)
-              scala.util.Try(java.util.Base64.getDecoder.decode(b64))
-                .toOption.filter(_.length == BloomBits / 8).foreach { bytes =>
-                  bloomEntriesDecoded.incrementAndGet()
-                  val bb = java.nio.ByteBuffer.wrap(bytes)
-                  val bits = Array.fill(BloomBits / 64)(bb.getLong)
-                  if (!ps.forall(probePass(bits, _)))
-                    dropped += new File(base, rel).getAbsolutePath
-                }
+              decodeBloom(b64).foreach { bits =>
+                bloomEntriesDecoded.incrementAndGet()
+                if (!ps.forall(probePass(bits, _)))
+                  dropped += new File(base, rel).getAbsolutePath
+              }
           case _ => ()
         }
       } finally src.close()
@@ -2137,80 +2183,122 @@ object AvroFileSource {
     case other => zoneEncode(other)
   }
 
+  /** The all-column manifest's lines in file order, as (rel, colEnc,
+    * type tag, slot 1, slot 2), values still URL-encoded. Malformed
+    * lines drop, an unreadable file reads as empty (never-prune is
+    * sound).
+    */
+  private def readColZoneLines(zf: File)
+      : IndexedSeq[(String, String, String, String, String)] =
+    try {
+      val out = IndexedSeq.newBuilder[(String, String, String, String, String)]
+      val lines = java.nio.file.Files.readAllLines(zf.toPath,
+        java.nio.charset.StandardCharsets.UTF_8).iterator()
+      while (lines.hasNext) lines.next().split('\t') match {
+        case Array(rel, col, dt, mn, mx) => out += ((rel, col, dt, mn, mx))
+        case _ => ()
+      }
+      out.result()
+    } catch { case _: Exception => IndexedSeq.empty }
+
+  private def colZonesByRel(
+      lines: IndexedSeq[(String, String, String, String, String)])
+      : Map[String, Seq[(String, String, String, String)]] =
+    lines.groupMap(_._1)(l => (l._2, l._3, l._4, l._5))
+
   /** Raw all-column manifest keyed by relative path; values stay
     * URL-encoded for lossless merge-and-rewrite. Malformed lines drop
     * (never-prune is sound).
     */
   private[sources] def readColZonesRaw(zf: File)
       : Map[String, Seq[(String, String, String, String)]] =
-    try {
-      val src = scala.io.Source.fromFile(zf, "UTF-8")
-      try {
-        src.getLines().flatMap { line =>
-          line.split('\t') match {
-            case Array(rel, col, dt, mn, mx) =>
-              Some(rel -> ((col, dt, mn, mx)))
-            case _ => None
-          }
-        }.toSeq.groupMap(_._1)(_._2)
-      } finally src.close()
-    } catch { case _: Exception => Map.empty }
+    colZonesByRel(readColZoneLines(zf))
 
-  /** All-column manifest parsed to external values, keyed by ABSOLUTE
-    * file path then dotted column name. Entries whose recorded type
-    * disagrees with the current read schema, or whose values fail to
-    * parse, are dropped — their files scan normally.
+  /** `_graft_zones_cols` of `dir` (empty when absent), read on first use. */
+  private[sources] def colZoneManifest(dir: File, full: StructType)
+      : ColZoneManifest =
+    new ColZoneManifest(colZoneFile(dir), dir, full)
+
+  /** One parse of the all-column manifest `zf` (empty when absent) and
+    * the typed per-column views over it, each built at most once and
+    * only for the columns asked about: a scan's decided pushdown, zone
+    * pruning, null-cell pruning and metadata aggregates all read the
+    * same instance, and a point lookup on one column types that
+    * column's cells alone. Each column's name and read-schema leaf type
+    * resolve once per manifest, not once per cell. Malformed lines drop
+    * (never-prune is sound).
     */
-  private[sources] def readColZones(zf: File, base: File, full: StructType)
-      : Map[String, Map[String, (Any, Any)]] =
-    colZonesFromRaw(readColZonesRaw(zf), base, full)
+  private[sources] final class ColZoneManifest(zf: File, base: File,
+      full: StructType) {
+    private lazy val lines =
+      if (zf.isFile) readColZoneLines(zf)
+      else IndexedSeq.empty[(String, String, String, String, String)]
 
-  /** Bounds view over a pre-parsed raw manifest (one parse can feed
-    * both the bounds and the null-cell views — the manifest is the
-    * largest sidecar, and scans consume both).
-    */
-  private[sources] def colZonesFromRaw(
-      raw: Map[String, Seq[(String, String, String, String)]],
-      base: File, full: StructType)
-      : Map[String, Map[String, (Any, Any)]] =
-    raw.map { case (rel, entries) =>
-      new File(base, rel).getAbsolutePath -> entries.flatMap {
-        case (colEnc, dtName, mn, mx) =>
-          val col = java.net.URLDecoder.decode(colEnc, "UTF-8")
-          for {
-            dt <- AvroFilterEval.leafType(full, col)
-            if dt.simpleString == dtName
-            lo <- castPartitionValue(mn, dt) if lo != null
-            hi <- castPartitionValue(mx, dt) if hi != null
-          } yield col -> (lo, hi)
-      }.toMap
-    }.filter(_._2.nonEmpty)
+    /** The manifest keyed by relative path, as [[readColZonesRaw]]
+      * returns it (values still encoded), for the metadata aggregates.
+      */
+    lazy val raw: Map[String, Seq[(String, String, String, String)]] =
+      colZonesByRel(lines)
 
-  /** `cnt:` cells parsed from the all-column manifest: ABSOLUTE file
-    * path → dotted column → (non-null count, row total). Entries whose
-    * recorded leaf type disagrees with the current read schema drop
-    * (type-tag invisibility, like every other cell kind).
-    */
-  private[sources] def readNullCells(zf: File, base: File, full: StructType)
-      : Map[String, Map[String, (Long, Long)]] =
-    nullCellsFromRaw(readColZonesRaw(zf), base, full)
+    // dotted column -> (read-schema leaf type, its cells as (rel, type
+    // tag, slot 1, slot 2)); columns the read schema lacks drop here
+    private lazy val byColumn: Map[String,
+        (org.apache.spark.sql.types.DataType,
+          Seq[(String, String, String, String)])] =
+      lines.groupMap(_._2)(l => (l._1, l._3, l._4, l._5)).toSeq
+        .groupMapReduce(e => java.net.URLDecoder.decode(e._1, "UTF-8"))(
+          _._2)(_ ++ _)
+        .flatMap { case (col, cs) =>
+          AvroFilterEval.leafType(full, col).map(dt => col -> (dt, cs))
+        }
 
-  private[sources] def nullCellsFromRaw(
-      raw: Map[String, Seq[(String, String, String, String)]],
-      base: File, full: StructType)
-      : Map[String, Map[String, (Long, Long)]] =
-    raw.map { case (rel, entries) =>
-      new File(base, rel).getAbsolutePath -> entries.flatMap {
-        case (colEnc, dtName, nn, total)
-            if dtName.startsWith("cnt:") &&
-              nn.matches("[0-9]+") && total.matches("[0-9]+") =>
-          val col = java.net.URLDecoder.decode(colEnc, "UTF-8")
-          AvroFilterEval.leafType(full, col)
-            .filter(dt => dtName == "cnt:" + dt.simpleString)
-            .map(_ => col -> (nn.toLong, total.toLong))
-        case _ => None
-      }.toMap
-    }.filter(_._2.nonEmpty)
+    /** Columns of the read schema with at least one cell. */
+    def columns: Iterable[String] = byColumn.keys
+
+    private val absPaths = scala.collection.mutable.HashMap.empty[String, String]
+    private val boundsMemo =
+      scala.collection.mutable.HashMap.empty[String, Map[String, (Any, Any)]]
+    private val nullsMemo =
+      scala.collection.mutable.HashMap.empty[String, Map[String, (Long, Long)]]
+    private def view[V](memo: scala.collection.mutable.HashMap[String,
+        Map[String, V]], col: String)(cell: (
+        org.apache.spark.sql.types.DataType, String, String, String)
+        => Option[V]): Map[String, V] = synchronized {
+      memo.getOrElseUpdate(col, byColumn.get(col) match {
+        case None => Map.empty
+        case Some((dt, cs)) => cs.iterator.flatMap { case (rel, dtName, a, b) =>
+          cell(dt, dtName, a, b).map(absPaths.getOrElseUpdate(rel,
+            new File(base, rel).getAbsolutePath) -> _)
+        }.toMap
+      })
+    }
+
+    /** Zone bounds of `col`: ABSOLUTE file path → (min, max). Entries
+      * whose recorded type disagrees with the read schema, or whose
+      * values fail to parse, drop — their files scan normally.
+      */
+    def boundsOf(col: String): Map[String, (Any, Any)] =
+      view(boundsMemo, col) { (dt, dtName, mn, mx) =>
+        if (dt.simpleString != dtName) None
+        else for {
+          lo <- castPartitionValue(mn, dt) if lo != null
+          hi <- castPartitionValue(mx, dt) if hi != null
+        } yield (lo, hi)
+      }
+
+    /** `cnt:` cells of `col`: ABSOLUTE file path → (non-null count, row
+      * total). Entries whose recorded leaf type disagrees with the read
+      * schema drop (type-tag invisibility, like every other cell kind).
+      */
+    def nullCellsOf(col: String): Map[String, (Long, Long)] =
+      view(nullsMemo, col) { (dt, dtName, nn, total) =>
+        def count(s: String) =
+          if (s.nonEmpty && s.forall(c => c >= '0' && c <= '9')) s.toLongOption
+          else None
+        if (dtName != "cnt:" + dt.simpleString) None
+        else for { n <- count(nn); t <- count(total) } yield (n, t)
+      }
+  }
 
   /** Per-live-file EXACT-bounds providers for tri-state filter
     * decisions ([[AvroFilterEval.zoneDecides]]): each file pairs with a
@@ -2227,17 +2315,12 @@ object AvroFileSource {
     * live under historical names. Shared by full filter pushdown and
     * zone-decided metadata DELETE; both must stay decision-compatible.
     */
-  private[sources] def decisionBounds(dir: File, full: StructType)
+  private[sources] def decisionBounds(dir: File, full: StructType,
+      manifest: ColZoneManifest)
       : Option[Seq[(File, String => Option[(Any, Any)],
         String => Option[(Boolean, Boolean)])]] = {
     if (colmapFile(dir).isFile) return None
     val files = listLive(dir)
-    val zf = colZoneFile(dir)
-    val raw =
-      if (zf.isFile) readColZonesRaw(zf)
-      else Map.empty[String, Seq[(String, String, String, String)]]
-    val zones = colZonesFromRaw(raw, dir, full)
-    val nullCells = nullCellsFromRaw(raw, dir, full)
     import org.apache.spark.sql.types.{DoubleType, FloatType}
     val nonFloat: Set[String] = full.fields.collect {
       case fld if fld.dataType != DoubleType &&
@@ -2246,7 +2329,7 @@ object AvroFileSource {
     val nonNullable: Set[String] =
       full.fields.collect { case fld if !fld.nullable => fld.name }.toSet
     Some(files.map { case (f, partVals) =>
-      val cells = nullCells.getOrElse(f.getAbsolutePath, Map.empty)
+      val abs = f.getAbsolutePath
       val nullStateOf: String => Option[(Boolean, Boolean)] = col =>
         partVals.get(col) match {
           // a partition-path point value is materialized into every
@@ -2254,7 +2337,7 @@ object AvroFileSource {
           case Some(raw) => Some((raw != "__null__", raw == "__null__"))
           case None =>
             if (nonNullable.contains(col)) Some((true, false))
-            else cells.get(col).map { case (nn, total) =>
+            else manifest.nullCellsOf(col).get(abs).map { case (nn, total) =>
               (nn == total, nn == 0L)
             }
         }
@@ -2269,8 +2352,9 @@ object AvroFileSource {
             // declared non-nullable, or cnt-cell-proven for this file
             if (!nonFloat(col)) None
             else if (!nonNullable.contains(col) &&
-              !cells.get(col).exists { case (nn, t) => nn == t }) None
-            else zones.getOrElse(f.getAbsolutePath, Map.empty).get(col)
+              !manifest.nullCellsOf(col).get(abs).exists {
+                case (nn, t) => nn == t }) None
+            else manifest.boundsOf(col).get(abs)
         }
       (f, boundsOf, nullStateOf)
     })
@@ -2776,7 +2860,8 @@ case class AvroTable(path: String, tableSchema: StructType,
     if (v1.exists(_.isEmpty)) return None
     // rows die iff ALL conjuncts match: decide the conjunction per file
     val cond = v1.flatten.reduce(org.apache.spark.sql.sources.And(_, _))
-    val bounds = AvroFileSource.decisionBounds(new File(path), tableSchema)
+    val bounds = AvroFileSource.decisionBounds(new File(path), tableSchema,
+      AvroFileSource.colZoneManifest(new File(path), tableSchema))
       .getOrElse(return None)
     val decisions = bounds.map { case (f, boundsOf, nullsOf) =>
       (f, AvroFilterEval.zoneDecides(boundsOf, cond, nullsOf))
@@ -3142,6 +3227,11 @@ class AvroScanBuilder(path: String, full: StructType,
 
   private var required: StructType = full
   private var pushed: Array[Filter] = Array.empty
+  // `_graft_zones_cols` as of this scan's planning, parsed at most once:
+  // decided pushdown, the metadata aggregates and the Scan's zone,
+  // null-cell and column-stat views all read it (live reads only —
+  // every consumer stands down for travel, branch and incremental reads)
+  private lazy val colZones = AvroFileSource.colZoneManifest(new File(path), full)
   private var fullyPushed: Array[Filter] = Array.empty
   // (files the decisions covered, files EVERY fully-pushed filter
   // all-matches) — absolute paths, pinned at pushFilters time
@@ -3245,7 +3335,7 @@ class AvroScanBuilder(path: String, full: StructType,
     if (filters.isEmpty) return stand
     if (travelVersion.nonEmpty || incRange.nonEmpty || branch.nonEmpty)
       return stand
-    val bounds = AvroFileSource.decisionBounds(new File(path), full)
+    val bounds = AvroFileSource.decisionBounds(new File(path), full, colZones)
       .getOrElse(return stand)
     val decisions: Array[Option[IndexedSeq[Boolean]]] = filters.map { flt =>
       val perFile = bounds.toIndexedSeq.map { case (_, boundsOf, nullsOf) =>
@@ -3489,9 +3579,7 @@ class AvroScanBuilder(path: String, full: StructType,
       // coverage is required of CLEAN files only (dirty files re-scan);
       // an all-dirty table needs no manifest at all
       if (cleanLive.nonEmpty && !zfc.isFile) return false
-      val raw =
-        if (zfc.isFile) AvroFileSource.readColZonesRaw(zfc)
-        else Map.empty[String, Seq[(String, String, String, String)]]
+      val raw = colZones.raw
       val base = dirF.getAbsoluteFile.toPath
       val perFile = cleanLive.map { case (f, _) =>
         val rel = base.relativize(f.getAbsoluteFile.toPath).toString
@@ -3750,7 +3838,7 @@ class AvroScanBuilder(path: String, full: StructType,
       (!needZones || zfc.isFile) && {
         val base = dirF.getAbsoluteFile.toPath
         val raw =
-          if (needZones) AvroFileSource.readColZonesRaw(zfc)
+          if (needZones) colZones.raw
           else Map.empty[String, Seq[(String, String, String, String)]]
         // under fully-decided filters the fold covers the KEEP-set only:
         // every kept file all-matches, so full-file stats are exact
@@ -4181,13 +4269,13 @@ class AvroScanBuilder(path: String, full: StructType,
       private lazy val rtZoneCols: Seq[String] = {
         import org.apache.spark.sql.types._
         if (travelVersion.nonEmpty || incRange.nonEmpty || branch.nonEmpty) Nil
-        else zonesAll.valuesIterator.flatMap(_.keysIterator).toSeq.distinct
+        else colZones.columns.toSeq
           .filter { c =>
             AvroFilterEval.leafType(full, c).exists {
               case StringType | IntegerType | LongType | BooleanType |
                    ShortType | ByteType => true
               case _ => false
-            }
+            } && colZones.boundsOf(c).nonEmpty
           }
       }
 
@@ -4345,9 +4433,9 @@ class AvroScanBuilder(path: String, full: StructType,
         */
       private def runtimeZoneKeep(f: File): Boolean =
         runtimeZoneVals.isEmpty || {
-          val byCol = zonesAll.getOrElse(f.getAbsolutePath, Map.empty)
+          val abs = f.getAbsolutePath
           runtimeZoneVals.forall { case (c, vs) =>
-            byCol.get(c) match {
+            zoneBoundsOf(c).get(abs) match {
               case None => true
               case Some((lo, hi)) => vs.exists { v =>
                 (AvroFilterEval.cmp(v, lo), AvroFilterEval.cmp(v, hi)) match {
@@ -4518,36 +4606,41 @@ class AvroScanBuilder(path: String, full: StructType,
       /** All-column per-file ranges from `_graft_zones_cols` — written on
         * every batch commit, so pruning works on ANY pushed-filter column
         * of an unsorted table too (the sorted `_graft_zones` path above
-        * additionally feeds the metadata-served MIN/MAX). One manifest
-        * read per scan.
-        */
-      /** All-column zones read once per scan regardless of static
-        * filters — the runtime (join-key) pruning path needs them even
-        * on an unfiltered scan. Time travel reads none (the manifest
+        * additionally feeds the metadata-served MIN/MAX). Served from the
+        * builder's one manifest parse, per column on demand: static
+        * filters and the runtime (join-key) pruning path ask only for
+        * their own columns. Time travel reads none (the manifest
         * describes the CURRENT file set).
         */
-      // ONE raw manifest parse per scan feeds both views below
-      private lazy val colZonesRaw
-          : Map[String, Seq[(String, String, String, String)]] =
+      private def zoneBoundsOf(col: String): Map[String, (Any, Any)] =
         if (travelVersion.nonEmpty || incRange.nonEmpty || branch.nonEmpty)
           Map.empty
-        else {
-          val zf = AvroFileSource.colZoneFile(new File(path))
-          if (zf.isFile) AvroFileSource.readColZonesRaw(zf) else Map.empty
-        }
-      private lazy val zonesAll: Map[String, Map[String, (Any, Any)]] =
-        AvroFileSource.colZonesFromRaw(colZonesRaw, new File(path), full)
-      private lazy val colZoneRanges: Map[String, Map[String, (Any, Any)]] =
-        if (filters.isEmpty) Map.empty else zonesAll
+        else colZones.boundsOf(col)
 
-      // `cnt:` cells for IS [NOT] NULL file pruning (colmap renames
-      // stand it down — cells live under historical names; absence of
-      // a cell = keep, as for every manifest)
-      private lazy val nullCellsAll: Map[String, Map[String, (Long, Long)]] =
-        if (filters.isEmpty ||
-          AvroFileSource.colmapFile(new File(path)).isFile) Map.empty
-        else AvroFileSource.nullCellsFromRaw(colZonesRaw,
-          new File(path), full)
+      // the columns the pushed filters reference: zoneMayMatch answers
+      // "may match" for a bound of any other column
+      private lazy val filterCols: Seq[String] =
+        filters.toSeq.flatMap(_.references).distinct
+
+      // the IS [NOT] NULL conjuncts the `cnt:` cells can prune (colmap
+      // renames stand it down — cells live under historical names;
+      // absence of a cell = keep, as for every manifest)
+      private lazy val nullConjuncts: Seq[Filter] =
+        if (travelVersion.nonEmpty || incRange.nonEmpty || branch.nonEmpty ||
+          AvroFileSource.colmapFile(new File(path)).isFile) Nil
+        else {
+          def conjuncts(flt: Filter): Seq[Filter] = flt match {
+            case org.apache.spark.sql.sources.And(a, b) =>
+              conjuncts(a) ++ conjuncts(b)
+            case x => Seq(x)
+          }
+          filters.toSeq.flatMap(conjuncts).filter {
+            case org.apache.spark.sql.sources.IsNull(_) |
+                 org.apache.spark.sql.sources.IsNotNull(_) |
+                 org.apache.spark.sql.sources.EqualNullSafe(_, null) => true
+            case _ => false
+          }
+        }
 
       /** IS NULL / IS NOT NULL file pruning from the `cnt:` cells: a
         * pushed `IsNull(c)` conjunct drops files with zero nulls in c,
@@ -4555,22 +4648,16 @@ class AvroScanBuilder(path: String, full: StructType,
         * shrink a file's row set — a file with zero nulls still has
         * zero nulls — so the cells stay sound under merge-on-read.
         */
-      private def nullMayKeep(f: File): Boolean = {
-        if (nullCellsAll.isEmpty) return true
-        val cells = nullCellsAll.getOrElse(f.getAbsolutePath, Map.empty)
-        if (cells.isEmpty) return true
-        def conjuncts(flt: Filter): Seq[Filter] = flt match {
-          case org.apache.spark.sql.sources.And(a, b) =>
-            conjuncts(a) ++ conjuncts(b)
-          case x => Seq(x)
-        }
-        filters.toSeq.flatMap(conjuncts).forall {
+      private def nullMayKeep(f: File): Boolean = nullConjuncts.isEmpty || {
+        val abs = f.getAbsolutePath
+        def cell(c: String) = colZones.nullCellsOf(c).get(abs)
+        nullConjuncts.forall {
           case org.apache.spark.sql.sources.IsNull(c) =>
-            cells.get(c).forall { case (nn, total) => nn < total }
+            cell(c).forall { case (nn, total) => nn < total }
           case org.apache.spark.sql.sources.IsNotNull(c) =>
-            cells.get(c).forall { case (nn, _) => nn > 0L }
+            cell(c).forall { case (nn, _) => nn > 0L }
           case org.apache.spark.sql.sources.EqualNullSafe(c, null) =>
-            cells.get(c).forall { case (nn, total) => nn < total }
+            cell(c).forall { case (nn, total) => nn < total }
           case _ => true
         }
       }
@@ -4801,22 +4888,13 @@ class AvroScanBuilder(path: String, full: StructType,
                             "bloom:" + f.dataType.simpleString == dtStr &&
                               AvroFileSource.bloomableType(f.dataType))
                       if (typeOk)
-                        scala.util.Try(
-                          java.util.Base64.getDecoder.decode(b64))
-                          .toOption
-                          .filter(_.length == AvroFileSource.BloomBits / 8)
-                          .foreach { bytes =>
-                            val bb = java.nio.ByteBuffer.wrap(bytes)
-                            val bits = Array.fill(
-                              AvroFileSource.BloomBits / 64)(bb.getLong)
-                            if (!ps.forall(
-                                AvroFileSource.probePass(bits, _))) {
-                              val abs =
-                                new File(dir, rel).getAbsolutePath
-                              dropped(abs) = dropped.getOrElse(abs,
-                                Set.empty) + ((s.toLong, e.toLong))
-                            }
+                        AvroFileSource.decodeBloom(b64).foreach { bits =>
+                          if (!ps.forall(AvroFileSource.probePass(bits, _))) {
+                            val abs = new File(dir, rel).getAbsolutePath
+                            dropped(abs) = dropped.getOrElse(abs,
+                              Set.empty) + ((s.toLong, e.toLong))
                           }
+                        }
                     case _ => ()
                   }
                 } finally src.close()
@@ -4898,10 +4976,10 @@ class AvroScanBuilder(path: String, full: StructType,
         // a file survives only if EVERY pushed filter may-matches under
         // EVERY column bound we hold for it (filters are conjunctive;
         // zoneMayMatch answers true for filters over other columns)
-        sortOk && (colZoneRanges.get(f.getAbsolutePath) match {
-          case Some(byCol) => filters.forall(flt => byCol.forall {
-            case (c, (mn, mx)) => AvroFilterEval.zoneMayMatch(c, mn, mx, flt)
-          })
+        val abs = f.getAbsolutePath
+        sortOk && filterCols.forall(c => zoneBoundsOf(c).get(abs) match {
+          case Some((mn, mx)) =>
+            filters.forall(AvroFilterEval.zoneMayMatch(c, mn, mx, _))
           case None => true
         })
       }
@@ -5460,8 +5538,7 @@ class AvroScanBuilder(path: String, full: StructType,
           val colZonesRaw: Option[Map[String,
               Seq[(String, String, String, String)]]] = {
             val zfc = AvroFileSource.colZoneFile(new File(path))
-            if (zfc.isFile) Some(AvroFileSource.readColZonesRaw(zfc))
-            else None
+            if (zfc.isFile) Some(colZones.raw) else None
           }
           val boundsByCol: Map[String, (Any, Any)] = {
             import org.apache.spark.sql.types._
@@ -7705,8 +7782,6 @@ class AvroWriteBuilder(path: String, schema: StructType,
             }
             st.rels
           }
-        val preExisting =
-          !doTruncate && AvroFileSource.listAvro(new File(path)).nonEmpty
         // publish BEFORE deleting: if a rename fails mid-commit the
         // previous dataset is still on disk (plus some new files — the
         // job reports failure either way); deleting first would leave
@@ -7717,16 +7792,25 @@ class AvroWriteBuilder(path: String, schema: StructType,
             throw new java.io.IOException(
               s"graft-avro commit: rename failed $tmp -> $fin")
         }
+        // ONE directory walk per commit, taken after publish: every file
+        // in it that this commit did not stage was there before it, and
+        // minus what the branches below archive it is the live set the
+        // zone filter, the stats fold and the journal append all use
+        val fresh = staged.map { case (_, fin) =>
+          new File(fin).getAbsolutePath }.toSet
+        val published = AvroFileSource.listAvro(new File(path))
+        val preExisting = !doTruncate &&
+          published.exists(f => !fresh.contains(f.getAbsolutePath))
+        val archived = scala.collection.mutable.HashSet.empty[String]
         if (doTruncate) {
-          val fresh = staged.map(_._2).toSet
           // replaced files are ARCHIVED, not deleted: earlier snapshot
           // versions still reference them (time travel); the relative
           // layout is preserved so partition values keep parsing.
           // expireSnapshots is the explicit vacuum.
           val dirF = new File(path)
           val base = dirF.getAbsoluteFile.toPath
-          AvroFileSource.listAvro(dirF)
-            .filterNot(f => fresh.contains(f.getPath)).foreach { f =>
+          published
+            .filterNot(f => fresh.contains(f.getAbsolutePath)).foreach { f =>
               val rel = base.relativize(f.getAbsoluteFile.toPath).toString
               val dst = new File(AvroFileSource.archiveDir(dirF), rel)
               dst.getParentFile.mkdirs()
@@ -7735,6 +7819,7 @@ class AvroWriteBuilder(path: String, schema: StructType,
               if (!f.renameTo(dst)) throw new java.io.IOException(
                 s"graft-avro commit: archive move failed $f -> $dst")
               AvroFileSource.stampArchived(dst)
+              archived += f.getAbsolutePath
             }
           // an overwrite defines a new dataset: stale equality AND
           // positional deletes must not apply to the replacement rows
@@ -7748,7 +7833,6 @@ class AvroWriteBuilder(path: String, schema: StructType,
           // drop with them, like the row-level replace path.
           val dirF = new File(path)
           val base = dirF.getAbsoluteFile.toPath
-          val fresh = staged.map(_._2).toSet
           def relOf(f: File): String =
             base.relativize(f.getAbsoluteFile.toPath).toString
           // a LEGACY unstamped delete entry applies to every file — it
@@ -7768,8 +7852,8 @@ class AvroWriteBuilder(path: String, schema: StructType,
               case i => rel.take(i)
             }
           }.toSet
-          val victims = AvroFileSource.listAvro(dirF)
-            .filterNot(f => fresh.contains(f.getPath))
+          val victims = published
+            .filterNot(f => fresh.contains(f.getAbsolutePath))
             .filter { f =>
               val rel = relOf(f)
               if (doDynamic) {
@@ -7799,6 +7883,7 @@ class AvroWriteBuilder(path: String, schema: StructType,
             if (!f.renameTo(dst)) throw new java.io.IOException(
               s"graft-avro commit: archive move failed $f -> $dst")
             AvroFileSource.stampArchived(dst)
+            archived += f.getAbsolutePath
           }
           val pd = AvroFileSource.readPosdel(dirF)
           if (pd.nonEmpty)
@@ -7825,6 +7910,7 @@ class AvroWriteBuilder(path: String, schema: StructType,
             if (!f.renameTo(dst)) throw new java.io.IOException(
               s"graft-avro row-level commit: archive move failed $f -> $dst")
             AvroFileSource.stampArchived(dst)
+            archived += f.getAbsolutePath
           }
           val pd = AvroFileSource.readPosdel(dirF)
           if (pd.nonEmpty)
@@ -7835,6 +7921,10 @@ class AvroWriteBuilder(path: String, schema: StructType,
         // sortedBy write stamps it when it defines the dataset (truncate
         // or first files) or agrees with the existing claim; any other
         // append of new files withdraws the claim.
+        val base = new File(path).getAbsoluteFile.toPath
+        val aliveRels = published
+          .filterNot(f => archived.contains(f.getAbsolutePath))
+          .map(f => base.relativize(f.getAbsoluteFile.toPath).toString)
         val marker = AvroFileSource.sortMarker(new File(path))
         val zonesF = AvroFileSource.zoneFile(new File(path))
         sortedBy match {
@@ -7851,8 +7941,7 @@ class AvroWriteBuilder(path: String, schema: StructType,
               // the directory manifest. Keys are base-relative paths; an
               // agreeing append merges with surviving prior entries
               // (truncated files drop out via the existence filter).
-              val base = new File(path).getAbsoluteFile.toPath
-              val fresh = messages.toSeq
+              val zoneFresh = messages.toSeq
                 .collect { case m: AvroCommitMessage => m.zones }.flatten
                 .map { case (fin, mn, mx) =>
                   base.relativize(new File(fin).getAbsoluteFile.toPath)
@@ -7870,10 +7959,8 @@ class AvroWriteBuilder(path: String, schema: StructType,
                   if (preExisting && zonesF.isFile)
                     AvroFileSource.readZonesRaw(zonesF)
                   else Map.empty[String, (String, String)]
-                val alive = AvroFileSource.listAvro(new File(path))
-                  .map(f => base.relativize(f.getAbsoluteFile.toPath).toString)
-                  .toSet
-                val merged = (prior ++ fresh).filter { case (rel, _) =>
+                val alive = aliveRels.toSet
+                val merged = (prior ++ zoneFresh).filter { case (rel, _) =>
                   alive.contains(rel) }
                 val tmp = new File(zonesF.getPath + ".staging")
                 java.nio.file.Files.write(tmp.toPath,
@@ -7896,16 +7983,16 @@ class AvroWriteBuilder(path: String, schema: StructType,
         AvroTransforms.merge(new File(path), transformBy,
           replace = doTruncate)
         // pruning/stat manifests (col-zones, blooms, rows, NDV):
-        // shared fold with the delta row-level commit. The fold's one
-        // directory walk is reused by the journal append below (r21)
-        val walked = AvroFileSource.foldStatsManifests(new File(path),
-          messages.toSeq.collect { case m: AvroCommitMessage => m })
+        // shared fold with the delta row-level commit
+        AvroFileSource.foldStatsManifests(new File(path),
+          messages.toSeq.collect { case m: AvroCommitMessage => m },
+          aliveHint = Some(aliveRels.toSet))
         // snapshot LAST: the journal records the fully-published state
         AvroFileSource.appendSnapshot(new File(path),
           if (doTruncate || doDynamic || overwriteParts.nonEmpty)
             "overwrite"
           else "append",
-          liveHint = walked.map(_.toSeq))
+          liveHint = Some(aliveRels))
       }
       override def abort(messages: Array[WriterCommitMessage]): Unit =
         messages.toSeq.collect { case m: AvroCommitMessage => m.files }
@@ -8549,11 +8636,16 @@ private[sources] object AvroWriters {
     * file-skipping index for HIGH-CARDINALITY SCATTERED keys, where
     * zones cannot prune (every file's [min,max] spans the domain) but
     * membership can: a point lookup on a hash-distributed key opens
-    * ~1 file instead of all of them. m=2^15 bits / k=5 double-hashed
-    * md5 probes per value (~1% false positives to ~4.5k distinct
-    * values/file; false positives only weaken pruning, never break
-    * it). Values hash on their canonical external toString — the same
-    * representation the read side derives from a pushed filter value.
+    * ~1 file instead of all of them. Built at m=2^15 bits with k=5
+    * double-hashed md5 probes per value, then folded at file close
+    * ([[AvroFileSource.foldBloom]]) to the narrowest power-of-two width
+    * that stays at most 1/8 full: ~3e-5 false positives at any width
+    * below 2^15, so a 10-row file emits 64 bytes of bits, not 4 KB.
+    * Sets that stay unfolded (past ~440 distinct values) keep ~1%
+    * false positives to ~4.5k values; false positives only weaken pruning,
+    * never break it. Values hash on their canonical external toString
+    * — the same representation the read side derives from a pushed
+    * filter value.
     */
   private[sources] final class BloomBuilder(schema: StructType,
       cols: Seq[String], trigramCols: Seq[String] = Nil) {
@@ -8592,16 +8684,12 @@ private[sources] object AvroWriters {
     }
 
     private def b64(a: Array[Long]): String =
-      java.util.Base64.getEncoder.encodeToString {
-        val bb = java.nio.ByteBuffer.allocate(a.length * 8)
-        a.foreach(bb.putLong)
-        bb.array()
-      }
+      AvroFileSource.encodeBloom(AvroFileSource.foldBloom(a))
 
-    /** (colEnc, typeName, base64 bits) per column that saw a value —
-      * all-null columns emit nothing (absence ⇒ keep, sound). Trigram
-      * entries carry [[AvroFileSource.TrigramTypeTag]] so neither
-      * reader kind can decode the other's bits.
+    /** (colEnc, typeName, base64 folded bits) per column that saw a
+      * value — all-null columns emit nothing (absence ⇒ keep, sound).
+      * Trigram entries carry [[AvroFileSource.TrigramTypeTag]] so
+      * neither reader kind can decode the other's bits.
       */
     def stats: Seq[(String, String, String)] =
       cols.indices.filter(seen).map { c =>
@@ -8656,16 +8744,11 @@ private[sources] object AvroWriters {
       }
     }
 
-    private def b64(a: Array[Long]): String =
-      java.util.Base64.getEncoder.encodeToString {
-        val bb = java.nio.ByteBuffer.allocate(a.length * 8)
-        a.foreach(bb.putLong)
-        bb.array()
-      }
-
-    /** The closed chunk's base64 cells (one per column), then reset. */
+    /** The closed chunk's base64 cells (one per column, unfolded: a
+      * 4096-row chunk fills about half its bits), then reset.
+      */
     def cut(): Array[String] = {
-      val out = bits.map(b64)
+      val out = bits.map(AvroFileSource.encodeBloom)
       bits = Array.fill(cols.size + trigCols.size)(
         new Array[Long](BloomBits / 64))
       out

@@ -11,14 +11,17 @@ import org.scalatest.matchers.should.Matchers
 
 import graft.SparkSpec
 
-/** Driver-memory contract of the bloom sidecars at file scale: decoded
-  * bloom bits are 4 KB per (file, column), so a 100k-file table must
-  * never load them wholesale. Pinned here:
+/** Driver-memory contract of the bloom sidecars at file scale: an entry
+  * decodes to up to 4 KB of bits per (file, column) (sets fold to their
+  * fill at file close, so small files carry far less — see
+  * BloomFoldSpec), and a 100k-file table must never load them
+  * wholesale. Pinned here:
   *  - a scan with NO equality/IN filter never reads the manifest at all
   *    (zero driver bytes, not just fewer);
   *  - decoding restricts to the columns the query's filters reference;
-  *  - the per-scan entry cap degrades to no-pruning (sound), never to
-  *    an OOM;
+  *  - verdicts stream: a 33k-entry manifest of unfolded 4 KB entries
+  *    still prunes fully, each entry decoded once, with heap bounded by
+  *    the dropped paths (the old per-scan entry cap is gone);
   *  - runtime join-key sets arriving AFTER planning still re-resolve
   *    the bloom cache (the lazy-load regression this design invites).
   */
