@@ -42,18 +42,21 @@ object AvroInternalCodec {
     */
   def decoderFor(avro: Schema, struct: StructType): IndexedRecord => InternalRow = {
     val rec = nonNull(avro)
-    val fields: Array[(Int, Any => Any)] = struct.fields.map { sf =>
+    val n = struct.fields.length
+    val positions = new Array[Int](n)
+    val convs = new Array[Any => Any](n)
+    struct.fields.zipWithIndex.foreach { case (sf, i) =>
       val af = rec.getField(sf.name)
       require(af != null, s"Avro schema has no field '${sf.name}'")
-      (af.pos(), converter(af.schema(), sf.dataType))
+      positions(i) = af.pos()
+      convs(i) = converter(af.schema(), sf.dataType)
     }
     record => {
-      val vals = new Array[Any](fields.length)
+      val vals = new Array[Any](n)
       var i = 0
-      while (i < fields.length) {
-        val (pos, conv) = fields(i)
-        val v = record.get(pos)
-        vals(i) = if (v == null) null else conv(v)
+      while (i < n) {
+        val v = record.get(positions(i))
+        vals(i) = if (v == null) null else convs(i)(v)
         i += 1
       }
       new GenericInternalRow(vals)
@@ -62,12 +65,14 @@ object AvroInternalCodec {
 
   /** Multi-branch union → tagged-struct InternalRow, planned once per
     * (union, struct): branch converters and field ordinals resolve up
-    * front; per value only Avro's own union dispatch runs.
+    * front; per value only Avro's own union dispatch runs. Nested column
+    * pruning may leave a carrier without its `tag` (a branch-only read);
+    * such a carrier holds only the branch fields it was asked for.
     */
   private def unionConverter(union: Schema, dt: DataType): Any => Any = {
     import scala.jdk.CollectionConverters._
     val st = dt.asInstanceOf[StructType]
-    val tagIdx = st.fieldIndex(AvroSchemaConverter.UnionTagField)
+    val tagIdx = st.fieldNames.indexOf(AvroSchemaConverter.UnionTagField)
     val gd = GenericData.get()
     val byIdx: Array[(Int, UTF8String, Any => Any)] =
       union.getTypes.asScala.toArray.map { b =>
@@ -88,7 +93,7 @@ object AvroInternalCodec {
       // branch is never the NULL slot
       val e = byIdx(gd.resolveUnion(union, v))
       val vals = new Array[Any](st.fields.length)
-      vals(tagIdx) = e._2
+      if (tagIdx >= 0) vals(tagIdx) = e._2
       if (e._1 >= 0) vals(e._1) = e._3(v)
       new GenericInternalRow(vals)
     }
@@ -178,19 +183,23 @@ object AvroInternalCodec {
     */
   def encoderFor(struct: StructType, avroSchema: Schema): InternalRow => GenericRecord = {
     val rec = nonNull(avroSchema)
-    val fields: Array[(Int, DataType, Any => Any)] =
-      struct.fields.zipWithIndex.map { case (sf, i) =>
-        val af = rec.getField(sf.name)
-        require(af != null, s"output Avro schema has no field '${sf.name}'")
-        (af.pos(), sf.dataType, outConverter(sf.dataType, af.schema()))
-      }.toArray
+    val n = struct.fields.length
+    val positions = new Array[Int](n)
+    val types = new Array[DataType](n)
+    val convs = new Array[Any => Any](n)
+    struct.fields.zipWithIndex.foreach { case (sf, i) =>
+      val af = rec.getField(sf.name)
+      require(af != null, s"output Avro schema has no field '${sf.name}'")
+      positions(i) = af.pos()
+      types(i) = sf.dataType
+      convs(i) = outConverter(sf.dataType, af.schema())
+    }
     row => {
       val out = new GenericData.Record(rec)
       var i = 0
-      while (i < fields.length) {
-        val (pos, dt, conv) = fields(i)
-        out.put(pos,
-          if (row.isNullAt(i)) null else conv(row.get(i, dt)))
+      while (i < n) {
+        out.put(positions(i),
+          if (row.isNullAt(i)) null else convs(i)(row.get(i, types(i))))
         i += 1
       }
       out

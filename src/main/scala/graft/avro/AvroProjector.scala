@@ -4,8 +4,9 @@ import org.apache.avro.Schema
 import org.apache.avro.generic.{GenericRecord, IndexedRecord}
 import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.UnsafeProjection
+import org.apache.spark.sql.catalyst.expressions.{AttributeSet, NamedExpression, ProjectionOverSchema, SafeProjection, SchemaPruning}
 import org.apache.spark.sql.catalyst.plans.logical.Project
+import org.apache.spark.sql.types.StructType
 
 import graft.sql.GraftSql
 
@@ -16,14 +17,17 @@ import graft.sql.GraftSql
   * `record.sql(...)` runs a one-row Spark job per call, which is correct
   * but pays scheduler latency per record. This projector PLANS ONCE:
   * the query is resolved by Catalyst against the record schema, the
-  * resolved project list is compiled to an `UnsafeProjection` (Janino
-  * codegen — the same Tungsten kernel a DataFrame execution would run),
-  * and each `apply` is then row-in/row-out with no job, no scheduler, no
-  * RDD. The reference re-derives schema + projection for EVERY record
-  * (AvroSql.scala:74-82); here per-record work is codec + one generated
-  * function call, so single-thread throughput beats the reference's
-  * interpretive record walk while staying semantically identical to the
-  * DataFrame path (same planner, same expressions).
+  * columns the resolved project list references are pruned to the nested
+  * fields it reads (Catalyst's own `SchemaPruning`, as a file scan prunes
+  * its `requiredSchema`), and the project list, rebound to that read
+  * struct, is compiled to a `SafeProjection` (Janino codegen with an
+  * interpreted fallback). Each `apply` is then row-in/row-out with no
+  * job, no scheduler, no RDD: decode of the referenced columns only, one
+  * generated function call into a reused row of plain JVM values, and an
+  * encode that reads those values directly. The reference re-derives
+  * schema + projection for EVERY record (AvroSql.scala:74-82); here the
+  * projector stays semantically identical to the DataFrame path (same
+  * planner, same expressions).
   */
 final class AvroProjector(spark: SparkSession, inSchema: Schema, query: String) {
 
@@ -57,17 +61,45 @@ final class AvroProjector(spark: SparkSession, inSchema: Schema, query: String) 
     case other => (other.output, other.output)
   }
 
-  private val projection = UnsafeProjection.create(projectList, childOutput)
+  /** The columns the project list references, each pruned to the nested
+    * fields it reads. `pruneSchema` keeps unreferenced top-level columns
+    * whole, so those are dropped here: the decoder never converts them.
+    */
+  private[avro] val readStruct: StructType = {
+    val roots = SchemaPruning.identifyRootFields(projectList, Nil)
+    if (roots.isEmpty) new StructType()
+    else {
+      val named = roots.map(_.field.name).toSet
+      StructType(SchemaPruning.pruneSchema(struct, roots).fields
+        .filter(f => named.contains(f.name)))
+    }
+  }
 
-  // fused codecs: record → InternalRow → (UnsafeProjection) → record,
-  // with no external Row or ExpressionEncoder on either side. The
-  // decoder resolves field POSITIONS per writer schema, so a record
-  // whose actual schema reorders fields (schema drift on the topic)
-  // re-plans against that schema — cached on the last-seen instance,
-  // one plan per distinct schema in practice.
+  // The project list rebound to the read struct: same exprIds, pruned
+  // types, struct-field ordinals renumbered.
+  private val readInput = {
+    val byName = readStruct.fields.map(f => f.name -> f).toMap
+    childOutput.flatMap(a => byName.get(a.name).map(f => a.withDataType(f.dataType)))
+  }
+  private val projection = {
+    val overRead = ProjectionOverSchema(readStruct, AttributeSet(childOutput))
+    SafeProjection.create(
+      projectList.map(_.transformDown { case overRead(e) => e }
+        .asInstanceOf[NamedExpression]),
+      readInput)
+  }
+
+  // fused codecs: record → InternalRow of the read struct →
+  // (SafeProjection) → record, with no external Row or ExpressionEncoder
+  // on either side. The decoder resolves fields by NAME per writer
+  // schema, so a record whose schema reorders, adds or drops unread
+  // fields (schema drift on the topic) re-plans against that schema. Only
+  // the last-seen schema is cached: a stream that alternates two writer
+  // schemas re-plans at every switch (a plan is one name lookup and one
+  // converter per read field).
   private var decodeSchema: Schema = inSchema
   private var decode: IndexedRecord => InternalRow =
-    AvroInternalCodec.decoderFor(inSchema, struct)
+    AvroInternalCodec.decoderFor(inSchema, readStruct)
   private val encode = AvroInternalCodec.encoderFor(outputStruct, outputAvroSchema)
 
   /** Project one record. Thread-confined (the compiled projection reuses
@@ -76,8 +108,10 @@ final class AvroProjector(spark: SparkSession, inSchema: Schema, query: String) 
   def apply(record: IndexedRecord): GenericRecord = {
     if (record == null) return null
     val rs = record.getSchema
-    if ((rs ne decodeSchema) && rs != decodeSchema) {
-      decode = AvroInternalCodec.decoderFor(rs, struct)
+    if (rs ne decodeSchema) {
+      // an equal schema in a new instance is adopted, so the records
+      // after it take the reference check instead of a deep equals
+      if (rs != decodeSchema) decode = AvroInternalCodec.decoderFor(rs, readStruct)
       decodeSchema = rs
     }
     val internal: InternalRow = decode(record)

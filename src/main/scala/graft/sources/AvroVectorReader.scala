@@ -92,11 +92,12 @@ private[sources] final class VectorAvroDatumReader(
       // index picks the branch straight off the wire (no resolveUnion
       // object dispatch); every child slot is written each row (tag +
       // active branch value, the rest null) so the dead-row scrub
-      // protocol stays sound
+      // protocol stays sound. Nested pruning may drop the tag itself (a
+      // branch-only read): then only the branch children are written.
       val st = dt.asInstanceOf[StructType]
       val types = s.getTypes.asScala.toArray
       val nullIdx = types.indexWhere(_.getType == Type.NULL)
-      val tagIdx = st.fieldIndex(graft.avro.AvroSchemaConverter.UnionTagField)
+      val tagIdx = st.fieldNames.indexOf(graft.avro.AvroSchemaConverter.UnionTagField)
       val nChildren = st.fields.length
       val branches: Array[(Int, Array[Byte], Append)] = types.map {
         case n if n.getType == Type.NULL => null
@@ -129,7 +130,7 @@ private[sources] final class VectorAvroDatumReader(
             if (c != fi && c != tagIdx) v.getChild(c).putNull(i)
             c += 1
           }
-          v.getChild(tagIdx).putByteArray(i, tag, 0, tag.length)
+          if (tagIdx >= 0) v.getChild(tagIdx).putByteArray(i, tag, 0, tag.length)
           app(in, if (fi < 0) null else v.getChild(fi), i)
           ()
         }

@@ -1,7 +1,7 @@
 package graft.avro
 
-import org.apache.avro.SchemaBuilder
-import org.apache.avro.generic.GenericData
+import org.apache.avro.{Schema, SchemaBuilder}
+import org.apache.avro.generic.{GenericData, GenericRecord}
 import org.scalatest.matchers.should.Matchers
 import org.scalatest.wordspec.AnyWordSpec
 
@@ -38,18 +38,153 @@ class AvroProjectorSpec extends AnyWordSpec with Matchers with SparkSpec {
     p
   }
 
-  "AvroProjector" should {
-    "agree with the one-row-DataFrame record.sql path" in {
-      import AvroSql.implicits._
-      implicit val s: org.apache.spark.sql.SparkSession = spark
-      val q = "SELECT name, address.street.name as streetName, age"
-      val proj = new AvroProjector(spark, personSchema, q)
-      (0 until 20).foreach { i =>
-        val viaProjector = proj(mk(i))
-        val viaJob = mk(i).sql(q)
+
+  // an order stream: nested records, a nullable record, an array of
+  // records, a map and a foreign [string, long] union
+  private val cityZip = SchemaBuilder.record("Addr").namespace("ord")
+    .fields().requiredString("city").requiredString("zip").endRecord()
+  private val customerSchema = SchemaBuilder.record("Customer").namespace("ord")
+    .fields().requiredString("name").requiredInt("tier")
+    .name("address").`type`(cityZip).noDefault().endRecord()
+  private val itemSchema = SchemaBuilder.record("Item").namespace("ord")
+    .fields().requiredString("sku").requiredInt("qty").requiredDouble("price")
+    .endRecord()
+  private val strOrLong = Schema.createUnion(java.util.Arrays.asList(
+    Schema.create(Schema.Type.STRING), Schema.create(Schema.Type.LONG)))
+
+  /** v1 of the order schema; v2 reorders it and adds `channel`; v3 drops
+    * `tags`.
+    */
+  private def orderSchema(version: Int): Schema = {
+    var f = SchemaBuilder.record("Order").namespace("ord").fields()
+    if (version != 2) f = f.requiredLong("id")
+    f = f.name("customer").`type`(customerSchema).noDefault()
+      .optionalString("note")
+      .name("ship").`type`().optional().`type`(cityZip)
+      .name("items").`type`().array().items(itemSchema).noDefault()
+    if (version != 3) f = f.name("tags").`type`().map().values().longType().noDefault()
+    f = f.name("v").`type`(strOrLong).noDefault()
+    if (version == 2) f = f.requiredString("channel").requiredLong("id")
+    f.endRecord()
+  }
+  private val orderV1 = orderSchema(1)
+  private val orderV2 = orderSchema(2)
+  private val orderV3 = orderSchema(3)
+
+  private def order(schema: Schema, i: Int): GenericRecord = {
+    def addr(c: String) = {
+      val a = new GenericData.Record(cityZip)
+      a.put("city", s"$c$i"); a.put("zip", f"${i * 7919 % 100000}%05d"); a
+    }
+    val cu = new GenericData.Record(customerSchema)
+    cu.put("name", s"cust$i"); cu.put("tier", i % 4); cu.put("address", addr("city"))
+    val items = (0 to i % 3).map { k =>
+      val it: GenericRecord = new GenericData.Record(itemSchema)
+      it.put("sku", s"sku${i + k}"); it.put("qty", 1 + k); it.put("price", i + k / 4.0)
+      it
+    }
+    val o = new GenericData.Record(schema)
+    o.put("id", i.toLong)
+    o.put("customer", cu)
+    o.put("note", if (i % 3 == 0) null else s"note$i")
+    o.put("ship", if (i % 2 == 0) null else addr("port"))
+    o.put("items", new GenericData.Array[GenericRecord](
+      schema.getField("items").schema(), items.asJava))
+    if (schema.getField("tags") != null) {
+      val tags = new java.util.HashMap[String, java.lang.Long]()
+      (0 until i % 3).foreach(k => tags.put(s"t$k", (i * 10 + k).toLong))
+      o.put("tags", tags)
+    }
+    o.put("v", if (i % 2 == 0) s"s$i" else Long.box(i * 10L))
+    if (schema.getField("channel") != null) o.put("channel", "web")
+    o
+  }
+
+  /** Projector output must equal the one-row-DataFrame `record.sql`
+    * output, value by value and schema by schema.
+    */
+  private def agreeWithSql(q: String, inSchema: Schema,
+      records: Seq[GenericRecord]): Unit = {
+    import AvroSql.implicits._
+    implicit val s: org.apache.spark.sql.SparkSession = spark
+    val proj = new AvroProjector(spark, inSchema, q)
+    records.foreach { r =>
+      val viaProjector = proj(r)
+      val viaJob = r.sql(q)
+      withClue(s"$q on $r: ") {
         viaProjector.toString shouldBe viaJob.toString
         viaProjector.getSchema shouldBe viaJob.getSchema
       }
+    }
+  }
+
+  "AvroProjector" should {
+    "agree with the one-row-DataFrame record.sql path" in {
+      agreeWithSql("SELECT name, address.street.name as streetName, age",
+        personSchema, (0 until 20).map(mk))
+      val v1 = (0 until 6).map(order(orderV1, _))
+      val v2 = (0 until 6).map(order(orderV2, _))
+      Seq(
+        // flatten with aliases
+        "SELECT id AS order_id, customer.name AS cname, customer.address.city AS city, note AS memo FROM t",
+        "SELECT customer.address.*, id, customer.tier AS tier FROM t",
+        // withstructure over a whole struct
+        "SELECT customer, note FROM t withstructure",
+        // array-of-record subfields
+        "SELECT id, items.sku, items.price FROM t withstructure",
+        "SELECT id, customer.name, customer.address.city, items.sku, tags FROM t withstructure",
+        // a map
+        "SELECT id, tags FROM t withstructure",
+        // a nullable-union parent
+        "SELECT id, ship.city AS port, ship.zip FROM t",
+        "SELECT *"
+      ).foreach(q => agreeWithSql(q, orderV1, v1))
+      // a v2-drifted record (reordered, one field added) through the v1 plan
+      Seq(
+        "SELECT id AS order_id, customer.name AS cname, customer.address.city AS city, note AS memo FROM t",
+        "SELECT customer, items.qty, items.price, note FROM t withstructure",
+        "SELECT id, tags, ship.city FROM t withstructure"
+      ).foreach(q => agreeWithSql(q, orderV1, v1.zip(v2).flatMap(p => Seq(p._1, p._2))))
+      // a record with no fields: nothing to read, nothing to prune
+      val empty = SchemaBuilder.record("Empty").namespace("ord").fields().endRecord()
+      agreeWithSql("SELECT *", empty, Seq(new GenericData.Record(empty)))
+    }
+
+    "decode only the columns and nested fields the query reads" in {
+      import org.apache.spark.sql.types.StructType
+      def paths(st: StructType, prefix: String = ""): Seq[String] =
+        st.fields.toSeq.flatMap { f =>
+          f.dataType match {
+            case s: StructType => paths(s, s"$prefix${f.name}.")
+            case _ => Seq(prefix + f.name)
+          }
+        }
+      def readPaths(q: String) = paths(new AvroProjector(spark, orderV1, q).readStruct)
+      readPaths("SELECT id, customer.name FROM t") shouldBe Seq("id", "customer.name")
+      readPaths("SELECT customer.address.*, note FROM t") shouldBe
+        Seq("customer.address.city", "customer.address.zip", "note")
+      readPaths("SELECT v.long FROM t") shouldBe Seq("v.long")
+      readPaths("SELECT id, tags FROM t withstructure") shouldBe Seq("id", "tags")
+      readPaths("SELECT *") shouldBe paths(AvroSchemaConverter.toStruct(orderV1))
+    }
+
+    "project a record whose writer schema lacks a field the query never reads" in {
+      // v3 has no `tags`: the plan must not demand it
+      val recs = (0 until 6).flatMap(i => Seq(order(orderV1, i), order(orderV3, i)))
+      agreeWithSql("SELECT id, customer.name AS cname, items.sku FROM t withstructure",
+        orderV1, recs)
+      agreeWithSql("SELECT id, customer.address.zip AS zip, ship.city AS port FROM t",
+        orderV1, recs)
+    }
+
+    "read one branch of a multi-branch union without its tag" in {
+      val recs = (0 until 6).map(order(orderV1, _))
+      agreeWithSql("SELECT v.long FROM t", orderV1, recs)
+      agreeWithSql("SELECT id, v.string FROM t", orderV1, recs)
+      agreeWithSql("SELECT id, v.tag, v.long FROM t", orderV1, recs)
+      val proj = new AvroProjector(spark, orderV1, "SELECT id, v.long FROM t")
+      proj(order(orderV1, 3)).get("long") shouldBe 30L
+      proj(order(orderV1, 4)).get("long") shouldBe (null: Any)
     }
 
     "handle withstructure and nullable parents" in {

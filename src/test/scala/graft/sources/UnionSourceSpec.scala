@@ -73,4 +73,24 @@ class UnionSourceSpec extends AnyFunSuite with SparkSpec with Matchers {
         (Schema.Type.STRING, Schema.Type.LONG)
     } finally r.close()
   }
+
+  test("a branch-only read of a union column needs no tag") {
+    // column pruning narrows the carrier to the branches a query names;
+    // neither the columnar nor the row decoder may insist on the
+    // pruned-away tag
+    val dir = graft.operators.Catalog.tempDir("graft_union_branch")
+    writeForeign(dir, 20)
+    Seq("true", "false").foreach { columnar =>
+      withClue(s"columnar=$columnar: ") {
+        val df = spark.read.format("graft-avro").option("columnar", columnar).load(dir)
+        val longs = df.select("v.long").collect().map(r =>
+          if (r.isNullAt(0)) None else Some(r.getLong(0)))
+        longs.flatten.sorted.toSeq shouldBe (1 until 20 by 2).map(_ * 10L)
+        longs.count(_.isEmpty) shouldBe 10
+        val strs = df.select("id", "v.string").orderBy("id").collect()
+        strs.map(r => Option(r.getString(1))).toSeq shouldBe
+          (0 until 20).map(i => if (i % 2 == 0) Some(s"s$i") else None)
+      }
+    }
+  }
 }
