@@ -1848,14 +1848,23 @@ object AvroFileSource {
     * the per-partition reader can look its file up directly. Skipped
     * (empty) when no delete entry carries a stamp: only versioned
     * entries consult births, and the map is O(files) driver metadata.
+    * `planned`, when given, holds the table-relative paths of the files
+    * a scan will read: the map then carries only those files, since it
+    * ships with every task. It is evaluated only when the map is built.
     */
   private[sources] def birthsByPhysicalPath(d: File,
-      dels: Seq[DeleteEntry], force: Boolean = false): Map[String, Long] =
+      dels: Seq[DeleteEntry], force: Boolean = false,
+      planned: => Option[Set[String]] = None): Map[String, Long] =
     if (!force && !dels.exists(_.stamp.nonEmpty)) Map.empty
-    else fileBirths(d).iterator.flatMap { case (rel, b) =>
-      Iterator(new File(d, rel).getAbsolutePath -> b,
-        new File(archiveDir(d), rel).getAbsolutePath -> b)
-    }.toMap
+    else {
+      val keep = planned
+      fileBirths(d).iterator
+        .filter { case (rel, _) => keep.forall(_.contains(rel)) }
+        .flatMap { case (rel, b) =>
+          Iterator(new File(d, rel).getAbsolutePath -> b,
+            new File(archiveDir(d), rel).getAbsolutePath -> b)
+        }.toMap
+    }
 
   /** Record the directory's CURRENT state (live data files + delete
     * sidecar) as the next version. No-ops when nothing changed since the
@@ -5361,7 +5370,8 @@ class AvroScanBuilder(path: String, full: StructType,
           val rowLimit = if (rowLevelCapture.isDefined) None else limit
           AvroReaderFactory(required, full, rowFilters, rowLimit, dels,
             AvroFileSource.birthsByPhysicalPath(new File(path), dels,
-              force = renames.nonEmpty) ++
+              force = renames.nonEmpty,
+              planned = Some(prunedFiles().map(p => logicalRelOf(p._1)).toSet)) ++
               branchState.map(_._3).getOrElse(Map.empty),
             renames, posdelsByPath, root = path,
             columnarBatch = columnarRows)

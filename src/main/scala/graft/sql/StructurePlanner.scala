@@ -1,9 +1,10 @@
 package graft.sql
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, GraftSqlBridge}
 import org.apache.spark.sql.{functions => F}
 import org.apache.spark.sql.types._
 
+import graft.functions.{ElementNarrow, ElementProjection}
 import FlattenPlanner.{Projection, Identity, Columns, quotePath}
 
 /** Structure-preserving ("withstructure") projection compiler
@@ -12,12 +13,19 @@ import FlattenPlanner.{Projection, Identity, Columns, quotePath}
   * Recursive record rebuild: at each nesting level, apply that level's
   * selections (cherry-pick / rename / reorder); levels with no selection at
   * or below them copy the whole subtree as-is; recursion descends through
-  * STRUCT, ARRAY (per element, via `transform`) and MAP (per value / key
-  * cherry-pick) — reference value walk at AvroSql.scala:187-305, schema walk
-  * at AvroSchemaSql.scala:244-317. Everything compiles to built-in Catalyst
-  * expressions (`CreateNamedStruct`, `ArrayTransform`, `TransformValues`,
-  * `MapFromEntries`) so the whole rebuild stays inside whole-stage codegen —
-  * no per-row JVM object churn, safe at 100 TB.
+  * STRUCT, ARRAY (per element) and MAP (per value / key cherry-pick) —
+  * reference value walk at AvroSql.scala:187-305, schema walk at
+  * AvroSchemaSql.scala:244-317.
+  *
+  * Structs compile to `CreateNamedStruct` over field extractions. An
+  * array with a selection at or below it compiles to one
+  * [[graft.functions.ElementProjection]] (no lambda): its children are the
+  * `GetArrayStructFields` chains of the element fields it keeps, so it
+  * stays in whole-stage codegen and nested column pruning reads only
+  * those fields. MAPS still compile to higher-order functions
+  * (`map_entries`, `filter`, `transform`, `map_from_entries`), whose
+  * lambdas Spark evaluates interpreted, per entry; a map inside an array
+  * element is narrowed by the array's expression instead.
   *
   * Level semantics pinned by AvroSqlWithRetainStructureTest.scala:
   *  - output fields appear in first-mention select-list order; a deeper
@@ -59,39 +67,46 @@ object StructurePlanner {
     Columns(levelColumns(schema, Nil, n => F.col(quotePath(Seq(n))), q))
   }
 
+  /** One output field of a struct level: its output name, and the source
+    * field with its ordinal in the level's struct.
+    */
+  private final case class Out(name: String, src: StructField, ordinal: Int)
+
+  /** Output fields of one struct level, in first-mention order. */
+  private def levelFields(st: StructType, path: Seq[String],
+      q: SelectQuery): Seq[Out] = {
+    val entries = q.entriesAt(path)
+    val explicitNames =
+      entries.collect { case Left(f) if !f.isStar => f.name }.toSet
+    val traversed = entries.collect { case Right(s) => s }.toSet
+    def find(name: String): Out = {
+      val i = st.fieldNames.indexOf(name)
+      if (i < 0) throw new IllegalArgumentException(
+        s"'${(path :+ name).mkString(".")}' can't be found in " +
+          s"struct<${st.fieldNames.mkString(",")}>")
+      Out(name, st.fields(i), i)
+    }
+
+    entries.flatMap {
+      case Left(f) if f.isStar =>
+        st.fields.toSeq.zipWithIndex
+          .filterNot { case (x, _) => explicitNames(x.name) || traversed(x.name) }
+          .map { case (x, i) => Out(x.name, x, i) }
+      case Left(f) => Seq(find(f.name).copy(name = f.alias))
+      case Right(seg) => Seq(find(seg))
+    }
+  }
+
   /** Columns for one struct level, in first-mention order. */
   private def levelColumns(
       st: StructType,
       path: Seq[String],
       get: String => Column,
-      q: SelectQuery): Seq[Column] = {
-    val entries = q.entriesAt(path)
-    val explicitNames =
-      entries.collect { case Left(f) if !f.isStar => f.name }.toSet
-    val traversed = entries.collect { case Right(s) => s }.toSet
-
-    entries.flatMap {
-      case Left(f) if f.isStar =>
-        st.fields.toSeq
-          .filterNot(x => explicitNames(x.name) || traversed(x.name))
-          .map(x => rebuild(x.dataType, x.nullable, get(x.name), path :+ x.name, q)
-            .alias(x.name))
-      case Left(f) =>
-        val sf = st.fields.find(_.name == f.name).getOrElse(
-          throw new IllegalArgumentException(
-            s"'${(path :+ f.name).mkString(".")}' can't be found in " +
-              s"struct<${st.fieldNames.mkString(",")}>"))
-        Seq(rebuild(sf.dataType, sf.nullable, get(f.name), path :+ f.name, q)
-          .alias(f.alias))
-      case Right(seg) =>
-        val sf = st.fields.find(_.name == seg).getOrElse(
-          throw new IllegalArgumentException(
-            s"'${(path :+ seg).mkString(".")}' can't be found in " +
-              s"struct<${st.fieldNames.mkString(",")}>"))
-        Seq(rebuild(sf.dataType, sf.nullable, get(seg), path :+ seg, q)
-          .alias(seg))
+      q: SelectQuery): Seq[Column] =
+    levelFields(st, path, q).map { o =>
+      rebuild(o.src.dataType, o.src.nullable, get(o.src.name),
+        path :+ o.src.name, q).alias(o.name)
     }
-  }
 
   /** Rebuild a value of type `dt` located at `path`, applying any selections
     * at or below that path; returns `ref` unchanged when there are none.
@@ -110,42 +125,27 @@ object StructurePlanner {
         if (nullable) F.when(ref.isNotNull, built) else built
       }
 
-    case ArrayType(et, containsNull) =>
+    case at: ArrayType =>
       if (!hasSelectionAtOrBelow(q, path)) ref
-      else F.transform(ref, x => rebuild(et, containsNull, x, path, q))
+      else elements(at, ref, path, q)
 
     case MapType(_, vt, vn) =>
-      val entries = q.entriesAt(path)
-      if (entries.isEmpty) ref
+      if (q.entriesAt(path).isEmpty) ref
       else {
-        val lefts = entries.collect { case Left(f) => f }
-        val hasStar = lefts.exists(_.isStar)
-        val keptKeys = lefts.filterNot(_.isStar).map(f => f.name -> f.alias) ++
-          entries.collect { case Right(seg) => seg -> seg }
-
-        // Deeper selections project map VALUES uniformly (a Spark map has a
-        // single value type, so per-key heterogeneous projection is
-        // untypeable): strip the key segment from each deeper path and apply
-        // the union of those selections to every kept entry's value.
-        val valueFields = q.fields.collect {
-          case f if f.parents.startsWith(path) &&
-            f.parents.lengthCompare(path.length) > 0 =>
-            f.copy(parents = path ++ f.parents.drop(path.length + 1))
+        val m = mapSelection(q, path)
+        def projectValue(v: Column): Column = m.valueQuery match {
+          case Some(qv) => rebuild(vt, vn, v, path, qv)
+          case None => v
         }
-        val qv = q.copy(fields = valueFields)
-        def projectValue(v: Column): Column =
-          if (valueFields.isEmpty) v else rebuild(vt, vn, v, path, qv)
-
-        val renames = keptKeys.filter { case (n, a) => n != a }
-        if (hasStar && keptKeys.isEmpty && valueFields.isEmpty) ref
+        if (m.hasStar && m.keptKeys.isEmpty && m.valueQuery.isEmpty) ref
         else {
           val filtered =
-            if (hasStar) F.map_entries(ref)
+            if (m.hasStar) F.map_entries(ref)
             else F.filter(F.map_entries(ref),
-              e => e.getField("key").isin(keptKeys.map(_._1): _*))
+              e => e.getField("key").isin(m.keptKeys.map(_._1): _*))
           val rewritten = F.transform(filtered, { e =>
             val k = e.getField("key")
-            val newKey = renames.foldLeft(k) { case (acc, (n, a)) =>
+            val newKey = m.renames.foldLeft(k) { case (acc, (n, a)) =>
               F.when(k === F.lit(n), F.lit(a)).otherwise(acc)
             }
             F.struct(newKey.alias("key"),
@@ -161,6 +161,139 @@ object StructurePlanner {
         throw new IllegalArgumentException(
           s"cannot select below scalar field '${path.mkString(".")}'")
       ref
+  }
+
+  /** An array rebuilt element by element as one [[ElementProjection]].
+    * Each kept leaf of an element is read through its own
+    * `GetArrayStructFields` chain (`ref.getField(..)...`), so nested
+    * column pruning keeps only the element fields the query reads. A
+    * nullable level is marked by a kept non-nullable leaf of its own; a
+    * nullable level without one, and any value that is not a struct (an
+    * array of arrays, a map), is read whole at that level and narrowed by
+    * field ordinals ([[ElementNarrow]]). Output types, nullability
+    * included, are those of the per-element rebuild `rebuild` describes.
+    */
+  private def elements(at: ArrayType, ref: Column, path: Seq[String],
+      q: SelectQuery): Column = {
+    val children = scala.collection.mutable.ArrayBuffer.empty[Column]
+    def child(c: Column): Int = { children += c; children.length - 1 }
+
+    // `nullable` is the value's declared nullability, `inherited` that of
+    // the reference it is read through (a field of a nullable parent)
+    def part(dt: DataType, nullable: Boolean, inherited: Boolean, col: Column,
+        path: Seq[String]): (ElementProjection.Part, DataType, Boolean) = {
+      def whole = {
+        val (narrow, t, n) = narrowOf(dt, nullable, inherited, path, q)
+        (ElementProjection.Take(child(col), dt, narrow), t, n)
+      }
+      dt match {
+        case st: StructType if hasSelectionAtOrBelow(q, path) =>
+          val outs = levelFields(st, path, q)
+          // a leaf read by a chain of its own: anything but a sub-level
+          def isLeaf(o: Out) = o.src.dataType match {
+            case _: StructType => !hasSelectionAtOrBelow(q, path :+ o.src.name)
+            case _ => true
+          }
+          val marker = outs.indexWhere(o => !o.src.nullable && isLeaf(o))
+          if (nullable && marker < 0) whole
+          else {
+            val parts = outs.map(o => part(o.src.dataType, o.src.nullable,
+              inherited || o.src.nullable, col.getField(o.src.name),
+              path :+ o.src.name))
+            // a leaf's part is always a Take of its own chain
+            val markerChild =
+              if (!nullable) -1
+              else parts(marker)._1.asInstanceOf[ElementProjection.Take].child
+            (ElementProjection.Build(parts.map(_._1).toIndexedSeq, markerChild),
+              StructType(outs.zip(parts).map { case (o, (_, t, n)) =>
+                StructField(o.name, t, n) }),
+              nullable)
+          }
+        case _ => whole
+      }
+    }
+
+    val (element, et, en) =
+      part(at.elementType, at.containsNull, at.containsNull, ref, path)
+    GraftSqlBridge.column(ElementProjection(
+      children.toSeq.map(GraftSqlBridge.deferred), element, ArrayType(et, en)))
+  }
+
+  /** Narrowing of a value read whole, with the output type and
+    * nullability `rebuild` gives it: a struct selects by ordinal, an
+    * array narrows per element, a map filters and renames keys and
+    * narrows values.
+    */
+  private def narrowOf(dt: DataType, nullable: Boolean, inherited: Boolean,
+      path: Seq[String], q: SelectQuery): (ElementNarrow, DataType, Boolean) =
+    dt match {
+      case st: StructType if hasSelectionAtOrBelow(q, path) =>
+        val outs = levelFields(st, path, q)
+        val subs = outs.map(o => narrowOf(o.src.dataType, o.src.nullable,
+          inherited || o.src.nullable, path :+ o.src.name, q))
+        (ElementNarrow.Pick(outs.map(_.ordinal).toIndexedSeq,
+            outs.map(_.src.dataType).toIndexedSeq, subs.map(_._1).toIndexedSeq),
+          StructType(outs.zip(subs).map { case (o, (_, t, n)) =>
+            StructField(o.name, t, n) }),
+          nullable)
+
+      case ArrayType(et, containsNull) if hasSelectionAtOrBelow(q, path) =>
+        val (sub, t, n) = narrowOf(et, containsNull, containsNull, path, q)
+        (ElementNarrow.Each(et, sub), ArrayType(t, n), inherited)
+
+      case MapType(kt, vt, vn) if q.entriesAt(path).nonEmpty =>
+        val m = mapSelection(q, path)
+        if (m.hasStar && m.keptKeys.isEmpty && m.valueQuery.isEmpty)
+          (ElementNarrow.Keep, dt, inherited)
+        else {
+          if (m.renames.nonEmpty && kt != StringType)
+            throw new IllegalArgumentException(
+              s"cannot rename keys of '${path.mkString(".")}' " +
+                s"(${dt.simpleString}) inside an array: only string keys")
+          val (sub, t, n) = m.valueQuery match {
+            case Some(qv) => narrowOf(vt, vn, vn, path, qv)
+            case None => (ElementNarrow.Keep, vt, vn)
+          }
+          (ElementNarrow.Keys(kt, vt, t, m.hasStar,
+              m.keptKeys.map(_._1).toSet, m.renames.toMap, sub),
+            MapType(kt, t, n), nullable || inherited)
+        }
+
+      case _: StructType | _: ArrayType | _: MapType =>
+        (ElementNarrow.Keep, dt, inherited)
+
+      case _ =>
+        if (hasSelectionBelow(q, path))
+          throw new IllegalArgumentException(
+            s"cannot select below scalar field '${path.mkString(".")}'")
+        (ElementNarrow.Keep, dt, inherited)
+    }
+
+  /** The selection at a map's level: explicitly selected names are KEY
+    * cherry-picks with rename, `*` keeps every key, and a deeper path keeps
+    * its key and projects inside the value. `valueQuery` is the union of
+    * the deeper selections with the key segment stripped: a Spark map has
+    * one value type, so per-key heterogeneous projection is untypeable and
+    * every kept value is projected alike. None when no deeper path exists.
+    */
+  private final case class MapSelection(hasStar: Boolean,
+      keptKeys: Seq[(String, String)], valueQuery: Option[SelectQuery]) {
+    def renames: Seq[(String, String)] = keptKeys.filter { case (n, a) => n != a }
+  }
+
+  private def mapSelection(q: SelectQuery, path: Seq[String]): MapSelection = {
+    val entries = q.entriesAt(path)
+    val lefts = entries.collect { case Left(f) => f }
+    val valueFields = q.fields.collect {
+      case f if f.parents.startsWith(path) &&
+        f.parents.lengthCompare(path.length) > 0 =>
+        f.copy(parents = path ++ f.parents.drop(path.length + 1))
+    }
+    MapSelection(
+      lefts.exists(_.isStar),
+      lefts.filterNot(_.isStar).map(f => f.name -> f.alias) ++
+        entries.collect { case Right(seg) => seg -> seg },
+      if (valueFields.isEmpty) None else Some(q.copy(fields = valueFields)))
   }
 
   private def hasSelectionBelow(q: SelectQuery, path: Seq[String]): Boolean =

@@ -9,7 +9,7 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
   * This is the standard pattern for libraries that inject custom plans
   * (the injection points themselves — `SparkSessionExtensions` — are
   * public, but plan construction helpers are package-private). Kept to
-  * exactly these two calls; everything else in graft uses public APIs.
+  * these conversions; everything else in graft uses public APIs.
   */
 object GraftSqlBridge {
 
@@ -30,4 +30,12 @@ object GraftSqlBridge {
     * powers runtime filtering).
     */
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
+
+  /** A Column as an expression that is resolved later, when a session
+    * converts the Column that encloses it (a `select` over a
+    * [[column]]-wrapped custom expression built from Columns). Unlike
+    * [[expression]] it needs no session; use it only for children of an
+    * expression that goes back into a Column.
+    */
+  def deferred(c: Column): Expression = classic.ExpressionUtils.expression(c)
 }

@@ -100,6 +100,60 @@ class AvroProjectorSpec extends AnyWordSpec with Matchers with SparkSpec {
     o
   }
 
+  // a basket: a nullable array of nullable records (each with a nullable
+  // nested record), an array of arrays of records, and a map of records
+  private val detailSchema = SchemaBuilder.record("Detail").namespace("bsk")
+    .fields().requiredString("color").optionalInt("size").endRecord()
+  private val lineSchema = SchemaBuilder.record("Line").namespace("bsk")
+    .fields().requiredString("sku").requiredInt("qty").optionalDouble("price")
+    .name("detail").`type`().optional().`type`(detailSchema).endRecord()
+  private val cellSchema = SchemaBuilder.record("Cell").namespace("bsk")
+    .fields().requiredInt("a").optionalString("b").endRecord()
+  private val nullableLine = Schema.createUnion(java.util.Arrays.asList(
+    Schema.create(Schema.Type.NULL), lineSchema))
+  private val basketSchema = SchemaBuilder.record("Basket").namespace("bsk")
+    .fields().requiredLong("id")
+    .name("lines").`type`().optional().`type`(Schema.createArray(nullableLine))
+    .name("grid").`type`(Schema.createArray(Schema.createArray(cellSchema))).noDefault()
+    .name("byName").`type`().map().values(lineSchema).noDefault()
+    .endRecord()
+
+  private def basket(i: Int): GenericRecord = {
+    def line(k: Int): GenericRecord = {
+      val l = new GenericData.Record(lineSchema)
+      l.put("sku", s"sku$i.$k"); l.put("qty", i + k)
+      l.put("price", if (k % 2 == 0) Double.box(i + k / 2.0) else null)
+      l.put("detail", if (k % 3 == 1) null else {
+        val d = new GenericData.Record(detailSchema)
+        d.put("color", s"c$k"); d.put("size", if (k == 2) null else Int.box(k)); d
+      })
+      l
+    }
+    def cell(k: Int): GenericRecord = {
+      val c = new GenericData.Record(cellSchema)
+      c.put("a", k); c.put("b", if (k % 2 == 0) s"b$k" else null); c
+    }
+    val b = new GenericData.Record(basketSchema)
+    b.put("id", i.toLong)
+    // null array, empty array, then arrays with a null element
+    b.put("lines", i % 4 match {
+      case 0 => null
+      case 1 => new GenericData.Array[GenericRecord](0, basketSchema.getField("lines").schema().getTypes.get(1))
+      case _ => new GenericData.Array[GenericRecord](
+        basketSchema.getField("lines").schema().getTypes.get(1),
+        (0 to i % 5).map(k => if (k == 1) null else line(k)).asJava)
+    })
+    val inner = basketSchema.getField("grid").schema().getElementType
+    b.put("grid", new GenericData.Array[GenericData.Array[GenericRecord]](
+      basketSchema.getField("grid").schema(),
+      (0 until i % 3).map(r => new GenericData.Array[GenericRecord](
+        inner, (0 until r).map(cell).asJava)).asJava))
+    val byName = new java.util.HashMap[String, GenericRecord]()
+    (0 until i % 3).foreach(k => byName.put(s"n$k", line(k)))
+    b.put("byName", byName)
+    b
+  }
+
   /** Projector output must equal the one-row-DataFrame `record.sql`
     * output, value by value and schema by schema.
     */
@@ -145,26 +199,57 @@ class AvroProjectorSpec extends AnyWordSpec with Matchers with SparkSpec {
         "SELECT customer, items.qty, items.price, note FROM t withstructure",
         "SELECT id, tags, ship.city FROM t withstructure"
       ).foreach(q => agreeWithSql(q, orderV1, v1.zip(v2).flatMap(p => Seq(p._1, p._2))))
+      // arrays of records: a null array, an empty array and a null
+      // element; an array of arrays of records; renames and an
+      // element-level star; a nullable record inside an element; a map of
+      // records (still projected by lambdas)
+      val baskets = (0 until 12).map(basket)
+      Seq(
+        "SELECT id, lines.qty, lines.price FROM t withstructure",
+        "SELECT id, lines.price FROM t withstructure",
+        "SELECT lines.price AS p, lines.*, lines.sku AS code FROM t withstructure",
+        "SELECT lines.sku, lines.detail.color FROM t withstructure",
+        "SELECT lines.detail.size AS sz, lines.detail.*, id FROM t withstructure",
+        "SELECT grid.b FROM t withstructure",
+        "SELECT grid.b AS bee, grid.*, id FROM t withstructure",
+        "SELECT id, byName.n1.qty, byName.n1.detail.color FROM t withstructure",
+        "SELECT byName.*, lines.qty FROM t withstructure"
+      ).foreach(q => agreeWithSql(q, basketSchema, baskets))
       // a record with no fields: nothing to read, nothing to prune
       val empty = SchemaBuilder.record("Empty").namespace("ord").fields().endRecord()
       agreeWithSql("SELECT *", empty, Seq(new GenericData.Record(empty)))
     }
 
     "decode only the columns and nested fields the query reads" in {
-      import org.apache.spark.sql.types.StructType
+      import org.apache.spark.sql.types.{ArrayType, StructType}
       def paths(st: StructType, prefix: String = ""): Seq[String] =
         st.fields.toSeq.flatMap { f =>
           f.dataType match {
             case s: StructType => paths(s, s"$prefix${f.name}.")
+            case ArrayType(s: StructType, _) => paths(s, s"$prefix${f.name}.")
             case _ => Seq(prefix + f.name)
           }
         }
-      def readPaths(q: String) = paths(new AvroProjector(spark, orderV1, q).readStruct)
+      def readPaths(q: String, schema: Schema = orderV1) =
+        paths(new AvroProjector(spark, schema, q).readStruct)
       readPaths("SELECT id, customer.name FROM t") shouldBe Seq("id", "customer.name")
       readPaths("SELECT customer.address.*, note FROM t") shouldBe
         Seq("customer.address.city", "customer.address.zip", "note")
       readPaths("SELECT v.long FROM t") shouldBe Seq("v.long")
       readPaths("SELECT id, tags FROM t withstructure") shouldBe Seq("id", "tags")
+      // withstructure inside array elements reads only the kept fields
+      readPaths("SELECT customer, items.qty, items.price, note FROM t withstructure") shouldBe
+        Seq("customer.name", "customer.tier", "customer.address.city",
+          "customer.address.zip", "note", "items.qty", "items.price")
+      readPaths("SELECT id, items.sku AS code FROM t withstructure") shouldBe
+        Seq("id", "items.sku")
+      // a nullable element is marked by a kept non-nullable field; with
+      // none kept, the element is read whole so a null element stays null
+      readPaths("SELECT lines.qty, lines.detail.color FROM t withstructure",
+        basketSchema) shouldBe Seq("lines.qty", "lines.detail.color")
+      readPaths("SELECT lines.price FROM t withstructure", basketSchema) shouldBe
+        Seq("lines.sku", "lines.qty", "lines.price", "lines.detail.color",
+          "lines.detail.size")
       readPaths("SELECT *") shouldBe paths(AvroSchemaConverter.toStruct(orderV1))
     }
 

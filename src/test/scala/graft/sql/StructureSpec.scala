@@ -3,7 +3,8 @@ package graft.sql
 import graft.SparkSpec
 import graft.sql.GraftSql.implicits._
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.types.{ArrayType, StructType, MapType}
+import org.apache.spark.sql.catalyst.expressions.HigherOrderFunction
+import org.apache.spark.sql.types._
 import org.scalatest.matchers.should.Matchers
 import org.scalatest.wordspec.AnyWordSpec
 
@@ -21,6 +22,116 @@ class StructureSpec extends AnyWordSpec with Matchers with SparkSpec {
   private def ingredientFields(df: DataFrame, col: String): Seq[String] =
     df.schema(col).dataType.asInstanceOf[ArrayType]
       .elementType.asInstanceOf[StructType].fieldNames.toSeq
+
+  // an array of nullable records (non-nullable sku/qty, nullable price and
+  // nested detail), an array of arrays of records and a map of records
+  // whose values hold an array of records
+  private val detailT = StructType(Seq(
+    StructField("color", StringType, nullable = false),
+    StructField("size", IntegerType)))
+  private val lineT = StructType(Seq(
+    StructField("sku", StringType, nullable = false),
+    StructField("qty", IntegerType, nullable = false),
+    StructField("price", DoubleType),
+    StructField("detail", detailT),
+    StructField("attrs", MapType(StringType, StringType))))
+  private val cellT = StructType(Seq(
+    StructField("a", IntegerType), StructField("b", StringType)))
+  private val basketT = StructType(Seq(
+    StructField("id", IntegerType, nullable = false),
+    StructField("lines", ArrayType(lineT, containsNull = true)),
+    StructField("grid", ArrayType(ArrayType(cellT))),
+    StructField("byName", MapType(StringType, StructType(Seq(
+      StructField("z", IntegerType, nullable = false),
+      StructField("lines", ArrayType(lineT))))))))
+
+  private def basketDf: DataFrame = {
+    val l1 = Row("a", 1, 2.0, Row("red", 3), Map("color" -> "r", "k" -> "v"))
+    val l2 = Row("b", 2, null, null, null)
+    val rows = Seq(
+      Row(1, Seq(l1, null, l2), Seq(Seq(Row(1, "x"), null, Row(null, null)), null, Seq()),
+        Map("k1" -> Row(1, Seq(l1, null)), "k2" -> null)),
+      Row(2, null, null, null),
+      Row(3, Seq(), Seq(Seq()), Map("k1" -> Row(5, null))))
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), basketT)
+  }
+
+  private def rowsOf(df: DataFrame): Seq[Seq[Any]] = df.collect().toSeq.map(_.toSeq)
+
+  "withstructure over arrays of records" should {
+    "keep a null element, a null array and an empty array" in {
+      val out = basketDf.sql("SELECT id, lines.qty, lines.price FROM t withstructure")
+      rowsOf(out) shouldBe Seq(
+        Seq(1, Seq(Row(1, 2.0), null, Row(2, null))),
+        Seq(2, null),
+        Seq(3, Seq()))
+      // every kept leaf nullable: a null element still differs from an
+      // element whose kept fields are all null
+      rowsOf(basketDf.sql("SELECT id, lines.price FROM t withstructure")) shouldBe Seq(
+        Seq(1, Seq(Row(2.0), null, Row(null))), Seq(2, null), Seq(3, Seq()))
+    }
+
+    "rename and expand an element-level star" in {
+      val out = basketDf.sql("SELECT lines.price AS p, lines.*, lines.sku AS code FROM t withstructure")
+      ingredientFields(out, "lines") shouldBe Seq("p", "qty", "detail", "attrs", "code")
+      rowsOf(out) shouldBe Seq(
+        Seq(Seq(Row(2.0, 1, Row("red", 3), Map("color" -> "r", "k" -> "v"), "a"), null,
+          Row(null, 2, null, null, "b"))),
+        Seq(null),
+        Seq(Seq()))
+    }
+
+    "rebuild a nullable nested struct inside an element" in {
+      rowsOf(basketDf.sql("SELECT lines.detail.color FROM t withstructure")) shouldBe Seq(
+        Seq(Seq(Row(Row("red")), null, Row(null))), Seq(null), Seq(Seq()))
+      rowsOf(basketDf.sql("SELECT lines.sku, lines.detail.size AS sz FROM t withstructure")) shouldBe
+        Seq(Seq(Seq(Row("a", Row(3)), null, Row("b", null))), Seq(null), Seq(Seq()))
+    }
+
+    "narrow a map inside an element by key" in {
+      rowsOf(basketDf.sql("SELECT lines.attrs.color AS c, lines.qty FROM t withstructure")) shouldBe
+        Seq(Seq(Seq(Row(Map("c" -> "r"), 1), null, Row(null, 2))), Seq(null), Seq(Seq()))
+    }
+
+    "project inside an array of arrays of records" in {
+      val out = basketDf.sql("SELECT grid.b AS bee, grid.* FROM t withstructure")
+      out.schema("grid").dataType shouldBe
+        ArrayType(ArrayType(StructType(Seq(
+          StructField("bee", StringType), StructField("a", IntegerType)))))
+      rowsOf(out) shouldBe Seq(
+        Seq(Seq(Seq(Row("x", 1), null, Row(null, null)), null, Seq())),
+        Seq(null),
+        Seq(Seq(Seq())))
+    }
+
+    "project an array of records inside a map of records" in {
+      rowsOf(basketDf.sql("SELECT id, byName.k1.lines.qty, byName.k1.lines.price FROM t withstructure")) shouldBe
+        Seq(
+          Seq(1, Map("k1" -> Row(Seq(Row(1, 2.0), null)))),
+          Seq(2, null),
+          Seq(3, Map("k1" -> Row(null))))
+    }
+
+    "refuse to rename the keys of a non-string map inside an element" in {
+      val t = StructType(Seq(StructField("arr", ArrayType(StructType(Seq(
+        StructField("m", MapType(IntegerType, StringType))))))))
+      val df = spark.createDataFrame(java.util.Arrays.asList(
+        Row(Seq(Row(Map(1 -> "a"))))), t)
+      val e = the[IllegalArgumentException] thrownBy
+        df.sql("SELECT arr.m.`1` AS one FROM t withstructure")
+      e.getMessage should include("only string keys")
+    }
+
+    "plan an array of records with no higher-order function" in {
+      def hofs(q: String) = basketDf.sql(q).queryExecution.analyzed.expressions
+        .exists(_.exists(_.isInstanceOf[HigherOrderFunction]))
+      hofs("SELECT id, lines.qty, lines.price FROM t withstructure") shouldBe false
+      hofs("SELECT lines.price AS p, lines.*, grid.b FROM t withstructure") shouldBe false
+      hofs("SELECT lines.detail.color, lines.attrs.color FROM t withstructure") shouldBe false
+      // maps keep their lambdas
+      hofs("SELECT byName.k1.z FROM t withstructure") shouldBe true
+    }
+  }
 
   "withstructure mode" should {
     "be the identity on 'SELECT *' (ref :72)" in {
