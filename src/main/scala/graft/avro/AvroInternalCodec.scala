@@ -14,10 +14,10 @@ import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, ArrayData, Generic
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** FUSED Avro ⇄ Catalyst-internal codec: `GenericRecord` →
-  * [[InternalRow]] (and back) in ONE specialized pass, skipping the
-  * external-Row + `ExpressionEncoder` round trip [[AvroRowCodec]]-based
-  * paths pay per record.
+/** The Avro ⇄ Catalyst value codec: `GenericRecord` → [[InternalRow]]
+  * (and back) in ONE specialized pass. Every path that turns records into
+  * rows uses it: the projector, `record.sql`, the bulk bridge, the
+  * graft-avro source, and [[AvroRowCodec]]'s external-`Row` adapters.
   *
   * Decode plans once per (writer schema, read struct): field positions
   * and per-field converter closures are resolved up front, so the
@@ -28,9 +28,13 @@ import org.apache.spark.unsafe.types.UTF8String
   * [[GenericInternalRow]], so downstream operators may hold references
   * without a defensive copy.
   *
-  * Same value semantics as [[AvroRowCodec]] (the reference's unpacker
-  * dispatch, AvroUnpacker.scala:124-139), including the schema-drift
-  * numeric promotions.
+  * Value rules follow the reference's unpacker dispatch
+  * (AvroUnpacker.scala:124-139): strings (incl. `Utf8`) and enum symbols →
+  * strings, `FIXED` → raw bytes, logical decimal/date/timestamp → native
+  * Spark values; timestamp-micros works (the reference's missing match
+  * arm, AvroUnpacker.scala:100-118, is a fixed quirk, not replicated).
+  * Multi-branch unions become tagged structs, and the schema-drift
+  * numeric promotions of Avro resolution apply.
   */
 object AvroInternalCodec {
 
@@ -222,6 +226,7 @@ object AvroInternalCodec {
       }.toMap
     v => {
       val row = v.asInstanceOf[InternalRow]
+      require(!row.isNullAt(tagIdx), "union carrier row has a null tag")
       val tag = row.getUTF8String(tagIdx).toString
       val (fi, fdt, conv) = byName.getOrElse(tag,
         throw new IllegalArgumentException(

@@ -8,28 +8,31 @@ import org.apache.spark.sql.catalyst.expressions.{AttributeSet, NamedExpression,
 import org.apache.spark.sql.catalyst.plans.logical.Project
 import org.apache.spark.sql.types.StructType
 
-import graft.sql.GraftSql
+import graft.sql.{GraftSql, SelectParser, SelectQuery}
 
 /** Compiled per-record projection — the engine on the reference's own
   * per-message turf (a Kafka Connect SMT transforms one record at a time,
   * reference AvroSql.scala:44).
   *
-  * `record.sql(...)` runs a one-row Spark job per call, which is correct
-  * but pays scheduler latency per record. This projector PLANS ONCE:
-  * the query is resolved by Catalyst against the record schema, the
-  * columns the resolved project list references are pruned to the nested
-  * fields it reads (Catalyst's own `SchemaPruning`, as a file scan prunes
-  * its `requiredSchema`), and the project list, rebound to that read
-  * struct, is compiled to a `SafeProjection` (Janino codegen with an
-  * interpreted fallback). Each `apply` is then row-in/row-out with no
-  * job, no scheduler, no RDD: decode of the referenced columns only, one
-  * generated function call into a reused row of plain JVM values, and an
-  * encode that reads those values directly. The reference re-derives
-  * schema + projection for EVERY record (AvroSql.scala:74-82); here the
-  * projector stays semantically identical to the DataFrame path (same
-  * planner, same expressions).
+  * A projector PLANS ONCE: the query is resolved by Catalyst against the
+  * record schema, the columns the resolved project list references are
+  * pruned to the nested fields it reads (Catalyst's own `SchemaPruning`,
+  * as a file scan prunes its `requiredSchema`), and the project list,
+  * rebound to that read struct, is compiled to a `SafeProjection` (Janino
+  * codegen with an interpreted fallback). Each `apply` is then
+  * row-in/row-out with no job, no scheduler, no RDD: decode of the
+  * referenced columns only, one generated function call into a reused row
+  * of plain JVM values, and an encode that reads those values directly.
+  * The reference re-derives schema + projection for EVERY record
+  * (AvroSql.scala:74-82); `record.sql(...)` ([[AvroSql]]) answers each
+  * call from a per-thread cache of these projectors instead. The plan is
+  * the one `df.sql(query)` builds (same planner, same expressions).
   */
-final class AvroProjector(spark: SparkSession, inSchema: Schema, query: String) {
+final class AvroProjector(spark: SparkSession, inSchema: Schema, query: SelectQuery) {
+
+  /** Parse `query` and plan it; errors throw `IllegalArgumentException`. */
+  def this(spark: SparkSession, inSchema: Schema, query: String) =
+    this(spark, inSchema, SelectParser.parse(query))
 
   private val struct = AvroSchemaConverter.toStruct(inSchema)
 

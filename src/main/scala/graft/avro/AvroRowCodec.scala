@@ -1,193 +1,27 @@
 package graft.avro
 
-import java.math.BigInteger
-import java.nio.ByteBuffer
-import java.sql.{Date, Timestamp}
-import java.time.LocalDate
-
-import org.apache.avro.{LogicalTypes, Schema}
-import org.apache.avro.Schema.Type
-import org.apache.avro.generic.{GenericData, GenericFixed, GenericRecord, IndexedRecord}
+import org.apache.avro.Schema
+import org.apache.avro.generic.{GenericRecord, IndexedRecord}
 import org.apache.spark.sql.Row
-import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.types.StructType
 
-import scala.jdk.CollectionConverters._
-
-/** `GenericRecord` ⇄ `Row` codec (SURVEY.md §7 L2), value-side counterpart
-  * of [[AvroSchemaConverter]]. Decoding follows the reference's unpacker
-  * dispatch (AvroUnpacker.scala:124-139): strings (incl. `Utf8`) →
-  * `String`, enum symbols → their name, `FIXED` → raw bytes, logical
-  * decimal/date/timestamp → native JVM values. timestamp-micros works
-  * (the reference's missing match arm, AvroUnpacker.scala:100-118, is a
-  * fixed quirk, not replicated).
+/** `GenericRecord` ⇄ external Spark `Row`, for callers that hold external
+  * rows. The value rules are [[AvroInternalCodec]]'s; Catalyst's own
+  * `CatalystTypeConverters` turn its internal rows into external ones
+  * (`String`, `java.sql.Date`/`Timestamp`, `java.math.BigDecimal`, `Seq`,
+  * `Map`, nested `Row`) and back. Each call plans its codec, so these are
+  * for one-off conversions; per-record paths hold a planned codec.
   */
 object AvroRowCodec {
 
   /** Avro record → external Spark Row conforming to `struct`. */
-  def toRow(record: IndexedRecord, struct: StructType): Row = {
-    val schema = record.getSchema
-    val values = struct.fields.map { sf =>
-      val af = schema.getField(sf.name)
-      require(af != null, s"Avro record has no field '${sf.name}'")
-      decode(record.get(af.pos()), af.schema(), sf.dataType)
-    }
-    new GenericRowWithSchema(values.toArray[Any], struct)
-  }
-
-  private def nonNull(s: Schema): Schema =
-    if (s.getType == Type.UNION) AvroSchemaConverter.fromUnion(s)._1 else s
-
-  private[avro] def decode(v: Any, schema0: Schema, dt: DataType): Any = {
-    if (v == null) return null
-    if (schema0.getType == Type.UNION &&
-        AvroSchemaConverter.unionBranches(schema0)._1.length >= 2)
-      return decodeUnion(v, schema0, dt)
-    val schema = nonNull(schema0)
-    (schema.getType, dt) match {
-      case (Type.STRING, StringType) => v.toString
-      case (Type.ENUM, StringType) => v.toString
-      case (Type.BYTES, BinaryType) => bytesOf(v)
-      case (Type.FIXED, BinaryType) => v.asInstanceOf[GenericFixed].bytes().clone()
-      case (Type.BYTES | Type.FIXED, d: DecimalType) =>
-        new java.math.BigDecimal(new BigInteger(bytesOf(v)), d.scale)
-      case (Type.INT, DateType) =>
-        Date.valueOf(LocalDate.ofEpochDay(v.asInstanceOf[Int].toLong))
-      case (Type.LONG, TimestampType) =>
-        schema.getLogicalType match {
-          case _: LogicalTypes.TimestampMillis =>
-            new Timestamp(v.asInstanceOf[Long])
-          case _ => // timestamp-micros (reference quirk fixed: no MatchError)
-            val us = v.asInstanceOf[Long]
-            val t = new Timestamp(Math.floorDiv(us, 1000000L) * 1000L)
-            t.setNanos((Math.floorMod(us, 1000000L) * 1000L).toInt)
-            t
-        }
-      case (Type.LONG, TimestampNTZType) =>
-        val us = schema.getLogicalType match {
-          case _: LogicalTypes.LocalTimestampMillis =>
-            Math.multiplyExact(v.asInstanceOf[Long], 1000L)
-          case _ => v.asInstanceOf[Long]
-        }
-        java.time.LocalDateTime.ofEpochSecond(Math.floorDiv(us, 1000000L),
-          (Math.floorMod(us, 1000000L) * 1000L).toInt, java.time.ZoneOffset.UTC)
-      case (Type.RECORD, st: StructType) => toRow(v.asInstanceOf[IndexedRecord], st)
-      case (Type.ARRAY, ArrayType(et, _)) =>
-        v.asInstanceOf[java.util.Collection[Any]].asScala.toSeq
-          .map(decode(_, schema.getElementType, et))
-      case (Type.MAP, MapType(StringType, vt, _)) =>
-        v.asInstanceOf[java.util.Map[Any, Any]].asScala.map { case (k, mv) =>
-          k.toString -> decode(mv, schema.getValueType, vt)
-        }.toMap
-      // schema-drift numeric promotions (Avro resolution rules): an older
-      // file's narrower writer type decodes into the table's wider column
-      case (Type.INT, LongType)    => v.asInstanceOf[Int].toLong
-      case (Type.INT, DoubleType)  => v.asInstanceOf[Int].toDouble
-      case (Type.LONG, DoubleType) => v.asInstanceOf[Long].toDouble
-      case (Type.FLOAT, DoubleType) => v.asInstanceOf[Float].toDouble
-      case _ => v // boolean / int / long / float / double primitives
-    }
-  }
-
-  private def bytesOf(v: Any): Array[Byte] = v match {
-    case bb: ByteBuffer =>
-      val d = bb.duplicate()
-      val out = new Array[Byte](d.remaining())
-      d.get(out)
-      out
-    case arr: Array[Byte] => arr
-    case f: GenericFixed => f.bytes() // fixed-carrier decimals
-    case other => throw new IllegalArgumentException(s"not bytes: $other")
-  }
-
-  /** Multi-branch union value → tagged-struct Row: `tag` names the
-    * active branch (resolved against the runtime datum, Avro's own
-    * union dispatch), the matching branch field carries the decoded
-    * value, every other branch field is null.
-    */
-  private def decodeUnion(v: Any, union: Schema, dt: DataType): Row = {
-    val st = dt.asInstanceOf[StructType]
-    val idx = GenericData.get().resolveUnion(union, v)
-    val active = union.getTypes.get(idx)
-    val name = AvroSchemaConverter.branchName(active)
-    val values = st.fields.map { f =>
-      if (f.name == AvroSchemaConverter.UnionTagField) name
-      else if (f.name == name) decode(v, active, f.dataType)
-      else null
-    }
-    new GenericRowWithSchema(values.toArray[Any], st)
-  }
+  def toRow(record: IndexedRecord, struct: StructType): Row =
+    CatalystTypeConverters.createToScalaConverter(struct)(
+      AvroInternalCodec.decoderFor(record.getSchema, struct)(record)).asInstanceOf[Row]
 
   /** External Spark Row → Avro record conforming to `avroSchema`. */
-  def fromRow(row: Row, struct: StructType, avroSchema: Schema): GenericRecord = {
-    val rec = new GenericData.Record(avroSchema)
-    struct.fields.zipWithIndex.foreach { case (sf, i) =>
-      val af = avroSchema.getField(sf.name)
-      require(af != null, s"output Avro schema has no field '${sf.name}'")
-      rec.put(af.pos(), encode(row.get(i), sf.dataType, af.schema()))
-    }
-    rec
-  }
-
-  private[avro] def encode(v: Any, dt: DataType, schema0: Schema): Any = {
-    if (v == null) return null
-    if (schema0.getType == Type.UNION &&
-        AvroSchemaConverter.unionBranches(schema0)._1.length >= 2) {
-      // tagged-struct Row → the branch the tag names, encoded with that
-      // branch's schema (round trip of decodeUnion)
-      val row = v.asInstanceOf[Row]
-      val st = dt.asInstanceOf[StructType]
-      val tag = row.getAs[String](
-        st.fieldIndex(AvroSchemaConverter.UnionTagField))
-      require(tag != null, "union carrier row has a null tag")
-      val branch = AvroSchemaConverter.unionBranches(schema0)._1
-        .find(AvroSchemaConverter.branchName(_) == tag)
-        .getOrElse(throw new IllegalArgumentException(
-          s"tag '$tag' names no branch of $schema0"))
-      val bi = st.fieldIndex(tag)
-      return encode(row.get(bi), st.fields(bi).dataType, branch)
-    }
-    val schema = nonNull(schema0)
-    (dt, schema.getType) match {
-      case (StringType, Type.ENUM) =>
-        new GenericData.EnumSymbol(schema, v.toString)
-      case (StringType, _) => v.toString
-      case (BinaryType, Type.FIXED) =>
-        new GenericData.Fixed(schema, v.asInstanceOf[Array[Byte]])
-      case (BinaryType, _) => ByteBuffer.wrap(v.asInstanceOf[Array[Byte]])
-      case (d: DecimalType, Type.BYTES) =>
-        val bd = v.asInstanceOf[java.math.BigDecimal].setScale(d.scale)
-        ByteBuffer.wrap(bd.unscaledValue().toByteArray)
-      case (DateType, Type.INT) =>
-        v.asInstanceOf[Date].toLocalDate.toEpochDay.toInt
-      case (TimestampType, Type.LONG) =>
-        val ts = v.asInstanceOf[Timestamp]
-        schema.getLogicalType match {
-          case _: LogicalTypes.TimestampMillis => ts.getTime
-          case _ =>
-            Math.floorDiv(ts.getTime, 1000L) * 1000000L + ts.getNanos / 1000L
-        }
-      case (TimestampNTZType, Type.LONG) =>
-        val ldt = v.asInstanceOf[java.time.LocalDateTime]
-        val us = ldt.toEpochSecond(java.time.ZoneOffset.UTC) * 1000000L +
-          ldt.getNano / 1000L
-        schema.getLogicalType match {
-          case _: LogicalTypes.LocalTimestampMillis => Math.floorDiv(us, 1000L)
-          case _ => us
-        }
-      case (st: StructType, Type.RECORD) =>
-        fromRow(v.asInstanceOf[Row], st, schema)
-      case (ArrayType(et, _), Type.ARRAY) =>
-        val out = new java.util.ArrayList[Any]()
-        v.asInstanceOf[scala.collection.Seq[Any]]
-          .foreach(e => out.add(encode(e, et, schema.getElementType)))
-        out
-      case (MapType(StringType, vt, _), Type.MAP) =>
-        val out = new java.util.HashMap[String, Any]()
-        v.asInstanceOf[scala.collection.Map[String, Any]]
-          .foreach { case (k, mv) => out.put(k, encode(mv, vt, schema.getValueType)) }
-        out
-      case _ => v
-    }
-  }
+  def fromRow(row: Row, struct: StructType, avroSchema: Schema): GenericRecord =
+    AvroInternalCodec.encoderFor(struct, avroSchema)(
+      CatalystTypeConverters.createToCatalystConverter(struct)(row).asInstanceOf[InternalRow])
 }

@@ -1,6 +1,6 @@
 package graft.sql
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
 /** Public API of the projection engine — the Spark-native generalisation of
@@ -19,15 +19,10 @@ import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
   */
 object GraftSql {
 
-  /** Parse + plan a query against a schema. Errors (parse failure, unknown
-    * field, illegal flatten of array/map, duplicate selection) throw
+  /** Plan a parsed query against a schema. Errors (unknown field, illegal
+    * flatten of array/map, duplicate selection) throw
     * IllegalArgumentException, matching the reference's contract.
     */
-  def plan(query: String, schema: StructType): FlattenPlanner.Projection = {
-    val q = SelectParser.parse(query)
-    plan(q, schema)
-  }
-
   def plan(q: SelectQuery, schema: StructType): FlattenPlanner.Projection = {
     val cq = canonicalize(q, schema)
     if (cq.withStructure) StructurePlanner.plan(cq, schema)
@@ -74,20 +69,16 @@ object GraftSql {
     })
   }
 
-  /** Columns for a planned query, or None for the identity projection. */
-  def columns(query: String, schema: StructType): Option[Seq[Column]] =
-    plan(query, schema) match {
-      case FlattenPlanner.Identity => None
-      case FlattenPlanner.Columns(cols) => Some(cols)
-    }
-
   object implicits {
     implicit class DataFrameSqlOps(val df: DataFrame) {
       /** `df.sql("SELECT a.b as x, * [FROM t] [withstructure]")` */
-      def sql(query: String): DataFrame =
-        columns(query, df.schema) match {
-          case None => df
-          case Some(cols) => df.select(cols: _*)
+      def sql(query: String): DataFrame = sql(SelectParser.parse(query))
+
+      /** A parsed query (EP3: the caller already holds the fields). */
+      def sql(q: SelectQuery): DataFrame =
+        plan(q, df.schema) match {
+          case FlattenPlanner.Identity => df
+          case FlattenPlanner.Columns(cols) => df.select(cols: _*)
         }
     }
   }

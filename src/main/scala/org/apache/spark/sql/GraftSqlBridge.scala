@@ -2,6 +2,7 @@ package org.apache.spark.sql
 
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.internal.SQLConf
 
 /** Thin bridge into the `private[sql]` classic APIs that a whole-operator
   * extension needs: wrapping a custom [[LogicalPlan]] node back into a
@@ -15,6 +16,10 @@ object GraftSqlBridge {
 
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+
+  /** The session's own SQL conf (the one its queries analyze under). */
+  def sqlConf(spark: SparkSession): SQLConf =
+    spark.asInstanceOf[classic.SparkSession].sessionState.conf
 
   /** Eagerly convert a Column to its Catalyst expression with the
     * session-bound converter (the static `ExpressionUtils.expression`

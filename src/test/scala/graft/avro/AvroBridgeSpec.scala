@@ -429,6 +429,15 @@ class AvroBridgeSpec extends AnyWordSpec with Matchers with SparkSpec {
         Seq(Some(7L), Some(true), None)
     }
 
+    "reject a carrier row with a null tag on the way back to Avro" in {
+      import org.apache.spark.sql.Row
+      val st = AvroSchemaConverter.toStruct(unionSchema)
+      val row = Row(1L, Row(null, "abc", null), null)
+      the[IllegalArgumentException] thrownBy
+        AvroRowCodec.fromRow(row, st, unionSchema) should have message
+        "requirement failed: union carrier row has a null tag"
+    }
+
     "unpack to a tagged map" in {
       val m = AvroUnpacker(holder(9L, Int.box(5), null), unionSchema)
         .asInstanceOf[Map[String, Any]]

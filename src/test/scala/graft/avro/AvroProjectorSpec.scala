@@ -154,17 +154,20 @@ class AvroProjectorSpec extends AnyWordSpec with Matchers with SparkSpec {
     b
   }
 
-  /** Projector output must equal the one-row-DataFrame `record.sql`
-    * output, value by value and schema by schema.
+  /** Projector output must equal a one-row DataFrame's: the record
+    * through `AvroBridge.toDF` → `df.sql` → `AvroBridge.fromDF`, a Spark
+    * job with no projector in it (`record.sql` is projector-backed), value
+    * by value and schema by schema.
     */
   private def agreeWithSql(q: String, inSchema: Schema,
       records: Seq[GenericRecord]): Unit = {
-    import AvroSql.implicits._
-    implicit val s: org.apache.spark.sql.SparkSession = spark
+    import graft.sql.GraftSql.implicits._
     val proj = new AvroProjector(spark, inSchema, q)
     records.foreach { r =>
       val viaProjector = proj(r)
-      val viaJob = r.sql(q)
+      val (name, ns, doc) = AvroSchemaConverter.recordInfo(r.getSchema)
+      val (_, Seq(viaJob)) = AvroBridge.fromDF(
+        AvroBridge.toDF(spark, r.getSchema, Seq(r)).sql(q), name, ns, doc)
       withClue(s"$q on $r: ") {
         viaProjector.toString shouldBe viaJob.toString
         viaProjector.getSchema shouldBe viaJob.getSchema
@@ -173,7 +176,7 @@ class AvroProjectorSpec extends AnyWordSpec with Matchers with SparkSpec {
   }
 
   "AvroProjector" should {
-    "agree with the one-row-DataFrame record.sql path" in {
+    "agree with a one-row DataFrame through the bridge" in {
       agreeWithSql("SELECT name, address.street.name as streetName, age",
         personSchema, (0 until 20).map(mk))
       val v1 = (0 until 6).map(order(orderV1, _))
