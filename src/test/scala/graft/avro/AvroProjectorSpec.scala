@@ -1,13 +1,19 @@
 package graft.avro
 
-import org.apache.avro.{Schema, SchemaBuilder}
-import org.apache.avro.generic.{GenericData, GenericRecord}
+import java.nio.ByteBuffer
+
+import org.apache.avro.{LogicalTypes, Schema, SchemaBuilder}
+import org.apache.avro.generic.{GenericData, GenericDatumReader, GenericDatumWriter, GenericRecord, IndexedRecord}
+import org.apache.avro.io.{DecoderFactory, EncoderFactory}
+import org.apache.avro.util.Utf8
+import org.apache.spark.SparkThrowable
 import org.scalatest.matchers.should.Matchers
 import org.scalatest.wordspec.AnyWordSpec
 
 import graft.SparkSpec
 
 import scala.jdk.CollectionConverters._
+import scala.util.{Failure, Success, Try}
 
 class AvroProjectorSpec extends AnyWordSpec with Matchers with SparkSpec {
 
@@ -157,22 +163,140 @@ class AvroProjectorSpec extends AnyWordSpec with Matchers with SparkSpec {
   /** Projector output must equal a one-row DataFrame's: the record
     * through `AvroBridge.toDF` → `df.sql` → `AvroBridge.fromDF`, a Spark
     * job with no projector in it (`record.sql` is projector-backed), value
-    * by value and schema by schema.
+    * by value, value class by value class and schema by schema. A record
+    * one side refuses, the other must refuse with the same error.
     */
   private def agreeWithSql(q: String, inSchema: Schema,
-      records: Seq[GenericRecord]): Unit = {
+      records: Seq[IndexedRecord]): Unit = {
     import graft.sql.GraftSql.implicits._
     val proj = new AvroProjector(spark, inSchema, q)
     records.foreach { r =>
-      val viaProjector = proj(r)
+      val viaProjector = Try(proj(r))
       val (name, ns, doc) = AvroSchemaConverter.recordInfo(r.getSchema)
-      val (_, Seq(viaJob)) = AvroBridge.fromDF(
-        AvroBridge.toDF(spark, r.getSchema, Seq(r)).sql(q), name, ns, doc)
+      val viaJob = Try(AvroBridge.fromDF(
+        AvroBridge.toDF(spark, r.getSchema, Seq(r)).sql(q), name, ns, doc)._2.head)
       withClue(s"$q on $r: ") {
-        viaProjector.toString shouldBe viaJob.toString
-        viaProjector.getSchema shouldBe viaJob.getSchema
+        (viaProjector, viaJob) match {
+          case (Success(p), Success(j)) =>
+            p.toString shouldBe j.toString
+            p.getSchema shouldBe j.getSchema
+            shape(p) shouldBe shape(j)
+            classesOf(p) should not contain classOf[Utf8].getName
+          case (Failure(p), Failure(j)) => condition(p) shouldBe condition(j)
+          case other => fail(s"only one side failed: $other")
+        }
       }
     }
+  }
+
+  /** A value with the class of every part: records field by field,
+    * collections and maps in iteration order, leaves as class and text.
+    */
+  private def shape(v: Any): Any = v match {
+    case null => null
+    case r: IndexedRecord => (r.getClass.getName,
+      r.getSchema.getFields.asScala.toList.map(f => f.name -> shape(r.get(f.pos))))
+    case m: java.util.Map[_, _] => (m.getClass.getName,
+      m.asScala.toList.map { case (k, x) => (shape(k), shape(x)) })
+    case c: java.util.Collection[_] => (c.getClass.getName, c.asScala.toList.map(shape))
+    case b: ByteBuffer =>
+      val d = b.duplicate(); val a = new Array[Byte](d.remaining()); d.get(a)
+      ("ByteBuffer", a.toList)
+    case x => (x.getClass.getName, x.toString)
+  }
+
+  private def classesOf(v: Any): Seq[String] = v match {
+    case null => Nil
+    case r: IndexedRecord =>
+      r.getClass.getName +: r.getSchema.getFields.asScala.toSeq.flatMap(f => classesOf(r.get(f.pos)))
+    case m: java.util.Map[_, _] =>
+      m.getClass.getName +: m.asScala.toSeq.flatMap { case (k, x) => classesOf(k) ++ classesOf(x) }
+    case c: java.util.Collection[_] => c.getClass.getName +: c.asScala.toSeq.flatMap(classesOf)
+    case x => Seq(x.getClass.getName)
+  }
+
+  /** The error condition of a Spark error anywhere in the cause chain,
+    * else the class of the outermost throwable.
+    */
+  private def condition(t: Throwable): String =
+    Iterator.iterate(t)(_.getCause).takeWhile(_ != null).collectFirst {
+      case s: SparkThrowable if s.getCondition != null => s.getCondition
+    }.getOrElse(t.getClass.getName)
+
+  private def withConf[T](key: String, value: String)(f: => T): T =
+    try { spark.conf.set(key, value); f } finally spark.conf.unset(key)
+
+  /** Records written as Avro binary and read back by `GenericDatumReader`:
+    * strings and map keys come back as `Utf8`, arrays as
+    * `GenericData.Array`.
+    */
+  private def viaBinary(schema: Schema, records: Seq[GenericRecord]): Seq[GenericRecord] = {
+    val out = new java.io.ByteArrayOutputStream()
+    val enc = EncoderFactory.get().binaryEncoder(out, null)
+    val writer = new GenericDatumWriter[GenericRecord](schema)
+    records.foreach(writer.write(_, enc))
+    enc.flush()
+    val dec = DecoderFactory.get().binaryDecoder(out.toByteArray, null)
+    val reader = new GenericDatumReader[GenericRecord](schema)
+    records.map(_ => reader.read(null, dec))
+  }
+
+  // every logical type and named type the codec converts, nullable and
+  // not, at the top level and inside a nested record
+  private val colorSchema = Schema.createEnum("Color", null, "lt",
+    java.util.Arrays.asList("RED", "GREEN", "BLUE"))
+  private val hashSchema = Schema.createFixed("Hash", null, "lt", 4)
+  private val decFixedSchema = LogicalTypes.decimal(12, 3)
+    .addToSchema(Schema.createFixed("Dec", null, "lt", 8))
+  private val decBytesSchema = LogicalTypes.decimal(9, 2)
+    .addToSchema(Schema.create(Schema.Type.BYTES))
+  private val logicalInner = SchemaBuilder.record("Inner").namespace("lt").fields()
+    .name("color").`type`(colorSchema).noDefault()
+    .name("dec_fixed").`type`(decFixedSchema).noDefault()
+    .name("day").`type`(LogicalTypes.date().addToSchema(Schema.create(Schema.Type.INT))).noDefault()
+    .endRecord()
+  private val logicalSchema = SchemaBuilder.record("Logical").namespace("lt").fields()
+    .requiredLong("id")
+    .name("dec_bytes").`type`(decBytesSchema).noDefault()
+    .name("dec_fixed").`type`(decFixedSchema).noDefault()
+    .name("day").`type`(LogicalTypes.date().addToSchema(Schema.create(Schema.Type.INT))).noDefault()
+    .name("ts_ms").`type`(LogicalTypes.timestampMillis().addToSchema(Schema.create(Schema.Type.LONG))).noDefault()
+    .name("ts_us").`type`(LogicalTypes.timestampMicros().addToSchema(Schema.create(Schema.Type.LONG))).noDefault()
+    .name("color").`type`(colorSchema).noDefault()
+    .name("maybe_color").`type`().optional().`type`(colorSchema)
+    .name("hash").`type`(hashSchema).noDefault()
+    .name("blob").`type`().bytesType().noDefault()
+    .name("inner").`type`(logicalInner).noDefault()
+    .name("hashes").`type`().array().items(hashSchema).noDefault()
+    .endRecord()
+
+  private def logical(i: Int): GenericRecord = {
+    def dec(unscaled: Long, size: Int) = {
+      val raw = java.math.BigInteger.valueOf(unscaled).toByteArray
+      val out = Array.fill[Byte](size)(if (unscaled < 0) -1 else 0)
+      System.arraycopy(raw, 0, out, size - raw.length, raw.length)
+      out
+    }
+    def fixedDec(v: Long) = new GenericData.Fixed(decFixedSchema, dec(v, 8))
+    def hash(k: Int) = new GenericData.Fixed(hashSchema, Array[Byte](k.toByte, 1, 2, 3))
+    val color = new GenericData.EnumSymbol(colorSchema, Seq("RED", "GREEN", "BLUE")(i % 3))
+    val in = new GenericData.Record(logicalInner)
+    in.put("color", color); in.put("dec_fixed", fixedDec(-12345L * i)); in.put("day", 19000 + i)
+    val r = new GenericData.Record(logicalSchema)
+    r.put("id", i.toLong)
+    r.put("dec_bytes", ByteBuffer.wrap(java.math.BigInteger.valueOf(1000L * i - 7).toByteArray))
+    r.put("dec_fixed", fixedDec(987654321L + i))
+    r.put("day", 18000 + i)
+    r.put("ts_ms", 1700000000123L + i)
+    r.put("ts_us", 1700000000123456L - i)
+    r.put("color", color)
+    r.put("maybe_color", if (i % 2 == 0) null else color)
+    r.put("hash", hash(i))
+    r.put("blob", ByteBuffer.wrap(Array.tabulate[Byte](i % 4)(_.toByte)))
+    r.put("inner", in)
+    r.put("hashes", new GenericData.Array[GenericData.Fixed](
+      logicalSchema.getField("hashes").schema(), (0 until i % 3).map(hash).asJava))
+    r
   }
 
   "AvroProjector" should {
@@ -221,6 +345,74 @@ class AvroProjectorSpec extends AnyWordSpec with Matchers with SparkSpec {
       // a record with no fields: nothing to read, nothing to prune
       val empty = SchemaBuilder.record("Empty").namespace("ord").fields().endRecord()
       agreeWithSql("SELECT *", empty, Seq(new GenericData.Record(empty)))
+    }
+
+    "agree on map key picks, renames, collisions and flattened map values" in {
+      val v1 = (0 until 9).map(order(orderV1, _))
+      val picks = Seq(
+        "SELECT id, tags.t0 FROM t withstructure",
+        "SELECT id, tags.t0 AS x, tags.t1 FROM t withstructure",
+        "SELECT tags.*, id FROM t withstructure",
+        // flatten through a map value, the key present or missing
+        "SELECT id, tags.t1 AS t FROM t",
+        "SELECT tags.t2 AS t, tags.t0 FROM t")
+      picks.foreach(q => agreeWithSql(q, orderV1, v1))
+      val baskets = (0 until 6).map(basket)
+      Seq(
+        "SELECT id, byName.n1 AS one FROM t withstructure",
+        "SELECT id, byName.n0.sku AS sku, byName.n1.detail.color AS color FROM t")
+        .foreach(q => agreeWithSql(q, basketSchema, baskets))
+      // a rename onto a kept key: the session's map-key policy decides,
+      // and records holding both keys fail under EXCEPTION
+      val collide = "SELECT id, tags.t0 AS t1, tags.t1 FROM t withstructure"
+      Seq("LAST_WIN", "EXCEPTION").foreach { policy =>
+        withConf("spark.sql.mapKeyDedupPolicy", policy)(agreeWithSql(collide, orderV1, v1))
+      }
+      val thrown = withConf("spark.sql.mapKeyDedupPolicy", "EXCEPTION")(
+        Try(new AvroProjector(spark, orderV1, collide)(order(orderV1, 2))))
+      thrown.isFailure shouldBe true
+    }
+
+    "agree on logical types, enums, fixed and bytes" in {
+      val recs = (0 until 6).map(logical)
+      Seq(
+        "SELECT *",
+        "SELECT id, dec_bytes AS d, dec_fixed, day, ts_ms, ts_us FROM t",
+        "SELECT color, maybe_color, hash, blob, inner.color AS ic, inner.dec_fixed AS idf FROM t",
+        "SELECT inner.*, id FROM t",
+        "SELECT id, inner, hashes FROM t withstructure",
+        "SELECT inner.day, inner.color AS c, color FROM t withstructure"
+      ).foreach(q => agreeWithSql(q, logicalSchema, recs))
+      val out = new AvroProjector(spark, logicalSchema, "SELECT color, hash, blob, dec_fixed FROM t")(recs(1))
+      out.get("color") shouldBe a[GenericData.EnumSymbol]
+      out.get("hash") shouldBe a[GenericData.Fixed]
+      out.get("blob") shouldBe a[ByteBuffer]
+      out.get("dec_fixed") shouldBe a[ByteBuffer]
+    }
+
+    "agree on records read back from Avro binary" in {
+      val v1 = viaBinary(orderV1, (0 until 9).map(order(orderV1, _)))
+      v1(2).get("note") shouldBe a[Utf8]
+      v1(2).get("tags").asInstanceOf[java.util.Map[_, _]].keySet.asScala.head shouldBe a[Utf8]
+      Seq(
+        "SELECT id, customer.name AS cname, customer.address.city AS city, note FROM t",
+        "SELECT customer, items.qty, items.price, note FROM t withstructure",
+        "SELECT id, tags FROM t withstructure",
+        "SELECT id, tags.t1 FROM t withstructure",
+        "SELECT id, tags.t0 AS x, tags.t1 FROM t withstructure",
+        "SELECT id, tags.t1 AS t FROM t",
+        "SELECT id, v.string, v.long FROM t",
+        "SELECT *"
+      ).foreach(q => agreeWithSql(q, orderV1, v1))
+      // a map key matches by its string form, not by `Utf8` equality
+      new AvroProjector(spark, orderV1, "SELECT tags.t1 AS t FROM t")(v1(2)).get("t") shouldBe 21L
+      val baskets = viaBinary(basketSchema, (0 until 8).map(basket))
+      Seq(
+        "SELECT id, lines.qty, lines.detail.color FROM t withstructure",
+        "SELECT grid.b AS bee, grid.*, id FROM t withstructure",
+        "SELECT id, byName.n1.qty, byName.n1.detail.color FROM t withstructure"
+      ).foreach(q => agreeWithSql(q, basketSchema, baskets))
+      agreeWithSql("SELECT *", logicalSchema, viaBinary(logicalSchema, (0 until 4).map(logical)))
     }
 
     "decode only the columns and nested fields the query reads" in {
