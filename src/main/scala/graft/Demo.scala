@@ -74,7 +74,7 @@ object Demo {
       // compiled per-record projector: plan once, no job per record
       val proj = new graft.avro.AvroProjector(spark, person,
         "SELECT name, address.street.name as streetName")
-      proj(p) // warm codegen
+      proj(p) // warm the JIT
       val n = 20000
       val t0 = System.nanoTime()
       var i = 0

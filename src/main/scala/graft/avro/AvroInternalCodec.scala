@@ -16,8 +16,12 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** The Avro ⇄ Catalyst value codec: `GenericRecord` → [[InternalRow]]
   * (and back) in ONE specialized pass. Every path that turns records into
-  * rows uses it: the projector, `record.sql`, the bulk bridge, the
-  * graft-avro source, and [[AvroRowCodec]]'s external-`Row` adapters.
+  * rows uses it: the bulk bridge, the graft-avro source, and
+  * [[AvroRowCodec]]'s external-`Row` adapters. The projector makes no
+  * rows: its [[AvroMovePlan]] moves Avro values itself and sends only
+  * the leaves whose Avro form changes (bytes, fixed, decimal, millis
+  * timestamps, enums, union carriers) through [[converter]] and
+  * [[outConverter]], so those equal the DataFrame path's by construction.
   *
   * Decode plans once per (writer schema, read struct): field positions
   * and per-field converter closures are resolved up front, so the
@@ -103,7 +107,7 @@ object AvroInternalCodec {
     }
   }
 
-  private def converter(schema0: Schema, dt: DataType): Any => Any = {
+  private[avro] def converter(schema0: Schema, dt: DataType): Any => Any = {
     if (schema0.getType == Type.UNION &&
         AvroSchemaConverter.unionBranches(schema0)._1.length >= 2)
       return unionConverter(schema0, dt)
@@ -235,7 +239,7 @@ object AvroInternalCodec {
     }
   }
 
-  private def outConverter(dt: DataType, schema0: Schema): Any => Any = {
+  private[avro] def outConverter(dt: DataType, schema0: Schema): Any => Any = {
     if (schema0.getType == Type.UNION &&
         AvroSchemaConverter.unionBranches(schema0)._1.length >= 2)
       return outUnionConverter(dt, schema0)

@@ -24,19 +24,20 @@ final case class AvroPrimitive(value: Any, schema: Schema)
   * schema in a new instance still hits) and the query — the string, or for
   * EP3 the field list plus the mode. The first call for a key plans it
   * (Avro schema → `StructType` → GraftSql projection, resolved by
-  * Catalyst → compiled projection → derived output Avro schema with
+  * Catalyst → Avro move plan → derived output Avro schema with
   * names/docs/props restored from `avro.*` metadata, O15); every later call
   * costs one hash lookup and one `apply`. The reference re-derives schema
   * and projection per record (AvroSql.scala:74-82).
   *
   * Projectors live in a per-thread LRU of [[CacheSize]] entries, because a
-  * projector reuses its output row (`apply` is thread-confined). A failed
-  * plan is not cached. The session confs a plan reads and whose value can
-  * change its answer are part of the key: `spark.sql.caseSensitive`
-  * (analysis resolves names with it) and `spark.sql.mapKeyDedupPolicy`
-  * (a compiled `map_from_entries` fixes it when its map builder is made).
-  * Entries are built and applied under the session's own conf, so the
-  * value in the key is the value the plan runs with. Contract parity:
+  * projector re-binds its move plan in place when the writer schema
+  * drifts (`apply` is thread-confined). A failed plan is not cached. The
+  * session confs a plan reads and whose value can change its answer are
+  * part of the key: `spark.sql.caseSensitive` (analysis resolves names
+  * with it) and `spark.sql.mapKeyDedupPolicy` (the move plan fixes it
+  * when it is built). Entries are built under the session's own conf, so
+  * the value in the key is the value the plan runs with; `apply` reads
+  * no conf. Contract parity:
   *  - `null` input → `null` output (AvroSql.scala:68)
   *  - primitive containers accept only `SELECT *` (AvroSql.scala:106-131)
   *  - all planning errors are `IllegalArgumentException`s
@@ -77,9 +78,7 @@ object AvroSql {
     val inSchema = record.getSchema
     require(inSchema.getType == Schema.Type.RECORD,
       s"only RECORD containers are supported, got ${inSchema.getType}")
-    val conf = GraftSqlBridge.sqlConf(spark)
-    val p = projector(spark, conf, inSchema, query, build)
-    SQLConf.withExistingConf(conf)(p(record))
+    projector(spark, GraftSqlBridge.sqlConf(spark), inSchema, query, build)(record)
   }
 
   /** Primitive container: only `SELECT *` is legal and is the identity

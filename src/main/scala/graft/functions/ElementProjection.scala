@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayBasedMapBuilder, ArrayData, GenericArrayData, MapData}
@@ -167,6 +167,33 @@ object ElementProjection {
         if (marker < 0) build else s"if (${cells(marker)} != null) {\n$build\n}"
       (s"Object $v = null;\n$guarded", v)
   }
+}
+
+/** The withstructure rebuild of a map with a selection (key picks,
+  * renames, a projection of every value) as one expression over the map:
+  * [[ElementNarrow.Keys]] applied to the child, no lambda. `dataType` is
+  * fixed by the planner, which derives it from the schema.
+  */
+case class MapNarrow(child: Expression, narrow: ElementNarrow.Keys, dataType: MapType)
+    extends UnaryExpression {
+
+  override def prettyName: String = "narrow_map"
+
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case _: MapType => TypeCheckResult.TypeCheckSuccess
+    case other => TypeCheckResult.TypeCheckFailure(
+      s"$prettyName expects a map argument, got ${other.simpleString}")
+  }
+
+  override protected def nullSafeEval(input: Any): Any = narrow(input)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("narrow", narrow, classOf[ElementNarrow].getName)
+    defineCodeGen(ctx, ev, m => s"(${classOf[MapData].getName}) $ref.apply($m)")
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
 }
 
 /** Narrowing of one value read whole, by field ordinals: a null stays

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, GraftSqlBridge}
 import org.apache.spark.sql.{functions => F}
 import org.apache.spark.sql.types._
 
-import graft.functions.{ElementNarrow, ElementProjection}
+import graft.functions.{ElementNarrow, ElementProjection, MapNarrow}
 import FlattenPlanner.{Projection, Identity, Columns, quotePath}
 
 /** Structure-preserving ("withstructure") projection compiler
@@ -22,10 +22,10 @@ import FlattenPlanner.{Projection, Identity, Columns, quotePath}
   * [[graft.functions.ElementProjection]] (no lambda): its children are the
   * `GetArrayStructFields` chains of the element fields it keeps, so it
   * stays in whole-stage codegen and nested column pruning reads only
-  * those fields. MAPS still compile to higher-order functions
-  * (`map_entries`, `filter`, `transform`, `map_from_entries`), whose
-  * lambdas Spark evaluates interpreted, per entry; a map inside an array
-  * element is narrowed by the array's expression instead.
+  * those fields. A map with a selection compiles to one
+  * [[graft.functions.MapNarrow]] over the whole map (no lambda either):
+  * the same [[graft.functions.ElementNarrow.Keys]] that narrows a map
+  * inside an array element. No plan holds a higher-order function.
   *
   * Level semantics pinned by AvroSqlWithRetainStructureTest.scala:
   *  - output fields appear in first-mention select-list order; a deeper
@@ -129,31 +129,11 @@ object StructurePlanner {
       if (!hasSelectionAtOrBelow(q, path)) ref
       else elements(at, ref, path, q)
 
-    case MapType(_, vt, vn) =>
-      if (q.entriesAt(path).isEmpty) ref
-      else {
-        val m = mapSelection(q, path)
-        def projectValue(v: Column): Column = m.valueQuery match {
-          case Some(qv) => rebuild(vt, vn, v, path, qv)
-          case None => v
-        }
-        if (m.hasStar && m.keptKeys.isEmpty && m.valueQuery.isEmpty) ref
-        else {
-          val filtered =
-            if (m.hasStar) F.map_entries(ref)
-            else F.filter(F.map_entries(ref),
-              e => e.getField("key").isin(m.keptKeys.map(_._1): _*))
-          val rewritten = F.transform(filtered, { e =>
-            val k = e.getField("key")
-            val newKey = m.renames.foldLeft(k) { case (acc, (n, a)) =>
-              F.when(k === F.lit(n), F.lit(a)).otherwise(acc)
-            }
-            F.struct(newKey.alias("key"),
-              projectValue(e.getField("value")).alias("value"))
-          })
-          val built = F.map_from_entries(rewritten)
-          if (nullable) F.when(ref.isNotNull, built) else built
-        }
+    case _: MapType =>
+      narrowOf(dt, nullable, nullable, path, q) match {
+        case (keys: ElementNarrow.Keys, t: MapType, _) =>
+          GraftSqlBridge.column(MapNarrow(GraftSqlBridge.deferred(ref), keys, t))
+        case _ => ref
       }
 
     case _ =>
@@ -249,7 +229,7 @@ object StructurePlanner {
           if (m.renames.nonEmpty && kt != StringType)
             throw new IllegalArgumentException(
               s"cannot rename keys of '${path.mkString(".")}' " +
-                s"(${dt.simpleString}) inside an array: only string keys")
+                s"(${dt.simpleString}): only string keys")
           val (sub, t, n) = m.valueQuery match {
             case Some(qv) => narrowOf(vt, vn, vn, path, qv)
             case None => (ElementNarrow.Keep, vt, vn)

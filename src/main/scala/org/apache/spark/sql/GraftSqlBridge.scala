@@ -2,7 +2,9 @@ package org.apache.spark.sql
 
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.errors.QueryExecutionErrors
 import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Thin bridge into the `private[sql]` classic APIs that a whole-operator
   * extension needs: wrapping a custom [[LogicalPlan]] node back into a
@@ -43,4 +45,10 @@ object GraftSqlBridge {
     * expression that goes back into a Column.
     */
   def deferred(c: Column): Expression = classic.ExpressionUtils.expression(c)
+
+  /** The error a map builder raises for a duplicate string key under
+    * `spark.sql.mapKeyDedupPolicy=EXCEPTION`.
+    */
+  def duplicateMapKey(key: String): RuntimeException =
+    QueryExecutionErrors.duplicateMapKeyFoundError(UTF8String.fromString(key))
 }

@@ -329,7 +329,7 @@ class AvroProjectorSpec extends AnyWordSpec with Matchers with SparkSpec {
       // arrays of records: a null array, an empty array and a null
       // element; an array of arrays of records; renames and an
       // element-level star; a nullable record inside an element; a map of
-      // records (still projected by lambdas)
+      // records
       val baskets = (0 until 12).map(basket)
       Seq(
         "SELECT id, lines.qty, lines.price FROM t withstructure",
@@ -426,7 +426,7 @@ class AvroProjectorSpec extends AnyWordSpec with Matchers with SparkSpec {
           }
         }
       def readPaths(q: String, schema: Schema = orderV1) =
-        paths(new AvroProjector(spark, schema, q).readStruct)
+        new AvroProjector(spark, schema, q).readPaths
       readPaths("SELECT id, customer.name FROM t") shouldBe Seq("id", "customer.name")
       readPaths("SELECT customer.address.*, note FROM t") shouldBe
         Seq("customer.address.city", "customer.address.zip", "note")
@@ -489,7 +489,7 @@ class AvroProjectorSpec extends AnyWordSpec with Matchers with SparkSpec {
       val q = "SELECT name, address.street.name as streetName, age"
       val proj = new AvroProjector(spark, personSchema, q)
       val recs = (0 until 5000).map(mk)
-      proj(recs.head) // warm codegen
+      proj(recs.head) // warm the JIT
       val t0 = System.nanoTime()
       var i = 0
       while (i < recs.length) { proj(recs(i)); i += 1 }

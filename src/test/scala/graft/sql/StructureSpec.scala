@@ -122,14 +122,16 @@ class StructureSpec extends AnyWordSpec with Matchers with SparkSpec {
       e.getMessage should include("only string keys")
     }
 
-    "plan an array of records with no higher-order function" in {
+    "plan arrays of records and maps with no higher-order function" in {
       def hofs(q: String) = basketDf.sql(q).queryExecution.analyzed.expressions
         .exists(_.exists(_.isInstanceOf[HigherOrderFunction]))
       hofs("SELECT id, lines.qty, lines.price FROM t withstructure") shouldBe false
       hofs("SELECT lines.price AS p, lines.*, grid.b FROM t withstructure") shouldBe false
       hofs("SELECT lines.detail.color, lines.attrs.color FROM t withstructure") shouldBe false
-      // maps keep their lambdas
-      hofs("SELECT byName.k1.z FROM t withstructure") shouldBe true
+      // a map selection is one narrowing over the map, no lambda
+      hofs("SELECT byName.k1.z FROM t withstructure") shouldBe false
+      hofs("SELECT id, byName.k1 AS one, byName.k2 FROM t withstructure") shouldBe false
+      hofs("SELECT id, byName.k1.lines.qty FROM t withstructure") shouldBe false
     }
   }
 
