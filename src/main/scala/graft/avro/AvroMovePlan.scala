@@ -73,18 +73,11 @@ private[avro] final class AvroMovePlan(projectList: Seq[NamedExpression],
 
     lazy val root: IndexedRecord => GenericRecord = {
       val out = nonNull(outSchema)
-      val parts = projectList.map { ne =>
+      val move = record(out, projectList.map { ne =>
         val f = out.getField(ne.name)
         (f.pos, value(ne, f.schema))
-      }.toArray
-      val positions = parts.map(_._1)
-      val moves = parts.map(_._2)
-      r => {
-        val o = new GenericData.Record(out)
-        var i = 0
-        while (i < moves.length) { o.put(positions(i), moves(i)(r)); i += 1 }
-        o
-      }
+      })
+      r => move(r).asInstanceOf[GenericRecord]
     }
 
     /** The output value of `e` (of output schema `o`) for a root record. */
@@ -92,18 +85,10 @@ private[avro] final class AvroMovePlan(projectList: Seq[NamedExpression],
       case Alias(c, _) => value(c, o)
       case s: CreateNamedStruct =>
         val out = nonNull(o)
-        val parts = s.names.zip(s.valExprs).map { case (n, v) =>
+        record(out, s.names.zip(s.valExprs).map { case (n, v) =>
           val f = out.getField(n.toString)
           (f.pos, value(v, f.schema))
-        }.toArray
-        val positions = parts.map(_._1)
-        val moves = parts.map(_._2)
-        r => {
-          val rec = new GenericData.Record(out)
-          var i = 0
-          while (i < moves.length) { rec.put(positions(i), moves(i)(r)); i += 1 }
-          rec
-        }
+        })
       case CaseWhen(Seq((IsNotNull(x), v)), None) =>
         val guard = source(x).get
         val move = value(v, o)
@@ -119,9 +104,7 @@ private[avro] final class AvroMovePlan(projectList: Seq[NamedExpression],
     private def moved(e: Expression, move: Schema => Any => Any): Any => Any = {
       val s = source(e)
       read += s.path
-      val get = s.get
-      val m = move(s.schema)
-      r => { val v = get(r); if (v == null) null else m(v) }
+      via(s.get, move(s.schema))
     }
 
     /** A getter over the root record: attributes, struct fields (also of
@@ -164,18 +147,13 @@ private[avro] final class AvroMovePlan(projectList: Seq[NamedExpression],
       }.toIndexedSeq
       val outElem = nonNull(o).getElementType
       val move = part(p.element, cells, p.dataType.elementType, outElem)
-      val get = base.get
-      r => {
-        val a = get(r)
-        if (a == null) null
-        else {
-          val c = a.asInstanceOf[java.util.Collection[Any]]
-          val out = new java.util.ArrayList[Any](c.size)
-          val it = c.iterator()
-          while (it.hasNext) out.add(move(it.next()))
-          out
-        }
-      }
+      via(base.get, a => {
+        val c = a.asInstanceOf[java.util.Collection[Any]]
+        val out = new java.util.ArrayList[Any](c.size)
+        val it = c.iterator()
+        while (it.hasNext) out.add(move(it.next()))
+        out
+      })
     }
 
     /** One element's output, `outDt` in Catalyst terms, from the element
@@ -184,27 +162,19 @@ private[avro] final class AvroMovePlan(projectList: Seq[NamedExpression],
     private def part(p: ElementProjection.Part, cells: IndexedSeq[Src],
         outDt: DataType, o: Schema): Any => Any = p match {
       case ElementProjection.Take(k, dt, n) =>
-        val get = cells(k).get
-        val m = narrow(n, cells(k).schema, dt, outDt, o)
-        e => { val v = get(e); if (v == null) null else m(v) }
+        via(cells(k).get, narrow(n, cells(k).schema, dt, outDt, o))
       case ElementProjection.Build(fields, marker) =>
         val st = outDt.asInstanceOf[StructType]
         val out = nonNull(o)
-        val parts = fields.zipWithIndex.map { case (f, j) =>
+        val build = record(out, fields.zipWithIndex.map { case (f, j) =>
           val of = out.getField(st(j).name)
           (of.pos, part(f, cells, st(j).dataType, of.schema))
-        }.toArray
-        val positions = parts.map(_._1)
-        val moves = parts.map(_._2)
-        val mark = if (marker >= 0) cells(marker).get else null
-        e =>
-          if (mark != null && mark(e) == null) null
-          else {
-            val rec = new GenericData.Record(out)
-            var i = 0
-            while (i < moves.length) { rec.put(positions(i), moves(i)(e)); i += 1 }
-            rec
-          }
+        })
+        if (marker < 0) build
+        else {
+          val mark = cells(marker).get
+          e => if (mark(e) == null) null else build(e)
+        }
     }
 
     /** A non-null value of Avro schema `s` and Catalyst type `dt` through
@@ -220,7 +190,7 @@ private[avro] final class AvroMovePlan(projectList: Seq[NamedExpression],
         record(out, ordinals.indices.map { j =>
           val (fs, get) = field(s, st(ordinals(j)).name)
           val of = out.getField(outSt(j).name)
-          (of.pos, get, narrow(subs(j), fs, types(j), outSt(j).dataType, of.schema))
+          (of.pos, via(get, narrow(subs(j), fs, types(j), outSt(j).dataType, of.schema)))
         })
       case ElementNarrow.Each(et, sub) =>
         val m = narrow(sub, nonNull(s).getElementType, et,
@@ -254,7 +224,7 @@ private[avro] final class AvroMovePlan(projectList: Seq[NamedExpression],
           if (key != null) {
             val x = if (e.getValue == null) null else m(e.getValue)
             val at = if (collide) ks.indexOf(key, 0) else -1
-            if (at < 0 || at >= n) { ks(n) = key; vs(n) = x; n += 1 }
+            if (at < 0) { ks(n) = key; vs(n) = x; n += 1 }
             else if (lastWin) vs(at) = x
             else throw GraftSqlBridge.duplicateMapKey(key)
           }
@@ -279,7 +249,7 @@ private[avro] final class AvroMovePlan(projectList: Seq[NamedExpression],
           record(out, st.fields.toSeq.map { f =>
             val (fs, get) = field(w, f.name)
             val of = out.getField(f.name)
-            (of.pos, get, whole(fs, f.dataType, of.schema))
+            (of.pos, via(get, whole(fs, f.dataType, of.schema)))
           })
         case (Type.ARRAY, ArrayType(et, _), Type.ARRAY) =>
           array(whole(w.getElementType, et, out.getElementType))
@@ -315,8 +285,7 @@ private[avro] object AvroMovePlan {
   private final case class Src(schema: Schema, path: Seq[String], get: Any => Any) {
     def andThen(name: String, step: Schema => (Schema, Any => Any)): Src = {
       val (s, f) = step(schema)
-      val g = get
-      Src(s, path :+ name, v => { val x = g(v); if (x == null) null else f(x) })
+      Src(s, path :+ name, via(get, f))
     }
   }
 
@@ -375,24 +344,23 @@ private[avro] object AvroMovePlan {
     }
   }
 
-  /** A record of schema `out` from a non-null value: each part puts at
-    * its position the move of what its getter reads (null stays null).
+  /** A record of schema `out`: each part puts at its position what its
+    * move makes of the input value.
     */
-  private def record(out: Schema, parts: Seq[(Int, Any => Any, Any => Any)]): Any => Any = {
+  private def record(out: Schema, parts: Seq[(Int, Any => Any)]): Any => Any = {
     val positions = parts.map(_._1).toArray
-    val gets = parts.map(_._2).toArray
-    val moves = parts.map(_._3).toArray
+    val moves = parts.map(_._2).toArray
     v => {
       val rec = new GenericData.Record(out)
       var i = 0
-      while (i < moves.length) {
-        val x = gets(i)(v)
-        rec.put(positions(i), if (x == null) null else moves(i)(x))
-        i += 1
-      }
+      while (i < moves.length) { rec.put(positions(i), moves(i)(v)); i += 1 }
       rec
     }
   }
+
+  /** `move` over what `get` reads; a null read stays null. */
+  private def via(get: Any => Any, move: Any => Any): Any => Any =
+    v => { val x = get(v); if (x == null) null else move(x) }
 
   private def array(m: Any => Any): Any => Any = v => {
     val c = v.asInstanceOf[java.util.Collection[Any]]

@@ -18,8 +18,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * a `GetArrayStructFields` chain (`items.qty`, `items.detail.color`) that
   * reads one kept leaf of every element, so Catalyst's own nested-column
   * pruning (`SchemaPruning`, `ProjectionOverSchema`) sees exactly the
-  * element fields the projection reads, and the kernel decodes and a
-  * `graft-avro` scan reads only those. Element `i` of the result is
+  * element fields the projection reads, and a `graft-avro` scan reads
+  * only those (the Avro projector's move plan follows the same chains). Element `i` of the result is
   * `element` evaluated at position `i` of the children:
   *  - [[ElementProjection.Build]] makes a struct of its parts, or null when
   *    its marker child (a kept, non-nullable field of that level) is null
