@@ -176,64 +176,73 @@ private[avro] final class AvroMovePlan(projectList: Seq[NamedExpression],
           e => if (mark(e) == null) null else build(e)
         }
     }
+  }
 
-    /** A non-null value of Avro schema `s` and Catalyst type `dt` through
-      * `n`, to an output value of type `outDt` and schema `o`.
-      */
-    private def narrow(n: ElementNarrow, s: Schema, dt: DataType, outDt: DataType,
-        o: Schema): Any => Any = n match {
-      case ElementNarrow.Keep => whole(s, dt, o)
-      case ElementNarrow.Pick(ordinals, types, subs) =>
-        val st = dt.asInstanceOf[StructType]
-        val outSt = outDt.asInstanceOf[StructType]
-        val out = nonNull(o)
-        record(out, ordinals.indices.map { j =>
-          val (fs, get) = field(s, st(ordinals(j)).name)
-          val of = out.getField(outSt(j).name)
-          (of.pos, via(get, narrow(subs(j), fs, types(j), outSt(j).dataType, of.schema)))
-        })
-      case ElementNarrow.Each(et, sub) =>
-        val m = narrow(sub, nonNull(s).getElementType, et,
-          outDt.asInstanceOf[ArrayType].elementType, nonNull(o).getElementType)
-        array(m)
-      case k: ElementNarrow.Keys =>
-        val m = narrow(k.sub, nonNull(s).getValueType, k.valueType, k.outValueType,
-          nonNull(o).getValueType)
-        keys(k, m)
-    }
-
-    /** A map narrowed by key: kept keys (by string form) take their new
-      * names, values go through `m`; entries keep their order.
-      */
-    private def keys(k: ElementNarrow.Keys, m: Any => Any): Any => Any = {
-      val targets = new java.util.HashMap[String, String]()
-      k.kept.foreach(n => targets.put(n, k.renames.getOrElse(n, n)))
-      k.renames.foreach { case (n, a) => targets.put(n, a) }
-      val collide = k.renames.nonEmpty
+  /** A non-null value of Avro schema `s` and Catalyst type `dt` through
+    * `n`, to an output value of type `outDt` and schema `o`.
+    */
+  private def narrow(n: ElementNarrow, s: Schema, dt: DataType, outDt: DataType,
+      o: Schema): Any => Any = n match {
+    case ElementNarrow.Keep => whole(s, dt, o)
+    case ElementNarrow.Pick(ordinals, types, subs) =>
+      val st = dt.asInstanceOf[StructType]
+      val outSt = outDt.asInstanceOf[StructType]
+      val out = nonNull(o)
+      record(out, ordinals.indices.map { j =>
+        val (fs, get) = field(s, st(ordinals(j)).name)
+        val of = out.getField(outSt(j).name)
+        (of.pos, via(get, narrow(subs(j), fs, types(j), outSt(j).dataType, of.schema)))
+      })
+    case ElementNarrow.Each(et, sub) =>
+      val m = narrow(sub, nonNull(s).getElementType, et,
+        outDt.asInstanceOf[ArrayType].elementType, nonNull(o).getElementType)
       v => {
-        val in = v.asInstanceOf[java.util.Map[AnyRef, AnyRef]]
-        val ks = new Array[String](in.size)
-        val vs = new Array[Any](in.size)
-        var n = 0
-        val it = in.entrySet().iterator()
+        val c = v.asInstanceOf[java.util.Collection[Any]]
+        val out = new java.util.ArrayList[Any](c.size)
+        val it = c.iterator()
         while (it.hasNext) {
           val e = it.next()
-          val name = e.getKey.toString
-          val t = targets.get(name)
-          val key = if (t != null) t else if (k.allKeys) name else null
-          if (key != null) {
-            val x = if (e.getValue == null) null else m(e.getValue)
-            val at = if (collide) ks.indexOf(key, 0) else -1
-            if (at < 0) { ks(n) = key; vs(n) = x; n += 1 }
-            else if (lastWin) vs(at) = x
-            else throw GraftSqlBridge.duplicateMapKey(key)
-          }
+          out.add(if (e == null) null else m(e))
         }
-        val out = new java.util.HashMap[String, Any](n * 2)
-        var i = 0
-        while (i < n) { out.put(ks(i), vs(i)); i += 1 }
         out
       }
+    case k: ElementNarrow.Keys =>
+      val m = narrow(k.sub, nonNull(s).getValueType, k.valueType, k.outValueType,
+        nonNull(o).getValueType)
+      keys(k, m)
+  }
+
+  /** A map narrowed by key: kept keys (by string form) take their new
+    * names, values go through `m`; entries keep their order.
+    */
+  private def keys(k: ElementNarrow.Keys, m: Any => Any): Any => Any = {
+    val targets = new java.util.HashMap[String, String]()
+    k.kept.foreach(n => targets.put(n, k.renames.getOrElse(n, n)))
+    k.renames.foreach { case (n, a) => targets.put(n, a) }
+    val collide = k.renames.nonEmpty
+    v => {
+      val in = v.asInstanceOf[java.util.Map[AnyRef, AnyRef]]
+      val ks = new Array[String](in.size)
+      val vs = new Array[Any](in.size)
+      var n = 0
+      val it = in.entrySet().iterator()
+      while (it.hasNext) {
+        val e = it.next()
+        val name = e.getKey.toString
+        val t = targets.get(name)
+        val key = if (t != null) t else if (k.allKeys) name else null
+        if (key != null) {
+          val x = if (e.getValue == null) null else m(e.getValue)
+          val at = if (collide) ks.indexOf(key, 0) else -1
+          if (at < 0) { ks(n) = key; vs(n) = x; n += 1 }
+          else if (lastWin) vs(at) = x
+          else throw GraftSqlBridge.duplicateMapKey(key)
+        }
+      }
+      val out = new java.util.HashMap[String, Any](n * 2)
+      var i = 0
+      while (i < n) { out.put(ks(i), vs(i)); i += 1 }
+      out
     }
   }
 
@@ -245,26 +254,14 @@ private[avro] final class AvroMovePlan(projectList: Seq[NamedExpression],
     else {
       val (w, out) = (nonNull(s), nonNull(o))
       (w.getType, dt, out.getType) match {
-        case (Type.RECORD, st: StructType, Type.RECORD) =>
-          record(out, st.fields.toSeq.map { f =>
-            val (fs, get) = field(w, f.name)
-            val of = out.getField(f.name)
-            (of.pos, via(get, whole(fs, f.dataType, of.schema)))
-          })
+        // a container: the narrowing that keeps all of it
+        case (Type.RECORD, st: StructType, Type.RECORD) => narrow(ElementNarrow.Pick(
+          st.indices, st.fields.map(_.dataType).toIndexedSeq,
+          st.fields.map(_ => ElementNarrow.Keep: ElementNarrow).toIndexedSeq), s, dt, dt, o)
         case (Type.ARRAY, ArrayType(et, _), Type.ARRAY) =>
-          array(whole(w.getElementType, et, out.getElementType))
-        case (Type.MAP, MapType(StringType, vt, _), Type.MAP) =>
-          val m = whole(w.getValueType, vt, out.getValueType)
-          v => {
-            val in = v.asInstanceOf[java.util.Map[AnyRef, AnyRef]]
-            val res = new java.util.HashMap[String, Any](in.size * 2)
-            val it = in.entrySet().iterator()
-            while (it.hasNext) {
-              val e = it.next()
-              res.put(e.getKey.toString, if (e.getValue == null) null else m(e.getValue))
-            }
-            res
-          }
+          narrow(ElementNarrow.Each(et, ElementNarrow.Keep), s, dt, dt, o)
+        case (Type.MAP, MapType(StringType, vt, _), Type.MAP) => narrow(ElementNarrow.Keys(
+          StringType, vt, vt, allKeys = true, Set.empty, Map.empty, ElementNarrow.Keep), s, dt, dt, o)
         case (Type.STRING, StringType, Type.STRING) => _.toString
         case (Type.BOOLEAN, BooleanType, Type.BOOLEAN) | (Type.INT, IntegerType, Type.INT) |
              (Type.LONG, LongType, Type.LONG) | (Type.FLOAT, FloatType, Type.FLOAT) |
@@ -361,17 +358,6 @@ private[avro] object AvroMovePlan {
   /** `move` over what `get` reads; a null read stays null. */
   private def via(get: Any => Any, move: Any => Any): Any => Any =
     v => { val x = get(v); if (x == null) null else move(x) }
-
-  private def array(m: Any => Any): Any => Any = v => {
-    val c = v.asInstanceOf[java.util.Collection[Any]]
-    val out = new java.util.ArrayList[Any](c.size)
-    val it = c.iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      out.add(if (e == null) null else m(e))
-    }
-    out
-  }
 
   /** A leaf through the Avro ⇄ Catalyst codec, both ways. */
   private def codec(s: Schema, dt: DataType, o: Schema): Any => Any = {
