@@ -122,7 +122,7 @@ class StructureSpec extends AnyWordSpec with Matchers with SparkSpec {
       e.getMessage should include("only string keys")
     }
 
-    "plan arrays of records and maps with no higher-order function" in {
+    "plan an array of records with no higher-order function" in {
       def hofs(q: String) = basketDf.sql(q).queryExecution.analyzed.expressions
         .exists(_.exists(_.isInstanceOf[HigherOrderFunction]))
       hofs("SELECT id, lines.qty, lines.price FROM t withstructure") shouldBe false
