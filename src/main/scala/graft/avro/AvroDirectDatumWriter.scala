@@ -62,9 +62,7 @@ object AvroDirectDatumWriter {
     * in so a permuted foreign schema would still encode correctly.
     */
   private def recordWriters(struct: StructType, avro0: Schema): Array[VW] = {
-    val rec =
-      if (avro0.getType == Type.UNION) AvroSchemaConverter.fromUnion(avro0)._1
-      else avro0
+    val rec = AvroSchemaConverter.nonNull(avro0)
     require(rec.getType == Type.RECORD, s"not a record: $rec")
     rec.getFields.asScala.toArray.map { af =>
       val si = struct.fieldIndex(af.name) // throws on a missing field

@@ -41,9 +41,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * numeric promotions of Avro resolution apply.
   */
 object AvroInternalCodec {
-
-  private def nonNull(s: Schema): Schema =
-    if (s.getType == Type.UNION) AvroSchemaConverter.fromUnion(s)._1 else s
+  import AvroSchemaConverter.{isCarrier, nonNull}
 
   /** Plan a record→InternalRow decoder for records conforming to
     * `avro` (the resolved READER schema) projected as `struct`.
@@ -108,9 +106,7 @@ object AvroInternalCodec {
   }
 
   private[avro] def converter(schema0: Schema, dt: DataType): Any => Any = {
-    if (schema0.getType == Type.UNION &&
-        AvroSchemaConverter.unionBranches(schema0)._1.length >= 2)
-      return unionConverter(schema0, dt)
+    if (isCarrier(schema0)) return unionConverter(schema0, dt)
     val schema = nonNull(schema0)
     (schema.getType, dt) match {
       case (Type.STRING | Type.ENUM, StringType) => {
@@ -240,9 +236,7 @@ object AvroInternalCodec {
   }
 
   private[avro] def outConverter(dt: DataType, schema0: Schema): Any => Any = {
-    if (schema0.getType == Type.UNION &&
-        AvroSchemaConverter.unionBranches(schema0)._1.length >= 2)
-      return outUnionConverter(dt, schema0)
+    if (isCarrier(schema0)) return outUnionConverter(dt, schema0)
     val schema = nonNull(schema0)
     (dt, schema.getType) match {
       case (StringType, Type.ENUM) =>

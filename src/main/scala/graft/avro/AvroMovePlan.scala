@@ -3,12 +3,14 @@ package graft.avro
 import org.apache.avro.{LogicalTypes, Schema}
 import org.apache.avro.Schema.Type
 import org.apache.avro.generic.{GenericData, GenericRecord, IndexedRecord}
+import org.apache.avro.util.Utf8
 import org.apache.spark.sql.GraftSqlBridge
 import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference, CaseWhen, CreateNamedStruct, Expression, GetArrayStructFields, GetMapValue, GetStructField, IsNotNull, Literal, NamedExpression}
 import org.apache.spark.sql.types._
 
 import scala.jdk.CollectionConverters._
 
+import graft.avro.AvroSchemaConverter.{isCarrier, nonNull}
 import graft.functions.{ElementNarrow, ElementProjection, MapNarrow}
 
 /** An analyzed projection compiled into moves of Avro values: the
@@ -121,7 +123,8 @@ private[avro] final class AvroMovePlan(projectList: Seq[NamedExpression],
         source(c).andThen(name, field(_, name))
       case GetMapValue(c, Literal(key, StringType)) =>
         val k = key.toString
-        source(c).andThen(k, s => (nonNull(s).getValueType, mapValue(_, k)))
+        val u = new Utf8(k)
+        source(c).andThen(k, s => (nonNull(s).getValueType, mapValue(_, k, u)))
       case other => unsupported(other)
     }
 
@@ -286,13 +289,6 @@ private[avro] object AvroMovePlan {
     }
   }
 
-  private def nonNull(s: Schema): Schema =
-    if (s.getType == Type.UNION) AvroSchemaConverter.fromUnion(s)._1 else s
-
-  /** A union of two or more non-null branches: a tagged struct in Catalyst. */
-  private def isCarrier(s: Schema): Boolean =
-    s.getType == Type.UNION && AvroSchemaConverter.unionBranches(s)._1.length >= 2
-
   private def micros(s: Schema): Boolean = s.getLogicalType match {
     case _: LogicalTypes.TimestampMillis | _: LogicalTypes.LocalTimestampMillis => false
     case _ => true
@@ -324,21 +320,26 @@ private[avro] object AvroMovePlan {
       (f.schema, v => v.asInstanceOf[IndexedRecord].get(pos))
     }
 
-  /** The value of a non-null map for `key`, matched by string form: Avro's
-    * binary decoder makes `Utf8` keys, which never equal a `String`.
+  /** The value of a non-null map for `key`, matched by string form. Avro's
+    * binary decoder makes `Utf8` keys, which never equal a `String`, so
+    * `utf8` (the same key, built once per plan) is looked up next; only
+    * keys of some other `CharSequence` class are compared by `toString`.
     */
-  private def mapValue(m: Any, key: String): Any = {
+  private def mapValue(m: Any, key: String, utf8: Utf8): Any = {
     val map = m.asInstanceOf[java.util.Map[AnyRef, AnyRef]]
     val hit = map.get(key)
-    if (hit != null) hit
-    else {
-      val it = map.entrySet().iterator()
-      while (it.hasNext) {
-        val e = it.next()
-        if (e.getKey.toString == key) return e.getValue
+    if (hit != null) return hit
+    val utf8Hit = map.get(utf8)
+    if (utf8Hit != null) return utf8Hit
+    val it = map.entrySet().iterator()
+    while (it.hasNext) {
+      val e = it.next()
+      e.getKey match {
+        case _: String | _: Utf8 =>
+        case k => if (k.toString == key) return e.getValue
       }
-      null
     }
+    null
   }
 
   /** A record of schema `out`: each part puts at its position what its

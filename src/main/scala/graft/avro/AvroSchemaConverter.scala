@@ -59,6 +59,16 @@ object AvroSchemaConverter {
     (ts.filterNot(_.getType == Type.NULL), ts.exists(_.getType == Type.NULL))
   }
 
+  /** A union of two or more non-null branches: a tagged struct in
+    * Catalyst, a union carrier to the codec and the move plan.
+    */
+  private[graft] def isCarrier(s: Schema): Boolean =
+    s.getType == Type.UNION && unionBranches(s)._1.length >= 2
+
+  /** `s` without its null branch; a non-union as it is. */
+  private[graft] def nonNull(s: Schema): Schema =
+    if (s.getType == Type.UNION) fromUnion(s)._1 else s
+
   /** Spark field name for a union branch: the simple name for named
     * types (record/enum/fixed), the Avro type name otherwise — the same
     * identifiers Avro's own JSON encoding tags branches with. Unique by

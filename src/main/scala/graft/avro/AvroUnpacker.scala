@@ -32,19 +32,15 @@ object AvroUnpacker {
   def apply(value: Any, schema0: Schema): Any = {
     if (value == null) return null
     val schema =
-      if (schema0.getType == Type.UNION) {
-        val (branches, _) = AvroSchemaConverter.unionBranches(schema0)
-        if (branches.length >= 2) {
-          // multi-branch union → tagged map, mirroring the converter's
-          // tagged-struct mapping (the reference rejects these unions)
-          val idx = org.apache.avro.generic.GenericData.get()
-            .resolveUnion(schema0, value)
-          val active = schema0.getTypes.get(idx)
-          val name = AvroSchemaConverter.branchName(active)
-          return Map("tag" -> name, name -> apply(value, active))
-        }
-        AvroSchemaConverter.fromUnion(schema0)._1
-      } else schema0
+      if (AvroSchemaConverter.isCarrier(schema0)) {
+        // multi-branch union → tagged map, mirroring the converter's
+        // tagged-struct mapping (the reference rejects these unions)
+        val idx = org.apache.avro.generic.GenericData.get()
+          .resolveUnion(schema0, value)
+        val active = schema0.getTypes.get(idx)
+        val name = AvroSchemaConverter.branchName(active)
+        return Map("tag" -> name, name -> apply(value, active))
+      } else AvroSchemaConverter.nonNull(schema0)
     schema.getType match {
       case Type.RECORD =>
         val rec = value.asInstanceOf[IndexedRecord]
