@@ -19,7 +19,9 @@ import graft.SparkSpec
   *    ONE snapshot, and the staged rows arrive as a clean incremental
   *    changeset (fromVersion = fork);
   *  - additive manifests (rows, col-zones) survive publish; the sort
-  *    claim does not (unverified append);
+  *    claim does not (unverified append); publish appends every other
+  *    stats sidecar verbatim, clone copies all six, and rollback drops
+  *    all six;
   *  - append-only contract: branch overwrite and overlay delete
   *    sidecars fail loudly; drop abandons everything.
   */
@@ -202,5 +204,61 @@ class AvroBranchSpec extends AnyFunSuite with SparkSpec with Matchers {
     val covered = zones.columns.flatMap(zones.boundsOf(_).keySet).toSet
     live.foreach(rel =>
       covered should contain(new File(d, rel).getAbsolutePath))
+  }
+
+  test("publish appends, clone copies and rollback drops every stats " +
+      "sidecar") {
+    val dir = tmp()
+    val d = new File(dir)
+    def bytes(f: File): String =
+      new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+    def write(lo: Long, hi: Long, mode: String,
+        branch: Option[String] = None): Unit = {
+      val w = spark.range(lo, hi).toDF("k")
+        .withColumn("s", F.concat(F.lit("v"), F.col("k").cast("string")))
+        .coalesce(1).sortWithinPartitions("k")
+        .write.format("graft-avro").option("sortedBy", "k")
+        .option("bloomFor", "k").option("ndvFor", "k")
+        .mode(mode)
+      branch.fold(w)(b => w.option("branch", b)).save(dir)
+    }
+    val five = Seq(AvroFileSource.colZoneFile _, AvroFileSource.bloomFile _,
+      AvroFileSource.rowsFile _, AvroFileSource.ndvFile _,
+      AvroFileSource.blockIdxFile _)
+    val six = (AvroFileSource.zoneFile _) +: five
+    write(0, 9000, "overwrite") // v1: three 4096-row chunks
+    six.foreach(ff => withClue(ff(d).getName) { ff(d).isFile shouldBe true })
+
+    // clone: every sidecar byte-identical in the fresh table
+    val cl = new File(tmp(), "clone")
+    AvroMaintenance.cloneTo(dir, cl.getPath)
+    six.foreach(ff => withClue(ff(d).getName) {
+      bytes(ff(cl)) shouldBe bytes(ff(d))
+    })
+
+    // publish: the branch's lines append verbatim after main's; the
+    // unverified append withdraws the sort claim and its zones
+    AvroMaintenance.createBranch(dir, "b")
+    write(9000, 14000, "append", Some("b"))
+    val bd = AvroFileSource.branchDir(d, "b")
+    val before = five.map(ff => (ff(d).getName, bytes(ff(d)),
+      if (ff(bd).isFile) bytes(ff(bd)) else ""))
+    before.map(_._3).count(_.nonEmpty) should be >= 4
+    AvroMaintenance.publishBranch(dir, "b") // v2
+    five.zip(before).foreach { case (ff, (name, m, b)) =>
+      withClue(name) {
+        bytes(ff(d)) shouldBe (if (b.isEmpty) m else m + "\n" + b)
+      }
+    }
+    AvroFileSource.zoneFile(d).exists() shouldBe false
+    AvroFileSource.sortMarker(d).exists() shouldBe false
+
+    // rollback: every stats sidecar drops (a sorted append restores the
+    // sort zones first, so all six are present going in)
+    write(20000, 29000, "overwrite") // v3
+    six.foreach(ff => withClue(ff(d).getName) { ff(d).isFile shouldBe true })
+    AvroMaintenance.rollbackTo(dir, 1L)
+    six.foreach(ff => withClue(ff(d).getName) { ff(d).exists() shouldBe false })
+    spark.read.format("graft-avro").load(dir).count() shouldBe 9000L
   }
 }
