@@ -222,6 +222,50 @@ class BlockIdxSpec extends AnyFunSuite with SparkSpec with Matchers {
       keys.sorted.toArray
   }
 
+  test("one bad chunk-bloom line drops only itself: another file's " +
+      "chunk pruning survives") {
+    import org.apache.spark.sql.connector.expressions.Expressions
+    import org.apache.spark.sql.connector.expressions.filter.Predicate
+    import org.apache.spark.sql.connector.read.SupportsRuntimeV2Filtering
+    val dir = tmp()
+    // two sorted files of ~5 chunks each; id is a scrambled bijection,
+    // so only the per-chunk bloom cells can rule chunks out
+    spark.range(0, 40000).toDF("k")
+      .select((F.col("k") / 40).cast("long").as("g"),
+        F.expr("pmod(k * 48271, 1000003)").cast("long").as("id"))
+      .repartitionByRange(2, F.col("g")).sortWithinPartitions("g")
+      .write.format("graft-avro").option("sortedBy", "g")
+      .option("chunkBloomFor", "id")
+      .mode("overwrite").save(dir)
+    val schema = spark.read.format("graft-avro").load(dir).schema
+    def parts(ids: Seq[Long]): Int = {
+      val scan = new AvroScanBuilder(dir, schema).build()
+      scan.asInstanceOf[SupportsRuntimeV2Filtering].filter(Array(
+        new Predicate("IN", (Expressions.column("id") +:
+          ids.map(v => Expressions.literal(v))).toArray[
+            org.apache.spark.sql.connector.expressions.Expression])))
+      scan.toBatch.planInputPartitions().length
+    }
+    // keys inside every file's id range but in no row (and no bloom
+    // false positive): only the chunk blooms drop, every chunk of both
+    val present = (0L until 40000L)
+      .map(k => Math.floorMod(k * 48271L, 1000003L)).toSet
+    val absent = (500000L until 1000000L).iterator
+      .filter(v => !present(v) && parts(Seq(v)) == 0).take(2).toSeq
+    parts(absent) shouldBe 0
+    // corrupt ONE chunk-bloom line of the first file: an empty range start
+    val bf = AvroFileSource.blockIdxFile(new File(dir))
+    val lines = new String(java.nio.file.Files.readAllBytes(bf.toPath),
+      "UTF-8").split("\n").toSeq
+    val victim = lines.indexWhere(_.split('\t')(2).startsWith("bloom:"))
+    val f = lines(victim).split('\t')
+    val bad = (f.take(3) ++ Seq("") ++ f.drop(4)).mkString("\t")
+    java.nio.file.Files.write(bf.toPath,
+      lines.updated(victim, bad).mkString("\n").getBytes("UTF-8"))
+    // only the victim's chunk is kept; the other file still drops whole
+    parts(absent) shouldBe 1
+  }
+
   test("analyze backfills a chunk index for a clustered file that " +
       "carries no sort claim (the Z-order shape)") {
     val dir = tmp()
