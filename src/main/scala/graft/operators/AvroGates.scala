@@ -939,14 +939,11 @@ object AvroGates extends Catalog {
       val base = tdir.getAbsoluteFile.toPath
       val live = files
         .map(f => base.relativize(f.getAbsoluteFile.toPath).toString).toSet
-      val bloomF = new java.io.File(tdir, "_graft_blooms")
+      val bloomFam = graft.sources.StatsManifests.Blooms
       val bloomRels: Set[String] =
-        if (!bloomF.isFile) Set.empty
-        else new String(
-            java.nio.file.Files.readAllBytes(bloomF.toPath), "UTF-8")
-          .split('\n').filter(_.nonEmpty).map(_.split('\t'))
-          .collect { case a if a.length >= 2 &&
-            java.net.URLDecoder.decode(a(1), "UTF-8") == "doc_id" => a(0) }
+        graft.sources.StatsManifests.byRel(bloomFam, bloomFam.in(tdir))
+          .collect { case (rel, ls) if ls.exists(l =>
+            java.net.URLDecoder.decode(l(1), "UTF-8") == "doc_id") => rel }
           .toSet
       val blooms = live.nonEmpty && live.subsetOf(bloomRels)
       s.sql("""SELECT lang, count(*) AS n_docs,
@@ -2167,8 +2164,8 @@ object AvroGates extends Catalog {
       val tmp = tempDir("graft_gate_anl")
       table(s, dir, "orders").select("o_orderkey", "o_custkey")
         .write.format("graft-avro").mode("overwrite").save(tmp)
-      new java.io.File(tmp, "_graft_zones_cols").delete()
-      new java.io.File(tmp, "_graft_rows").delete()
+      graft.sources.AvroFileSource.colZoneFile(new java.io.File(tmp)).delete()
+      graft.sources.AvroFileSource.rowsFile(new java.io.File(tmp)).delete()
       graft.sources.AvroMaintenance.analyze(s, tmp)
       s.read.format("graft-avro").load(tmp)
         .agg(F.sum("o_orderkey").as("sum_okey"),

@@ -224,15 +224,8 @@ object AvroFileSource {
     */
   def sortMarker(d: File): File = new File(d, "_graft_sorted_by")
 
-  /** Per-file zone-map manifest (Iceberg-manifest analogue, one tiny
-    * sidecar instead of a header read per file): tab-separated lines
-    * `relPath TAB minEnc TAB maxEnc` over the `_graft_sorted_by` column,
-    * values URL-encoded (so tabs/newlines cannot occur). Written only by
-    * verified `sortedBy` batch commits and deleted whenever the sort
-    * marker is withdrawn; files without an entry are simply never
-    * pruned, so a partial manifest is sound.
-    */
-  def zoneFile(d: File): File = new File(d, "_graft_zones")
+  /** Per-file sort-zone manifest: [[StatsManifests.SortZones]]. */
+  def zoneFile(d: File): File = StatsManifests.SortZones.in(d)
 
   /** Declarative writer-layout properties (`_graft_props`, `k TAB v`
     * URL-encoded lines): table-level defaults for the per-write options
@@ -449,21 +442,11 @@ object AvroFileSource {
   private[sources] def zoneEncode(v: Any): String =
     java.net.URLEncoder.encode(v.toString, "UTF-8")
 
-  /** Raw manifest entries keyed by relative path. Tolerates a corrupt
-    * manifest by dropping malformed lines (never-prune is sound).
-    */
+  /** Sort-zone entries keyed by relative path, values still encoded. */
   private[sources] def readZonesRaw(zf: File): Map[String, (String, String)] =
-    try {
-      val src = scala.io.Source.fromFile(zf, "UTF-8")
-      try {
-        src.getLines().flatMap { line =>
-          line.split('\t') match {
-            case Array(rel, mn, mx) => Some(rel -> (mn, mx))
-            case _ => None
-          }
-        }.toMap
-      } finally src.close()
-    } catch { case _: Exception => Map.empty }
+    StatsManifests.byRel(StatsManifests.SortZones, zf).map {
+      case (rel, ls) => rel -> ((ls.head(1), ls.head(2)))
+    }
 
   /** Manifest parsed to external values of the zone column's type, keyed
     * by ABSOLUTE file path (what the scan's listing yields). Entries
@@ -478,13 +461,12 @@ object AvroFileSource {
       } yield new File(base, rel).getAbsolutePath -> (lo, hi)
     }
 
-  /** BLOCK-RANGE zone index (`_graft_blockidx`): per-file, per-CHUNK
-    * [min, max] of the column a verified `sortedBy` write ordered the
-    * file by. A chunk is the rows between forced sync points
+  /** BLOCK-RANGE zone index ([[StatsManifests.BlockIdx]]): per-file,
+    * per-CHUNK [min, max] of the column a verified `sortedBy` write
+    * ordered the file by. A chunk is the rows between forced sync points
     * ([[BlockIdxRows]] apart), so each entry maps to a byte range the
-    * split machinery serves directly — lines
-    * `rel TAB colEnc TAB dt TAB start TAB end TAB mnEnc TAB mxEnc`
-    * (`-` bounds = all-null chunk, kept, never pruned). Ranges are
+    * split machinery serves directly (`-` bounds = all-null chunk,
+    * kept, never pruned). Ranges are
     * already −16-adjusted: a partition [start, end) reads exactly the
     * chunk's blocks under the reader's sync/pastSync rule (a block
     * belongs to the split containing blockStart − 16). Pruning-only and
@@ -497,57 +479,28 @@ object AvroFileSource {
     * overlapping files — block-level skipping INSIDE the file, the
     * parquet row-group analogue Avro containers otherwise lack.
     */
-  def blockIdxFile(d: File): File = new File(d, "_graft_blockidx")
+  def blockIdxFile(d: File): File = StatsManifests.BlockIdx.in(d)
 
   /** Rows per forced-sync chunk of the block index (sorted writes). */
   val BlockIdxRows = 4096
 
-  /** Raw block-index lines keyed by relative path (values URL-encoded,
-    * lossless merge-and-rewrite). Malformed lines simply DROP (never
-    * keyed by their first token — a junk line that happened to start
-    * with another live file's rel used to null out that file's valid
-    * entries): a dropped middle chunk leaves a gap, so the read-side
-    * tiling check (ranges must cover [0, len) contiguously) already
-    * falls the file back whole — partial tilings cannot masquerade as
-    * coverage. IO/parse failure of the whole sidecar degrades to
-    * no-index (sound) but is LOGGED — silent loss of 13× skipping is
-    * undiagnosable otherwise.
+  /** Block-index lines keyed by relative path, with typed byte ranges.
+    * A malformed line drops alone: a dropped middle chunk leaves a gap,
+    * so the read-side tiling check (ranges must cover [0, len)
+    * contiguously) falls the file back whole.
     */
   private[sources] def readBlockIdxRaw(f: File)
       : Map[String, Seq[(String, String, Long, Long, String, String)]] =
-    try {
-      val src = scala.io.Source.fromFile(f, "UTF-8")
-      try {
-        src.getLines().flatMap { line =>
-          line.split('\t') match {
-            case Array(rel, col, dt, s, e, mn, mx) =>
-              try Some(rel -> (col, dt, s.toLong, e.toLong, mn, mx))
-              catch { case _: NumberFormatException => None }
-            case _ => None
-          }
-        }.toSeq.groupMap(_._1)(_._2)
-      } finally src.close()
-    } catch {
-      case e: Exception =>
-        System.err.println(s"graft-avro: block index $f unreadable " +
-          s"(${e.getClass.getSimpleName}: ${e.getMessage}) — " +
-          "intra-file skipping disabled for this scan")
-        Map.empty
+    StatsManifests.byRel(StatsManifests.BlockIdx, f).map { case (rel, ls) =>
+      rel -> ls.map(l => (l(1), l(2), l(3).toLong, l(4).toLong, l(5), l(6)))
     }
 
-  /** All-column zone manifest: per-file min/max for EVERY primitive leaf
-    * column (nested leaves under dotted names), written on every batch
-    * commit regardless of sort state — the writer tracks bounds while
-    * encoding rows, no second pass. Lines are
-    * `relPath TAB colEnc TAB typeName TAB minEnc TAB maxEnc`; the
-    * recorded type guards schema evolution (a retyped column's old
-    * entries stop applying — string order over stringified longs would
-    * invert the range and prune wrongly). Pruning-only: files without an
-    * entry for a column simply scan, so a partial manifest is sound —
-    * unlike `_graft_zones`, whose verified-sorted lifecycle also backs
-    * the metadata-served MIN/MAX.
+  /** All-column zone manifest ([[StatsManifests.ColZones]]): per-file
+    * min/max for EVERY primitive leaf column (nested leaves under dotted
+    * names), written on every batch commit regardless of sort state —
+    * the writer tracks bounds while encoding rows, no second pass.
     */
-  def colZoneFile(d: File): File = new File(d, "_graft_zones_cols")
+  def colZoneFile(d: File): File = StatsManifests.ColZones.in(d)
 
   /** Equality-delete sidecar (the Iceberg equality-delete-file analogue
     * for a directory table): tab-separated lines
@@ -1166,10 +1119,9 @@ object AvroFileSource {
       .groupBy(_.col).view.mapValues(_.map(_.value).toSet).toSeq
 
   // ------------------------------------------------------------------
-  // Per-file bloom sidecars (`_graft_blooms`) — equality/IN membership
-  // pruning for scattered high-cardinality keys. Manifest lines:
-  // `rel TAB colEnc TAB type TAB base64(bits)`; partial coverage is
-  // sound (absence ⇒ scan), lifecycle mirrors `_graft_zones_cols`.
+  // Per-file bloom sidecars ([[StatsManifests.Blooms]]) — equality/IN
+  // membership pruning for scattered high-cardinality keys; partial
+  // coverage is sound (absence ⇒ scan).
   // An entry's width is its own: any power of two from 64 bits to
   // [[BloomBits]] (see [[foldBloom]]); readers probe modulo it.
   // ------------------------------------------------------------------
@@ -1180,7 +1132,7 @@ object AvroFileSource {
   val BloomBits = 1 << 15
   val BloomHashes = 5
 
-  def bloomFile(d: File): File = new File(d, "_graft_blooms")
+  def bloomFile(d: File): File = StatsManifests.Blooms.in(d)
 
   private def bloomHash2(s: String): (Long, Long) = {
     val md = java.security.MessageDigest.getInstance("MD5")
@@ -1252,22 +1204,12 @@ object AvroFileSource {
     }
   }
 
-  /** Raw bloom manifest keyed by relative path (values stay encoded for
-    * lossless merge); malformed lines drop — never-prune stays sound.
-    */
+  /** Bloom manifest keyed by relative path, values still encoded. */
   private[sources] def readBloomsRaw(bf: File)
       : Map[String, Seq[(String, String, String)]] =
-    try {
-      val src = scala.io.Source.fromFile(bf, "UTF-8")
-      try {
-        src.getLines().flatMap { line =>
-          line.split('\t') match {
-            case Array(rel, col, dt, bits) => Some(rel -> ((col, dt, bits)))
-            case _ => None
-          }
-        }.toSeq.groupMap(_._1)(_._2)
-      } finally src.close()
-    } catch { case _: Exception => Map.empty }
+    StatsManifests.byRel(StatsManifests.Blooms, bf).map { case (rel, ls) =>
+      rel -> ls.map(l => (l(1), l(2), l(3)))
+    }
 
   /** Test observability: manifest parse count (BloomScaleSpec proves a
     * filterless scan never reads the bloom manifest at all) and
@@ -1366,43 +1308,39 @@ object AvroFileSource {
     * large tables where it pays most). Soundness: entries whose
     * recorded type disagrees with the read schema are ignored; a file
     * with no entry for a probed column is kept (absence ⇒ scan,
-    * partial coverage fine); any parse failure keeps everything.
+    * partial coverage fine); an unreadable manifest keeps everything.
     */
   private[sources] def bloomDroppedFiles(bf: File, base: File,
       full: StructType, probes: Map[String, Seq[BloomProbe]],
       trigram: Boolean = false): Set[String] = {
     if (probes.isEmpty || !bf.isFile) return Set.empty
     bloomManifestReads.incrementAndGet()
-    val dropped = scala.collection.mutable.HashSet.empty[String]
-    try {
-      val src = scala.io.Source.fromFile(bf, "UTF-8")
-      try src.getLines().foreach { line =>
-        line.split('\t') match {
-          case Array(rel, colEnc, dtName, b64) =>
-            val col = java.net.URLDecoder.decode(colEnc, "UTF-8")
-            val ps = probes.getOrElse(col, Nil)
-            val typeOk = ps.nonEmpty &&
-              AvroFilterEval.leafType(full, col).exists { dt =>
-                if (trigram)
-                  dtName == TrigramTypeTag &&
-                    dt == org.apache.spark.sql.types.StringType
-                else dt.simpleString == dtName && bloomableType(dt)
-              }
-            if (typeOk)
-              decodeBloom(b64).foreach { bits =>
-                bloomEntriesDecoded.incrementAndGet()
-                if (!ps.forall(probePass(bits, _)))
-                  dropped += new File(base, rel).getAbsolutePath
-              }
-          case _ => ()
-        }
-      } finally src.close()
+    StatsManifests.read(StatsManifests.Blooms, bf) { lines =>
+      val dropped = scala.collection.mutable.HashSet.empty[String]
+      lines.foreach { l =>
+        val col = java.net.URLDecoder.decode(l(1), "UTF-8")
+        val ps = probes.getOrElse(col, Nil)
+        val typeOk = ps.nonEmpty &&
+          AvroFilterEval.leafType(full, col).exists { dt =>
+            if (trigram)
+              l(2) == TrigramTypeTag &&
+                dt == org.apache.spark.sql.types.StringType
+            else dt.simpleString == l(2) && bloomableType(dt)
+          }
+        if (typeOk)
+          decodeBloom(l(3)).foreach { bits =>
+            bloomEntriesDecoded.incrementAndGet()
+            if (!ps.forall(probePass(bits, _)))
+              dropped += new File(base, l.rel).getAbsolutePath
+          }
+      }
       dropped.toSet
-    } catch { case _: Exception => Set.empty }
+    }
   }
 
   // ------------------------------------------------------------------
-  // Commit-time statistics (`_graft_rows`, `_graft_ndv`) — ANALYZE-free
+  // Commit-time statistics ([[StatsManifests.Rows]],
+  // [[StatsManifests.Ndv]]) — ANALYZE-free
   // planner statistics. Every staged batch commit records per-file row
   // counts (free: the writer counts appends); the opt-in `ndvFor` write
   // option additionally folds a 256-register HLL per (file, column).
@@ -1416,39 +1354,21 @@ object AvroFileSource {
 
   val NdvRegisters = 256
 
-  def rowsFile(d: File): File = new File(d, "_graft_rows")
-  def ndvFile(d: File): File = new File(d, "_graft_ndv")
+  def rowsFile(d: File): File = StatsManifests.Rows.in(d)
+  def ndvFile(d: File): File = StatsManifests.Ndv.in(d)
 
-  /** `rel TAB nrows` lines; malformed lines drop (stats only — absence
-    * just withholds the estimate).
-    */
+  /** Per-file row counts keyed by relative path. */
   private[sources] def readRowsRaw(f: File): Map[String, Long] =
-    try {
-      val src = scala.io.Source.fromFile(f, "UTF-8")
-      try src.getLines().flatMap { line =>
-        line.split('\t') match {
-          case Array(rel, n) => scala.util.Try(rel -> n.toLong).toOption
-          case _ => None
-        }
-      }.toMap finally src.close()
-    } catch { case _: Exception => Map.empty }
+    StatsManifests.byRel(StatsManifests.Rows, f).map {
+      case (rel, ls) => rel -> ls.head(1).toLong
+    }
 
-  /** `rel TAB colEnc TAB type TAB base64(registers)` lines, keyed by
-    * relative path; malformed lines drop.
-    */
+  /** NDV sketches keyed by relative path, values still encoded. */
   private[sources] def readNdvRaw(f: File)
       : Map[String, Seq[(String, String, String)]] =
-    try {
-      val src = scala.io.Source.fromFile(f, "UTF-8")
-      try {
-        src.getLines().flatMap { line =>
-          line.split('\t') match {
-            case Array(rel, col, dt, regs) => Some(rel -> ((col, dt, regs)))
-            case _ => None
-          }
-        }.toSeq.groupMap(_._1)(_._2)
-      } finally src.close()
-    } catch { case _: Exception => Map.empty }
+    StatsManifests.byRel(StatsManifests.Ndv, f).map { case (rel, ls) =>
+      rel -> ls.map(l => (l(1), l(2), l(3)))
+    }
 
   /** Fold one value into an HLL register array (m=256): register index =
     * top 8 bits of the 64-bit md5 prefix, rank = leading-zero count of
@@ -2192,36 +2112,16 @@ object AvroFileSource {
     case other => zoneEncode(other)
   }
 
-  /** The all-column manifest's lines in file order, as (rel, colEnc,
-    * type tag, slot 1, slot 2), values still URL-encoded. Malformed
-    * lines drop, an unreadable file reads as empty (never-prune is
-    * sound).
+  /** (colEnc, type tag, slot 1, slot 2) of all-column manifest lines by
+    * relative path, values still encoded.
     */
-  private def readColZoneLines(zf: File)
-      : IndexedSeq[(String, String, String, String, String)] =
-    try {
-      val out = IndexedSeq.newBuilder[(String, String, String, String, String)]
-      val lines = java.nio.file.Files.readAllLines(zf.toPath,
-        java.nio.charset.StandardCharsets.UTF_8).iterator()
-      while (lines.hasNext) lines.next().split('\t') match {
-        case Array(rel, col, dt, mn, mx) => out += ((rel, col, dt, mn, mx))
-        case _ => ()
-      }
-      out.result()
-    } catch { case _: Exception => IndexedSeq.empty }
-
-  private def colZonesByRel(
-      lines: IndexedSeq[(String, String, String, String, String)])
+  private def colZonesByRel(lines: Seq[StatsManifests.Line])
       : Map[String, Seq[(String, String, String, String)]] =
-    lines.groupMap(_._1)(l => (l._2, l._3, l._4, l._5))
+    lines.groupMap(_.rel)(l => (l(1), l(2), l(3), l(4)))
 
-  /** Raw all-column manifest keyed by relative path; values stay
-    * URL-encoded for lossless merge-and-rewrite. Malformed lines drop
-    * (never-prune is sound).
-    */
   private[sources] def readColZonesRaw(zf: File)
       : Map[String, Seq[(String, String, String, String)]] =
-    colZonesByRel(readColZoneLines(zf))
+    colZonesByRel(StatsManifests.read(StatsManifests.ColZones, zf)(_.toVector))
 
   /** `_graft_zones_cols` of `dir` (empty when absent), read on first use. */
   private[sources] def colZoneManifest(dir: File, full: StructType)
@@ -2234,14 +2134,12 @@ object AvroFileSource {
     * pruning, null-cell pruning and metadata aggregates all read the
     * same instance, and a point lookup on one column types that
     * column's cells alone. Each column's name and read-schema leaf type
-    * resolve once per manifest, not once per cell. Malformed lines drop
-    * (never-prune is sound).
+    * resolve once per manifest, not once per cell.
     */
   private[sources] final class ColZoneManifest(zf: File, base: File,
       full: StructType) {
     private lazy val lines =
-      if (zf.isFile) readColZoneLines(zf)
-      else IndexedSeq.empty[(String, String, String, String, String)]
+      StatsManifests.read(StatsManifests.ColZones, zf)(_.toVector)
 
     /** The manifest keyed by relative path, as [[readColZonesRaw]]
       * returns it (values still encoded), for the metadata aggregates.
@@ -2254,7 +2152,7 @@ object AvroFileSource {
     private lazy val byColumn: Map[String,
         (org.apache.spark.sql.types.DataType,
           Seq[(String, String, String, String)])] =
-      lines.groupMap(_._2)(l => (l._1, l._3, l._4, l._5)).toSeq
+      lines.groupMap(_(1))(l => (l.rel, l(2), l(3), l(4))).toSeq
         .groupMapReduce(e => java.net.URLDecoder.decode(e._1, "UTF-8"))(
           _._2)(_ ++ _)
         .flatMap { case (col, cs) =>
@@ -2479,154 +2377,32 @@ object AvroFileSource {
     catch { case _: IllegalArgumentException => None }
   }
 
-  /** Job-commit fold of the four pruning/stat manifests (all-column
-    * zones, blooms, per-file row counts, NDV sketches) — alive-filtered
-    * merge of prior entries with this commit's fresh ones. Shared by the
-    * batch write commit and the delta (merge-on-read) row-level commit;
-    * all four are pruning/stat-only, so partial coverage is sound.
+  /** Job-commit fold of the per-file stats sidecars every commit
+    * carries ([[StatsManifests.Folded]]): alive-filtered merge of prior
+    * entries with this commit's fresh ones. Shared by the batch write
+    * commit, the streaming epoch commit, the delta (merge-on-read)
+    * row-level commit and analyze; all are pruning/stat-only, so
+    * partial coverage is sound.
     */
   private[sources] def foldStatsManifests(dirF: File,
       messages: Seq[AvroCommitMessage],
       aliveHint: Option[Set[String]] = None): Option[Set[String]] = {
     var walked: Option[Set[String]] = aliveHint
-    // All-column zone manifest: folded on EVERY batch commit, sorted
-    // or not — pruning-only, so partial coverage is sound (absent
-    // entries just scan) and no preExisting guard is needed; fresh
-    // entries overwrite a rewritten file's stale ones and truncated
-    // files drop out via the existence filter.
-    val colZonesF = colZoneFile(dirF)
-    val base = dirF.getAbsoluteFile.toPath
-    // ONE directory walk shared by all five manifest families (r21:
-    // this fold used to re-walk the table dir per family — 5 walks per
-    // commit, the dominant commit cost at large file counts). A caller
-    // that already holds the listing passes it via aliveHint; the walk
-    // actually taken is RETURNED so the journal append can reuse it.
+    // ONE directory walk shared by every family, taken only when some
+    // family folds. A caller that already holds the listing passes it via
+    // aliveHint; the walk actually taken is RETURNED so the journal
+    // append can reuse it.
     def aliveSet: Set[String] = walked.getOrElse {
+      val base = dirF.getAbsoluteFile.toPath
       val w = listAvro(dirF)
         .map(f => base.relativize(f.getAbsoluteFile.toPath).toString)
         .toSet
       walked = Some(w)
       w
     }
-    val colFresh = messages.flatMap(_.colZones)
-      .map { case (fin, entries) =>
-        base.relativize(new File(fin).getAbsoluteFile.toPath)
-          .toString -> entries
-      }
-    if (colFresh.nonEmpty || colZonesF.isFile) {
-      val prior =
-        if (colZonesF.isFile) readColZonesRaw(colZonesF)
-        else Map.empty[String, Seq[(String, String, String, String)]]
-      val alive = aliveSet
-      val merged = (prior ++ colFresh).filter { case (rel, _) =>
-        alive.contains(rel) }
-      val tmp = new File(colZonesF.getPath + ".staging")
-      java.nio.file.Files.write(tmp.toPath,
-        merged.toSeq.sortBy(_._1).flatMap { case (rel, entries) =>
-          entries.map { case (col, dt, mn, mx) =>
-            s"$rel\t$col\t$dt\t$mn\t$mx"
-          }
-        }.mkString("\n").getBytes("UTF-8"))
-      if (!tmp.renameTo(colZonesF)) throw new java.io.IOException(
-        s"graft-avro commit: rename failed $tmp -> $colZonesF")
-    }
-    // Bloom manifest: same lifecycle as the all-column zones —
-    // pruning-only, partial coverage sound, truncated files drop
-    // out via the existence filter.
-    val bloomF = bloomFile(dirF)
-    val bloomFresh = messages.flatMap(_.blooms)
-      .map { case (fin, entries) =>
-        base.relativize(new File(fin).getAbsoluteFile.toPath)
-          .toString -> entries
-      }
-    if (bloomFresh.nonEmpty || bloomF.isFile) {
-      val prior =
-        if (bloomF.isFile) readBloomsRaw(bloomF)
-        else Map.empty[String, Seq[(String, String, String)]]
-      val alive = aliveSet
-      val merged = (prior ++ bloomFresh).filter { case (rel, _) =>
-        alive.contains(rel) }
-      val tmp = new File(bloomF.getPath + ".staging")
-      java.nio.file.Files.write(tmp.toPath,
-        merged.toSeq.sortBy(_._1).flatMap { case (rel, entries) =>
-          entries.map { case (col, dt, bits) =>
-            s"$rel\t$col\t$dt\t$bits"
-          }
-        }.mkString("\n").getBytes("UTF-8"))
-      if (!tmp.renameTo(bloomF)) throw new java.io.IOException(
-        s"graft-avro commit: rename failed $tmp -> $bloomF")
-    }
-    // Row-count manifest: every staged commit covers its files (the
-    // count is free at write time); same alive-filtered merge. Reads
-    // serve EXACT numRows only under full coverage + no deletes.
-    val rowsF = rowsFile(dirF)
-    val rowsFresh = messages.flatMap(_.rows)
-      .map { case (fin, n) =>
-        base.relativize(new File(fin).getAbsoluteFile.toPath)
-          .toString -> n
-      }
-    if (rowsFresh.nonEmpty || rowsF.isFile) {
-      val prior =
-        if (rowsF.isFile) readRowsRaw(rowsF)
-        else Map.empty[String, Long]
-      val alive = aliveSet
-      val merged = (prior ++ rowsFresh).filter { case (rel, _) =>
-        alive.contains(rel) }
-      val tmp = new File(rowsF.getPath + ".staging")
-      java.nio.file.Files.write(tmp.toPath,
-        merged.toSeq.sortBy(_._1).map { case (rel, n) => s"$rel\t$n" }
-          .mkString("\n").getBytes("UTF-8"))
-      if (!tmp.renameTo(rowsF)) throw new java.io.IOException(
-        s"graft-avro commit: rename failed $tmp -> $rowsF")
-    }
-    // NDV sketch manifest (opt-in ndvFor): same lifecycle.
-    val ndvF = ndvFile(dirF)
-    val ndvFresh = messages.flatMap(_.ndvs)
-      .map { case (fin, entries) =>
-        base.relativize(new File(fin).getAbsoluteFile.toPath)
-          .toString -> entries
-      }
-    if (ndvFresh.nonEmpty || ndvF.isFile) {
-      val prior =
-        if (ndvF.isFile) readNdvRaw(ndvF)
-        else Map.empty[String, Seq[(String, String, String)]]
-      val alive = aliveSet
-      val merged = (prior ++ ndvFresh).filter { case (rel, _) =>
-        alive.contains(rel) }
-      val tmp = new File(ndvF.getPath + ".staging")
-      java.nio.file.Files.write(tmp.toPath,
-        merged.toSeq.sortBy(_._1).flatMap { case (rel, entries) =>
-          entries.map { case (col, dt, regs) =>
-            s"$rel\t$col\t$dt\t$regs"
-          }
-        }.mkString("\n").getBytes("UTF-8"))
-      if (!tmp.renameTo(ndvF)) throw new java.io.IOException(
-        s"graft-avro commit: rename failed $tmp -> $ndvF")
-    }
-    // Block-range zone index (sorted staged writes): same alive-filtered
-    // per-file merge — per-file truth, partial coverage sound.
-    val bixF = blockIdxFile(dirF)
-    val bixFresh = messages.flatMap(_.blockIdx)
-      .map { case (fin, lines) =>
-        base.relativize(new File(fin).getAbsoluteFile.toPath).toString ->
-          lines
-      }
-    if (bixFresh.nonEmpty || bixF.isFile) {
-      val prior =
-        if (bixF.isFile) readBlockIdxRaw(bixF)
-        else Map.empty[String, Seq[(String, String, Long, Long, String, String)]]
-      val alive = aliveSet
-      val merged = (prior ++ bixFresh).filter { case (rel, _) =>
-        alive.contains(rel) }
-      val tmp = new File(bixF.getPath + ".staging")
-      java.nio.file.Files.write(tmp.toPath,
-        merged.toSeq.sortBy(_._1).flatMap { case (rel, entries) =>
-          entries.map { case (col, dt, s, e, mn, mx) =>
-            s"$rel\t$col\t$dt\t$s\t$e\t$mn\t$mx"
-          }
-        }.mkString("\n").getBytes("UTF-8"))
-      if (!tmp.renameTo(bixF)) throw new java.io.IOException(
-        s"graft-avro commit: rename failed $tmp -> $bixF")
+    StatsManifests.Folded.foreach { fam =>
+      if (StatsManifests.folds(fam, dirF, messages))
+        StatsManifests.fold(fam, dirF, messages, aliveSet)
     }
     walked
   }
@@ -4851,7 +4627,8 @@ class AvroScanBuilder(path: String, full: StructType,
         * state is O(dropped chunks) — so chunk-level membership pruning
         * survives any table size (the r16 file-bloom verdict posture;
         * cached per runtime-filter state, so at most two passes per
-        * scan). Absence ⇒ keep; parse failure keeps everything.
+        * scan). Absence ⇒ keep; a malformed line drops alone, and an
+        * unreadable sidecar keeps everything.
         */
       @volatile private var chunkBloomDropCache
           : Option[(Map[String, Set[Any]],
@@ -4872,43 +4649,36 @@ class AvroScanBuilder(path: String, full: StructType,
               if ((probes.isEmpty && trigProbes.isEmpty) || !bf.isFile ||
                   travelVersion.nonEmpty || incRange.nonEmpty ||
                   branch.nonEmpty || cdcFeed) Map.empty
-              else try {
+              else StatsManifests.read(StatsManifests.BlockIdx, bf) { lines =>
                 val dropped = scala.collection.mutable
                   .HashMap.empty[String, Set[(Long, Long)]]
-                val src = scala.io.Source.fromFile(bf, "UTF-8")
-                try src.getLines().foreach { line =>
-                  line.split('\t') match {
-                    case Array(rel, colEnc, dtStr, s, e, b64, _)
-                        if (dtStr.startsWith("bloom:") ||
-                          dtStr == AvroFileSource.TrigramTypeTag) &&
-                          s.forall(_.isDigit) && e.forall(_.isDigit) =>
-                      val col =
-                        java.net.URLDecoder.decode(colEnc, "UTF-8")
-                      val isTrig = dtStr == AvroFileSource.TrigramTypeTag
-                      val ps =
-                        if (isTrig) trigProbes.getOrElse(col, Nil)
-                        else probes.getOrElse(col, Nil)
-                      val typeOk = ps.nonEmpty &&
-                        full.fields.find(_.name == col).exists(f =>
-                          if (isTrig)
-                            f.dataType ==
-                              org.apache.spark.sql.types.StringType
-                          else
-                            "bloom:" + f.dataType.simpleString == dtStr &&
-                              AvroFileSource.bloomableType(f.dataType))
-                      if (typeOk)
-                        AvroFileSource.decodeBloom(b64).foreach { bits =>
-                          if (!ps.forall(AvroFileSource.probePass(bits, _))) {
-                            val abs = new File(dir, rel).getAbsolutePath
-                            dropped(abs) = dropped.getOrElse(abs,
-                              Set.empty) + ((s.toLong, e.toLong))
-                          }
+                lines.foreach { l =>
+                  val dtStr = l(2)
+                  val isTrig = dtStr == AvroFileSource.TrigramTypeTag
+                  if (isTrig || dtStr.startsWith("bloom:")) {
+                    val col = java.net.URLDecoder.decode(l(1), "UTF-8")
+                    val ps =
+                      if (isTrig) trigProbes.getOrElse(col, Nil)
+                      else probes.getOrElse(col, Nil)
+                    val typeOk = ps.nonEmpty &&
+                      full.fields.find(_.name == col).exists(f =>
+                        if (isTrig)
+                          f.dataType == org.apache.spark.sql.types.StringType
+                        else
+                          "bloom:" + f.dataType.simpleString == dtStr &&
+                            AvroFileSource.bloomableType(f.dataType))
+                    if (typeOk)
+                      AvroFileSource.decodeBloom(l(5)).foreach { bits =>
+                        if (!ps.forall(AvroFileSource.probePass(bits, _))) {
+                          val abs = new File(dir, l.rel).getAbsolutePath
+                          dropped(abs) = dropped.getOrElse(abs,
+                            Set.empty) + ((l(3).toLong, l(4).toLong))
                         }
-                    case _ => ()
+                      }
                   }
-                } finally src.close()
+                }
                 dropped.toMap
-              } catch { case _: Exception => Map.empty }
+              }
             chunkBloomDropCache = Some((runtimeZoneVals, m))
             m
         }
@@ -7735,8 +7505,9 @@ class AvroWriteBuilder(path: String, schema: StructType,
         }
 
       private def commitImpl(messages: Array[WriterCommitMessage]): Unit = {
-        val staged = messages.toSeq
-          .collect { case m: AvroCommitMessage => m.files }.flatten
+        val commitMsgs =
+          messages.toSeq.collect { case m: AvroCommitMessage => m }
+        val staged = commitMsgs.flatMap(_.files)
         // bucket-spec agreement BEFORE anything publishes (the merge at
         // the end re-checks under the same lock; this makes a conflict
         // leave zero litter)
@@ -7948,15 +7719,9 @@ class AvroWriteBuilder(path: String, schema: StructType,
               java.nio.file.Files.write(marker.toPath,
                 sortColsList.mkString(",").getBytes("UTF-8"))
               // Zone-map manifest: fold this job's per-file min/max into
-              // the directory manifest. Keys are base-relative paths; an
-              // agreeing append merges with surviving prior entries
-              // (truncated files drop out via the existence filter).
-              val zoneFresh = messages.toSeq
-                .collect { case m: AvroCommitMessage => m.zones }.flatten
-                .map { case (fin, mn, mx) =>
-                  base.relativize(new File(fin).getAbsoluteFile.toPath)
-                    .toString -> (mn, mx)
-                }
+              // the directory manifest; an agreeing append merges with
+              // surviving prior entries (truncated files drop out via the
+              // existence filter).
               // Coverage guard: only write/merge the manifest when this
               // job defines the dataset or a manifest already covers the
               // prior files. An agreeing append onto a legacy sorted
@@ -7964,22 +7729,11 @@ class AvroWriteBuilder(path: String, schema: StructType,
               // publish a manifest covering ONLY the appended files, and
               // the manifest-served MIN/MAX would silently ignore the
               // uncovered ones.
-              if (!preExisting || zonesF.isFile) {
-                val prior =
-                  if (preExisting && zonesF.isFile)
-                    AvroFileSource.readZonesRaw(zonesF)
-                  else Map.empty[String, (String, String)]
-                val alive = aliveRels.toSet
-                val merged = (prior ++ zoneFresh).filter { case (rel, _) =>
-                  alive.contains(rel) }
-                val tmp = new File(zonesF.getPath + ".staging")
-                java.nio.file.Files.write(tmp.toPath,
-                  merged.toSeq.sortBy(_._1).map { case (rel, (mn, mx)) =>
-                    s"$rel\t$mn\t$mx"
-                  }.mkString("\n").getBytes("UTF-8"))
-                if (!tmp.renameTo(zonesF)) throw new java.io.IOException(
-                  s"graft-avro commit: rename failed $tmp -> $zonesF")
-              } else zonesF.delete()
+              if (!preExisting || zonesF.isFile)
+                StatsManifests.fold(StatsManifests.SortZones,
+                  new File(path), commitMsgs, aliveRels.toSet,
+                  keepPrior = preExisting)
+              else zonesF.delete()
             } else { marker.delete(); zonesF.delete() }
           case None => if (staged.nonEmpty) { marker.delete(); zonesF.delete() }
         }
@@ -7992,10 +7746,9 @@ class AvroWriteBuilder(path: String, schema: StructType,
           replace = doTruncate)
         AvroTransforms.merge(new File(path), transformBy,
           replace = doTruncate)
-        // pruning/stat manifests (col-zones, blooms, rows, NDV):
-        // shared fold with the delta row-level commit
-        AvroFileSource.foldStatsManifests(new File(path),
-          messages.toSeq.collect { case m: AvroCommitMessage => m },
+        // the other per-file stats sidecars: shared fold with the
+        // streaming and delta row-level commits
+        AvroFileSource.foldStatsManifests(new File(path), commitMsgs,
           aliveHint = Some(aliveRels.toSet))
         // snapshot LAST: the journal records the fully-published state
         AvroFileSource.appendSnapshot(new File(path),
@@ -8061,8 +7814,8 @@ class AvroWriteBuilder(path: String, schema: StructType,
             replace = false)
           // pruning/stat manifests fold per epoch since r17 (after the
           // straggler sweep, so the alive-filter sees the final file
-          // set) — streamed tables keep col-zones/blooms/rows/NDV
-          // coverage, enabling metadata COUNT and file pruning
+          // set) — streamed tables keep their stats sidecars' coverage,
+          // enabling metadata COUNT and file pruning
           AvroFileSource.foldStatsManifests(new File(path),
             messages.toSeq.collect { case m: AvroCommitMessage => m },
             aliveHint = Some(aliveRels.toSet))

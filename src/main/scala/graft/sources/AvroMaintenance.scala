@@ -501,11 +501,11 @@ object AvroMaintenance {
     * ONE snapshot that makes the whole set visible atomically. Refuses
     * loudly when main advanced past the fork version (non-fast-forward:
     * re-stage on a fresh branch) — the optimistic-concurrency rule that
-    * keeps publish exactly-once under concurrent writers. Additive
-    * manifests (all-column zones, blooms, row counts, NDV sketches)
-    * merge verbatim because relative paths are preserved; the sort
-    * claim does NOT survive an unverified append, so main's marker and
-    * sort-zone manifest are withdrawn together when files land. The
+    * keeps publish exactly-once under concurrent writers. The branch's
+    * per-file stats sidecars append verbatim ([[StatsManifests.append]])
+    * because relative paths are preserved; the sort claim does NOT
+    * survive an unverified append, so main's marker and sort-zone
+    * manifest are withdrawn together when files land. The
     * branch is consumed (its files moved), so it is dropped. Returns
     * main's new current version.
     */
@@ -534,17 +534,9 @@ object AvroMaintenance {
       rel
     }
     if (moved.nonEmpty) {
-      // additive manifests merge line-verbatim (absence ⇒ scan / stats
+      // stats sidecars merge line-verbatim (absence ⇒ scan / stats
       // withhold, so a partial result stays sound either way)
-      appendManifest(AvroFileSource.colZoneFile(bd),
-        AvroFileSource.colZoneFile(d))
-      appendManifest(AvroFileSource.bloomFile(bd),
-        AvroFileSource.bloomFile(d))
-      appendManifest(AvroFileSource.rowsFile(bd),
-        AvroFileSource.rowsFile(d))
-      appendManifest(AvroFileSource.ndvFile(bd), AvroFileSource.ndvFile(d))
-      appendManifest(AvroFileSource.blockIdxFile(bd),
-        AvroFileSource.blockIdxFile(d))
+      StatsManifests.append(bd, d)
       // an unverified append invalidates the exact-ordering claim:
       // marker and sort-zone manifest are withdrawn TOGETHER
       AvroFileSource.sortMarker(d).delete()
@@ -607,27 +599,6 @@ object AvroMaintenance {
     val refs = AvroFileSource.readRefs(d)
     if (refs.contains(s"branch/$name"))
       AvroFileSource.writeRefs(d, refs - s"branch/$name")
-  }
-
-  /** Append src manifest's lines to dst (creating it if absent) via the
-    * staging + atomic-rename discipline every manifest write uses.
-    */
-  private def appendManifest(src: File, dst: File): Unit = {
-    if (!src.isFile) return
-    val add = new String(
-      java.nio.file.Files.readAllBytes(src.toPath), "UTF-8")
-    if (add.isEmpty) return
-    val existing =
-      if (dst.isFile)
-        new String(java.nio.file.Files.readAllBytes(dst.toPath), "UTF-8")
-      else ""
-    val joined =
-      if (existing.isEmpty || existing.endsWith("\n")) existing + add
-      else existing + "\n" + add
-    val tmp = new File(dst.getPath + ".staging")
-    java.nio.file.Files.write(tmp.toPath, joined.getBytes("UTF-8"))
-    if (!tmp.renameTo(dst)) throw new java.io.IOException(
-      s"graft-avro publish: rename failed $tmp -> $dst")
   }
 
   /** Tag a snapshot version with a stable name (Iceberg tags): resolved
@@ -1300,11 +1271,11 @@ object AvroMaintenance {
 
   /** DEEP CLONE (the Delta `CLONE` shape): copy the CURRENT snapshot's
     * data files into a fresh directory — byte-identical, no decode, no
-    * rewrite — carrying every file-keyed statistics manifest verbatim
-    * (all-column zones, blooms, row counts, NDV sketches: their keys
-    * are relative paths, which the copy preserves), the verified-sort
-    * claim + sort zones, the bucket spec (stamps rewritten to 1 — all
-    * cloned files are version-1 files of the clone), writer-layout
+    * rewrite — carrying every per-file stats sidecar verbatim
+    * ([[StatsManifests.copy]]: their keys are relative paths, which the
+    * copy preserves), the verified-sort claim, the bucket spec (stamps
+    * rewritten to 1 — all cloned files are version-1 files of the
+    * clone), writer-layout
     * properties, and CHECK constraints. The clone starts a FRESH
     * single-version journal: histories diverge from here, neither side
     * sees the other's commits. Loud refusals where flattening births
@@ -1358,13 +1329,12 @@ object AvroMaintenance {
       JF.copy(f.toPath, t.toPath, StandardCopyOption.REPLACE_EXISTING)
       ()
     }
-    // file-keyed stats manifests copy verbatim (relative keys preserved;
-    // the commit-side alive-filter tolerates any stragglers)
-    Seq(AvroFileSource.colZoneFile _, AvroFileSource.bloomFile _,
-      AvroFileSource.rowsFile _, AvroFileSource.ndvFile _,
-      AvroFileSource.zoneFile _, AvroFileSource.sortMarker _,
-      AvroFileSource.blockIdxFile _,
-      AvroFileSource.propsFile _, AvroFileSource.constraintsFile _)
+    // stats sidecars copy verbatim (relative keys preserved; the
+    // commit-side alive-filter tolerates any stragglers), and so do the
+    // sort claim, writer properties and constraints
+    StatsManifests.copy(src, dst)
+    Seq(AvroFileSource.sortMarker _, AvroFileSource.propsFile _,
+      AvroFileSource.constraintsFile _)
       .foreach { ff =>
         val s = ff(src)
         if (s.isFile)
@@ -1555,9 +1525,9 @@ object AvroMaintenance {
     * `rollback` entry whose state equals version `v`). Purely physical
     * restore — archived files of `v` move back live, live files not in
     * `v` archive out, and the equality-delete sidecar reverts to the
-    * snapshot's recorded content. Derived per-file statistics manifests
-    * (sort marker, zone maps, blooms, row counts, NDV) are DELETED
-    * rather than rewound: their lifecycle tracks commits, not arbitrary
+    * snapshot's recorded content. The sort marker and every per-file
+    * stats sidecar ([[StatsManifests.drop]]) are DELETED rather than
+    * rewound: their lifecycle tracks commits, not arbitrary
     * file moves, and absence only degrades pruning, never correctness
     * (rebuild via compact/OPTIMIZE). Schema evolution entries are NOT
     * rolled back — like Iceberg, rollback restores data state, the
@@ -1627,11 +1597,8 @@ object AvroMaintenance {
     // stats/layout manifests describe the pre-rollback live set — drop
     // them all (absence ⇒ scan); partial coverage of the sort-zone
     // manifest in particular would be UNSOUND for metadata MIN/MAX
-    Seq(AvroFileSource.sortMarker(d), AvroFileSource.zoneFile(d),
-      AvroFileSource.colZoneFile(d), AvroFileSource.bloomFile(d),
-      AvroFileSource.rowsFile(d), AvroFileSource.ndvFile(d),
-      AvroFileSource.blockIdxFile(d))
-      .foreach(_.delete())
+    AvroFileSource.sortMarker(d).delete()
+    StatsManifests.drop(d)
     AvroFileSource.appendSnapshot(d, "rollback", force = true)
     AvroFileSource.readSnapshots(d).last.version
     }

@@ -121,74 +121,25 @@ object GraftMetaTables {
           def dec(s: String) = java.net.URLDecoder.decode(s, "UTF-8")
           val out = scala.collection.mutable.ArrayBuffer
             .empty[(String, String, String, Int)]
-          // all-column zone manifest: plain entries = min/max bounds,
-          // cnt: = null-count cells, sum: = SUM/COUNT(col) cells
-          val colZones = AvroFileSource
-            .readColZonesRaw(AvroFileSource.colZoneFile(dir))
-          colZones.view.filterKeys(live).toSeq
-            .flatMap { case (rel, es) => es.map(e => (rel, e)) }
-            .groupBy { case (_, (col, dt, _, _)) =>
-              val kind =
-                if (dt.startsWith("cnt:")) "null_cells"
-                else if (dt.startsWith("sum:")) "sum_cells"
-                else "zones"
-              (kind, dec(col), dt)
-            }
-            .foreach { case ((kind, col, dt), hits) =>
-              out += ((kind, col, dt, hits.map(_._1).distinct.size))
-            }
-          // bloom manifest: equality entries vs trigram entries by tag
-          AvroFileSource.readBloomsRaw(AvroFileSource.bloomFile(dir))
-            .view.filterKeys(live).toSeq
-            .flatMap { case (rel, es) => es.map(e => (rel, e)) }
-            .groupBy { case (_, (col, dt, _)) =>
-              val kind =
-                if (dt == AvroFileSource.TrigramTypeTag) "trigram"
-                else "bloom"
-              (kind, dec(col), dt)
-            }
-            .foreach { case ((kind, col, dt), hits) =>
-              out += ((kind, col, dt, hits.map(_._1).distinct.size))
-            }
-          // block-range chunk index: zone chunks vs per-chunk bloom /
-          // trigram cells by type tag (absence is normal — don't let
-          // the reader's unreadable-sidecar warning fire)
-          (if (AvroFileSource.blockIdxFile(dir).isFile)
-            AvroFileSource.readBlockIdxRaw(AvroFileSource.blockIdxFile(dir))
-          else Map.empty[String,
-            Seq[(String, String, Long, Long, String, String)]])
-            .view.filterKeys(live).toSeq
-            .flatMap { case (rel, es) => es.map(e => (rel, e)) }
-            .groupBy { case (_, (col, dt, _, _, _, _)) =>
-              val kind =
-                if (dt.startsWith("bloom:")) "chunk_bloom"
-                else if (dt.startsWith("trigram:")) "chunk_trigram"
-                else "block_index"
-              (kind, dec(col), dt)
-            }
-            .foreach { case ((kind, col, dt), hits) =>
-              out += ((kind, col, dt, hits.map(_._1).distinct.size))
-            }
-          // NDV HLL registers
-          AvroFileSource.readNdvRaw(AvroFileSource.ndvFile(dir))
-            .view.filterKeys(live).toSeq
-            .flatMap { case (rel, es) => es.map(e => (rel, e)) }
-            .groupBy { case (_, (col, dt, _)) => (dec(col), dt) }
-            .foreach { case ((col, dt), hits) =>
-              out += (("ndv", col, dt, hits.map(_._1).distinct.size))
-            }
-          // exact per-file row counts
-          val rows = AvroFileSource
-            .readRowsRaw(AvroFileSource.rowsFile(dir)).keySet
-          if (rows.nonEmpty)
-            out += (("rows", "", "", rows.count(live)))
-          // verified-sort claim + its primary-column zone manifest
+          // per-file stats sidecars: each line counts toward its
+          // family's (kind of its type tag, column, tag) group; row
+          // counts and the verified-sort claim's zones count files
           val sortSpec = AvroFileSource.sortedColumnsOf(dir)
-          if (sortSpec.nonEmpty) {
-            val zoned = AvroFileSource
-              .readZonesRaw(AvroFileSource.zoneFile(dir)).keySet
-            out += (("sort", sortSpec.mkString(","), "verified",
-              zoned.count(live)))
+          StatsManifests.All.foreach { fam =>
+            val byRel = StatsManifests.byRel(fam, fam.in(dir))
+            if (fam eq StatsManifests.Rows) {
+              if (byRel.nonEmpty)
+                out += ((fam.kindOf(""), "", "", byRel.keySet.count(live)))
+            } else if (fam eq StatsManifests.SortZones) {
+              if (sortSpec.nonEmpty)
+                out += ((fam.kindOf(""), sortSpec.mkString(","), "verified",
+                  byRel.keySet.count(live)))
+            } else byRel.view.filterKeys(live).toSeq
+              .flatMap { case (rel, ls) => ls.map(l => (rel, l)) }
+              .groupBy { case (_, l) => (fam.kindOf(l(2)), dec(l(1)), l(2)) }
+              .foreach { case ((kind, col, dt), hits) =>
+                out += ((kind, col, dt, hits.map(_._1).distinct.size))
+              }
           }
           // ANN indexes in the same namespace whose recorded source is
           // THIS table (sidecar lives in the centroids / codebook dir)
