@@ -19,7 +19,9 @@ import graft.SparkSpec
   * still count in the manifests) or under time travel, uncovered files
   * (streamed epochs, legacy writes, foreign files) withhold rather than
   * undercount, and the NDV estimate stays within sketch tolerance of
-  * the truth across a multi-file merge.
+  * the truth across a multi-file merge. Any stats sidecar that cannot
+  * be read serves nothing and says so once on stderr; a missing one is
+  * silent.
   */
 class AvroStatsSpec extends AnyFunSuite with SparkSpec with Matchers {
 
@@ -329,5 +331,52 @@ class AvroStatsSpec extends AnyFunSuite with SparkSpec with Matchers {
       .numRows().getAsLong shouldBe 80L
     stats(spark.read.format("graft-avro").option("versionAsOf", 1).load(dir))
       .numRows().isPresent shouldBe false
+  }
+
+  /** Run `body` with System.err captured; the captured text. */
+  private def stderrOf(body: => Unit): String = {
+    val buf = new java.io.ByteArrayOutputStream()
+    val saved = System.err
+    System.setErr(new java.io.PrintStream(buf, true, "UTF-8"))
+    try body finally System.setErr(saved)
+    buf.toString("UTF-8")
+  }
+
+  test("an unreadable sidecar reads as empty with one stderr line " +
+      "naming it; a missing one prints nothing") {
+    val dir = tmp()
+    val d = new File(dir)
+    spark.range(0, 400).toDF("k").repartition(4)
+      .write.format("graft-avro").option("bloomFor", "k")
+      .mode("overwrite").save(dir)
+    def answer() = spark.read.format("graft-avro").load(dir)
+      .filter(F.col("k").isin(17L, 250L))
+      .collect().map(_.getLong(0)).sorted.toSeq
+    answer() shouldBe Seq(17L, 250L)
+    val bf = AvroFileSource.bloomFile(d)
+    val zf = AvroFileSource.colZoneFile(d)
+    // a tab-separated line whose bytes are not UTF-8
+    val bad = Array[Byte]('a', '\t', 0xC3.toByte, 0x28, '\n')
+    Seq(bf, zf).foreach(f => java.nio.file.Files.write(f.toPath, bad))
+    val err = stderrOf {
+      AvroFileSource.readBloomsRaw(bf) shouldBe empty
+      AvroFileSource.readColZonesRaw(zf) shouldBe empty
+    }.split("\n").toSeq
+    err.count(_.contains(bf.getPath)) shouldBe 1
+    err.count(_.contains(zf.getPath)) shouldBe 1
+    answer() shouldBe Seq(17L, 250L)
+
+    val none = new File(tmp())
+    stderrOf {
+      AvroFileSource.readZonesRaw(AvroFileSource.zoneFile(none)) shouldBe empty
+      AvroFileSource.readColZonesRaw(
+        AvroFileSource.colZoneFile(none)) shouldBe empty
+      AvroFileSource.readBloomsRaw(AvroFileSource.bloomFile(none)) shouldBe
+        empty
+      AvroFileSource.readRowsRaw(AvroFileSource.rowsFile(none)) shouldBe empty
+      AvroFileSource.readNdvRaw(AvroFileSource.ndvFile(none)) shouldBe empty
+      AvroFileSource.readBlockIdxRaw(
+        AvroFileSource.blockIdxFile(none)) shouldBe empty
+    } shouldBe ""
   }
 }
