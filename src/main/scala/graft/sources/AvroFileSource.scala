@@ -466,10 +466,10 @@ object AvroFileSource {
     * ordered the file by. A chunk is the rows between forced sync points
     * ([[BlockIdxRows]] apart), so each entry maps to a byte range the
     * split machinery serves directly (`-` bounds = all-null chunk,
-    * kept, never pruned). Ranges are
-    * already −16-adjusted: a partition [start, end) reads exactly the
-    * chunk's blocks under the reader's sync/pastSync rule (a block
-    * belongs to the split containing blockStart − 16). Pruning-only and
+    * kept, never pruned). Ranges are already −16-adjusted: a partition
+    * [start, end) reads exactly the chunk's blocks under the reader's
+    * sync/pastSync rule (a block belongs to the split containing
+    * blockStart − 16). Pruning-only and
     * PER-FILE truth (a file's own chunk bounds hold whatever happens to
     * the table-level sort claim): partial coverage is sound, absence ⇒
     * normal split, a recorded type differing from the read type drops

@@ -35,7 +35,8 @@ private[graft] object StatsManifests {
     * families without one ignore it).
     */
   final class Family private[StatsManifests] (val name: String,
-      val arity: Int, longFields: Seq[Int], val onePerFile: Boolean,
+      arity: Int, longFields: Seq[Int],
+      private[StatsManifests] val onePerFile: Boolean,
       private[StatsManifests] val entries:
         AvroCommitMessage => Seq[(String, Seq[Any])],
       val kindOf: String => String) {
@@ -44,15 +45,6 @@ private[graft] object StatsManifests {
       l.fields.length == arity + 1 && longFields.forall { i =>
         try { java.lang.Long.parseLong(l(i)); true }
         catch { case _: NumberFormatException => false }
-      }
-    /** `messages`' entries as (final path, line tails after `rel`). */
-    private[StatsManifests] def fresh(messages: Seq[AvroCommitMessage])
-        : Seq[(String, Seq[String])] =
-      messages.flatMap(entries).map { case (fin, es) =>
-        fin -> es.map {
-          case p: Product => p.productIterator.mkString("\t")
-          case v => String.valueOf(v)
-        }
       }
     override def toString: String = name
   }
@@ -164,9 +156,12 @@ private[graft] object StatsManifests {
     val prior =
       if (!keepPrior) Map.empty[String, Seq[String]]
       else byRel(fam, fam.in(d)).map { case (rel, ls) => rel -> ls.map(_.text) }
-    val fresh = fam.fresh(messages).map { case (fin, tails) =>
+    val fresh = messages.flatMap(fam.entries).map { case (fin, es) =>
       val rel = base.relativize(new File(fin).getAbsoluteFile.toPath).toString
-      rel -> tails.map(rel + "\t" + _)
+      rel -> es.map {
+        case p: Product => p.productIterator.mkString(rel + "\t", "\t", "")
+        case v => s"$rel\t$v"
+      }
     }
     val merged = (prior ++ fresh).filter { case (rel, _) => alive(rel) }
     replace(fam.in(d), merged.toSeq.sortBy(_._1).flatMap(_._2).mkString("\n"),
