@@ -34,7 +34,7 @@ private[graft] object StatsManifests {
     * metadata-table kind of a line with a given type tag (field 2;
     * families without one ignore it).
     */
-  final class Family private[StatsManifests] (val name: String,
+  final class Family private[StatsManifests] (name: String,
       arity: Int, longFields: Seq[Int],
       private[StatsManifests] val onePerFile: Boolean,
       private[StatsManifests] val entries:
@@ -46,7 +46,6 @@ private[graft] object StatsManifests {
         try { java.lang.Long.parseLong(l(i)); true }
         catch { case _: NumberFormatException => false }
       }
-    override def toString: String = name
   }
 
   /** `rel TAB minEnc TAB maxEnc` over the `_graft_sorted_by` head
@@ -152,20 +151,33 @@ private[graft] object StatsManifests {
     */
   def fold(fam: Family, d: File, messages: Seq[AvroCommitMessage],
       alive: Set[String], keepPrior: Boolean = true): Unit = {
+    import scala.collection.mutable.{ArrayBuffer, HashMap}
+    val byRel =
+      if (!keepPrior) HashMap.empty[String, ArrayBuffer[String]]
+      else read(fam, fam.in(d)) { lines =>
+        val m = HashMap.empty[String, ArrayBuffer[String]]
+        lines.foreach { l =>
+          if (fam.onePerFile) m(l.rel) = ArrayBuffer(l.text)
+          else m.getOrElseUpdate(l.rel, ArrayBuffer.empty) += l.text
+        }
+        m
+      }
     val base = d.getAbsoluteFile.toPath
-    val prior =
-      if (!keepPrior) Map.empty[String, Seq[String]]
-      else byRel(fam, fam.in(d)).map { case (rel, ls) => rel -> ls.map(_.text) }
-    val fresh = messages.flatMap(fam.entries).map { case (fin, es) =>
+    messages.flatMap(fam.entries).foreach { case (fin, es) =>
       val rel = base.relativize(new File(fin).getAbsoluteFile.toPath).toString
-      rel -> es.map {
+      byRel(rel) = es.iterator.map {
         case p: Product => p.productIterator.mkString(rel + "\t", "\t", "")
         case v => s"$rel\t$v"
+      }.to(ArrayBuffer)
+    }
+    val out = new java.lang.StringBuilder
+    byRel.keysIterator.filter(alive).toArray.sorted.foreach { rel =>
+      byRel(rel).foreach { line =>
+        if (out.length > 0) out.append('\n')
+        out.append(line)
       }
     }
-    val merged = (prior ++ fresh).filter { case (rel, _) => alive(rel) }
-    replace(fam.in(d), merged.toSeq.sortBy(_._1).flatMap(_._2).mkString("\n"),
-      "commit")
+    replace(fam.in(d), out.toString, "commit")
   }
 
   /** Whether a commit of `messages` folds `fam` in `d`: it carries
