@@ -1060,10 +1060,10 @@ object AvroGates extends Catalog {
 
     // Metadata-served MIN/MAX under the oracle: the same sorted write,
     // then a bare min/max of the sort column — answered entirely from
-    // the _graft_zones manifest with ZERO data files opened (ZoneMapSpec
-    // proves it on truncated files). The Iceberg metadata-aggregate
-    // shape: on a 100 TB sorted table this is a driver-side manifest
-    // fold, not a scan.
+    // the _graft_zones_cols manifest with ZERO data files opened
+    // (ZoneMapSpec proves it on truncated files). The Iceberg
+    // metadata-aggregate shape: on a 100 TB sorted table this is a
+    // driver-side manifest fold, not a scan.
     "q_avro_minmax" -> ((s, dir) => {
       val tmp = tempDir("graft_gate_minmax")
       table(s, dir, "lineitem")
@@ -1954,7 +1954,7 @@ object AvroGates extends Catalog {
     // TBLPROPERTIES('graft.sortedBy','graft.requestSort') makes a plain
     // SQL INSERT (which cannot pass writer options) produce the
     // verified sorted layout — the min/max answers then serve from the
-    // sort-zone manifest and range predicates prune files
+    // zone manifest and range predicates prune files
     // (TablePropsSpec pins marker/manifest/override semantics). The
     // 100 TB shape: layout is a TABLE declaration, not a per-job flag
     // every writer must remember.
@@ -3173,11 +3173,12 @@ object AvroGates extends Catalog {
 
     // Zone-map pruned read under the oracle: lineitem goes through the
     // sink range-partitioned and verified-sorted on l_orderkey, so the
-    // batch commit records each file's key range in the _graft_zones
-    // manifest; the selective key-range read back prunes whole
-    // non-overlapping files inside planInputPartitions (ZoneMapSpec pins
-    // strictly-fewer-files) and the aggregate must still match the
-    // parquet truth exactly — a wrongly-pruned file would drop rows.
+    // batch commit records each file's key range in the
+    // _graft_zones_cols manifest; the selective key-range read back
+    // prunes whole non-overlapping files inside planInputPartitions
+    // (ZoneMapSpec pins strictly-fewer-files) and the aggregate must
+    // still match the parquet truth exactly — a wrongly-pruned file
+    // would drop rows.
     "q_avro_zonemap" -> ((s, dir) => {
       val tmp = tempDir("graft_gate_zonemap")
       table(s, dir, "lineitem")

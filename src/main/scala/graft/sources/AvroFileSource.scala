@@ -224,9 +224,6 @@ object AvroFileSource {
     */
   def sortMarker(d: File): File = new File(d, "_graft_sorted_by")
 
-  /** Per-file sort-zone manifest: [[StatsManifests.SortZones]]. */
-  def zoneFile(d: File): File = StatsManifests.SortZones.in(d)
-
   /** Declarative writer-layout properties (`_graft_props`, `k TAB v`
     * URL-encoded lines): table-level defaults for the per-write options
     * — `graft.sortedBy`, `graft.requestSort`, `graft.bloomFor`,
@@ -442,25 +439,6 @@ object AvroFileSource {
   private[sources] def zoneEncode(v: Any): String =
     java.net.URLEncoder.encode(v.toString, "UTF-8")
 
-  /** Sort-zone entries keyed by relative path, values still encoded. */
-  private[sources] def readZonesRaw(zf: File): Map[String, (String, String)] =
-    StatsManifests.byRel(StatsManifests.SortZones, zf).map {
-      case (rel, ls) => rel -> ((ls.head(1), ls.head(2)))
-    }
-
-  /** Manifest parsed to external values of the zone column's type, keyed
-    * by ABSOLUTE file path (what the scan's listing yields). Entries
-    * whose values fail to parse are dropped — their files scan normally.
-    */
-  private[sources] def readZones(zf: File, base: File,
-      dt: org.apache.spark.sql.types.DataType): Map[String, (Any, Any)] =
-    readZonesRaw(zf).flatMap { case (rel, (mn, mx)) =>
-      for {
-        lo <- castPartitionValue(mn, dt) if lo != null
-        hi <- castPartitionValue(mx, dt) if hi != null
-      } yield new File(base, rel).getAbsolutePath -> (lo, hi)
-    }
-
   /** BLOCK-RANGE zone index ([[StatsManifests.BlockIdx]]): per-file,
     * per-CHUNK [min, max] of the column a verified `sortedBy` write
     * ordered the file by. A chunk is the rows between forced sync points
@@ -484,15 +462,20 @@ object AvroFileSource {
   /** Rows per forced-sync chunk of the block index (sorted writes). */
   val BlockIdxRows = 4096
 
-  /** Block-index lines keyed by relative path, with typed byte ranges.
-    * A malformed line drops alone: a dropped middle chunk leaves a gap,
-    * so the read-side tiling check (ranges must cover [0, len)
-    * contiguously) falls the file back whole.
+  /** Block-index lines whose type tag passes `keepTag`, keyed by
+    * relative path, with typed byte ranges. Lines the filter rejects are
+    * never retained. A malformed line drops alone: a dropped middle
+    * chunk leaves a gap, so the read-side tiling check (ranges must
+    * cover [0, len) contiguously) falls the file back whole.
     */
-  private[sources] def readBlockIdxRaw(f: File)
+  private[sources] def readBlockIdxRaw(f: File,
+      keepTag: String => Boolean = _ => true)
       : Map[String, Seq[(String, String, Long, Long, String, String)]] =
-    StatsManifests.byRel(StatsManifests.BlockIdx, f).map { case (rel, ls) =>
-      rel -> ls.map(l => (l(1), l(2), l(3).toLong, l(4).toLong, l(5), l(6)))
+    StatsManifests.read(StatsManifests.BlockIdx, f) { lines =>
+      lines.filter(l => keepTag(l(2)))
+        .map(l =>
+          l.rel -> ((l(1), l(2), l(3).toLong, l(4).toLong, l(5), l(6))))
+        .toVector.groupMap(_._1)(_._2)
     }
 
   /** All-column zone manifest ([[StatsManifests.ColZones]]): per-file
@@ -1520,12 +1503,11 @@ object AvroFileSource {
   // COMMIT SERIALIZATION. Every metadata mutation (journal append,
   // manifest merge, sidecar rewrite, archive moves) is a read-modify-
   // write over shared files: two concurrent committers would lose one
-  // writer's journal line and could leave the sort-zone manifest
-  // PARTIALLY covering the directory — which the metadata-served
-  // MIN/MAX path trusts. All state-mutating entry points therefore run
-  // under a per-table commit lock: a JVM-interned monitor (threads in
-  // one driver) plus an OS advisory FileLock on `_graft_lockfile`
-  // (separate driver processes on a shared local FS). Data-file task
+  // writer's journal line or its stats sidecar lines. All
+  // state-mutating entry points therefore run under a per-table commit
+  // lock: a JVM-interned monitor (threads in one driver) plus an OS
+  // advisory FileLock on `_graft_lockfile` (separate driver processes
+  // on a shared local FS). Data-file task
   // writes need no lock — names are generation-unique; only the
   // driver-side commit section serializes, so lock hold time is
   // O(metadata), never O(data).
@@ -2097,21 +2079,6 @@ object AvroFileSource {
     None
   }
 
-  /** Sort-manifest bound encoding: strings truncate like the all-column
-    * manifest, EXCEPT an un-bumpable max keeps its full value — the
-    * sorted MIN/MAX path treats a missing entry as all-null, so dropping
-    * is not an option there (the aggregate path separately rejects
-    * bounds at the cap as maybe-truncated).
-    */
-  private[sources] def zoneEncodeMin(v: Any): String = v match {
-    case s: String => zoneEncode(truncBoundMin(s))
-    case other => zoneEncode(other)
-  }
-  private[sources] def zoneEncodeMax(v: Any): String = v match {
-    case s: String => zoneEncode(truncBoundMax(s).getOrElse(s))
-    case other => zoneEncode(other)
-  }
-
   /** (colEnc, type tag, slot 1, slot 2) of all-column manifest lines by
     * relative path, values still encoded.
     */
@@ -2271,9 +2238,9 @@ object AvroFileSource {
     * columns (`"c1"` or `"c1,c2"`). A multi-column claim means every
     * file is internally sorted by the full tuple (ascending,
     * nulls-first per column) — which implies it is also sorted by any
-    * PREFIX, so all single-column machinery (sort-zone manifest,
-    * metadata MIN/MAX, zone pruning) keys on the head column and stays
-    * sound unchanged.
+    * PREFIX, so all single-column machinery (scan ordering, the block
+    * index, the `stats` table's sort row) keys on the head column and
+    * stays sound unchanged.
     */
   def sortCols(spec: String): Seq[String] =
     spec.split(',').map(_.trim).filter(_.nonEmpty).toSeq
@@ -2288,9 +2255,7 @@ object AvroFileSource {
       "UTF-8"))
   }
 
-  /** The PRIMARY (head) sort column — the one the `_graft_zones`
-    * manifest and metadata MIN/MAX key on.
-    */
+  /** The PRIMARY (head) column of the verified sort claim, if any. */
   def sortedColumnOf(d: File): Option[String] = sortedColumnsOf(d).headOption
 
   /** Recursive listing with Hive-style partition values parsed from
@@ -3043,7 +3008,7 @@ class AvroScanBuilder(path: String, full: StructType,
   }
 
   override def pruneColumns(requiredSchema: StructType): Unit =
-    if (!countPushed && minMaxIsMin.isEmpty) required = requiredSchema
+    if (!countPushed) required = requiredSchema
 
   /** Decode-time skip filters (see [[AvroFilterEval]]). By default every
     * filter is returned residual — Spark re-evaluates the predicate
@@ -3502,9 +3467,7 @@ class AvroScanBuilder(path: String, full: StructType,
     // returned above (rows must be decoded). When EVERY filter is
     // zone-DECIDED, each kept file all-matches, so its full-file stats
     // ARE its matching-row stats — the generalized fold restricts to
-    // the keep-set pinned at pushFilters. The sort-column zone path
-    // keeps standing down under any filter (its manifest fold has no
-    // per-file keep filter).
+    // the keep-set pinned at pushFilters.
     val keptRels: Option[Seq[String]] =
       if (fullyPushed.isEmpty) None
       else decidedState match {
@@ -3522,7 +3485,7 @@ class AvroScanBuilder(path: String, full: StructType,
     // aggregates (their rows decode under the posdel overlay — see the
     // okAny fold + AvroHybridAggReaderFactory). SUM/COUNT mixes can't
     // reconstruct a dirty file's contribution from cells and still
-    // stand down, as does the whole-manifest sort-zone path.
+    // stand down.
     val posdelDirty: Set[String] =
       if (!AvroFileSource.posdelFile(new File(path)).isFile) Set.empty
       else AvroFileSource.readPosdel(new File(path)).keySet
@@ -3530,81 +3493,26 @@ class AvroScanBuilder(path: String, full: StructType,
       case _: Min | _: Max => true
       case _ => false
     }) return false
-    // Zero-OPEN MIN/MAX of the verified sort column, served entirely
-    // from the zone manifest (the Iceberg metadata-aggregate trick): a
-    // sorted table answers min/max without touching a single data file.
-    // Sound because the marker guarantees every file came from a
-    // verified sortedBy commit, so every file with a non-null value has
-    // a manifest entry (all-null files legitimately have none and
-    // contribute nothing to min/max — SQL semantics ignore nulls).
-    // Rejected unless the manifest exists and every entry parses; any
-    // doubt falls back to the normal full scan.
     def colOf(e: org.apache.spark.sql.connector.expressions.Expression)
         : Option[String] = e match {
       case r: NamedReference => Some(r.fieldNames.mkString("."))
       case _ => None
     }
-    val wanted = exprs.toSeq.map {
-      case m: Min => colOf(m.column).map(c => (c, true))
-      case m: Max => colOf(m.column).map(c => (c, false))
-      case _ => None
-    }
-    val sortCol = AvroFileSource.sortedColumnOf(new File(path))
-    val zf = AvroFileSource.zoneFile(new File(path))
-    val ok = keptRels.isEmpty && posdelDirty.isEmpty &&
-      wanted.nonEmpty && wanted.forall(_.isDefined) &&
-      sortCol.isDefined && zf.isFile &&
-      wanted.flatten.forall(_._1 == sortCol.get) && {
-        val dt = full.fields.find(_.name == sortCol.get).map(_.dataType)
-        dt.exists { d =>
-          // Float/Double excluded: OrderVerifier's cmp answers may-match
-          // around NaN, so a sorted claim verifies vacuously and the zone
-          // records first/last, not min/max under Spark's NaN-sorts-
-          // greatest ordering — max could silently drop a NaN. Zone
-          // PRUNING on these types stays sound (NaN compares may-match);
-          // only the metadata-served aggregate is withheld.
-          d != org.apache.spark.sql.types.DoubleType &&
-          d != org.apache.spark.sql.types.FloatType && {
-          val raw = AvroFileSource.readZonesRaw(zf)
-          val parsed = AvroFileSource.readZones(zf, new File(path), d)
-          minMaxDt = d
-          minMaxZones = raw
-          parsed.size == raw.size && // every entry parses, else fall back
-            // a string bound AT the truncation cap is maybe-truncated:
-            // fine for pruning (wider), NOT an exact aggregate value
-            parsed.values.forall {
-              case (lo: String, hi: String) =>
-                lo.length < AvroFileSource.StringBoundMax &&
-                  hi.length < AvroFileSource.StringBoundMax
-              case _ => true
-            }
-          }
-        }
-      }
-    if (ok) {
-      minMaxIsMin = wanted.flatten.map(_._2)
-      required = StructType(minMaxIsMin.map { isMin =>
-        org.apache.spark.sql.types.StructField(
-          s"${if (isMin) "min" else "max"}(${sortCol.get})", minMaxDt)
-      })
-      return true
-    }
-    // Generalized path: MIN/MAX/SUM/COUNT over ANY mix of columns served
-    // from the all-column manifest — the Iceberg-manifest shape for
-    // UNSORTED tables. Sound only under FULL coverage: every alive data
-    // file must carry an entry for every wanted column (all-null files
-    // carry an explicit `__null__` marker — and a (0,0) sum cell —
-    // precisely so coverage is checkable; absence means a pre-manifest,
-    // non-finite-tainted, or sum-overflowed file whose true stats are
-    // unknown). Exactness guards: float/double columns are never served
-    // (NaN-dead files simply break coverage, but belt and braces),
-    // string bounds at the truncation cap are maybe-truncated, hence
-    // inexact, hence rejected, and the driver-side sum fold uses
-    // addExact (overflow stands down to a real scan). SUM/COUNT(col)
-    // serve integral columns only; COUNT(*) folds the row-count
-    // manifest. AVG needs no special case: Spark's partial-pushdown
-    // rewrite splits it into SUM + COUNT before offering the push.
-    // The fold happens HERE, driver-side — the scan emits one tiny row.
+    // MIN/MAX/SUM/COUNT over ANY mix of columns (the sort column included)
+    // served from the all-column manifest — the Iceberg-manifest shape. Sound
+    // only under FULL coverage: every alive data file must carry an entry for
+    // every wanted column (all-null files carry an explicit `__null__` marker
+    // — and a (0,0) sum cell — precisely so coverage is checkable; absence
+    // means a pre-manifest, non-finite-tainted, or sum-overflowed file whose
+    // true stats are unknown). Exactness guards: float/double columns are
+    // never served (NaN-dead files simply break coverage, but belt and
+    // braces), string bounds at the truncation cap are maybe-truncated, hence
+    // inexact, hence rejected, and the driver-side sum fold uses addExact
+    // (overflow stands down to a real scan). SUM/COUNT(col) serve integral
+    // columns only; COUNT(*) folds the row-count manifest. AVG needs no
+    // special case: Spark's partial-pushdown rewrite splits it into SUM +
+    // COUNT before offering the push. The fold happens HERE, driver-side — the
+    // scan emits one tiny row.
     val specsAny: Seq[Option[(String, String)]] = exprs.toSeq.map {
       case m: Min => colOf(m.column).map(("min", _))
       case m: Max => colOf(m.column).map(("max", _))
@@ -3812,15 +3720,12 @@ class AvroScanBuilder(path: String, full: StructType,
     okAny
   }
 
-  private var minMaxIsMin: Seq[Boolean] = Nil
   // hybrid MIN/MAX under posdel: rels whose cells are untrustworthy
   // (re-scanned as partial aggregates), the decode struct of the
   // aggregated columns, and per output column (isMin, struct ordinal)
   private var minMaxDirtyRels: Seq[String] = Nil
   private var minMaxHybridStruct: StructType = new StructType()
   private var minMaxHybridSpecs: Seq[(Boolean, Int)] = Nil
-  private var minMaxDt: org.apache.spark.sql.types.DataType = LongType
-  private var minMaxZones: Map[String, (String, String)] = Map.empty
   // generalized manifest-served aggregate: (output name, type, final
   // external value — None for an all-null/empty column)
   private var minMaxAny
@@ -3842,9 +3747,6 @@ class AvroScanBuilder(path: String, full: StructType,
     val aggDirtyRels = minMaxDirtyRels
     val aggHybridStruct = minMaxHybridStruct
     val aggHybridSpecs = minMaxHybridSpecs
-    val aggIsMin = minMaxIsMin
-    val aggDt = minMaxDt
-    val aggZones = minMaxZones
     new Scan with Batch with SupportsReportStatistics
       with SupportsRuntimeV2Filtering with SupportsReportPartitioning
       with org.apache.spark.sql.connector.read.SupportsReportOrdering {
@@ -4364,38 +4266,13 @@ class AvroScanBuilder(path: String, full: StructType,
           }
         }
 
-      /** Per-file [min, max] of the verified sort column, from the
-        * `_graft_zones` manifest a sortedBy batch commit writes. One tiny
-        * manifest read per scan — no per-file header open — and files
-        * without an entry (appends from other writers never happen while
-        * the marker survives, but all-null or unparseable-type files do)
-        * simply scan normally. At scale this is the difference between
-        * opening 1% and 100% of a sorted table's files on a selective
-        * predicate.
-        */
-      private lazy val zoneColumn: Option[String] =
-        if (travelVersion.nonEmpty || incRange.nonEmpty || branch.nonEmpty) None // current-layout claim
-        else AvroFileSource.sortedColumnOf(new File(path))
-      private lazy val zoneRanges: Map[String, (Any, Any)] =
-        if (filters.isEmpty) Map.empty
-        else {
-          val dir = new File(path)
-          (for {
-            c <- zoneColumn
-            fld <- full.fields.find(_.name == c)
-            zf = AvroFileSource.zoneFile(dir)
-            if zf.isFile
-          } yield AvroFileSource.readZones(zf, dir, fld.dataType))
-            .getOrElse(Map.empty)
-        }
-      /** All-column per-file ranges from `_graft_zones_cols` — written on
-        * every batch commit, so pruning works on ANY pushed-filter column
-        * of an unsorted table too (the sorted `_graft_zones` path above
-        * additionally feeds the metadata-served MIN/MAX). Served from the
-        * builder's one manifest parse, per column on demand: static
-        * filters and the runtime (join-key) pruning path ask only for
-        * their own columns. Time travel reads none (the manifest
-        * describes the CURRENT file set).
+      /** Per-file [min, max] of any pushed-filter column (the sort
+        * column included) from `_graft_zones_cols`, written on every
+        * batch commit: no per-file header open, and files without an
+        * entry scan normally. Served from the builder's one manifest
+        * parse, per column on demand: static filters and the runtime
+        * (join-key) pruning path ask only for their own columns. Time
+        * travel reads none (the manifest describes the CURRENT file set).
         */
       private def zoneBoundsOf(col: String): Map[String, (Any, Any)] =
         if (travelVersion.nonEmpty || incRange.nonEmpty || branch.nonEmpty)
@@ -4553,23 +4430,18 @@ class AvroScanBuilder(path: String, full: StructType,
         * drop out (absence ⇒ normal split). Live reads only — the
         * entries describe current files.
         */
-      // one sidecar parse per scan — ZONE lines only (bloom-tagged
-      // cells are ~5.5 KB base64 each and must not sit on the driver
-      // for the scan's lifetime; the chunk-bloom verdicts below stream
-      // the file separately, the r16 bloom-verdict memory posture)
+      // one sidecar parse per scan — ZONE lines only, filtered while
+      // the file streams (bloom-tagged cells are ~5.5 KB base64 each
+      // and must not sit on the driver for the scan's lifetime; the
+      // chunk-bloom verdicts below stream the file separately)
       private lazy val blockIdxRaw
           : Map[String, Seq[(String, String, Long, Long, String, String)]] =
         if (travelVersion.nonEmpty || incRange.nonEmpty ||
             branch.nonEmpty || cdcFeed) Map.empty
-        else {
-          val bf = AvroFileSource.blockIdxFile(new File(path))
-          if (!bf.isFile) Map.empty
-          else AvroFileSource.readBlockIdxRaw(bf)
-            .map { case (rel, es) =>
-              rel -> es.filterNot(e => e._2.startsWith("bloom:") ||
-                e._2 == AvroFileSource.TrigramTypeTag)
-            }.filter(_._2.nonEmpty)
-        }
+        else AvroFileSource.readBlockIdxRaw(
+          AvroFileSource.blockIdxFile(new File(path)),
+          tag => !tag.startsWith("bloom:") &&
+            tag != AvroFileSource.TrigramTypeTag)
 
       private lazy val blockIdxChunks
           : Map[String, Seq[(Long, Long, Seq[(String, (Any, Any))])]] = {
@@ -4747,16 +4619,11 @@ class AvroScanBuilder(path: String, full: StructType,
       }
 
       private def zoneMayKeep(f: File): Boolean = {
-        val sortOk = zoneRanges.get(f.getAbsolutePath) match {
-          case Some((mn, mx)) => filters.forall(
-            AvroFilterEval.zoneMayMatch(zoneColumn.get, mn, mx, _))
-          case None => true
-        }
         // a file survives only if EVERY pushed filter may-matches under
         // EVERY column bound we hold for it (filters are conjunctive;
         // zoneMayMatch answers true for filters over other columns)
         val abs = f.getAbsolutePath
-        sortOk && filterCols.forall(c => zoneBoundsOf(c).get(abs) match {
+        filterCols.forall(c => zoneBoundsOf(c).get(abs) match {
           case Some((mn, mx)) =>
             filters.forall(AvroFilterEval.zoneMayMatch(c, mn, mx, _))
           case None => true
@@ -4958,16 +4825,6 @@ class AvroScanBuilder(path: String, full: StructType,
               AvroInputPartition(p, s, e): InputPartition
             }
           }.toArray
-        } else if (aggIsMin.nonEmpty) {
-          // manifest-served min/max: one tiny partition per file WITH a
-          // zone entry (all-null files have none and contribute nothing);
-          // no data file is ever opened
-          val base = new File(path).getAbsoluteFile.toPath
-          listed.flatMap { case (f, _) =>
-            aggZones
-              .get(base.relativize(f.getAbsoluteFile.toPath).toString)
-              .map { case (mn, mx) => AvroZoneAggPartition(mn, mx) }
-          }.toArray[InputPartition]
         } else if (groupSpecs.nonEmpty) {
           // grouped metadata stats: one tiny row per kept file carrying
           // its partition values + pre-resolved zone-bound cells (+ a
@@ -5114,7 +4971,6 @@ class AvroScanBuilder(path: String, full: StructType,
               aggHybridStruct)
           }
         }
-        else if (aggIsMin.nonEmpty) AvroZoneAggReaderFactory(aggIsMin, aggDt)
         else {
           // merge-on-read: parse the equality-delete sidecar ONCE at plan
           // time (a corrupt sidecar fails the read here, driver-side).
@@ -5500,7 +5356,7 @@ class AvroScanBuilder(path: String, full: StructType,
                case (k, c) => s"${k.toUpperCase(java.util.Locale.ROOT)}($c)"
              }.mkString(", ") + "]" +
                s" PushedGroupBy: [${groupCols.mkString(", ")}]"
-           else if (aggIsMin.nonEmpty || aggAny.nonEmpty)
+           else if (aggAny.nonEmpty)
              " PushedAggregation: [" +
                required.fieldNames.map { n =>
                  // MIN(col)/MAX(col): uppercase the function, not the column
@@ -5617,13 +5473,6 @@ case class AvroCountReaderFactory(required: StructType)
     oneRow(InternalRow(countRange(new File(part.file), part.start, part.end)))
   }
 }
-
-/** One zone-manifest entry for the metadata-served MIN/MAX path: the
-  * URL-encoded min and max of the sort column for one file. Carries no
-  * file path on purpose — the reader never opens anything.
-  */
-case class AvroZoneAggPartition(minEnc: String, maxEnc: String)
-  extends InputPartition
 
 /** One precomputed aggregate row (the all-column-manifest MIN/MAX fold
   * happens driver-side at pushdown); `vals` are EXTERNAL values, None =
@@ -5825,36 +5674,6 @@ case class AvroGroupHybridReaderFactory(cells: AvroCountReaderFactory,
         }
       case other => cells.createReader(other)
     }
-}
-
-/** Emits one partial-aggregate row per zone entry: for each pushed
-  * Min/Max, the file's manifest min or max parsed back to the column
-  * type and converted to Catalyst internal form. Spark's partial
-  * aggregation combines the per-file rows — zero data files opened.
-  */
-case class AvroZoneAggReaderFactory(isMin: Seq[Boolean],
-    dt: org.apache.spark.sql.types.DataType)
-  extends PartitionReaderFactory {
-
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val part = partition.asInstanceOf[AvroZoneAggPartition]
-    new PartitionReader[InternalRow] {
-      private var done = false
-      override def next(): Boolean = !done
-      override def get(): InternalRow = {
-        done = true
-        val toInternal = org.apache.spark.sql.catalyst.CatalystTypeConverters
-          .createToCatalystConverter(dt)
-        def v(enc: String): Any = toInternal(
-          AvroFileSource.castPartitionValue(enc, dt).getOrElse(
-            throw new IllegalStateException(
-              s"unparseable zone value '$enc' (validated at pushdown)")))
-        InternalRow.fromSeq(
-          isMin.map(m => v(if (m) part.minEnc else part.maxEnc)))
-      }
-      override def close(): Unit = ()
-    }
-  }
 }
 
 /** Streaming tail of an avro directory. Offsets index an APPEND-ORDER
@@ -7707,7 +7526,6 @@ class AvroWriteBuilder(path: String, schema: StructType,
           .filterNot(f => archived.contains(f.getAbsolutePath))
           .map(f => base.relativize(f.getAbsoluteFile.toPath).toString)
         val marker = AvroFileSource.sortMarker(new File(path))
-        val zonesF = AvroFileSource.zoneFile(new File(path))
         sortedBy match {
           case Some(_) =>
             // agreement is on the FULL spec: an append claiming a
@@ -7715,27 +7533,11 @@ class AvroWriteBuilder(path: String, schema: StructType,
             // established one) withdraws the claim — its files were
             // only verified under ITS tuple
             val prev = AvroFileSource.sortedColumnsOf(new File(path))
-            if (!preExisting || prev == sortColsList) {
+            if (!preExisting || prev == sortColsList)
               java.nio.file.Files.write(marker.toPath,
                 sortColsList.mkString(",").getBytes("UTF-8"))
-              // Zone-map manifest: fold this job's per-file min/max into
-              // the directory manifest; an agreeing append merges with
-              // surviving prior entries (truncated files drop out via the
-              // existence filter).
-              // Coverage guard: only write/merge the manifest when this
-              // job defines the dataset or a manifest already covers the
-              // prior files. An agreeing append onto a legacy sorted
-              // table (marker present, no manifest) would otherwise
-              // publish a manifest covering ONLY the appended files, and
-              // the manifest-served MIN/MAX would silently ignore the
-              // uncovered ones.
-              if (!preExisting || zonesF.isFile)
-                StatsManifests.fold(StatsManifests.SortZones,
-                  new File(path), commitMsgs, aliveRels.toSet,
-                  keepPrior = preExisting)
-              else zonesF.delete()
-            } else { marker.delete(); zonesF.delete() }
-          case None => if (staged.nonEmpty) { marker.delete(); zonesF.delete() }
+            else marker.delete()
+          case None => if (staged.nonEmpty) marker.delete()
         }
         // bucket-spec sidecar: a truncate installs this write's spec
         // wholesale (the old files are gone); anything else merges —
@@ -7803,9 +7605,8 @@ class AvroWriteBuilder(path: String, schema: StructType,
           val aliveRels = survivors
             .map(f => baseP.relativize(f.getAbsoluteFile.toPath).toString)
           // streamed epochs append unverified files: withdraw any
-          // sorted-layout claim (and its zone manifest) the directory carried
+          // sorted-layout claim the directory carried
           AvroFileSource.sortMarker(new File(path)).delete()
-          AvroFileSource.zoneFile(new File(path)).delete()
           // streamed bucketed epochs extend/agree the bucket spec like
           // any append (a conflicting N fails the epoch)
           AvroFileSource.mergeBucketSpec(new File(path), bucketBy,
@@ -7830,13 +7631,11 @@ class AvroWriteBuilder(path: String, schema: StructType,
 
 /** (stagedPath, finalPath) pairs a task's writer produced; the batch
   * commit renames them into place. Empty for streaming writers (their
-  * epoch-deterministic names are already idempotent under replay).
-  * `zones` carries (finalPath, encodedMin, encodedMax) of the verified
-  * sort column per written file — the job commit folds them into the
-  * directory's `_graft_zones` manifest for read-time file skipping.
+  * epoch-deterministic names are already idempotent under replay). The
+  * other fields carry each written file's stats entries, keyed by final
+  * path, for the job commit's [[StatsManifests]] fold.
   */
 case class AvroCommitMessage(files: Seq[(String, String)],
-    zones: Seq[(String, String, String)] = Nil,
     colZones: Seq[(String, Seq[(String, String, String, String)])] = Nil,
     blooms: Seq[(String, Seq[(String, String, String)])] = Nil,
     rows: Seq[(String, Long)] = Nil,
@@ -7955,9 +7754,8 @@ class AvroDeltaWriteBuilder(path: String, info: LogicalWriteInfo,
               val walked =
                 if (staged.nonEmpty) {
                   // appended files are unsorted: the verified-sort claim
-                  // (and its zone manifest) withdraws, same as any append
+                  // withdraws, same as any append
                   AvroFileSource.sortMarker(dirF).delete()
-                  AvroFileSource.zoneFile(dirF).delete()
                   AvroFileSource.foldStatsManifests(dirF, innerMsgs)
                 } else None
               // r16: journal ALWAYS — a pure position delete mints its
@@ -8112,9 +7910,6 @@ private[sources] object AvroWriters {
       else if (a == null) -1
       else if (b == null) 1
       else cmps(i)(a, b)
-    private var firstP: Any = _   // primary-column zone bounds
-    private var lastP: Any = _
-    private var seenNonNull = false
     private var prev: Array[Any] = _
     def check(vs: Array[Any]): Unit = {
       if (prev != null) {
@@ -8124,21 +7919,9 @@ private[sources] object AvroWriters {
         if (c > 0) throw new IllegalArgumentException(
           s"sortedBy '${cols.mkString(",")}' violated: " +
             s"${prev.mkString("(", ",", ")")} > ${vs.mkString("(", ",", ")")}")
-        prev = vs
-      } else prev = vs
-      val p = vs(0)
-      if (p != null) {
-        if (!seenNonNull) { firstP = p; seenNonNull = true }
-        lastP = p
       }
+      prev = vs
     }
-    /** The verified file's non-null PRIMARY-column value range — free
-      * zone-map stats: in a verified-sorted file min is the first
-      * non-null value and max the last. None for an all-null file
-      * (which is then never pruned).
-      */
-    def zone: Option[(Any, Any)] =
-      if (seenNonNull) Some((firstP, lastP)) else None
   }
 
   /** Block-range zone index of one file (`_graft_blockidx`): per chunk
@@ -8184,10 +7967,17 @@ private[sources] object AvroWriters {
       * — then one per membership cell.
       */
     def cut(end: Long): Unit = {
+      // strings truncate like the all-column manifest, except that an
+      // un-bumpable max keeps its full value (`-` would mean all-null)
       def enc(v: Any, c: Int, hi: Boolean): String =
         if (v == null) "-"
-        else if (hi) AvroFileSource.zoneEncodeMax(toExternal(v, dts(c)))
-        else AvroFileSource.zoneEncodeMin(toExternal(v, dts(c)))
+        else toExternal(v, dts(c)) match {
+          case s: String if hi => AvroFileSource.zoneEncode(
+            AvroFileSource.truncBoundMax(s).getOrElse(s))
+          case s: String =>
+            AvroFileSource.zoneEncode(AvroFileSource.truncBoundMin(s))
+          case other => AvroFileSource.zoneEncode(other)
+        }
       cols.indices.foreach { c =>
         lines += ((colEncs(c), dts(c).simpleString, start, end,
           enc(mins(c), c, hi = false), enc(maxs(c), c, hi = true)))
@@ -8759,11 +8549,6 @@ private[sources] object AvroWriters {
         def keyed[T](s: Seq[T]) = if (s.isEmpty) Nil else Seq(fin -> s)
         AvroCommitMessage(
           if (staged) Seq(file.getPath -> fin) else Nil,
-          zones = Option(verifier).flatMap(_.zone).toSeq.map {
-            case (mn, mx) =>
-              (fin, AvroFileSource.zoneEncodeMin(toExternal(mn, sortDts(0))),
-                AvroFileSource.zoneEncodeMax(toExternal(mx, sortDts(0))))
-          },
           colZones = keyed(colStats.stats),
           blooms = if (bloomStats == null) Nil else keyed(bloomStats.stats),
           rows = Seq(fin -> nRows),
@@ -8811,7 +8596,6 @@ private[sources] object AvroWriters {
         closeAll()
         val ms = closed.reverse.map(_.message)
         AvroCommitMessage(ms.flatMap(_.files),
-          zones = ms.flatMap(_.zones),
           colZones = ms.flatMap(_.colZones),
           blooms = ms.flatMap(_.blooms),
           rows = ms.flatMap(_.rows),

@@ -374,7 +374,7 @@ object AvroMaintenance {
   /** Sort-preserving compaction: bin-pack like [[compactTo]] but
     * range-partition + sort on `col` and write under a VERIFIED
     * `sortedBy` claim, so the output keeps the sorted-layout marker,
-    * the sort-zone manifest, and therefore metadata-served MIN/MAX and
+    * tight per-file zones, and therefore metadata-served MIN/MAX and
     * selective file skipping — the OPTIMIZE that repairs both file
     * count AND clustering in one pass. Deletes apply on the way through
     * (they ride the read).
@@ -504,8 +504,8 @@ object AvroMaintenance {
     * keeps publish exactly-once under concurrent writers. The branch's
     * per-file stats sidecars append verbatim ([[StatsManifests.append]])
     * because relative paths are preserved; the sort claim does NOT
-    * survive an unverified append, so main's marker and sort-zone
-    * manifest are withdrawn together when files land. The
+    * survive an unverified append, so main's marker is withdrawn when
+    * files land. The
     * branch is consumed (its files moved), so it is dropped. Returns
     * main's new current version.
     */
@@ -537,10 +537,8 @@ object AvroMaintenance {
       // stats sidecars merge line-verbatim (absence ⇒ scan / stats
       // withhold, so a partial result stays sound either way)
       StatsManifests.append(bd, d)
-      // an unverified append invalidates the exact-ordering claim:
-      // marker and sort-zone manifest are withdrawn TOGETHER
+      // an unverified append invalidates the exact-ordering claim
       AvroFileSource.sortMarker(d).delete()
-      AvroFileSource.zoneFile(d).delete()
       AvroFileSource.appendSnapshot(d, s"publish:$name")
     }
     dropBranch(dir, name)
@@ -1060,8 +1058,8 @@ object AvroMaintenance {
     * snapshots (AS OF < the ALTER's version) still serve it. The name is
     * retired permanently (see [[addColumn]]). Refuses while pending
     * equality deletes reference the column (their semantics would become
-    * unevaluable) and withdraws the verified-sort claim + zone manifest
-    * when the sort column itself is dropped (absence ⇒ scan, sound).
+    * unevaluable) and withdraws the verified-sort claim when a sort
+    * column itself is dropped.
     */
   def dropColumn(dir: String, name: String): Unit = {
     val d = new File(dir)
@@ -1105,11 +1103,8 @@ object AvroMaintenance {
     // dropping ANY column of a compound sort claim withdraws it (the
     // remaining columns' lexicographic order is only guaranteed for
     // prefixes, and a dropped head breaks the tail)
-    if (AvroFileSource.sortedColumnsOf(d).contains(name)) {
+    if (AvroFileSource.sortedColumnsOf(d).contains(name))
       AvroFileSource.sortMarker(d).delete()
-      AvroFileSource.zoneFile(d).delete()
-      ()
-    }
     }
   }
 
@@ -1124,8 +1119,7 @@ object AvroMaintenance {
     * agree on the result. Narrowing is refused (bytes would truncate).
     * Typed sidecars stay sound by construction: all-column zones and
     * blooms DROP entries whose recorded type mismatches the read type
-    * (absence ⇒ scan); the sort-zone manifest's stringified bounds
-    * parse under the wider type exactly. Pending equality deletes on
+    * (absence ⇒ scan). Pending equality deletes on
     * the column are refused (their recorded type would stop matching —
     * compact first); partition columns are refused (directory values
     * are layout).
@@ -1292,9 +1286,9 @@ object AvroMaintenance {
     // The whole source-side read (guards, listLive, file + manifest
     // copies) runs under the SOURCE commit lock: a deleteWhere landing
     // between the pending-deletes guard and the file copy would clone
-    // resurrected rows, and a concurrent sorted append merging bounds
-    // into _graft_zones before the manifest copy would hand the clone a
-    // sort-zone manifest covering a file it doesn't have. cloneTo runs
+    // resurrected rows, and a concurrent append folding its stats
+    // between the file listing and the sidecar copy would hand the
+    // clone stats out of step with its files. cloneTo runs
     // no graft-avro write job, so the never-wrap-a-write-job rule does
     // not apply; the dest lock nests inside (different dir = different
     // lock, taken strictly after — no cycle).
@@ -1595,8 +1589,7 @@ object AvroMaintenance {
     revert(AvroFileSource.deleteFile(d), target.deletes)
     revert(AvroFileSource.posdelFile(d), target.posdels)
     // stats/layout manifests describe the pre-rollback live set — drop
-    // them all (absence ⇒ scan); partial coverage of the sort-zone
-    // manifest in particular would be UNSOUND for metadata MIN/MAX
+    // them all (absence ⇒ scan)
     AvroFileSource.sortMarker(d).delete()
     StatsManifests.drop(d)
     AvroFileSource.appendSnapshot(d, "rollback", force = true)

@@ -123,17 +123,20 @@ object GraftMetaTables {
             .empty[(String, String, String, Int)]
           // per-file stats sidecars: each line counts toward its
           // family's (kind of its type tag, column, tag) group; row
-          // counts and the verified-sort claim's zones count files
+          // counts count files, and the verified sort claim counts the
+          // files with a valued zone cell of its head column
           val sortSpec = AvroFileSource.sortedColumnsOf(dir)
-          StatsManifests.All.foreach { fam =>
+          StatsManifests.Folded.foreach { fam =>
             val byRel = StatsManifests.byRel(fam, fam.in(dir))
+            if ((fam eq StatsManifests.ColZones) && sortSpec.nonEmpty)
+              out += (("sort", sortSpec.mkString(","), "verified",
+                byRel.count { case (rel, ls) =>
+                  live(rel) && ls.exists(l => dec(l(1)) == sortSpec.head &&
+                    fam.kindOf(l(2)) == "zones" && l(3) != "__null__")
+                }))
             if (fam eq StatsManifests.Rows) {
               if (byRel.nonEmpty)
                 out += ((fam.kindOf(""), "", "", byRel.keySet.count(live)))
-            } else if (fam eq StatsManifests.SortZones) {
-              if (sortSpec.nonEmpty)
-                out += ((fam.kindOf(""), sortSpec.mkString(","), "verified",
-                  byRel.keySet.count(live)))
             } else byRel.view.filterKeys(live).toSeq
               .flatMap { case (rel, ls) => ls.map(l => (rel, l)) }
               .groupBy { case (_, l) => (fam.kindOf(l(2)), dec(l(1)), l(2)) }

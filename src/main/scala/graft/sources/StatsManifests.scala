@@ -13,17 +13,17 @@ import java.nio.file.{Files, StandardCopyOption}
   * fields are URL-encoded (so tabs and newlines cannot occur). A commit
   * rewrites the whole file: lines sorted by `rel`, joined by `\n`, no
   * trailing newline. A line is valid when it splits into exactly `rel`
-  * plus the family's arity (Java `split`: trailing empty fields drop)
-  * and its numeric fields parse as `Long`; readers skip every other
+  * plus the family's arity (empty fields count, trailing ones too: an
+  * empty string encodes to an empty field) and its numeric fields
+  * parse as `Long`; readers skip every other
   * line. Every family is pruning or planner statistics only, so a
   * missing entry, a skipped line or an unreadable file is always sound
   * (the file scans, the estimate is withheld).
   *
   * Lifecycle: every commit folds [[Folded]] (fresh entries replace
-  * their file's prior lines, files no longer alive drop); the sort
-  * zones fold only under a verified sort claim and are deleted with it.
-  * Publish appends a branch's folded lines verbatim, clone copies all
-  * six files, rollback drops all six.
+  * their file's prior lines, files no longer alive drop). Publish
+  * appends a branch's lines verbatim, clone copies all five files,
+  * rollback drops all five.
   */
 private[graft] object StatsManifests {
 
@@ -47,15 +47,6 @@ private[graft] object StatsManifests {
         catch { case _: NumberFormatException => false }
       }
   }
-
-  /** `rel TAB minEnc TAB maxEnc` over the `_graft_sorted_by` head
-    * column. Written only by verified `sortedBy` batch commits, deleted
-    * whenever the sort marker is withdrawn; it also backs the
-    * metadata-served MIN/MAX, so it is never published partially.
-    */
-  val SortZones = new Family("_graft_zones", 2, Nil, onePerFile = true,
-    _.zones.map { case (fin, mn, mx) => fin -> Seq((mn, mx)) },
-    _ => "sort")
 
   /** `rel TAB colEnc TAB typeTag TAB slot1 TAB slot2`: per-file min/max
     * of every primitive leaf (type tag = the leaf's `simpleString`),
@@ -102,14 +93,14 @@ private[graft] object StatsManifests {
       else if (tag.startsWith("trigram:")) "chunk_trigram"
       else "block_index")
 
-  /** The families every commit folds and every publish appends. */
+  /** Every family: each commit folds them, publish appends them, clone
+    * copies and rollback drops them.
+    */
   val Folded: Seq[Family] = Seq(ColZones, Blooms, Rows, Ndv, BlockIdx)
-
-  val All: Seq[Family] = SortZones +: Folded
 
   /** One line: its text and its split fields (`rel` first). */
   final class Line private[StatsManifests] (val text: String) {
-    private[StatsManifests] val fields = text.split('\t')
+    private[StatsManifests] val fields = text.split("\t", -1)
     def rel: String = fields(0)
     def apply(i: Int): String = fields(i)
   }
@@ -144,24 +135,21 @@ private[graft] object StatsManifests {
     }
 
   /** Fold `messages`' fresh entries for `fam` into its sidecar in `d`:
-    * valid prior lines stay verbatim (none when `keepPrior` is false), a
-    * fresh entry replaces every prior line of its file, files outside
-    * `alive` drop, lines sort by `rel`, and the file is replaced through
-    * a `.staging` rename.
+    * valid prior lines stay verbatim, a fresh entry replaces every prior
+    * line of its file, files outside `alive` drop, lines sort by `rel`,
+    * and the file is replaced through a `.staging` rename.
     */
   def fold(fam: Family, d: File, messages: Seq[AvroCommitMessage],
-      alive: Set[String], keepPrior: Boolean = true): Unit = {
+      alive: Set[String]): Unit = {
     import scala.collection.mutable.{ArrayBuffer, HashMap}
-    val byRel =
-      if (!keepPrior) HashMap.empty[String, ArrayBuffer[String]]
-      else read(fam, fam.in(d)) { lines =>
-        val m = HashMap.empty[String, ArrayBuffer[String]]
-        lines.foreach { l =>
-          if (fam.onePerFile) m(l.rel) = ArrayBuffer(l.text)
-          else m.getOrElseUpdate(l.rel, ArrayBuffer.empty) += l.text
-        }
-        m
+    val byRel = read(fam, fam.in(d)) { lines =>
+      val m = HashMap.empty[String, ArrayBuffer[String]]
+      lines.foreach { l =>
+        if (fam.onePerFile) m(l.rel) = ArrayBuffer(l.text)
+        else m.getOrElseUpdate(l.rel, ArrayBuffer.empty) += l.text
       }
+      m
+    }
     val base = d.getAbsoluteFile.toPath
     messages.flatMap(fam.entries).foreach { case (fin, es) =>
       val rel = base.relativize(new File(fin).getAbsoluteFile.toPath).toString
@@ -186,7 +174,7 @@ private[graft] object StatsManifests {
   def folds(fam: Family, d: File, messages: Seq[AvroCommitMessage]): Boolean =
     messages.exists(fam.entries(_).nonEmpty) || fam.in(d).isFile
 
-  /** Publish: append each folded sidecar of the branch directory `from`
+  /** Publish: append each sidecar of the branch directory `from`
     * verbatim after `to`'s (rels are table-relative, so they carry over).
     */
   def append(from: File, to: File): Unit = Folded.foreach { fam =>
@@ -207,14 +195,14 @@ private[graft] object StatsManifests {
   }
 
   /** Clone: copy every sidecar of `from` byte for byte into `to`. */
-  def copy(from: File, to: File): Unit = All.foreach { fam =>
+  def copy(from: File, to: File): Unit = Folded.foreach { fam =>
     val src = fam.in(from)
     if (src.isFile) Files.copy(src.toPath, fam.in(to).toPath,
       StandardCopyOption.REPLACE_EXISTING)
   }
 
   /** Rollback: drop every sidecar of `d` (absence ⇒ scan). */
-  def drop(d: File): Unit = All.foreach(fam => fam.in(d).delete())
+  def drop(d: File): Unit = Folded.foreach(fam => fam.in(d).delete())
 
   private def replace(f: File, content: String, op: String): Unit = {
     val tmp = new File(f.getPath + ".staging")

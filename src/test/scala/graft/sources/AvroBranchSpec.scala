@@ -19,9 +19,9 @@ import graft.SparkSpec
   *    ONE snapshot, and the staged rows arrive as a clean incremental
   *    changeset (fromVersion = fork);
   *  - additive manifests (rows, col-zones) survive publish; the sort
-  *    claim does not (unverified append); publish appends every other
-  *    stats sidecar verbatim, clone copies all six, and rollback drops
-  *    all six;
+  *    claim does not (unverified append); publish appends every
+  *    stats sidecar verbatim, clone copies all five, and rollback drops
+  *    all five;
   *  - append-only contract: branch overwrite and overlay delete
   *    sidecars fail loudly; drop abandons everything.
   */
@@ -187,9 +187,8 @@ class AvroBranchSpec extends AnyFunSuite with SparkSpec with Matchers {
     writeRange(dir, 80, 120, "append", Some("m"))
     AvroMaintenance.publishBranch(dir, "m")
 
-    // sort claim withdrawn together with its zone manifest
+    // sort claim withdrawn
     AvroFileSource.sortMarker(new File(dir)).isFile shouldBe false
-    AvroFileSource.zoneFile(new File(dir)).isFile shouldBe false
     // row-count manifest covers ALL live files post-publish → exact rows
     val d = new File(dir)
     val rows = AvroFileSource.readRowsRaw(AvroFileSource.rowsFile(d))
@@ -225,19 +224,18 @@ class AvroBranchSpec extends AnyFunSuite with SparkSpec with Matchers {
     val five = Seq(AvroFileSource.colZoneFile _, AvroFileSource.bloomFile _,
       AvroFileSource.rowsFile _, AvroFileSource.ndvFile _,
       AvroFileSource.blockIdxFile _)
-    val six = (AvroFileSource.zoneFile _) +: five
     write(0, 9000, "overwrite") // v1: three 4096-row chunks
-    six.foreach(ff => withClue(ff(d).getName) { ff(d).isFile shouldBe true })
+    five.foreach(ff => withClue(ff(d).getName) { ff(d).isFile shouldBe true })
 
     // clone: every sidecar byte-identical in the fresh table
     val cl = new File(tmp(), "clone")
     AvroMaintenance.cloneTo(dir, cl.getPath)
-    six.foreach(ff => withClue(ff(d).getName) {
+    five.foreach(ff => withClue(ff(d).getName) {
       bytes(ff(cl)) shouldBe bytes(ff(d))
     })
 
     // publish: the branch's lines append verbatim after main's; the
-    // unverified append withdraws the sort claim and its zones
+    // unverified append withdraws the sort claim
     AvroMaintenance.createBranch(dir, "b")
     write(9000, 14000, "append", Some("b"))
     val bd = AvroFileSource.branchDir(d, "b")
@@ -250,15 +248,14 @@ class AvroBranchSpec extends AnyFunSuite with SparkSpec with Matchers {
         bytes(ff(d)) shouldBe (if (b.isEmpty) m else m + "\n" + b)
       }
     }
-    AvroFileSource.zoneFile(d).exists() shouldBe false
     AvroFileSource.sortMarker(d).exists() shouldBe false
 
-    // rollback: every stats sidecar drops (a sorted append restores the
-    // sort zones first, so all six are present going in)
+    // rollback: every stats sidecar drops (a sorted overwrite makes all
+    // five present going in)
     write(20000, 29000, "overwrite") // v3
-    six.foreach(ff => withClue(ff(d).getName) { ff(d).isFile shouldBe true })
+    five.foreach(ff => withClue(ff(d).getName) { ff(d).isFile shouldBe true })
     AvroMaintenance.rollbackTo(dir, 1L)
-    six.foreach(ff => withClue(ff(d).getName) { ff(d).exists() shouldBe false })
+    five.foreach(ff => withClue(ff(d).getName) { ff(d).exists() shouldBe false })
     spark.read.format("graft-avro").load(dir).count() shouldBe 9000L
   }
 }

@@ -31,8 +31,7 @@ class AvroSortReqSpec extends AnyFunSuite with SparkSpec with Matchers {
     back.agg(F.sum("id")).head().getLong(0) shouldBe (0L until 2000L).sum
     // ordered (range) distribution ⇒ non-overlapping files ⇒ an equality
     // predicate prunes to at most one file via the zone manifest
-    val zones = new java.io.File(dir, "_graft_zones")
-    zones.isFile shouldBe true
+    ZoneCells.coverAll(dir, "id") shouldBe true
   }
 
   test("the same shuffled input WITHOUT requestSort fails the claim") {

@@ -368,7 +368,6 @@ class AvroStatsSpec extends AnyFunSuite with SparkSpec with Matchers {
 
     val none = new File(tmp())
     stderrOf {
-      AvroFileSource.readZonesRaw(AvroFileSource.zoneFile(none)) shouldBe empty
       AvroFileSource.readColZonesRaw(
         AvroFileSource.colZoneFile(none)) shouldBe empty
       AvroFileSource.readBloomsRaw(AvroFileSource.bloomFile(none)) shouldBe

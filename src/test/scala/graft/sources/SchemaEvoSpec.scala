@@ -203,7 +203,6 @@ class SchemaEvoSpec extends AnyFunSuite with SparkSpec with Matchers {
     AvroFileSource.sortMarker(d).isFile shouldBe true
     AvroMaintenance.dropColumn(dir, "k")
     AvroFileSource.sortMarker(d).isFile shouldBe false
-    AvroFileSource.zoneFile(d).isFile shouldBe false
     // remaining column still reads
     spark.read.format("graft-avro").load(dir)
       .agg(F.sum("v")).collect()(0).getLong(0) shouldBe (0L until 100L)
@@ -335,7 +334,6 @@ class SchemaEvoSpec extends AnyFunSuite with SparkSpec with Matchers {
     AvroFileSource.sortMarker(d).isFile shouldBe true
     AvroMaintenance.rollbackTo(dir, 1L)
     AvroFileSource.sortMarker(d).isFile shouldBe false
-    AvroFileSource.zoneFile(d).isFile shouldBe false
     AvroFileSource.colZoneFile(d).isFile shouldBe false
     spark.read.format("graft-avro").load(dir).count() shouldBe 50L
   }

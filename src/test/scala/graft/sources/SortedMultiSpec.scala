@@ -41,7 +41,7 @@ class SortedMultiSpec extends AnyFunSuite with SparkSpec with Matchers {
     writeSorted(dir)
     AvroFileSource.sortedColumnsOf(new File(dir)) shouldBe Seq("g", "r")
     AvroFileSource.sortedColumnOf(new File(dir)) shouldBe Some("g")
-    new File(dir, "_graft_zones") should exist
+    ZoneCells.coverAll(dir, "g") shouldBe true
     // metadata MIN/MAX of the primary column serves from the manifest
     val t = spark.read.format("graft-avro").load(dir)
     val row = t.agg(F.min("g"), F.max("g")).head()
@@ -98,7 +98,7 @@ class SortedMultiSpec extends AnyFunSuite with SparkSpec with Matchers {
       .write.format("graft-avro").option("sortedBy", "g")
       .mode("append").save(dir)
     AvroFileSource.sortedColumnsOf(new File(dir)) shouldBe Nil
-    new File(dir, "_graft_zones") shouldNot exist
+    AvroFileSource.sortMarker(new File(dir)) shouldNot exist
   }
 
   test("an agreeing compound append keeps the claim") {
@@ -112,7 +112,7 @@ class SortedMultiSpec extends AnyFunSuite with SparkSpec with Matchers {
       .write.format("graft-avro").option("sortedBy", "g,r")
       .mode("append").save(dir)
     AvroFileSource.sortedColumnsOf(new File(dir)) shouldBe Seq("g", "r")
-    new File(dir, "_graft_zones") should exist
+    ZoneCells.coverAll(dir, "g") shouldBe true
   }
 
   test("the scan reports the longest projected prefix as its ordering") {
@@ -174,6 +174,6 @@ class SortedMultiSpec extends AnyFunSuite with SparkSpec with Matchers {
     AvroFileSource.sortedColumnsOf(new File(dir)) shouldBe Seq("g", "r2")
     AvroMaintenance.dropColumn(dir, "r2")
     AvroFileSource.sortedColumnsOf(new File(dir)) shouldBe Nil
-    new File(dir, "_graft_zones") shouldNot exist
+    AvroFileSource.sortMarker(new File(dir)) shouldNot exist
   }
 }

@@ -7,8 +7,6 @@ import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
-import graft.SparkSpec
-
 /** The per-file stats sidecars of a graft-avro table, pinned byte for
   * byte: hand-made prior files for every family (a malformed line, a
   * non-`Long` block-index range, a duplicate `_graft_rows` rel, a rel
@@ -17,7 +15,7 @@ import graft.SparkSpec
   * each reader's parse of the same files is asserted too. Any change to
   * how the sidecars are read, merged or written must keep these bytes.
   */
-class StatsManifestsSpec extends AnyFunSuite with SparkSpec with Matchers {
+class StatsManifestsSpec extends AnyFunSuite with Matchers {
 
   private def tmp(): File =
     new File(graft.operators.Catalog.tempDir("graft_statsmf"))
@@ -69,8 +67,6 @@ class StatsManifestsSpec extends AnyFunSuite with SparkSpec with Matchers {
   test("each reader parses the hand-made priors: valid lines only") {
     val d = tmp()
     writePriors(d)
-    put(AvroFileSource.zoneFile(d),
-      "b.avro\t1\t9\nbad\ndead.avro\t2\t3\nb.avro\t4\t8\na.avro\t0\t5")
     AvroFileSource.readColZonesRaw(AvroFileSource.colZoneFile(d)) shouldBe
       Map(
         "b.avro" -> Seq(("k", "bigint", "1", "9")),
@@ -94,9 +90,6 @@ class StatsManifestsSpec extends AnyFunSuite with SparkSpec with Matchers {
           ("k", "bigint", 100L, 200L, "6", "9")),
         "b.avro" -> Seq(("k", "bigint", 0L, 50L, "-", "-")),
         "dead.avro" -> Seq(("k", "bigint", 0L, 10L, "1", "2")))
-    AvroFileSource.readZonesRaw(AvroFileSource.zoneFile(d)) shouldBe Map(
-      "b.avro" -> (("4", "8")), "dead.avro" -> (("2", "3")),
-      "a.avro" -> (("0", "5")))
   }
 
   test("foldStatsManifests: exact bytes — alive filter, fresh replaces " +
@@ -142,9 +135,8 @@ class StatsManifestsSpec extends AnyFunSuite with SparkSpec with Matchers {
       "b.avro\tk\tbigint\t0\t70\t100\t150\n" +
       "b.avro\tk\tbigint\t70\t90\t151\t200\n" +
       "p=1/c.avro\tk\tbigint\t0\t30\t7\t8"
-    // the fold touches no sort-zone manifest and stages nothing behind
-    AvroFileSource.zoneFile(d).exists() shouldBe false
-    d.list().filter(_.endsWith(".staging")) shouldBe empty
+    // the fold writes only the five sidecars and stages nothing behind
+    d.list().toSet shouldBe StatsManifests.Folded.map(_.in(d).getName).toSet
 
     // a commit that leaves nothing alive empties every existing family
     // (the files stay, zero bytes) and creates none that was absent
@@ -154,36 +146,5 @@ class StatsManifestsSpec extends AnyFunSuite with SparkSpec with Matchers {
       AvroFileSource.rowsFile(d), AvroFileSource.blockIdxFile(d))
       .foreach(f => bytes(f) shouldBe "")
     AvroFileSource.ndvFile(d).exists() shouldBe false
-  }
-
-  test("sort-zone fold: an agreeing sorted append keeps valid prior " +
-      "lines verbatim (last per file), drops dead and malformed ones; " +
-      "an overwrite ignores the prior file") {
-    val d = tmp()
-    val dir = d.getPath
-    def write(lo: Long, hi: Long, mode: String): Unit =
-      spark.range(lo, hi).toDF("k").coalesce(1).sortWithinPartitions("k")
-        .write.format("graft-avro").option("sortedBy", "k")
-        .mode(mode).save(dir)
-    val base = d.getAbsoluteFile.toPath
-    def rels(): Seq[String] = AvroFileSource.listAvro(d)
-      .map(f => base.relativize(f.getAbsoluteFile.toPath).toString)
-    val zf = AvroFileSource.zoneFile(d)
-
-    write(0, 10, "overwrite")
-    val Seq(r1) = rels()
-    bytes(zf) shouldBe s"$r1\t0\t9"
-    put(zf, s"junk\ndead.avro\t1\t2\n$r1\t0\t9\n$r1\t0\t99\n")
-    write(10, 20, "append")
-    val Seq(r2) = rels().filterNot(_ == r1)
-    bytes(zf) shouldBe
-      Seq(r1 -> s"$r1\t0\t99", r2 -> s"$r2\t10\t19").sortBy(_._1)
-        .map(_._2).mkString("\n")
-
-    // an overwrite defines the dataset: only its own files' zones
-    put(zf, s"$r1\t0\t99\n$r2\t10\t19")
-    write(5, 8, "overwrite")
-    val Seq(r3) = rels()
-    bytes(zf) shouldBe s"$r3\t5\t7"
   }
 }

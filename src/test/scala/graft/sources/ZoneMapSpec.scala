@@ -9,14 +9,14 @@ import org.scalatest.matchers.should.Matchers
 
 import graft.SparkSpec
 
-/** Zone-map file skipping: a verified `sortedBy` batch write records each
-  * file's [min, max] of the sort column in the `_graft_zones` manifest,
-  * and a selective pushed predicate prunes whole files from
+/** Zone-map file skipping: every batch write records each file's
+  * [min, max] of every column in the `_graft_zones_cols` manifest, and
+  * a selective pushed predicate prunes whole files from
   * `planInputPartitions` — they are never opened. The 100 TB claim in
   * one sentence: a range-partitioned sorted table answers a selective
   * predicate by opening the overlapping files only, and these specs pin
-  * (a) strictly-fewer-files, (b) unchanged answers, and (c) the manifest
-  * lifecycle (withdrawn with the sort marker).
+  * (a) strictly-fewer-files, (b) unchanged answers, and (c) exact
+  * metadata-served MIN/MAX only under full coverage.
   */
 class ZoneMapSpec extends AnyFunSuite with SparkSpec with Matchers {
 
@@ -29,6 +29,15 @@ class ZoneMapSpec extends AnyFunSuite with SparkSpec with Matchers {
       case a: AdaptiveSparkPlanExec => a.executedPlan
     }.getOrElse(root)
     under.collect { case b: BatchScanExec => b }.head.inputPartitions.size
+  }
+
+  private def scanDescription(df: org.apache.spark.sql.DataFrame): String = {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    val root = df.queryExecution.executedPlan
+    val under = root.collectFirst {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+    }.getOrElse(root)
+    under.collectFirst { case b: BatchScanExec => b }.get.scan.description()
   }
 
   /** 10k rows over k = 0..9999, range-partitioned into 8 sorted files. */
@@ -46,7 +55,7 @@ class ZoneMapSpec extends AnyFunSuite with SparkSpec with Matchers {
     writeSorted(dir)
     val nFiles = AvroFileSource.listAvro(new File(dir)).size
     nFiles should be > 4 // range partitioning actually spread the data
-    new File(dir, "_graft_zones") should exist
+    ZoneCells.coverAll(dir, "k") shouldBe true
 
     val all = spark.read.format("graft-avro").load(dir)
     scanPartitions(all) shouldBe nFiles
@@ -130,7 +139,7 @@ class ZoneMapSpec extends AnyFunSuite with SparkSpec with Matchers {
       .sortWithinPartitions("s")
       .write.format("graft-avro").option("sortedBy", "s")
       .mode("overwrite").save(dir)
-    new File(dir, "_graft_zones") should exist // verification accepted
+    AvroFileSource.sortMarker(new File(dir)) should exist // verified
     val avro = spark.read.format("graft-avro").load(dir)
     // every row stays findable through zone pruning
     avro.filter(F.col("s") === sup).count() shouldBe 1
@@ -225,14 +234,13 @@ class ZoneMapSpec extends AnyFunSuite with SparkSpec with Matchers {
   test("an unsorted append withdraws the sorted claim; col zones keep pruning") {
     val dir = tmp()
     writeSorted(dir)
-    new File(dir, "_graft_zones") should exist
-    // append WITHOUT sortedBy: the layout claim (and sort manifest) must
-    // go — no more outputOrdering or metadata-served MIN/MAX
+    AvroFileSource.sortMarker(new File(dir)) should exist
+    // append WITHOUT sortedBy: the layout claim must go — no more
+    // outputOrdering
     spark.range(20000, 20010).toDF("k")
       .withColumn("payload", F.md5(F.col("k").cast("string")))
       .write.format("graft-avro").mode("append").save(dir)
     new File(dir, "_graft_sorted_by") shouldNot exist
-    new File(dir, "_graft_zones") shouldNot exist
     // ...but per-file column bounds don't depend on sortedness: the
     // all-column manifest survives the append and still prunes
     new File(dir, "_graft_zones_cols") should exist
@@ -244,27 +252,80 @@ class ZoneMapSpec extends AnyFunSuite with SparkSpec with Matchers {
       org.apache.spark.sql.Row(0L, 20009L)
   }
 
-  test("a legacy sorted table (marker, no manifest) never gains a partial manifest") {
+  test("a legacy sorted table scans until analyze backfills its zones") {
     val dir = tmp()
     writeSorted(dir)
-    // simulate a table written before zone maps existed: the sort marker
-    // survives but no manifest covers the files
-    new File(dir, "_graft_zones").delete() shouldBe true
+    // simulate a table written before `_graft_zones_cols` existed: the
+    // sort marker survives but no zone manifest covers the files
+    new File(dir, "_graft_zones_cols").delete() shouldBe true
     spark.range(10000, 12000).toDF("k")
       .withColumn("payload", F.md5(F.col("k").cast("string")))
       .repartitionByRange(2, F.col("k"))
       .sortWithinPartitions("k")
       .write.format("graft-avro").option("sortedBy", "k")
       .mode("append").save(dir)
-    // the agreeing append keeps the layout claim but must NOT publish a
-    // manifest covering only its own files — metadata-served MIN/MAX
-    // over a partial manifest would silently ignore the legacy files
+    // the agreeing append keeps the layout claim, and the manifest now
+    // covers only its own files: metadata-served MIN/MAX over it would
+    // silently ignore the legacy files
     new File(dir, "_graft_sorted_by") should exist
-    new File(dir, "_graft_zones") shouldNot exist
+    ZoneCells.coverAll(dir, "k") shouldBe false
     val avro = spark.read.format("graft-avro").load(dir)
+    val nFiles = AvroFileSource.listAvro(new File(dir)).size
     // min lives in an uncovered legacy file: the real scan must find it
-    avro.agg(F.min("k"), F.max("k")).head() shouldBe
-      org.apache.spark.sql.Row(0L, 11999L)
+    val agg = avro.agg(F.min("k"), F.max("k"))
+    scanDescription(agg) should not include "PushedAggregation"
+    agg.head() shouldBe org.apache.spark.sql.Row(0L, 11999L)
+    // uncovered legacy files scan; the appended ones prune
+    val q = avro.filter(F.col("k") < 100)
+    scanPartitions(q) shouldBe nFiles - 2
+    q.count() shouldBe 100
+    // analyze backfills the legacy files: pruning and metadata MIN/MAX
+    AvroMaintenance.analyze(spark, dir)
+    ZoneCells.coverAll(dir, "k") shouldBe true
+    val again = spark.read.format("graft-avro").load(dir)
+    scanPartitions(again.filter(F.col("k") < 100)) shouldBe 1
+    val agg2 = again.agg(F.min("k"), F.max("k"))
+    scanDescription(agg2) should include("PushedAggregation")
+    agg2.head() shouldBe org.apache.spark.sql.Row(0L, 11999L)
+  }
+
+  test("a leftover _graft_zones file is never read") {
+    val dir = tmp()
+    writeSorted(dir) // v1
+    val d = new File(dir)
+    val base = d.getAbsoluteFile.toPath
+    // the sort-zone sidecar of older writers, with bounds that exclude
+    // every row: trusted, it would prune every file and forge MIN/MAX
+    java.nio.file.Files.write(new File(d, "_graft_zones").toPath,
+      AvroFileSource.listAvro(d)
+        .map(f => base.relativize(f.getAbsoluteFile.toPath).toString)
+        .sorted.map(rel => s"$rel\t-9\t-1").mkString("\n")
+        .getBytes("UTF-8"))
+    def check(path: String, rows: Long, max: Long): Unit = {
+      val avro = spark.read.format("graft-avro").load(path)
+      val point = avro.filter(F.col("k") === 1234)
+      scanPartitions(point) shouldBe 1
+      point.count() shouldBe 1
+      avro.filter(F.col("k") >= 9500).count() shouldBe rows - 9500
+      val agg = avro.agg(F.min("k"), F.max("k"))
+      scanDescription(agg) should include("PushedAggregation")
+      agg.head() shouldBe org.apache.spark.sql.Row(0L, max)
+    }
+    check(dir, 10000, 9999)
+    val cl = new File(tmp(), "clone").getPath
+    AvroMaintenance.cloneTo(dir, cl) shouldBe AvroFileSource.listAvro(d).size
+    check(cl, 10000, 9999)
+    AvroMaintenance.createBranch(dir, "b")
+    spark.range(10000, 10010).toDF("k")
+      .withColumn("payload", F.md5(F.col("k").cast("string")))
+      .coalesce(1).write.format("graft-avro").option("branch", "b")
+      .mode("append").save(dir)
+    AvroMaintenance.publishBranch(dir, "b") // v2
+    check(dir, 10010, 10009)
+    AvroMaintenance.rollbackTo(dir, 1L)
+    spark.read.format("graft-avro").load(dir).count() shouldBe 10000
+    spark.read.format("graft-avro").load(dir)
+      .filter(F.col("k") === 1234).count() shouldBe 1
   }
 
   test("double sort column: NaN-unsafe min/max is never served from metadata") {
@@ -284,28 +345,28 @@ class ZoneMapSpec extends AnyFunSuite with SparkSpec with Matchers {
     e.getMessage should include("sortedBy does not support double")
 
     // layer 2 (defense in depth): even with a hand-placed marker and
-    // manifest claiming a double column, pushAggregation withholds the
-    // metadata-served MIN/MAX — a real scan keeps the NaN max that a
-    // first/last zone would drop
+    // finite zone cells for the double column on EVERY file (the NaN
+    // file's leaf went dead, so the writer gives it none),
+    // pushAggregation withholds the metadata-served MIN/MAX — a real
+    // scan keeps the NaN max the cells would drop
     val dir2 = tmp()
     nan.write.format("graft-avro").mode("overwrite").save(dir2)
     java.nio.file.Files.write(new File(dir2, "_graft_sorted_by").toPath,
       "d".getBytes("UTF-8"))
     val base = new File(dir2).getAbsoluteFile.toPath
+    val zf = new File(dir2, "_graft_zones_cols")
+    val kept = scala.io.Source.fromFile(zf, "UTF-8").getLines()
+      .filterNot(_.split('\t').slice(1, 3).sameElements(Seq("d", "double")))
+      .toSeq
     val forged = AvroFileSource.listAvro(new File(dir2))
       .map(f => base.relativize(f.getAbsoluteFile.toPath).toString)
-      .sorted.map(rel => s"$rel\t0.0\t50.0").mkString("\n")
-    java.nio.file.Files.write(new File(dir2, "_graft_zones").toPath,
-      forged.getBytes("UTF-8"))
+      .map(rel => s"$rel\td\tdouble\t0.0\t50.0")
+    java.nio.file.Files.write(zf.toPath,
+      (kept ++ forged).sorted.mkString("\n").getBytes("UTF-8"))
+    ZoneCells.coverAll(dir2, "d") shouldBe true
     val agg = spark.read.format("graft-avro").load(dir2)
       .agg(F.min("d"), F.max("d"))
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-    val root = agg.queryExecution.executedPlan
-    val under = root.collectFirst {
-      case a: AdaptiveSparkPlanExec => a.executedPlan
-    }.getOrElse(root)
-    val scan = under.collectFirst { case b: BatchScanExec => b }.get
-    scan.scan.description() should not include "PushedAggregation"
+    scanDescription(agg) should not include "PushedAggregation"
     val row = agg.head()
     row.getDouble(0) shouldBe 0.0
     row.getDouble(1).isNaN shouldBe true
@@ -320,7 +381,6 @@ class ZoneMapSpec extends AnyFunSuite with SparkSpec with Matchers {
       .write.format("graft-avro") // NO sortedBy claim
       .mode("overwrite").save(dir)
     new File(dir, "_graft_sorted_by") shouldNot exist
-    new File(dir, "_graft_zones") shouldNot exist
     new File(dir, "_graft_zones_cols") should exist
     val nFiles = AvroFileSource.listAvro(new File(dir)).size
     nFiles should be > 4
@@ -352,7 +412,7 @@ class ZoneMapSpec extends AnyFunSuite with SparkSpec with Matchers {
     val q = avro.filter(F.col("v") >= 19000) // not the sort column
     scanPartitions(q) should be < nFiles
     q.count() shouldBe 500
-    // both manifests compose: sort-zone on k AND col-zone on v
+    // zones compose across columns: k AND v
     val both = avro.filter(F.col("k") >= 4000 && F.col("v") < 10000)
     scanPartitions(both) should be < nFiles
     both.count() shouldBe 1000
@@ -462,6 +522,24 @@ class ZoneMapSpec extends AnyFunSuite with SparkSpec with Matchers {
     avro.filter(F.col("s") === "__null__").count() shouldBe 1
   }
 
+  test("an all-empty-string file keeps its zone line: min/max and pruning") {
+    // the all-"" file's zone line ends in an empty field ("" encodes to
+    // ""): a line split that drops trailing empty fields would lose it
+    val dir = tmp()
+    Seq(Seq("", "", ""), Seq("a", "b")).zipWithIndex.foreach { case (vs, i) =>
+      spark.createDataFrame(vs.map(Tuple1(_))).toDF("s").coalesce(1)
+        .write.format("graft-avro")
+        .mode(if (i == 0) "overwrite" else "append").save(dir)
+    }
+    val avro = spark.read.format("graft-avro").load(dir)
+    val q = avro.filter(F.col("s") > "")
+    scanPartitions(q) shouldBe 1
+    q.count() shouldBe 2
+    val agg = avro.agg(F.min("s"), F.max("s"))
+    scanDescription(agg) should include("PushedAggregation")
+    agg.head() shouldBe org.apache.spark.sql.Row("", "b")
+  }
+
   test("any-column min/max falls back without full coverage or exact strings") {
     val dir = tmp()
     spark.range(0, 1000).toDF("k")
@@ -527,7 +605,7 @@ class ZoneMapSpec extends AnyFunSuite with SparkSpec with Matchers {
       .sortWithinPartitions("s")
       .write.format("graft-avro").option("sortedBy", "s")
       .mode("overwrite").save(dir)
-    val zf = new File(dir, "_graft_zones")
+    val zf = new File(dir, "_graft_zones_cols")
     zf should exist
     scala.io.Source.fromFile(zf, "UTF-8").getLines()
       .map(_.length).max should be < 400
