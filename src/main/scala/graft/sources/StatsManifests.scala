@@ -15,10 +15,10 @@ import java.nio.file.{Files, StandardCopyOption}
   * trailing newline. A line is valid when it splits into exactly `rel`
   * plus the family's arity (empty fields count, trailing ones too: an
   * empty string encodes to an empty field) and its numeric fields
-  * parse as `Long`; readers skip every other
-  * line. Every family is pruning or planner statistics only, so a
-  * missing entry, a skipped line or an unreadable file is always sound
-  * (the file scans, the estimate is withheld).
+  * parse as `Long`; readers skip every other line. Every family is
+  * pruning or planner statistics only, so a missing entry, a skipped
+  * line or an unreadable file is always sound (the file scans, the
+  * estimate is withheld).
   *
   * Lifecycle: every commit folds [[Folded]] (fresh entries replace
   * their file's prior lines, files no longer alive drop). Publish
