@@ -66,10 +66,12 @@ class AvroFileSource extends TableProvider with DataSourceRegister {
     * file's writer schema defines the column set and order (dropped
     * columns disappear, like a table's current DDL), and any column that
     * an older file lacks — or writes nullable — is nullable in the table
-    * view so drifted files can resolve it to null. Only file HEADERS are
-    * read (one small driver-side open per file, once at table creation);
-    * pass `.schema(...)` explicitly to pin a different view or skip the
-    * sweep on very large directories.
+    * view so drifted files can resolve it to null. Runs on every `load`
+    * (and on every `load(dir).schema` inside deletes and merges) over
+    * the version's file set: one stat per file, and the writer schemas
+    * come from [[WriterSchemas]], so a JVM opens each data file's header
+    * once, the first time any read meets it. Pass `.schema(...)` to pin
+    * a different view or skip the sweep.
     */
   override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
     val d = dir(options)
@@ -112,11 +114,6 @@ class AvroFileSource extends TableProvider with DataSourceRegister {
       }
     }
     require(files.nonEmpty, s"no .avro files under ${dir(options)}")
-    def header(f: File): Schema = {
-      val r = new DataFileReader[GenericRecord](
-        f, new GenericDatumReader[GenericRecord]())
-      try r.getSchema finally r.close()
-    }
     // column renames surface per file BEFORE the merge: a rename applies
     // to files born before its version, so an old file's historical name
     // and a new file's current name align into one column (and a
@@ -127,13 +124,7 @@ class AvroFileSource extends TableProvider with DataSourceRegister {
     def renamedStruct(f: File, st: StructType): StructType =
       if (renames.isEmpty) st
       else {
-        val base = d.getAbsoluteFile.toPath
-        val rel0 = base.relativize(f.getAbsoluteFile.toPath).toString
-        val rel =
-          if (rel0.startsWith("_graft_archive/"))
-            rel0.stripPrefix("_graft_archive/")
-          else rel0
-        val b = births.getOrElse(rel, 0L)
+        val b = births.getOrElse(AvroFileSource.logicalRel(d, f), 0L)
         StructType(st.fields.map { fld =>
           val nn = renames.foldLeft(fld.name) { case (n, (v, from, to)) =>
             if (b < v && n == from) to else n
@@ -143,8 +134,9 @@ class AvroFileSource extends TableProvider with DataSourceRegister {
       }
     // name tie-break: two write batches can land in the same lastModified
     // millisecond, and listing order must not decide which schema "wins"
-    val structs = files.sortBy(f => (f.lastModified(), f.getName))
-      .map(f => renamedStruct(f, AvroSchemaConverter.toStruct(header(f))))
+    val structs = files.map(f => f -> WriterSchemas.of(f))
+      .sortBy { case (f, h) => (h.millis, f.getName) }
+      .map { case (f, h) => renamedStruct(f, h.struct) }
       .distinct
     val base = structs.last
     val merged =
@@ -1416,6 +1408,17 @@ object AvroFileSource {
 
   def archiveDir(d: File): File = new File(d, ArchiveDirName)
 
+  /** Table-relative path of data file `f` under table `d`, with the
+    * archive prefix stripped: the logical identity a file keeps whether
+    * a read resolves it live or from `_graft_archive/`.
+    */
+  private[sources] def logicalRel(d: File, f: File): String = {
+    val rel = d.getAbsoluteFile.toPath
+      .relativize(f.getAbsoluteFile.toPath).toString
+    val arch = ArchiveDirName + "/"
+    if (rel.startsWith(arch)) rel.substring(arch.length) else rel
+  }
+
   /** Stamp a just-archived file's mtime to NOW: the vacuum's retention
     * grace ([[AvroMaintenance.expireSnapshots]]'s `graceMs`) clocks from
     * ARCHIVE time, not the file's write time — a long-running scan that
@@ -2079,6 +2082,23 @@ object AvroFileSource {
     None
   }
 
+  /** Whether a stats cell recorded under type tag `tag` (a leaf type's
+    * `simpleString`) applies to a column read as `dt`: the same type, or
+    * an `int` cell read as `bigint`. ALTER COLUMN TYPE's int → bigint
+    * widening is exact — every int bound, count and sum reads unchanged
+    * as a long — so pre-widen cells keep pruning and serving metadata
+    * aggregates. Other widenings (to double) change the value domain and
+    * leave their cells unread.
+    */
+  private[sources] def cellTypeApplies(tag: String,
+      dt: org.apache.spark.sql.types.DataType): Boolean =
+    tag == dt.simpleString || (dt == LongType && tag == "int")
+
+  /** [[cellTypeApplies]] for a `kind:`-prefixed cell (`cnt:`, `sum:`). */
+  private[sources] def cellKindApplies(tag: String, kind: String,
+      dt: org.apache.spark.sql.types.DataType): Boolean =
+    tag.startsWith(kind) && cellTypeApplies(tag.substring(kind.length), dt)
+
   /** (colEnc, type tag, slot 1, slot 2) of all-column manifest lines by
     * relative path, values still encoded.
     */
@@ -2153,7 +2173,7 @@ object AvroFileSource {
       */
     def boundsOf(col: String): Map[String, (Any, Any)] =
       view(boundsMemo, col) { (dt, dtName, mn, mx) =>
-        if (dt.simpleString != dtName) None
+        if (!cellTypeApplies(dtName, dt)) None
         else for {
           lo <- castPartitionValue(mn, dt) if lo != null
           hi <- castPartitionValue(mx, dt) if hi != null
@@ -2169,7 +2189,7 @@ object AvroFileSource {
         def count(s: String) =
           if (s.nonEmpty && s.forall(c => c >= '0' && c <= '9')) s.toLongOption
           else None
-        if (dtName != "cnt:" + dt.simpleString) None
+        if (!cellKindApplies(dtName, "cnt:", dt)) None
         else for { n <- count(nn); t <- count(total) } yield (n, t)
       }
   }
@@ -3338,24 +3358,24 @@ class AvroScanBuilder(path: String, full: StructType,
           case ("cnt", c) =>
             val d = cntTypes(c)
             val enc = java.net.URLEncoder.encode(c, "UTF-8")
-            val cntTag = "cnt:" + d.simpleString
-            val sumTag = "sum:" + d.simpleString
             raw.getOrElse(rel, Nil).collectFirst {
-              case (`enc`, `cntTag`, nn, _) => nn
+              case (`enc`, tag, nn, _)
+                  if AvroFileSource.cellKindApplies(tag, "cnt:", d) => nn
             }.filter(_.toLongOption.exists(_ >= 0))
               .map(nn => ("cntv", nn))
               .orElse { // pre-cnt manifests: the sum cell's count slot
                 raw.getOrElse(rel, Nil).collectFirst {
-                  case (`enc`, `sumTag`, _, n) => n
+                  case (`enc`, tag, _, n)
+                      if AvroFileSource.cellKindApplies(tag, "sum:", d) => n
                 }.filter(_.toLongOption.exists(_ >= 0))
                   .map(n => ("cntv", n))
               }
           case ("sum", c) =>
             val d = sumTypes(c)
             val enc = java.net.URLEncoder.encode(c, "UTF-8")
-            val tag = "sum:" + d.simpleString
             raw.getOrElse(rel, Nil).collectFirst {
-              case (`enc`, `tag`, s, n) => (s, n)
+              case (`enc`, tag, s, n)
+                  if AvroFileSource.cellKindApplies(tag, "sum:", d) => (s, n)
             }.flatMap { case (s, n) =>
               (s.toLongOption, n.toLongOption) match {
                 case (Some(_), Some(nv)) if nv >= 0 =>
@@ -3369,7 +3389,8 @@ class AvroScanBuilder(path: String, full: StructType,
             val d = types(c)
             val enc = java.net.URLEncoder.encode(c, "UTF-8")
             raw.getOrElse(rel, Nil).collectFirst {
-              case (`enc`, dtN, mn, mx) if dtN == d.simpleString => (mn, mx)
+              case (`enc`, dtN, mn, mx)
+                  if AvroFileSource.cellTypeApplies(dtN, d) => (mn, mx)
             }.flatMap { case (mn, mx) =>
               if (mn == "__null__") Some(("null", ""))
               else {
@@ -3557,8 +3578,8 @@ class AvroScanBuilder(path: String, full: StructType,
                 val enc = java.net.URLEncoder.encode(c, "UTF-8")
                 val perFile = clean.map { rel =>
                   raw.getOrElse(rel, Nil).collectFirst {
-                    case (`enc`, dtN, mn, mx) if dtN == d.simpleString =>
-                      (mn, mx)
+                    case (`enc`, dtN, mn, mx)
+                        if AvroFileSource.cellTypeApplies(dtN, d) => (mn, mx)
                   }
                 }
                 if (perFile.exists(_.isEmpty)) None // uncovered file
@@ -3615,10 +3636,10 @@ class AvroScanBuilder(path: String, full: StructType,
               }
               .flatMap { d =>
                 val enc = java.net.URLEncoder.encode(c, "UTF-8")
-                val tag = "sum:" + d.simpleString
                 val perFile = alive.map { rel =>
                   raw.getOrElse(rel, Nil).collectFirst {
-                    case (`enc`, `tag`, s, n) =>
+                    case (`enc`, tag, s, n)
+                        if AvroFileSource.cellKindApplies(tag, "sum:", d) =>
                       for {
                         sv <- s.toLongOption
                         nv <- n.toLongOption if nv >= 0
@@ -3645,14 +3666,16 @@ class AvroScanBuilder(path: String, full: StructType,
           val resolved = sp.collect { case ("cnt", c) => c }.distinct.map { c =>
             AvroFilterEval.leafType(full, c).flatMap { d =>
               val enc = java.net.URLEncoder.encode(c, "UTF-8")
-              val cntTag = "cnt:" + d.simpleString
-              val sumTag = "sum:" + d.simpleString
               val perFile = alive.map { rel =>
                 raw.getOrElse(rel, Nil).collectFirst {
-                  case (`enc`, `cntTag`, nn, _) => nn.toLongOption
+                  case (`enc`, tag, nn, _)
+                      if AvroFileSource.cellKindApplies(tag, "cnt:", d) =>
+                    nn.toLongOption
                 }.flatten.filter(_ >= 0).orElse {
                   raw.getOrElse(rel, Nil).collectFirst {
-                    case (`enc`, `sumTag`, _, n) => n.toLongOption
+                    case (`enc`, tag, _, n)
+                        if AvroFileSource.cellKindApplies(tag, "sum:", d) =>
+                      n.toLongOption
                   }.flatten.filter(_ >= 0)
                 }
               }
@@ -4649,11 +4672,8 @@ class AvroScanBuilder(path: String, full: StructType,
       /** [[relOf]] with the archive prefix stripped: the logical
         * identity of a snapshot-resolved file.
         */
-      private def logicalRelOf(f: File): String = {
-        val rel = relOf(f)
-        val arch = "_graft_archive/"
-        if (rel.startsWith(arch)) rel.substring(arch.length) else rel
-      }
+      private def logicalRelOf(f: File): String =
+        AvroFileSource.logicalRel(new File(path), f)
 
       /** Fully-pushed (zone-decided) filters: serve EXACTLY the decided
         * keep-set — Spark re-applies nothing, so emitting any row of a
@@ -4792,27 +4812,32 @@ class AvroScanBuilder(path: String, full: StructType,
         }
       }
 
+      /** Batch CDC: the full version range in one read (the planner and
+        * per-partition readers are exactly the stream's), planned once
+        * for both the partitions and the reader factory's births.
+        */
+      private lazy val cdcPartitions: Array[InputPartition] = {
+        val cur = AvroFileSource.readSnapshots(new File(path))
+          .lastOption.map(_.version).getOrElse(
+            throw new IllegalStateException(
+              s"graft-avro CDC: $path has no snapshot journal — " +
+                "write through the source at least once"))
+        val s = cdcStartVersion.getOrElse(1L) - 1
+        require(s >= 0,
+          s"graft-avro CDC: startingVersion must be >= 1")
+        val e = cdcEndVersion.getOrElse(cur)
+        require(e <= cur,
+          s"graft-avro CDC: endingVersion $e is beyond the current " +
+            s"version $cur")
+        require(e >= s,
+          s"graft-avro CDC: endingVersion $e predates startingVersion")
+        AvroCdcPlan.partitions(path, s, e, cdcAllowInitialSnapshot,
+          maxSplitBytes)
+      }
+
       override def planInputPartitions(): Array[InputPartition] =
-        if (cdcFeed) {
-          // batch CDC: the full version range in one read (the planner
-          // and per-partition readers are exactly the stream's)
-          val cur = AvroFileSource.readSnapshots(new File(path))
-            .lastOption.map(_.version).getOrElse(
-              throw new IllegalStateException(
-                s"graft-avro CDC: $path has no snapshot journal — " +
-                  "write through the source at least once"))
-          val s = cdcStartVersion.getOrElse(1L) - 1
-          require(s >= 0,
-            s"graft-avro CDC: startingVersion must be >= 1")
-          val e = cdcEndVersion.getOrElse(cur)
-          require(e <= cur,
-            s"graft-avro CDC: endingVersion $e is beyond the current " +
-              s"version $cur")
-          require(e >= s,
-            s"graft-avro CDC: endingVersion $e predates startingVersion")
-          AvroCdcPlan.partitions(path, s, e, cdcAllowInitialSnapshot,
-            maxSplitBytes)
-        } else if (aggAny.nonEmpty) {
+        if (cdcFeed) cdcPartitions
+        else if (aggAny.nonEmpty) {
           // the manifest fold already happened at pushdown: one partition
           // carrying the clean-file row, zero clean data files opened.
           // HYBRID under posdel: the dirty files re-scan as real partial
@@ -4939,7 +4964,8 @@ class AvroScanBuilder(path: String, full: StructType,
             StructType(full.fields.filterNot(f =>
               f.name == AvroFileSource.CdcChangeType ||
                 f.name == AvroFileSource.CdcCommitVersion)),
-            AvroFileSource.birthsByPhysicalPath(dirF, Nil, force = true),
+            AvroFileSource.birthsByPhysicalPath(dirF, Nil, force = true,
+              planned = Some(AvroCdcPlan.plannedRels(dirF, cdcPartitions))),
             AvroFileSource.readColmap(dirF), path)
         }
         else if (groupSpecs.nonEmpty && groupHybridP.nonEmpty) {
@@ -5146,18 +5172,17 @@ class AvroScanBuilder(path: String, full: StructType,
             if (!liveRels.forall(nd.contains)) Map.empty
             else {
               val perFile = liveRels.map(nd)
-              val cols = perFile.head.map(e => (e._1, e._2)).toSet
-              cols.toSeq.flatMap { case (colEnc, dtName) =>
+              perFile.head.map(_._1).distinct.flatMap { colEnc =>
                 val col = java.net.URLDecoder.decode(colEnc, "UTF-8")
-                val typeOk = AvroFilterEval.leafType(full, col)
-                  .exists(_.simpleString == dtName)
+                val readType = AvroFilterEval.leafType(full, col)
                 val regsPerFile = perFile.map(_.collectFirst {
-                  case (c, dt, b64) if c == colEnc && dt == dtName =>
+                  case (c, dt, b64) if c == colEnc &&
+                      readType.exists(AvroFileSource.cellTypeApplies(dt, _)) =>
                     scala.util.Try(
                       java.util.Base64.getDecoder.decode(b64)).toOption
                       .filter(_.length == AvroFileSource.NdvRegisters)
                 }.flatten)
-                if (typeOk && regsPerFile.forall(_.isDefined)) {
+                if (readType.isDefined && regsPerFile.forall(_.isDefined)) {
                   val merged = new Array[Byte](AvroFileSource.NdvRegisters)
                   regsPerFile.flatten.foreach { r =>
                     var i = 0
@@ -5205,7 +5230,8 @@ class AvroScanBuilder(path: String, full: StructType,
                   val per = liveRels.map { rel =>
                     raw.getOrElse(rel, Nil).collectFirst {
                       case (`enc`, dtN, mn, mx)
-                          if dtN == fld.dataType.simpleString => (mn, mx)
+                          if AvroFileSource.cellTypeApplies(dtN,
+                            fld.dataType) => (mn, mx)
                     }.map(rel -> _)
                   }
                   if (per.exists(_.isEmpty)) None // uncovered file
@@ -5297,10 +5323,10 @@ class AvroScanBuilder(path: String, full: StructType,
             case Some(raw) =>
               full.fields.toSeq.flatMap { fld =>
                 val enc = java.net.URLEncoder.encode(fld.name, "UTF-8")
-                val tag = "cnt:" + fld.dataType.simpleString
                 val per = liveRels.map { rel =>
                   raw.getOrElse(rel, Nil).collectFirst {
-                    case (`enc`, `tag`, nn, tot) =>
+                    case (`enc`, tag, nn, tot) if AvroFileSource
+                        .cellKindApplies(tag, "cnt:", fld.dataType) =>
                       (nn.toLongOption, tot.toLongOption) match {
                         case (Some(a), Some(b)) if a >= 0 && b >= a =>
                           Some(b - a)
@@ -5838,14 +5864,23 @@ class AvroMicroBatchStream(path: String, required: StructType,
     require(s >= 0,
       s"offset ${start.json()} predates the compacted journal prefix " +
         s"($base entries) — checkpoint and journal are out of sync")
-    synchronized {
+    val files = synchronized {
       seen.asScala.toIndexedSeq.slice(s, e) // whole files: the stream's
         // offset granularity is the file, and arriving files are
         // task-sized; batch reads handle the huge-file fan-out
-        .map(f => AvroInputPartition(f, 0L, Long.MaxValue): InputPartition)
-        .toArray
     }
+    val d = new File(path)
+    plannedRels = Some(files.map(f =>
+      AvroFileSource.logicalRel(d, new File(f))).toSet)
+    files.map(f => AvroInputPartition(f, 0L, Long.MaxValue): InputPartition)
+      .toArray
   }
+
+  /** Logical paths of the files the last [[planInputPartitions]] call
+    * planned: Spark plans a micro-batch's partitions before it asks for
+    * its reader factory, whose births map carries these files only.
+    */
+  @volatile private var plannedRels: Option[Set[String]] = None
 
   override def createReaderFactory(): PartitionReaderFactory = {
     // streaming reads are merge-on-read too: a replayed micro-batch must
@@ -5862,7 +5897,7 @@ class AvroMicroBatchStream(path: String, required: StructType,
     }
     AvroReaderFactory(required, full, deletes = dels,
       births = AvroFileSource.birthsByPhysicalPath(new File(path), dels,
-        force = renames.nonEmpty),
+        force = renames.nonEmpty, planned = plannedRels),
       renames = renames, posdels = posdels, root = path)
   }
 
@@ -5999,17 +6034,25 @@ class AvroCdcMicroBatchStream(path: String, required: StructType,
       end: Offset): Array[InputPartition] = {
     val s = start.asInstanceOf[VOffset].v
     val e = end.asInstanceOf[VOffset].v
-    AvroCdcPlan.partitions(path, s, e, allowInitialSnapshot,
+    val parts = AvroCdcPlan.partitions(path, s, e, allowInitialSnapshot,
       maxSplitBytes)
+    plannedRels = Some(AvroCdcPlan.plannedRels(dirF, parts))
+    parts
   }
+
+  /** Logical paths the last [[planInputPartitions]] call planned (Spark
+    * plans a micro-batch before it asks for its reader factory).
+    */
+  @volatile private var plannedRels: Option[Set[String]] = None
 
   override def createReaderFactory(): PartitionReaderFactory = {
     val renames = AvroFileSource.readColmap(dirF)
     // births FORCED: partitions carry their own (historical) delete
     // sidecar content, so stamp gating may be needed even when the live
-    // sidecar is empty — the map is journal-cached and tiny
+    // sidecar is empty; scoped to the micro-batch's planned files
     AvroCdcReaderFactory(required, dataFull,
-      AvroFileSource.birthsByPhysicalPath(dirF, Nil, force = true),
+      AvroFileSource.birthsByPhysicalPath(dirF, Nil, force = true,
+        planned = plannedRels),
       renames, path)
   }
 
@@ -6022,6 +6065,14 @@ class AvroCdcMicroBatchStream(path: String, required: StructType,
   * journal-version range (s, e].
   */
 private[sources] object AvroCdcPlan {
+
+  /** Logical paths of the files `parts` read: the scope of the births
+    * map their reader factory ships.
+    */
+  def plannedRels(dirF: File, parts: Array[InputPartition]): Set[String] =
+    parts.iterator.collect { case p: AvroCdcPartition =>
+      AvroFileSource.logicalRel(dirF, new File(p.file))
+    }.toSet
 
   def partitions(path: String, s: Long, e: Long,
       allowInitialSnapshot: Boolean,
@@ -6728,11 +6779,8 @@ case class AvroReaderFactory(required: StructType, full: StructType,
       renames.reverseIterator.foldLeft(cur) { case (n, (v, from, to)) =>
         if (birth < v && n == to) from else n
       }
-    val headReader = new DataFileReader[GenericRecord](
-      file, new GenericDatumReader[GenericRecord]())
-    val writerSchema = try headReader.getSchema finally headReader.close()
-    AvroReaderFactory.resolveReader(
-      writerSchema, decodeSchema, file.toString, renamedAway, fileNameOf)
+    AvroReaderFactory.resolveReader(WriterSchemas.of(file).schema,
+      decodeSchema, file.toString, renamedAway, fileNameOf)
   }
 
   private def openRange(partition: InputPartition, decodeSchema: StructType)
@@ -6800,19 +6848,13 @@ case class AvroReaderFactory(required: StructType, full: StructType,
     })
     val hasMeta = outIdx.exists(_ < 0)
     lazy val relPath = org.apache.spark.unsafe.types.UTF8String.fromString {
-      val abs = file.getAbsoluteFile.toPath
-      if (root.nonEmpty) {
-        val raw =
-          new File(root).getAbsoluteFile.toPath.relativize(abs).toString
-        // a snapshot file resolved from the ARCHIVE keeps its LOGICAL
-        // table-relative identity: `_graft_file` coordinates must be
-        // location-independent (the CDC posdel-delta reads join them
-        // against sidecar rels; a travel read of an archived file must
-        // report the same value the live read did)
-        if (raw.startsWith("_graft_archive/"))
-          raw.substring("_graft_archive/".length)
-        else raw
-      } else abs.toString
+      // a snapshot file resolved from the ARCHIVE keeps its LOGICAL
+      // table-relative identity: `_graft_file` coordinates must be
+      // location-independent (the CDC posdel-delta reads join them
+      // against sidecar rels; a travel read of an archived file must
+      // report the same value the live read did)
+      if (root.nonEmpty) AvroFileSource.logicalRel(new File(root), file)
+      else file.getAbsoluteFile.toPath.toString
     }
 
     // positional deletes for THIS file; ordinals are absolute from the

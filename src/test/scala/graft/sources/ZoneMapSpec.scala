@@ -289,6 +289,29 @@ class ZoneMapSpec extends AnyFunSuite with SparkSpec with Matchers {
     agg2.head() shouldBe org.apache.spark.sql.Row(0L, 11999L)
   }
 
+  test("int cells keep pruning and serving MIN/MAX after a widen to bigint") {
+    val dir = tmp()
+    spark.range(0, 10000).select(F.col("id").cast("int").as("k"))
+      .withColumn("payload", F.md5(F.col("k").cast("string")))
+      .repartitionByRange(8, F.col("k"))
+      .sortWithinPartitions("k")
+      .write.format("graft-avro").option("sortedBy", "k")
+      .mode("overwrite").save(dir)
+    val nFiles = AvroFileSource.listAvro(new File(dir)).size
+    nFiles shouldBe 8
+    AvroMaintenance.widenColumn(dir, "k",
+      org.apache.spark.sql.types.LongType)
+    val avro = spark.read.format("graft-avro").load(dir)
+    avro.schema("k").dataType shouldBe org.apache.spark.sql.types.LongType
+    // the pre-widen files' cells carry the `int` tag: still exact bounds
+    val point = avro.filter(F.col("k") === 1234L)
+    scanPartitions(point) shouldBe 1
+    point.count() shouldBe 1
+    val agg = avro.agg(F.min("k"), F.max("k"))
+    scanDescription(agg) should include("PushedAggregation: [MIN(k), MAX(k)]")
+    agg.head() shouldBe org.apache.spark.sql.Row(0L, 9999L)
+  }
+
   test("a leftover _graft_zones file is never read") {
     val dir = tmp()
     writeSorted(dir) // v1
