@@ -2082,22 +2082,21 @@ object AvroFileSource {
     None
   }
 
-  /** Whether a stats cell recorded under type tag `tag` (a leaf type's
-    * `simpleString`) applies to a column read as `dt`: the same type, or
-    * an `int` cell read as `bigint`. ALTER COLUMN TYPE's int → bigint
-    * widening is exact — every int bound, count and sum reads unchanged
-    * as a long — so pre-widen cells keep pruning and serving metadata
-    * aggregates. Other widenings (to double) change the value domain and
-    * leave their cells unread.
+  /** Whether a stats cell recorded under type tag `tag` applies to a
+    * column read as `dt`. The tag is `kind` (`""` for bounds, `cnt:`,
+    * `sum:`) followed by a leaf type's `simpleString`: the read type's
+    * own, or `int` under a `bigint` read type. ALTER COLUMN TYPE's
+    * int → bigint widening is exact — every int bound, count and sum
+    * reads unchanged as a long — so pre-widen cells keep pruning and
+    * serving metadata aggregates. Other widenings (to double) change the
+    * value domain and leave their cells unread.
     */
   private[sources] def cellTypeApplies(tag: String,
-      dt: org.apache.spark.sql.types.DataType): Boolean =
-    tag == dt.simpleString || (dt == LongType && tag == "int")
-
-  /** [[cellTypeApplies]] for a `kind:`-prefixed cell (`cnt:`, `sum:`). */
-  private[sources] def cellKindApplies(tag: String, kind: String,
-      dt: org.apache.spark.sql.types.DataType): Boolean =
-    tag.startsWith(kind) && cellTypeApplies(tag.substring(kind.length), dt)
+      dt: org.apache.spark.sql.types.DataType, kind: String = ""): Boolean =
+    tag.startsWith(kind) && {
+      val t = tag.substring(kind.length)
+      t == dt.simpleString || (dt == LongType && t == "int")
+    }
 
   /** (colEnc, type tag, slot 1, slot 2) of all-column manifest lines by
     * relative path, values still encoded.
@@ -2189,7 +2188,7 @@ object AvroFileSource {
         def count(s: String) =
           if (s.nonEmpty && s.forall(c => c >= '0' && c <= '9')) s.toLongOption
           else None
-        if (!cellKindApplies(dtName, "cnt:", dt)) None
+        if (!cellTypeApplies(dtName, dt, "cnt:")) None
         else for { n <- count(nn); t <- count(total) } yield (n, t)
       }
   }
@@ -3360,13 +3359,13 @@ class AvroScanBuilder(path: String, full: StructType,
             val enc = java.net.URLEncoder.encode(c, "UTF-8")
             raw.getOrElse(rel, Nil).collectFirst {
               case (`enc`, tag, nn, _)
-                  if AvroFileSource.cellKindApplies(tag, "cnt:", d) => nn
+                  if AvroFileSource.cellTypeApplies(tag, d, "cnt:") => nn
             }.filter(_.toLongOption.exists(_ >= 0))
               .map(nn => ("cntv", nn))
               .orElse { // pre-cnt manifests: the sum cell's count slot
                 raw.getOrElse(rel, Nil).collectFirst {
                   case (`enc`, tag, _, n)
-                      if AvroFileSource.cellKindApplies(tag, "sum:", d) => n
+                      if AvroFileSource.cellTypeApplies(tag, d, "sum:") => n
                 }.filter(_.toLongOption.exists(_ >= 0))
                   .map(n => ("cntv", n))
               }
@@ -3375,7 +3374,7 @@ class AvroScanBuilder(path: String, full: StructType,
             val enc = java.net.URLEncoder.encode(c, "UTF-8")
             raw.getOrElse(rel, Nil).collectFirst {
               case (`enc`, tag, s, n)
-                  if AvroFileSource.cellKindApplies(tag, "sum:", d) => (s, n)
+                  if AvroFileSource.cellTypeApplies(tag, d, "sum:") => (s, n)
             }.flatMap { case (s, n) =>
               (s.toLongOption, n.toLongOption) match {
                 case (Some(_), Some(nv)) if nv >= 0 =>
@@ -3639,7 +3638,7 @@ class AvroScanBuilder(path: String, full: StructType,
                 val perFile = alive.map { rel =>
                   raw.getOrElse(rel, Nil).collectFirst {
                     case (`enc`, tag, s, n)
-                        if AvroFileSource.cellKindApplies(tag, "sum:", d) =>
+                        if AvroFileSource.cellTypeApplies(tag, d, "sum:") =>
                       for {
                         sv <- s.toLongOption
                         nv <- n.toLongOption if nv >= 0
@@ -3669,12 +3668,12 @@ class AvroScanBuilder(path: String, full: StructType,
               val perFile = alive.map { rel =>
                 raw.getOrElse(rel, Nil).collectFirst {
                   case (`enc`, tag, nn, _)
-                      if AvroFileSource.cellKindApplies(tag, "cnt:", d) =>
+                      if AvroFileSource.cellTypeApplies(tag, d, "cnt:") =>
                     nn.toLongOption
                 }.flatten.filter(_ >= 0).orElse {
                   raw.getOrElse(rel, Nil).collectFirst {
                     case (`enc`, tag, _, n)
-                        if AvroFileSource.cellKindApplies(tag, "sum:", d) =>
+                        if AvroFileSource.cellTypeApplies(tag, d, "sum:") =>
                       n.toLongOption
                   }.flatten.filter(_ >= 0)
                 }
@@ -5326,7 +5325,7 @@ class AvroScanBuilder(path: String, full: StructType,
                 val per = liveRels.map { rel =>
                   raw.getOrElse(rel, Nil).collectFirst {
                     case (`enc`, tag, nn, tot) if AvroFileSource
-                        .cellKindApplies(tag, "cnt:", fld.dataType) =>
+                        .cellTypeApplies(tag, fld.dataType, "cnt:") =>
                       (nn.toLongOption, tot.toLongOption) match {
                         case (Some(a), Some(b)) if a >= 0 && b >= a =>
                           Some(b - a)
