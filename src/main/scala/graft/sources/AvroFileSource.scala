@@ -1581,35 +1581,43 @@ object AvroFileSource {
     * versions (a dropped `-` delta would resurrect an overwritten file).
     */
   /** Parse caches for the snapshot journal, keyed by the journal file's
-    * (lastModified, length) — every journal mutation is an atomic
-    * rename that changes both (appends strictly grow; rewrites stamp
-    * fresh millis), so a hit is a safe serve. This is the planning-cost
+    * [[FileIdentity]] — every journal mutation is an atomic rename of a
+    * fresh file, so a hit is a safe serve. This is the planning-cost
     * complement of journal-served listing: without it every scan of
-    * every query re-parses O(versions × files) text. Bounded: cleared
-    * wholesale past [[MaxJournalCacheTables]] tables (tests mint
-    * thousands of temp tables per JVM).
+    * every query re-parses O(versions × files) text. A parse is stored
+    * only when a stat after it still shows the identity it began with.
+    * [[appendSnapshot]] seeds both caches with the state it appends, so
+    * the first read after a commit hits too. Bounded: cleared wholesale
+    * past [[MaxJournalCacheTables]] tables (tests mint thousands of temp
+    * tables per JVM).
     */
   private val MaxJournalCacheTables = 64
   private val snapshotsCache = new java.util.concurrent
-    .ConcurrentHashMap[String, (Long, Long, Seq[Snapshot])]()
+    .ConcurrentHashMap[String, (FileIdentity, Seq[Snapshot])]()
   private val birthsCache = new java.util.concurrent
-    .ConcurrentHashMap[String, (Long, Long, Map[String, Long])]()
+    .ConcurrentHashMap[String, (FileIdentity, Map[String, Long])]()
   /** Test observability: actual journal text parses (JournalCacheSpec). */
   private[sources] val journalParses =
     new java.util.concurrent.atomic.AtomicLong(0)
 
+  private def cacheJournal[T](key: String, id: FileIdentity, v: T,
+      cache: java.util.concurrent.ConcurrentHashMap[String, (FileIdentity, T)])
+      : Unit = {
+    if (cache.size >= MaxJournalCacheTables) cache.clear()
+    cache.put(key, (id, v))
+  }
+
   private def cachedJournal[T](jf: File,
-      cache: java.util.concurrent.ConcurrentHashMap[String, (Long, Long, T)])
+      cache: java.util.concurrent.ConcurrentHashMap[String, (FileIdentity, T)])
       (parse: => T): T = {
     val key = jf.getAbsolutePath
-    val mt = jf.lastModified()
-    val ln = jf.length()
+    val id = FileIdentity.of(jf)
     val hit = cache.get(key)
-    if (hit != null && hit._1 == mt && hit._2 == ln) hit._3
+    if (hit != null && id.contains(hit._1)) hit._2
     else {
       val v = parse
-      if (cache.size >= MaxJournalCacheTables) cache.clear()
-      cache.put(key, (mt, ln, v))
+      id.filter(i => FileIdentity.of(jf).contains(i))
+        .foreach(cacheJournal(key, _, v, cache))
       v
     }
   }
@@ -1620,10 +1628,10 @@ object AvroFileSource {
     cachedJournal(jf, snapshotsCache)(parseSnapshots(jf))
   }
 
-  private def parseSnapshots(jf: File): Seq[Snapshot] = {
+  private[sources] def parseSnapshots(jf: File): Seq[Snapshot] = {
     journalParses.incrementAndGet()
     val src = scala.io.Source.fromFile(jf, "UTF-8")
-    val lines = try src.getLines().filter(_.nonEmpty).toList finally src.close()
+    val lines = try src.getLines().filter(_.nonEmpty).toVector finally src.close()
     var files = Vector.empty[String]
     // O(1) membership next to the ordered vector: the replay is on the
     // scan-planning hot path (listLive), so per-token `contains` over
@@ -1721,7 +1729,7 @@ object AvroFileSource {
     cachedJournal(jf, birthsCache)(parseBirths(jf))
   }
 
-  private def parseBirths(jf: File): Map[String, Long] = {
+  private[sources] def parseBirths(jf: File): Map[String, Long] = {
     journalParses.incrementAndGet()
     val src = scala.io.Source.fromFile(jf, "UTF-8")
     val lines = try src.getLines().filter(_.nonEmpty).toList finally src.close()
@@ -1792,6 +1800,9 @@ object AvroFileSource {
       else None
     val dels = sidecarContent(deleteFile(d))
     val poss = sidecarContent(posdelFile(d))
+    val jf = snapshotsFile(d)
+    val key = jf.getAbsolutePath
+    val read0 = FileIdentity.of(jf)
     val prior = readSnapshots(d)
     val last = prior.lastOption
     // `force` mints a version even with no state delta — metadata-only
@@ -1800,35 +1811,59 @@ object AvroFileSource {
     if (!force &&
       last.exists(s => s.files.sorted == live && s.deletes == dels &&
         s.posdels == poss)) return
-    val prevFiles = last.map(_.files.toSet).getOrElse(Set.empty)
+    val prevFiles = last.map(_.files).getOrElse(Vector.empty)
+    val adds = live.filterNot(prevFiles.toSet)
+    val gone = prevFiles.filterNot(live.toSet)
     val deltas =
-      live.filterNot(prevFiles).map(r =>
-        "+" + java.net.URLEncoder.encode(r, "UTF-8")) ++
-      (prevFiles -- live).toSeq.sorted.map(r =>
-        "-" + java.net.URLEncoder.encode(r, "UTF-8"))
+      adds.map(r => "+" + java.net.URLEncoder.encode(r, "UTF-8")) ++
+      gone.sorted.map(r => "-" + java.net.URLEncoder.encode(r, "UTF-8"))
     val delCol =
       if (last.map(_.deletes).getOrElse(None) == dels) "~"
       else dels.map(java.net.URLEncoder.encode(_, "UTF-8")).getOrElse("-")
     val posCol =
       if (last.map(_.posdels).getOrElse(None) == poss) "~"
       else poss.map(java.net.URLEncoder.encode(_, "UTF-8")).getOrElse("-")
+    val version = last.map(_.version).getOrElse(0L) + 1
+    val millis = System.currentTimeMillis()
     val line = Seq(
-      (last.map(_.version).getOrElse(0L) + 1).toString,
-      System.currentTimeMillis().toString,
+      version.toString,
+      millis.toString,
       java.net.URLEncoder.encode(kind, "UTF-8"),
       delCol,
       if (deltas.isEmpty) "-" else deltas.mkString(","),
       posCol).mkString("\t")
-    val jf = snapshotsFile(d)
     val existing =
       if (jf.isFile)
         new String(java.nio.file.Files.readAllBytes(jf.toPath), "UTF-8")
       else ""
+    // the state replayed above is the journal just read: unchanged
+    // identity, and the snapshot cache holds `prior` for it
+    val seeded = FileIdentity.of(jf) == read0 && read0.forall(id =>
+      Option(snapshotsCache.get(key)).exists(h => h._1 == id && (h._2 eq prior)))
     val tmp = new File(jf.getPath + ".staging")
     java.nio.file.Files.write(tmp.toPath,
       (existing + line + "\n").getBytes("UTF-8"))
+    val written = FileIdentity.of(tmp)
     if (!tmp.renameTo(jf)) throw new java.io.IOException(
       s"graft-avro commit: rename failed $tmp -> $jf")
+    // seed both caches with what a parse of the written journal yields
+    for (w <- written if seeded) {
+      val files =
+        if (gone.isEmpty) prevFiles.toVector ++ adds
+        else (prevFiles.toVector ++ adds).filterNot(gone.toSet)
+      cacheJournal(key, w,
+        prior :+ Snapshot(version, millis, kind, dels, files, poss),
+        snapshotsCache)
+      val priorBirths = read0 match {
+        case None => Some(Map.empty[String, Long])
+        case Some(id) => Option(birthsCache.get(key)).filter(_._1 == id).map(_._2)
+      }
+      priorBirths.foreach { bs =>
+        val born = if (prior.isEmpty) 0L else version
+        cacheJournal(key, w,
+          bs ++ adds.filterNot(bs.contains).map(_ -> born), birthsCache)
+      }
+    }
   }
 
   /** Resolve a snapshot's relative path to its physical file: live
@@ -2109,90 +2144,6 @@ object AvroFileSource {
       : Map[String, Seq[(String, String, String, String)]] =
     colZonesByRel(StatsManifests.read(StatsManifests.ColZones, zf)(_.toVector))
 
-  /** `_graft_zones_cols` of `dir` (empty when absent), read on first use. */
-  private[sources] def colZoneManifest(dir: File, full: StructType)
-      : ColZoneManifest =
-    new ColZoneManifest(colZoneFile(dir), dir, full)
-
-  /** One parse of the all-column manifest `zf` (empty when absent) and
-    * the typed per-column views over it, each built at most once and
-    * only for the columns asked about: a scan's decided pushdown, zone
-    * pruning, null-cell pruning and metadata aggregates all read the
-    * same instance, and a point lookup on one column types that
-    * column's cells alone. Each column's name and read-schema leaf type
-    * resolve once per manifest, not once per cell.
-    */
-  private[sources] final class ColZoneManifest(zf: File, base: File,
-      full: StructType) {
-    private lazy val lines =
-      StatsManifests.read(StatsManifests.ColZones, zf)(_.toVector)
-
-    /** The manifest keyed by relative path, as [[readColZonesRaw]]
-      * returns it (values still encoded), for the metadata aggregates.
-      */
-    lazy val raw: Map[String, Seq[(String, String, String, String)]] =
-      colZonesByRel(lines)
-
-    // dotted column -> (read-schema leaf type, its cells as (rel, type
-    // tag, slot 1, slot 2)); columns the read schema lacks drop here
-    private lazy val byColumn: Map[String,
-        (org.apache.spark.sql.types.DataType,
-          Seq[(String, String, String, String)])] =
-      lines.groupMap(_(1))(l => (l.rel, l(2), l(3), l(4))).toSeq
-        .groupMapReduce(e => java.net.URLDecoder.decode(e._1, "UTF-8"))(
-          _._2)(_ ++ _)
-        .flatMap { case (col, cs) =>
-          AvroFilterEval.leafType(full, col).map(dt => col -> (dt, cs))
-        }
-
-    /** Columns of the read schema with at least one cell. */
-    def columns: Iterable[String] = byColumn.keys
-
-    private val absPaths = scala.collection.mutable.HashMap.empty[String, String]
-    private val boundsMemo =
-      scala.collection.mutable.HashMap.empty[String, Map[String, (Any, Any)]]
-    private val nullsMemo =
-      scala.collection.mutable.HashMap.empty[String, Map[String, (Long, Long)]]
-    private def view[V](memo: scala.collection.mutable.HashMap[String,
-        Map[String, V]], col: String)(cell: (
-        org.apache.spark.sql.types.DataType, String, String, String)
-        => Option[V]): Map[String, V] = synchronized {
-      memo.getOrElseUpdate(col, byColumn.get(col) match {
-        case None => Map.empty
-        case Some((dt, cs)) => cs.iterator.flatMap { case (rel, dtName, a, b) =>
-          cell(dt, dtName, a, b).map(absPaths.getOrElseUpdate(rel,
-            new File(base, rel).getAbsolutePath) -> _)
-        }.toMap
-      })
-    }
-
-    /** Zone bounds of `col`: ABSOLUTE file path → (min, max). Entries
-      * whose recorded type disagrees with the read schema, or whose
-      * values fail to parse, drop — their files scan normally.
-      */
-    def boundsOf(col: String): Map[String, (Any, Any)] =
-      view(boundsMemo, col) { (dt, dtName, mn, mx) =>
-        if (!cellTypeApplies(dtName, dt)) None
-        else for {
-          lo <- castPartitionValue(mn, dt) if lo != null
-          hi <- castPartitionValue(mx, dt) if hi != null
-        } yield (lo, hi)
-      }
-
-    /** `cnt:` cells of `col`: ABSOLUTE file path → (non-null count, row
-      * total). Entries whose recorded leaf type disagrees with the read
-      * schema drop (type-tag invisibility, like every other cell kind).
-      */
-    def nullCellsOf(col: String): Map[String, (Long, Long)] =
-      view(nullsMemo, col) { (dt, dtName, nn, total) =>
-        def count(s: String) =
-          if (s.nonEmpty && s.forall(c => c >= '0' && c <= '9')) s.toLongOption
-          else None
-        if (!cellTypeApplies(dtName, dt, "cnt:")) None
-        else for { n <- count(nn); t <- count(total) } yield (n, t)
-      }
-  }
-
   /** Per-live-file EXACT-bounds providers for tri-state filter
     * decisions ([[AvroFilterEval.zoneDecides]]): each file pairs with a
     * `col => Option[(mn, mx)]` answering from its hive partition-path
@@ -2209,7 +2160,7 @@ object AvroFileSource {
     * zone-decided metadata DELETE; both must stay decision-compatible.
     */
   private[sources] def decisionBounds(dir: File, full: StructType,
-      manifest: ColZoneManifest)
+      manifest: ZoneIndex.Zones)
       : Option[Seq[(File, String => Option[(Any, Any)],
         String => Option[(Boolean, Boolean)])]] = {
     if (colmapFile(dir).isFile) return None
@@ -2630,7 +2581,7 @@ case class AvroTable(path: String, tableSchema: StructType,
     // rows die iff ALL conjuncts match: decide the conjunction per file
     val cond = v1.flatten.reduce(org.apache.spark.sql.sources.And(_, _))
     val bounds = AvroFileSource.decisionBounds(new File(path), tableSchema,
-      AvroFileSource.colZoneManifest(new File(path), tableSchema))
+      ZoneIndex.of(new File(path), tableSchema))
       .getOrElse(return None)
     val decisions = bounds.map { case (f, boundsOf, nullsOf) =>
       (f, AvroFilterEval.zoneDecides(boundsOf, cond, nullsOf))
@@ -2996,11 +2947,14 @@ class AvroScanBuilder(path: String, full: StructType,
 
   private var required: StructType = full
   private var pushed: Array[Filter] = Array.empty
-  // `_graft_zones_cols` as of this scan's planning, parsed at most once:
-  // decided pushdown, the metadata aggregates and the Scan's zone,
-  // null-cell and column-stat views all read it (live reads only —
-  // every consumer stands down for travel, branch and incremental reads)
-  private lazy val colZones = AvroFileSource.colZoneManifest(new File(path), full)
+  // `_graft_zones_cols` as of this scan's planning: decided pushdown and
+  // the Scan's zone and null-cell views read the zone index's views, the
+  // metadata aggregates and column stats the lines, parsed at most once
+  // (live reads only — every consumer stands down for travel, branch and
+  // incremental reads)
+  private lazy val colZones = ZoneIndex.of(new File(path), full)
+  private lazy val colZonesRaw =
+    AvroFileSource.readColZonesRaw(AvroFileSource.colZoneFile(new File(path)))
   private var fullyPushed: Array[Filter] = Array.empty
   // (files the decisions covered, files EVERY fully-pushed filter
   // all-matches) — absolute paths, pinned at pushFilters time
@@ -3348,7 +3302,7 @@ class AvroScanBuilder(path: String, full: StructType,
       // coverage is required of CLEAN files only (dirty files re-scan);
       // an all-dirty table needs no manifest at all
       if (cleanLive.nonEmpty && !zfc.isFile) return false
-      val raw = colZones.raw
+      val raw = colZonesRaw
       val base = dirF.getAbsoluteFile.toPath
       val perFile = cleanLive.map { case (f, _) =>
         val rel = base.relativize(f.getAbsoluteFile.toPath).toString
@@ -3551,7 +3505,7 @@ class AvroScanBuilder(path: String, full: StructType,
       (!needZones || zfc.isFile) && {
         val base = dirF.getAbsoluteFile.toPath
         val raw =
-          if (needZones) colZones.raw
+          if (needZones) colZonesRaw
           else Map.empty[String, Seq[(String, String, String, String)]]
         // under fully-decided filters the fold covers the KEEP-set only:
         // every kept file all-matches, so full-file stats are exact
@@ -4773,6 +4727,29 @@ class AvroScanBuilder(path: String, full: StructType,
         case None => new UnknownPartitioning(0)
       }
 
+      // merge-on-read: parse the equality-delete sidecar ONCE at plan
+      // time (a corrupt sidecar fails the read here, driver-side). A
+      // time-travel read applies the SNAPSHOT's recorded deletes — the
+      // current sidecar may postdate (or predate) the version.
+      private lazy val rowDeletes: Seq[AvroFileSource.DeleteEntry] =
+        travelState.map(_._2).orElse(branchState.map(_._2)) match {
+          case Some(del) => del
+            .map(AvroFileSource.parseDeleteContent(_, full)).getOrElse(Nil)
+          case None =>
+            val delF = AvroFileSource.deleteFile(new File(path))
+            if (delF.isFile) AvroFileSource.readDeletes(delF, full)
+            else Nil
+        }
+      private lazy val rowRenames = AvroFileSource.readColmap(new File(path))
+      // birth versions of the planned files by absolute path: stamped
+      // deletes and renames consult them, and a branch pins its overlay
+      private lazy val rowBirths: Map[String, Long] =
+        AvroFileSource.birthsByPhysicalPath(new File(path), rowDeletes,
+          force = rowRenames.nonEmpty,
+          planned = Some(prunedFiles().map(p => logicalRelOf(p._1)).toSet)) ++
+          branchState.map(_._3).getOrElse(Map.empty)
+      private def rowBirth(file: String): Long = rowBirths.getOrElse(file, 0L)
+
       // absolute-path-keyed positional deletes (live + archive); split
       // ranges seed their ordinal via the block-header prefix walk.
       // Historical reads apply their SNAPSHOT's recorded overlay (the
@@ -4910,7 +4887,8 @@ class AvroScanBuilder(path: String, full: StructType,
         } else {
           val base: Array[InputPartition] = keyedFiles() match {
             case Some(files) => files.flatMap { case (f, key) =>
-              split(f).map { case (p, s, e) => AvroKeyedPartition(p, s, e, key) }
+              split(f).map { case (p, s, e) =>
+                AvroKeyedPartition(p, s, e, key, rowBirth(p)) }
             }.toArray[InputPartition]
             case None =>
               // row-level ops: remember exactly which files this scan
@@ -4934,9 +4912,10 @@ class AvroScanBuilder(path: String, full: StructType,
                   else None
                 chunked match {
                   case Some(rs) => rs.map { case (s, e) =>
-                    AvroInputPartition(f.getAbsolutePath, s, e) }
+                    AvroInputPartition(f.getAbsolutePath, s, e,
+                      rowBirth(f.getAbsolutePath)) }
                   case None => split(f).map { case (p, s, e) =>
-                    AvroInputPartition(p, s, e) }
+                    AvroInputPartition(p, s, e, rowBirth(p)) }
                 }
               }.toArray[InputPartition]
           }
@@ -4997,20 +4976,6 @@ class AvroScanBuilder(path: String, full: StructType,
           }
         }
         else {
-          // merge-on-read: parse the equality-delete sidecar ONCE at plan
-          // time (a corrupt sidecar fails the read here, driver-side).
-          // A time-travel read applies the SNAPSHOT's recorded deletes —
-          // the current sidecar may postdate (or predate) the version.
-          val dels = travelState.map(_._2)
-            .orElse(branchState.map(_._2)) match {
-            case Some(del) => del
-              .map(AvroFileSource.parseDeleteContent(_, full)).getOrElse(Nil)
-            case None =>
-              val delF = AvroFileSource.deleteFile(new File(path))
-              if (delF.isFile) AvroFileSource.readDeletes(delF, full)
-              else Nil
-          }
-          val renames = AvroFileSource.readColmap(new File(path))
           // ROW-LEVEL contract: pushed filters prune FILES (a pruned
           // file provably holds no match, so it is not an affected
           // group), but must never skip ROWS — Spark rewrites whole
@@ -5019,12 +4984,9 @@ class AvroScanBuilder(path: String, full: StructType,
           val rowFilters =
             if (rowLevelCapture.isDefined) Array.empty[Filter] else filters
           val rowLimit = if (rowLevelCapture.isDefined) None else limit
-          AvroReaderFactory(required, full, rowFilters, rowLimit, dels,
-            AvroFileSource.birthsByPhysicalPath(new File(path), dels,
-              force = renames.nonEmpty,
-              planned = Some(prunedFiles().map(p => logicalRelOf(p._1)).toSet)) ++
-              branchState.map(_._3).getOrElse(Map.empty),
-            renames, posdelsByPath, root = path,
+          // births ride on the partitions (rowBirth), not the factory
+          AvroReaderFactory(required, full, rowFilters, rowLimit, rowDeletes,
+            Map.empty, rowRenames, posdelsByPath, root = path,
             columnarBatch = columnarRows)
         }
       override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream = {
@@ -5052,7 +5014,7 @@ class AvroScanBuilder(path: String, full: StructType,
         * OOM executors), so compressed containers are scaled up:
         * `spark.sql.sources.fileCompressionFactor` when the user set it,
         * else 3× for any real codec (1× for codec "null"), decided from
-        * the first file's header.
+        * the first file's header as [[WriterSchemas]] memoizes it.
         */
       override def estimateStatistics(): Statistics = new Statistics {
         // fully-pushed decided filters restrict the scan to the pinned
@@ -5069,11 +5031,8 @@ class AvroScanBuilder(path: String, full: StructType,
           if (!conf.isNaN && conf > 0) conf
           else {
             val codec = files.headOption.flatMap { f =>
-              try {
-                val r = new DataFileReader[GenericRecord](
-                  f, new GenericDatumReader[GenericRecord]())
-                try Option(r.getMetaString("avro.codec")) finally r.close()
-              } catch { case _: Exception => None }
+              try Some(WriterSchemas.of(f).codec)
+              catch { case _: Exception => None }
             }.getOrElse("null")
             if (codec == "null") 1.0 else 3.0
           }
@@ -5195,14 +5154,14 @@ class AvroScanBuilder(path: String, full: StructType,
               }.toMap
             }
           }
-          val colZonesRaw: Option[Map[String,
+          val zonesRaw: Option[Map[String,
               Seq[(String, String, String, String)]]] = {
             val zfc = AvroFileSource.colZoneFile(new File(path))
-            if (zfc.isFile) Some(colZones.raw) else None
+            if (zfc.isFile) Some(colZonesRaw) else None
           }
           val boundsByCol: Map[String, (Any, Any)] = {
             import org.apache.spark.sql.types._
-            colZonesRaw match {
+            zonesRaw match {
               case None => Map.empty
               case Some(raw) =>
               full.fields.toSeq.flatMap { fld =>
@@ -5317,7 +5276,7 @@ class AvroScanBuilder(path: String, full: StructType,
           // nulls (its dead rows then can't include one — the surviving
           // null count stays exactly the clean-file sum); any null in a
           // dirty file is maybe-dead ⇒ withhold the column.
-          val nullsByCol: Map[String, Long] = colZonesRaw match {
+          val nullsByCol: Map[String, Long] = zonesRaw match {
             case None => Map.empty
             case Some(raw) =>
               full.fields.toSeq.flatMap { fld =>
@@ -6387,10 +6346,12 @@ case class AvroCdcReaderFactory(required: StructType, dataFull: StructType,
   * after `start` (position 0 lands after the header), `pastSync(end)`
   * stops once the range is exhausted — so adjacent ranges partition the
   * file's blocks with no overlap and no gap (the Hadoop AvroRecordReader
-  * contract).
+  * contract). `birth` is the file's birth version where the scan's
+  * reader factory carries no births map (a main batch scan: each task
+  * then deserializes its own file's birth, not every planned file's).
   */
-case class AvroInputPartition(file: String, start: Long, end: Long)
-  extends InputPartition
+case class AvroInputPartition(file: String, start: Long, end: Long,
+    birth: Long = 0L) extends InputPartition
 
 /** A sync-aligned byte range that also carries its directory-derived
   * partition-key tuple (Catalyst-internal values) for Spark's
@@ -6398,7 +6359,8 @@ case class AvroInputPartition(file: String, start: Long, end: Long)
   * splits into one task when the partitioning is exploited.
   */
 case class AvroKeyedPartition(file: String, start: Long, end: Long,
-    key: InternalRow) extends InputPartition with HasPartitionKey {
+    key: InternalRow, birth: Long = 0L)
+  extends InputPartition with HasPartitionKey {
   override def partitionKey(): InternalRow = key
 }
 
@@ -6410,7 +6372,8 @@ object AvroReaderFactory {
     */
   private[sources] def range(p: InputPartition): AvroInputPartition = p match {
     case a: AvroInputPartition => a
-    case k: AvroKeyedPartition => AvroInputPartition(k.file, k.start, k.end)
+    case k: AvroKeyedPartition =>
+      AvroInputPartition(k.file, k.start, k.end, k.birth)
     case other => throw new IllegalArgumentException(s"not an avro partition: $other")
   }
 
@@ -6624,8 +6587,8 @@ case class AvroReaderFactory(required: StructType, full: StructType,
     // merge-on-read on the columnar path: widen pruned-away delete
     // columns into the decode schema (row-path rule) — the batch
     // exposes only the `required` prefix
-    val fileDeletes = AvroFileSource.applicableDeletes(deletes,
-      births.getOrElse(file.getAbsolutePath, 0L))
+    val birth = birthOf(part)
+    val fileDeletes = AvroFileSource.applicableDeletes(deletes, birth)
     val extraDelCols = fileDeletes.map(_._1).distinct
       .filterNot(c => required.fieldNames.contains(c))
       .map(c => full.fields.find(_.name == c).getOrElse(
@@ -6634,7 +6597,7 @@ case class AvroReaderFactory(required: StructType, full: StructType,
     val decodeStruct =
       if (extraDelCols.isEmpty) required
       else StructType(required.fields ++ extraDelCols)
-    val readerSchema = resolveFor(file, decodeStruct)
+    val readerSchema = resolveFor(file, birth, decodeStruct)
     // direct block-bytes → vector decode: no GenericRecord, no boxed
     // fields, no intermediate InternalRow (see VectorAvroDatumReader).
     // Residual filters are NOT evaluated at decode here — ours are
@@ -6770,8 +6733,14 @@ case class AvroReaderFactory(required: StructType, full: StructType,
     * file's birth version (renames with version > birth read through
     * reader-field aliases; renamed-away names get shadow fields).
     */
-  private def resolveFor(file: File, decodeSchema: StructType): Schema = {
-    val birth = births.getOrElse(file.getAbsolutePath, 0L)
+  /** A partition's file birth: from the births map when the factory
+    * carries one, else the partition's own.
+    */
+  private def birthOf(part: AvroInputPartition): Long =
+    births.getOrElse(new File(part.file).getAbsolutePath, part.birth)
+
+  private def resolveFor(file: File, birth: Long,
+      decodeSchema: StructType): Schema = {
     val renamedAway: Set[String] =
       renames.collect { case (v, from, _) if birth < v => from }.toSet
     val fileNameOf: String => String = cur =>
@@ -6787,7 +6756,7 @@ case class AvroReaderFactory(required: StructType, full: StructType,
          org.apache.avro.generic.IndexedRecord => InternalRow) = {
     val part = AvroReaderFactory.range(partition)
     val file = new File(part.file)
-    val readerSchema = resolveFor(file, decodeSchema)
+    val readerSchema = resolveFor(file, birthOf(part), decodeSchema)
     val reader = new DataFileReader[GenericRecord](file,
       new GenericDatumReader[GenericRecord](null, readerSchema))
     if (part.start > 0) reader.sync(part.start)
@@ -6804,8 +6773,7 @@ case class AvroReaderFactory(required: StructType, full: StructType,
     // versioned merge-on-read: restrict the sidecar to entries in force
     // for THIS file's birth version (absent from the journal ⇒ birth 0 ⇒
     // every delete applies — the legacy, maximally-deleting behavior)
-    val fileDeletes = AvroFileSource.applicableDeletes(deletes,
-      births.getOrElse(file.getAbsolutePath, 0L))
+    val fileDeletes = AvroFileSource.applicableDeletes(deletes, birthOf(part))
     // Hidden metadata columns never decode from Avro — split them off
     // and fill per row at emit (file path once, ordinal from the
     // posdel counter, which runs regardless).

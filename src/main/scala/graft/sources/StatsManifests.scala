@@ -137,12 +137,16 @@ private[graft] object StatsManifests {
   /** Fold `messages`' fresh entries for `fam` into its sidecar in `d`:
     * valid prior lines stay verbatim, a fresh entry replaces every prior
     * line of its file, files outside `alive` drop, lines sort by `rel`,
-    * and the file is replaced through a `.staging` rename.
+    * and the file is replaced through a `.staging` rename. A fold of
+    * [[ColZones]] carries the [[ZoneIndex]] entry of the file it read
+    * over to the file it wrote.
     */
   def fold(fam: Family, d: File, messages: Seq[AvroCommitMessage],
       alive: Set[String]): Unit = {
-    import scala.collection.mutable.{ArrayBuffer, HashMap}
-    val byRel = read(fam, fam.in(d)) { lines =>
+    import scala.collection.mutable.{ArrayBuffer, HashMap, HashSet}
+    val f = fam.in(d)
+    val read0 = if (fam eq ColZones) FileIdentity.of(f) else None
+    val byRel = read(fam, f) { lines =>
       val m = HashMap.empty[String, ArrayBuffer[String]]
       lines.foreach { l =>
         if (fam.onePerFile) m(l.rel) = ArrayBuffer(l.text)
@@ -150,14 +154,22 @@ private[graft] object StatsManifests {
       }
       m
     }
+    val read1 = if (fam eq ColZones) FileIdentity.of(f) else None
+    // files whose prior lines leave: replaced by a fresh entry, or dead
+    val removed = HashMap.empty[String, ArrayBuffer[String]]
+    val fresh = HashSet.empty[String]
     val base = d.getAbsoluteFile.toPath
     messages.flatMap(fam.entries).foreach { case (fin, es) =>
       val rel = base.relativize(new File(fin).getAbsoluteFile.toPath).toString
-      byRel(rel) = es.iterator.map {
+      val lines = es.iterator.map {
         case p: Product => p.productIterator.mkString(rel + "\t", "\t", "")
         case v => s"$rel\t$v"
       }.to(ArrayBuffer)
+      val prior = byRel.put(rel, lines)
+      if (fresh.add(rel)) prior.foreach(removed(rel) = _)
     }
+    byRel.keysIterator.filterNot(alive).foreach(rel =>
+      if (!fresh(rel)) removed(rel) = byRel(rel))
     val out = new java.lang.StringBuilder
     byRel.keysIterator.filter(alive).toArray.sorted.foreach { rel =>
       byRel(rel).foreach { line =>
@@ -165,7 +177,12 @@ private[graft] object StatsManifests {
         out.append(line)
       }
     }
-    replace(fam.in(d), out.toString, "commit")
+    val written = replace(f, out.toString, "commit")
+    for (r <- read0 if read1.contains(r); w <- written)
+      ZoneIndex.carry(f.getAbsoluteFile, r, w, removed.keys ++ fresh,
+        removed.valuesIterator.flatten.map(new Line(_)).toSeq,
+        fresh.iterator.filter(alive).toArray.sorted.iterator
+          .flatMap(byRel(_)).map(new Line(_)).filter(fam.valid).toSeq)
   }
 
   /** Whether a commit of `messages` folds `fam` in `d`: it carries
@@ -204,10 +221,16 @@ private[graft] object StatsManifests {
   /** Rollback: drop every sidecar of `d` (absence ⇒ scan). */
   def drop(d: File): Unit = Folded.foreach(fam => fam.in(d).delete())
 
-  private def replace(f: File, content: String, op: String): Unit = {
+  /** Replace `f` by `content` through a `.staging` rename; the
+    * identity of the file written (a rename keeps it).
+    */
+  private def replace(f: File, content: String, op: String)
+      : Option[FileIdentity] = {
     val tmp = new File(f.getPath + ".staging")
     Files.write(tmp.toPath, content.getBytes(UTF_8))
+    val written = FileIdentity.of(tmp)
     if (!tmp.renameTo(f)) throw new java.io.IOException(
       s"graft-avro $op: rename failed $tmp -> $f")
+    written
   }
 }

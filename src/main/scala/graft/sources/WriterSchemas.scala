@@ -12,12 +12,12 @@ import org.apache.spark.sql.types.StructType
 
 import graft.avro.AvroSchemaConverter
 
-/** Process-wide memo: data file → writer schema, so a JVM opens each
-  * data file's Avro header once, not once per `load`, per delete or per
-  * scan task.
+/** Process-wide memo: data file → writer schema and codec, so a JVM
+  * opens each data file's Avro header once, not once per `load`, per
+  * delete, per scan task or per size estimate.
   *
-  * An entry is keyed by the file's identity: absolute path, `fileKey`
-  * (device and inode where the file system has them), modification
+  * An entry is keyed by the file's [[FileIdentity]]: absolute path,
+  * `fileKey` (device and inode where the file system has them), modification
   * time in nanoseconds and size, all from one `readAttributes` call.
   * Data files are immutable and their names generation-unique, so a
   * file replaced under its name (a rename, a rewrite) changes that
@@ -43,30 +43,22 @@ private[sources] object WriterSchemas {
   final class Interned private[WriterSchemas] (val schema: Schema,
       val struct: StructType)
 
-  /** One lookup's answer: the file's interned schema and its
+  /** One lookup's answer: the file's interned schema, its
+    * `avro.codec` (`"null"` when the header names none) and its
     * modification time in milliseconds (what `File.lastModified`
     * reports, the inference sort key), from the same stat.
     */
   final class Header private[WriterSchemas] (val millis: Long,
-      val interned: Interned) {
+      val interned: Interned, val codec: String) {
     def schema: Schema = interned.schema
     def struct: StructType = interned.struct
   }
 
-  private final class Entry(val fileKey: AnyRef, val nanos: Long,
-      val size: Long, val interned: Interned) {
-    def matches(a: BasicFileAttributes): Boolean =
-      nanos == nanosOf(a) && size == a.size() && fileKey == a.fileKey()
-  }
+  private final class Entry(val id: FileIdentity, val interned: Interned,
+      val codec: String)
 
   private val byPath = new ConcurrentHashMap[String, Entry]()
   private val bySchema = new ConcurrentHashMap[Schema, Interned]()
-
-  private def nanosOf(a: BasicFileAttributes): Long =
-    a.lastModifiedTime().to(TimeUnit.NANOSECONDS)
-
-  private def stat(f: File): BasicFileAttributes =
-    Files.readAttributes(f.toPath, classOf[BasicFileAttributes])
 
   private def intern(s: Schema): Interned = {
     val hit = bySchema.get(s)
@@ -84,20 +76,45 @@ private[sources] object WriterSchemas {
     */
   def of(f: File): Header = {
     val key = f.getAbsolutePath
-    val a = stat(f)
+    val a = FileIdentity.attributes(f)
+    val id = FileIdentity(a)
     val millis = a.lastModifiedTime().toMillis
     val hit = byPath.get(key)
-    if (hit != null && hit.matches(a)) new Header(millis, hit.interned)
+    if (hit != null && hit.id == id) new Header(millis, hit.interned, hit.codec)
     else {
       val r = new DataFileReader[GenericRecord](
         f, new GenericDatumReader[GenericRecord]())
-      val interned = try intern(r.getSchema) finally r.close()
-      val entry = new Entry(a.fileKey(), nanosOf(a), a.size(), interned)
-      if (entry.matches(stat(f))) {
+      val entry = try new Entry(id, intern(r.getSchema),
+        Option(r.getMetaString("avro.codec")).getOrElse("null").intern())
+      finally r.close()
+      if (FileIdentity.of(f).contains(id)) {
         if (byPath.size >= MaxFiles) byPath.clear()
         byPath.put(key, entry)
       }
-      new Header(millis, interned)
+      new Header(millis, entry.interned, entry.codec)
     }
   }
+}
+
+/** A file's identity as one `readAttributes` call sees it: `fileKey`
+  * (device and inode where the file system has them), modification time
+  * in nanoseconds and size. A file rewritten or replaced under its name
+  * gets a new identity; an in-place edit that restores size and time
+  * keeps it, which no memo keyed this way can see.
+  */
+private[sources] final case class FileIdentity(fileKey: AnyRef, nanos: Long,
+    size: Long)
+
+private[sources] object FileIdentity {
+  def attributes(f: File): BasicFileAttributes =
+    Files.readAttributes(f.toPath, classOf[BasicFileAttributes])
+
+  def apply(a: BasicFileAttributes): FileIdentity =
+    FileIdentity(a.fileKey(), a.lastModifiedTime().to(TimeUnit.NANOSECONDS),
+      a.size())
+
+  /** The identity of `f`, or None when it cannot be stat'ed. */
+  def of(f: File): Option[FileIdentity] =
+    try Some(FileIdentity(attributes(f)))
+    catch { case _: java.io.IOException => None }
 }

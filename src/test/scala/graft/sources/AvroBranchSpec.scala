@@ -198,7 +198,7 @@ class AvroBranchSpec extends AnyFunSuite with SparkSpec with Matchers {
     live.foreach(rel => rows.keySet should contain(rel))
     rows.values.sum shouldBe 120L
     // all-column zones cover the published files too
-    val zones = AvroFileSource.colZoneManifest(d,
+    val zones = ZoneIndex.of(d,
       spark.read.format("graft-avro").load(dir).schema)
     val covered = zones.columns.flatMap(zones.boundsOf(_).keySet).toSet
     live.foreach(rel =>

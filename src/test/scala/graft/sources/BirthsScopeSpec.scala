@@ -11,10 +11,11 @@ import org.scalatest.matchers.should.Matchers
 
 import graft.SparkSpec
 
-/** Reader factories ship per-file birth versions (consulted by stamped
-  * equality deletes and column renames) to every task. Each map must
-  * hold only the files its scan planned, under both their live and
-  * archive path, not every live file of the table: the row scan, the
+/** Per-file birth versions (consulted by stamped equality deletes and
+  * column renames) reach every task. The main row scan puts each file's
+  * birth on its own partition and ships no map; every other reader
+  * factory's map must hold only the files its scan planned, under both
+  * their live and archive path, not every live file of the table: the
   * batch change feed, the change-feed stream and the file stream.
   */
 class BirthsScopeSpec extends AnyFunSuite with SparkSpec with Matchers {
@@ -62,22 +63,29 @@ class BirthsScopeSpec extends AnyFunSuite with SparkSpec with Matchers {
   private def cdcFiles(parts: Seq[Any]): Set[String] =
     parts.collect { case p: AvroCdcPartition => p.file }.toSet
 
+  /** A row scan's planned files and the births its partitions carry;
+    * its factory must carry none.
+    */
+  private def rowScan(dir: String, filters: Array[org.apache.spark.sql
+      .sources.Filter]): (Set[String], Map[String, Long]) = {
+    val schema = spark.read.format("graft-avro").load(dir).schema
+    val sb = new AvroScanBuilder(dir, schema)
+    sb.pushFilters(filters)
+    val batch = sb.build().toBatch
+    val parts = batch.planInputPartitions().collect {
+      case p: AvroInputPartition => p
+    }
+    batch.createReaderFactory() match {
+      case f: AvroReaderFactory => f.births shouldBe empty
+      case other => fail(s"unexpected factory $other")
+    }
+    (parts.map(_.file).toSet, parts.map(p => p.file -> p.birth).toMap)
+  }
+
   test("a one-file lookup ships the births of its planned files only") {
     val dir = table()
-    val schema = spark.read.format("graft-avro").load(dir).schema
-    def lookup(k: Long): (Set[String], Map[String, Long]) = {
-      val sb = new AvroScanBuilder(dir, schema)
-      sb.pushFilters(Array(EqualTo("k", k)))
-      val batch = sb.build().toBatch
-      val planned = batch.planInputPartitions().collect {
-        case p: AvroInputPartition => p.file
-      }.toSet
-      val births = batch.createReaderFactory() match {
-        case f: AvroReaderFactory => f.births
-        case other => fail(s"unexpected factory $other")
-      }
-      (planned, births)
-    }
+    def lookup(k: Long): (Set[String], Map[String, Long]) =
+      rowScan(dir, Array(EqualTo("k", k)))
 
     Seq(victim, 7L).foreach { k =>
       val (planned, births) = lookup(k)
@@ -88,6 +96,33 @@ class BirthsScopeSpec extends AnyFunSuite with SparkSpec with Matchers {
     df.filter(F.col("k") === victim).count() shouldBe 0L
     df.filter(F.col("k") === 7L).count() shouldBe 1L
     df.count() shouldBe 1609L
+  }
+
+  test("a full scan's factory holds no births map; answers are unchanged") {
+    val dir = table()
+    // re-insert the deleted key at version 4: the delete stamped at
+    // version 2 must not apply to the new file, which only its birth tells
+    spark.range(victim, victim + 1).toDF("k")
+      .withColumn("payload", F.md5(F.col("k").cast("string")))
+      .coalesce(1)
+      .write.format("graft-avro").mode("append").save(dir)
+    val (planned, births) = rowScan(dir, Array.empty)
+    planned.size shouldBe files + 2
+    val snaps = AvroFileSource.readSnapshots(new File(dir))
+    def bornAt(v: Long): Seq[String] =
+      snaps.find(_.version == v).get.files
+        .filterNot(snaps.find(_.version == v - 1).get.files.toSet)
+        .map(rel => new File(dir, rel).getAbsolutePath)
+    births.filter(_._2 == 3L).keySet shouldBe bornAt(3L).toSet
+    births.filter(_._2 == 4L).keySet shouldBe bornAt(4L).toSet
+    births.values.count(_ == 0L) shouldBe files
+    Seq("true", "false").foreach { columnar =>
+      val df = spark.read.format("graft-avro").option("columnar", columnar)
+        .load(dir)
+      df.count() shouldBe 1610L
+      df.filter(F.col("k") === victim).count() shouldBe 1L
+      df.filter(F.col("k") >= 5000L).count() shouldBe 10L
+    }
   }
 
   test("a batch change-feed read ships the births of its version's files") {
